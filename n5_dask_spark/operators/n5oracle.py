@@ -568,8 +568,9 @@ def n5_roundtrip_blosc_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "S2 via the Spark 4 Python DataSource API, hash-checked: the same "
         "container as n5_roundtrip_zprofile read through "
-        "spark.read.format('n5') (one InputPartition per block, codec "
-        "decode inside the source) instead of the binaryFile path, then "
+        "spark.read.format('n5') (block files packed by Spark's file-split "
+        "rule, codec decode inside the source) instead of the binaryFile "
+        "path, then "
         "the identical per-z profile. Proves the registered DataSource "
         "returns byte-identical blocks."
     ),

@@ -3,7 +3,7 @@
 Spark-4 alternative to a binaryFile+UDF scan).
 
 Usage:
-    spark.dataSource.register(N5DataSource)
+    register_n5_source(spark)
     df = (spark.read.format("n5")
           .option("path", "/data/container.n5")
           .option("dataset", "mri/c0/s0")
@@ -11,16 +11,26 @@ Usage:
           .load())
     # -> gx, gy, gz, shape_zyx (zyx dims), data (native-endian zyx bytes)
 
-Partition planning runs driver-side: one InputPartition per block file, and
-when a region is given only OVERLAPPING blocks become partitions — source-
-level partition pruning, so a 1-block region of a petabyte container plans
-exactly one task.
+Partition planning runs in Spark's planner process and packs block files
+into scan tasks with Spark's own file-split rule (the one the binaryFile
+glob scan gets from the JVM, see :class:`ScanSplit`), so both scan paths
+run the same number of tasks over the same files. When a region is given
+only OVERLAPPING blocks are planned — source-level partition pruning, so
+a 1-block region of a petabyte container plans exactly one task.
+
+The planner process has no active session, so ``register_n5_source``
+resolves the parallelism and the file-source confs on the driver and
+registers them with the source. A bare
+``spark.dataSource.register(N5DataSource)`` falls back to
+``$SPARK_GRAFT_CPUS`` (else 32) and Spark's default split confs.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Iterator, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -38,23 +48,76 @@ from pyspark.sql.types import (
 )
 
 
-class N5BlockPartition(InputPartition):
-    """One scan task's worth of block files.
+log = logging.getLogger("n5_dask_spark.sources.n5")
 
-    Historically one partition per block file; r15 (guide §2.2/§6): a
-    task per block is millions of tiny tasks at real container sizes —
-    per-task scheduling plus the Python DataSource's per-partition worker
-    round-trip dominate the scan. partitions() now PACKS blocks into at
-    most ``parallelism x SPARK_GRAFT_N5DS_TASKS_PER_CORE`` partitions;
-    below that target the old one-block-per-task layout is preserved
-    (identical local plans and parallelism on the bench fixtures)."""
+_FALLBACK_PARALLELISM = 32
+
+
+@dataclass(frozen=True)
+class ScanSplit:
+    """The inputs of Spark's file-source split rule (FilePartition):
+
+        maxSplitBytes = min(maxPartitionBytes,
+                            max(openCostInBytes, totalCost / parallelism))
+
+    where ``totalCost`` sums every file's size plus the open cost. Defaults
+    are Spark's; ``source`` records where ``parallelism`` came from
+    (registration, env or default) for the plan log."""
+
+    parallelism: int
+    max_partition_bytes: int = 128 << 20
+    open_cost_bytes: int = 4 << 20
+    source: str = "default"
+
+    def max_split_bytes(self, total_cost: int) -> int:
+        return min(
+            self.max_partition_bytes,
+            max(self.open_cost_bytes, total_cost // self.parallelism),
+        )
+
+    @classmethod
+    def from_env(cls) -> "ScanSplit":
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+        if cpus.isdigit() and int(cpus) > 0:
+            return cls(int(cpus), source="env")
+        return cls(_FALLBACK_PARALLELISM, source="default")
+
+    @classmethod
+    def from_session(cls, spark) -> "ScanSplit":
+        """Resolved on the driver the way Spark's file scans resolve it:
+        ``spark.sql.files.minPartitionNum``, else the leaf-node default
+        parallelism (``spark.sql.leafNodeDefaultParallelism``, else
+        ``sc.defaultParallelism``)."""
+        conf = spark.conf
+        par = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
+            "spark.sql.leafNodeDefaultParallelism", None
+        )
+        to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+        return cls(
+            int(par) if par else int(spark.sparkContext.defaultParallelism),
+            int(to_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128MB"))),
+            int(to_bytes(conf.get("spark.sql.files.openCostInBytes", "4MB"))),
+            source="registration",
+        )
+
+
+class N5BlockPartition(InputPartition):
+    """One scan task's worth of block files: a contiguous run in grid
+    order, sized by :class:`ScanSplit` (a task per block file would be
+    millions of tiny tasks at real container sizes, each paying the
+    Python DataSource's per-task worker round-trip)."""
 
     def __init__(self, blocks: list[tuple[str, tuple[int, ...]]]):
         self.blocks = blocks
 
 
 class N5DataSource(DataSource):
-    """Reads an N5 dataset as one row per block."""
+    """Reads an N5 dataset as one row per block.
+
+    ``split`` is set on the class that ``register_n5_source`` registers;
+    None (a bare registration) resolves it from the planner's environment."""
+
+    split: ScanSplit | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -72,14 +135,14 @@ class N5DataSource(DataSource):
         )
 
     def reader(self, schema: StructType) -> "N5Reader":
-        return N5Reader(self.options)
+        return N5Reader(self.options, self.split)
 
     def writer(self, schema: StructType, overwrite: bool) -> "N5Writer":
         return N5Writer(self.options, [f.name for f in schema.fields])
 
 
 class N5Reader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, split: ScanSplit | None = None):
         self.container = options.get("path")
         self.dataset = options.get("dataset")
         if not self.container or not self.dataset:
@@ -87,6 +150,7 @@ class N5Reader(DataSourceReader):
         self.start = options.get("start")
         self.end = options.get("end")
         self._attrs = None
+        self.split = split if split is not None else ScanSplit.from_env()
 
     def _get_attrs(self):
         # memoized: partitions() fills it on the driver (and it pickles to
@@ -128,10 +192,12 @@ class N5Reader(DataSourceReader):
                 "dataset (or delete the marker to accept partial contents)."
             )
 
-    def partitions(self) -> Sequence[N5BlockPartition]:
+    def _present_blocks(self) -> list[tuple[str, tuple[int, ...], int]]:
+        """(path, grid, size) of every planned block file that exists, in
+        grid order; sparse datasets skip absent blocks."""
+        from n5_dask_spark.sources.n5.metadata import _is_uri
         from n5_dask_spark.sources.n5.reader import overlapping_blocks
 
-        self._refuse_mid_write()
         attrs = self._get_attrs()
         if self.start and self.end:
             grids = overlapping_blocks(
@@ -143,69 +209,62 @@ class N5Reader(DataSourceReader):
             import itertools
 
             grids = list(itertools.product(*[range(n) for n in attrs.grid_shape]))
-        from n5_dask_spark.sources.n5.metadata import _is_uri
-
-        is_uri = _is_uri(self.container)
-        listing: set[str] | None = None
-        if is_uri:
-            from n5_dask_spark.sources.n5 import fsio
-
-            # one LIST of the dataset prefix instead of a sequential
-            # exists() round-trip per grid cell — on an object store a
-            # large grid otherwise turns planning into O(n_blocks)
-            # network calls (r13 ADVICE). Falls back to per-key probes
-            # only if the filesystem cannot list.
-            listing = fsio.list_files(f"{self.container}/{self.dataset}")
         blocks = []
-        for g in grids:
-            if is_uri:
-                path = "/".join([self.container, self.dataset, *map(str, g)])
-                if listing is not None:
-                    present = "/".join(map(str, g)) in listing
-                else:
-                    present = fsio.exists(path)
-            else:
+        if not _is_uri(self.container):
+            for g in grids:
                 path = os.path.join(self.container, self.dataset, *map(str, g))
-                present = os.path.exists(path)
-            if present:  # sparse datasets skip absent blocks
-                blocks.append((path, tuple(g)))
-        # Pack blocks into bounded task counts (r15, guide §2.2/§6): a task
-        # per block file means a million-block container schedules a million
-        # tasks, each paying scheduler latency + a Python worker round-trip.
-        # Target = parallelism x tasks-per-core (default 4: chunky enough to
-        # amortize overhead, granular enough for stragglers/speculation).
-        # n_blocks <= target keeps one block per task — the historical
-        # layout, so local fixtures plan identically.
-        target = self._target_partitions()
-        if len(blocks) <= target:
-            return [N5BlockPartition([b]) for b in blocks]
-        # contiguous runs preserve grid locality (neighboring block files
-        # share directories -> sequential listing/read patterns per task)
-        n = len(blocks)
-        bounds = [round(i * n / target) for i in range(target + 1)]
-        return [
-            N5BlockPartition(blocks[lo:hi])
-            for lo, hi in zip(bounds, bounds[1:])
-            if hi > lo
-        ]
+                try:
+                    blocks.append((path, tuple(g), os.stat(path).st_size))
+                except (FileNotFoundError, NotADirectoryError):
+                    pass
+            return blocks
+        from n5_dask_spark.sources.n5 import fsio
 
-    @staticmethod
-    def _target_partitions() -> int:
-        per_core = os.environ.get("SPARK_GRAFT_N5DS_TASKS_PER_CORE", "")
-        k = int(per_core) if per_core.isdigit() and int(per_core) > 0 else 4
-        par = 0
-        try:
-            from pyspark.sql import SparkSession
+        # one LIST of the dataset prefix instead of a sequential stat
+        # round-trip per grid cell — on an object store a large grid
+        # otherwise turns planning into O(n_blocks) network calls. Falls
+        # back to per-key probes only if the filesystem cannot list.
+        sizes = fsio.list_file_sizes(f"{self.container}/{self.dataset}")
+        for g in grids:
+            path = "/".join([self.container, self.dataset, *map(str, g)])
+            if sizes is not None:
+                size = sizes.get("/".join(map(str, g)))
+            else:
+                size = fsio.file_size(path)
+            if size is not None:
+                blocks.append((path, tuple(g), size))
+        return blocks
 
-            active = SparkSession.getActiveSession()
-            if active is not None:
-                par = int(active.sparkContext.defaultParallelism)
-        except Exception:
-            par = 0  # Connect or no active session: fall through to env
-        if par <= 0:
-            cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-            par = int(cpus) if cpus.isdigit() and int(cpus) > 0 else 32
-        return max(1, par * k)
+    def partitions(self) -> Sequence[N5BlockPartition]:
+        """Spark's file-split rule over the block files, filled next-fit in
+        grid order (contiguous runs keep directory locality): a task closes
+        when the next block would push it past ``maxSplitBytes``, and each
+        block costs its size plus the open cost. Up to ``parallelism``
+        equal-sized blocks, the open cost alone keeps one block per task."""
+        self._refuse_mid_write()
+        blocks = self._present_blocks()
+        open_cost = self.split.open_cost_bytes
+        total_bytes = sum(size for _p, _g, size in blocks)
+        max_split = self.split.max_split_bytes(total_bytes + open_cost * len(blocks))
+        parts: list[N5BlockPartition] = []
+        run: list[tuple[str, tuple[int, ...]]] = []
+        run_cost = 0
+        for path, grid, size in blocks:
+            if run and run_cost + size > max_split:
+                parts.append(N5BlockPartition(run))
+                run, run_cost = [], 0
+            run.append((path, grid))
+            run_cost += size + open_cost
+        if run:
+            parts.append(N5BlockPartition(run))
+        if log.isEnabledFor(logging.DEBUG):
+            log.debug(
+                "format('n5') plan %s/%s: %d blocks, %d bytes, maxSplitBytes=%d "
+                "-> %d partitions (parallelism %d from %s)",
+                self.container, self.dataset, len(blocks), total_bytes, max_split,
+                len(parts), self.split.parallelism, self.split.source,
+            )
+        return parts
 
     def read(self, partition: N5BlockPartition) -> Iterator[tuple]:
         from n5_dask_spark.sources.n5.codec import decode_block_at
@@ -307,8 +366,18 @@ class N5Writer(DataSourceWriter):
         return WriterCommitMessage()
 
 
-def register_n5_source(spark) -> None:
+def register_n5_source(spark) -> type[N5DataSource]:
+    """Register format("n5") with the split inputs resolved on this driver.
+
+    The class is built here so that it pickles by value: its ``split``
+    reaches the planner process, which has no session to ask. Confs are
+    read at registration; register again after changing them."""
     from n5_dask_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
-    spark.dataSource.register(N5DataSource)
+
+    class RegisteredN5DataSource(N5DataSource):
+        split = ScanSplit.from_session(spark)
+
+    spark.dataSource.register(RegisteredN5DataSource)
+    return RegisteredN5DataSource

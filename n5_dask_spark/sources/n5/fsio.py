@@ -199,13 +199,22 @@ def make_dirs(path: str) -> None:
     fs.create_dir(p, recursive=True)
 
 
-def list_files(dir_path: str) -> set[str] | None:
-    """Recursive file listing under a URI directory, as slash-joined paths
-    RELATIVE to it — or None if the filesystem cannot list (caller falls
-    back to per-key probes). One LIST round-trip replaces O(n_blocks)
-    sequential ``exists()`` calls in DataSource planning (r13 ADVICE low:
-    on a real object store a large grid turned planning into a network
-    call per grid cell)."""
+def file_size(path: str) -> int | None:
+    """Size of the file at ``path`` in bytes, or None if it is absent."""
+    from pyarrow import fs as pafs
+
+    f, p = _resolve(path)
+    info = f.get_file_info(p)
+    return None if info.type == pafs.FileType.NotFound else info.size
+
+
+def list_file_sizes(dir_path: str) -> dict[str, int] | None:
+    """Recursive file listing under a URI directory: sizes keyed by
+    slash-joined paths RELATIVE to it — or None if the filesystem cannot
+    list (caller falls back to per-key probes). One LIST round-trip
+    replaces O(n_blocks) sequential probes in DataSource planning, where
+    on a real object store a large grid would otherwise cost a network
+    call per grid cell."""
     from pyarrow import fs as pafs
 
     f, p = _resolve(dir_path)
@@ -216,10 +225,16 @@ def list_files(dir_path: str) -> set[str] | None:
         return None
     base = p.rstrip("/") + "/"
     return {
-        i.path[len(base):]
+        i.path[len(base):]: i.size
         for i in infos
         if i.type == pafs.FileType.File and i.path.startswith(base)
     }
+
+
+def list_files(dir_path: str) -> set[str] | None:
+    """The relative paths of :func:`list_file_sizes`."""
+    sizes = list_file_sizes(dir_path)
+    return None if sizes is None else set(sizes)
 
 
 def _refuse_existing_marker(marker_path: str) -> RuntimeError:

@@ -29,8 +29,10 @@ immutable-plan contract catalog.widen's width memo relies on):
   the shuffle.
 
 Consumers normalize through :func:`source_of`: when no metadata is
-present (a caller-constructed blocks DF, a persisted/checkpointed frame,
-any DataFrame transformation applied in between) they fall back to
+present (a caller-constructed blocks DF, a checkpointed frame, any
+DataFrame transformation applied in between) or the frame is persisted
+(``persist()`` returns the SAME object, metadata included, and fusing
+would bypass the cache and recompute from the files) they fall back to
 consuming the materialized blocks DF exactly as before — same rows, same
 order, one extra crossing. Fusion only ever removes boundary crossings;
 the materialized DataFrame each helper returns is byte-identical either
@@ -101,8 +103,11 @@ def _fallback_blocks_fn(dt: np.dtype):
 def source_of(blocks_df: DataFrame, dt: np.dtype) -> tuple:
     """Normalize a blocks DF to its cheapest consumable source:
     ("map", upstream_df, blocks_fn) or ("grouped", frags_df, key_cols,
-    assemble_fn). Unmarked frames fall back to ("map", blocks_df,
-    standard-row decoder) — the exact pre-fusion consumption."""
+    assemble_fn). Unmarked and persisted frames fall back to ("map",
+    blocks_df, standard-row decoder) — the exact pre-fusion consumption,
+    which reads a persisted frame from its cache."""
+    if blocks_df.is_cached:
+        return ("map", blocks_df, _fallback_blocks_fn(dt))
     m = getattr(blocks_df, _MAP_ATTR, None)
     if m is not None:
         return ("map", m[0], m[1])

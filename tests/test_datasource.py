@@ -3,6 +3,8 @@ pruning."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 
 from tests.test_n5 import FIXTURE, FIXTURE_DS, fixture_volume_xyz
@@ -101,45 +103,151 @@ def test_n5_format_write_validates_schema(spark):
         )
 
 
-def test_partition_packing_bounds_task_count(tmp_path, monkeypatch):
-    """r15 (guide §2.2/§6): one task per block file means a million-block
-    container schedules a million tasks. partitions() packs blocks into
-    at most parallelism x SPARK_GRAFT_N5DS_TASKS_PER_CORE partitions —
-    covering every block exactly once, in grid order — and keeps the
-    one-block-per-task layout below that target (local fixtures plan
-    identically). Measured: 512 blocks at 8 cores, scan noop best-of-3
-    17.04 s -> 4.45 s (3.8x), crc-identical rows."""
+def _gx_row_container(tmp_path, n: int = 40) -> str:
+    """A raw uint8 dataset of ``n`` equal-sized 32-byte block files on the gx
+    axis; returns the container path (dataset ``d/s0``)."""
     import json
-    import os
 
-    from n5_dask_spark.sources.n5.datasource import N5Reader
+    from n5_dask_spark.sources.n5.codec import encode_block
+
+    payload = encode_block(np.zeros((4, 4, 1), np.uint8), "uint8", {"type": "raw"})
+    assert len(payload) == 32
 
     c = tmp_path / "many.n5"
     ds = c / "d" / "s0"
     ds.mkdir(parents=True)
     (ds / "attributes.json").write_text(json.dumps({
-        "dimensions": [40, 4, 4], "blockSize": [1, 4, 4],
+        "dimensions": [n, 4, 4], "blockSize": [1, 4, 4],
         "dataType": "uint8", "compression": {"type": "raw"},
     }))
-    for gx in range(40):  # 40 block files on the gx axis
+    for gx in range(n):
         p = ds / str(gx) / "0"
         p.mkdir(parents=True)
-        (p / "0").write_bytes(b"\x00" * 20)
+        (p / "0").write_bytes(payload)
+    return str(c)
 
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
-    monkeypatch.setenv("SPARK_GRAFT_N5DS_TASKS_PER_CORE", "2")
-    # the target adapts to whatever signal the planner process has — the
-    # suite's active session (parallelism) or the env fallback — so the
-    # assertion compares against the helper, not a constant
-    parts = N5Reader({"path": str(c), "dataset": "d/s0"}).partitions()
-    target = N5Reader._target_partitions()
-    assert len(parts) <= max(target, 1)
+
+def test_partition_packing_bounds_task_count(spark, tmp_path):
+    """partitions() packs block files with Spark's file-split rule
+    (maxSplitBytes from maxPartitionBytes, openCostInBytes and the
+    parallelism; next-fit in grid order): every block covered exactly
+    once, in grid order, and as many partitions as Spark's own
+    FilePartition split of the same files (the binaryFile scan)."""
+    from n5_dask_spark.sources.n5.datasource import N5Reader, ScanSplit
+
+    c = _gx_row_container(tmp_path)
+    opts = {"path": c, "dataset": "d/s0"}
+    parts = N5Reader(opts, ScanSplit.from_session(spark)).partitions()
     covered = [g for part in parts for (_p, g) in part.blocks]
     assert covered == [(gx, 0, 0) for gx in range(40)]  # all blocks, grid order
+    files = spark.read.format("binaryFile").load(os.path.join(c, "d", "s0", "*", "*", "*"))
+    assert files.count() == 40
+    assert len(parts) == files.rdd.getNumPartitions()
 
-    # below the target: one block per task (historical layout preserved)
-    monkeypatch.setenv("SPARK_GRAFT_N5DS_TASKS_PER_CORE", "64")
-    parts_small = N5Reader({"path": str(c), "dataset": "d/s0"}).partitions()
-    if N5Reader._target_partitions() >= 40:
-        assert all(len(p.blocks) == 1 for p in parts_small)
-        assert len(parts_small) == 40
+    # the rule itself: 40 x (32 B + 4 MiB open cost) over 4 cores is 10
+    # blocks a task; at 64 cores the open cost keeps one block per task
+    assert [len(p.blocks) for p in N5Reader(opts, ScanSplit(4)).partitions()] == [10] * 4
+    assert [len(p.blocks) for p in N5Reader(opts, ScanSplit(64)).partitions()] == [1] * 40
+    # maxPartitionBytes caps a task below the per-core share
+    capped = ScanSplit(1, max_partition_bytes=3 * (4 << 20), open_cost_bytes=4 << 20)
+    assert [len(p.blocks) for p in N5Reader(opts, capped).partitions()] == [3] * 13 + [1]
+
+
+def test_registered_source_plans_by_session_parallelism(spark, tmp_path, monkeypatch):
+    """The planner process has no active session and, on a cluster, no
+    SPARK_GRAFT_CPUS: register_n5_source carries the driver's parallelism
+    and split confs to it, so the plan follows the session, not the
+    fallback of 32."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    from n5_dask_spark.sources.n5.datasource import register_n5_source
+
+    c = _gx_row_container(tmp_path)
+    par = spark.sparkContext.defaultParallelism
+    source = register_n5_source(spark)
+    assert source.split.parallelism == par
+    assert source.split.source == "registration"
+    # "134217728" (set by get_spark) and Spark's own "4MB" default
+    assert source.split.max_partition_bytes == 128 << 20
+    assert source.split.open_cost_bytes == 4 << 20
+    reader = source({"path": c, "dataset": "d/s0"}).reader(None)
+    assert len(reader.partitions()) == min(par, 40)
+    df = spark.read.format("n5").option("path", c).option("dataset", "d/s0").load()
+    assert df.rdd.getNumPartitions() == min(par, 40)
+    assert df.count() == 40
+
+
+def test_plan_decision_is_logged(tmp_path, monkeypatch, caplog):
+    """One DEBUG record per plan names the blocks, bytes, maxSplitBytes,
+    partitions and where the parallelism came from; the plan is the same
+    with the logger on or off."""
+    import logging
+
+    from n5_dask_spark.sources.n5.datasource import N5Reader
+
+    c = _gx_row_container(tmp_path)
+    opts = {"path": c, "dataset": "d/s0"}
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    with caplog.at_level(logging.INFO, logger="n5_dask_spark.sources.n5"):
+        quiet = N5Reader(opts).partitions()
+    assert caplog.records == []
+    with caplog.at_level(logging.DEBUG, logger="n5_dask_spark.sources.n5"):
+        parts = N5Reader(opts).partitions()
+    (rec,) = caplog.records
+    assert rec.levelno == logging.DEBUG and rec.name == "n5_dask_spark.sources.n5"
+    msg = rec.getMessage()
+    max_split = 40 * (32 + (4 << 20)) // 4
+    for part in ("40 blocks", "1280 bytes", f"maxSplitBytes={max_split}",
+                 "4 partitions", "parallelism 4 from env"):
+        assert part in msg, msg
+    assert [p.blocks for p in parts] == [p.blocks for p in quiet]
+
+    caplog.clear()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    with caplog.at_level(logging.DEBUG, logger="n5_dask_spark.sources.n5"):
+        N5Reader(opts).partitions()
+    assert "parallelism 32 from default" in caplog.records[0].getMessage()
+
+
+def test_format_n5_and_glob_scan_run_the_same_tasks(spark):
+    """format("n5") and the binaryFile glob scan (reader.block_stats) plan
+    the same files with the same split rule, so they run the same number
+    of scan tasks and return equal per-block stats."""
+    from n5_dask_spark.sources.n5.datasource import register_n5_source
+    from n5_dask_spark.sources.n5.reader import block_stats
+    from n5_dask_spark.sources.n5.writer import temp_container, write_array
+
+    rng = np.random.default_rng(4)
+    arr = rng.integers(0, 4096, size=(64, 48, 32), dtype=np.uint16)  # xyz
+    c = temp_container()
+    write_array(spark, arr, c, "a/s0", [16, 16, 16], compression={"type": "raw"})
+    register_n5_source(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def tasks(group: str) -> int:
+        n = 0
+        for job in tracker.getJobIdsForGroup(group):
+            for sid in tracker.getJobInfo(job).stageIds:
+                n += tracker.getStageInfo(sid).numTasks
+        return n
+
+    sc.setJobGroup("n5ds-tasks-glob", "block_stats")
+    glob_rows = block_stats(spark, c, "a/s0").collect()
+    sc.setJobGroup("n5ds-tasks-format", "format n5")
+    ds_rows = (
+        spark.read.format("n5").option("path", c).option("dataset", "a/s0").load().collect()
+    )
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert len(glob_rows) == len(ds_rows) == 4 * 3 * 2
+    assert tasks("n5ds-tasks-format") == tasks("n5ds-tasks-glob") > 1
+    ds_stats = {}
+    for r in ds_rows:
+        a = np.frombuffer(bytes(r.data), dtype=np.uint16).reshape(r.shape_zyx)
+        ds_stats[(r.gx, r.gy, r.gz)] = (
+            a.size, float(a.min()), float(a.max()), float(a.sum(dtype="f8"))
+        )
+    glob_stats = {
+        (r.gx, r.gy, r.gz): (r[3], r[4], r[5], r[6]) for r in glob_rows
+    }
+    assert ds_stats == glob_stats

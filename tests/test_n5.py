@@ -305,6 +305,40 @@ def test_rechunk_roundtrip(spark):
     np.testing.assert_array_equal(read_full(spark, c2, "a/s0"), arr)
 
 
+def test_persisted_blocks_frame_is_consumed_from_cache(spark):
+    """persist() returns the same DataFrame object, fusion metadata and all:
+    a consumer must read a persisted blocks frame from its cache instead of
+    fusing back to the block files. Deleting the files after the cache is
+    built shows which path ran — the file path would lose every block
+    (binaryFile's ignoreMissingFiles reads vanished files as sparse)."""
+    import shutil
+
+    from n5_dask_spark.sources.n5 import fuse
+    from n5_dask_spark.sources.n5.reader import decoded_blocks
+    from n5_dask_spark.sources.n5.writer import temp_container, write_array
+
+    arr = np.arange(16 * 8 * 8, dtype="u1").reshape(16, 8, 8)  # xyz
+    c = temp_container()
+    write_array(spark, arr, c, "a/s0", [8, 8, 8])
+    blocks = decoded_blocks(spark, c, "a/s0").persist()
+    try:
+        assert blocks.count() == 2
+        for gx in ("0", "1"):
+            shutil.rmtree(os.path.join(c, "a/s0", gx))
+
+        def sums(gx, gy, gz, a):
+            yield (int(gx), int(a.sum()))
+
+        rows = fuse.consume_block_rows(
+            blocks, np.dtype("u1"), sums, ["gx", "vsum"], "gx int, vsum long"
+        ).collect()
+        assert sorted(tuple(r) for r in rows) == [
+            (0, int(arr[:8].sum())), (1, int(arr[8:].sum()))
+        ]
+    finally:
+        blocks.unpersist()
+
+
 def test_cast_safe_guard(spark):
     from n5_dask_spark.sources.n5.metadata import read_attributes
     from n5_dask_spark.sources.n5.reader import decoded_blocks, read_full

@@ -380,8 +380,8 @@ def test_net_ome_multichannel_any_geometry(spark, tmp_path, seed):
 def test_net_datasource_read_write_any_geometry(spark, tmp_path, seed):
     """The Spark 4 Python DataSource lane on random geometry: reading the
     staged container through format('n5') yields blocks that reassemble
-    to the exact source array (one InputPartition per block, decode
-    inside the source), and writing those blocks through
+    to the exact source array (block files packed by the file-split
+    rule, decode inside the source), and writing those blocks through
     df.write.format('n5') into a template-created dataset roundtrips
     byte-identically — 1-D/2-D grids ride the same padded-coordinate
     schema as 3-D."""
