@@ -28,15 +28,6 @@ TABLES: tuple[str, ...] = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Parquet schema inference re-reads file footers on EVERY spark.read call
-# (~0.1-0.2 s per table on local testdata; a listing+footer round-trip per
-# query on a real cluster). The testdata files are immutable, so cache the
-# inferred schema per (sf_dir, table) and hand it to subsequent readers —
-# same trick a production job uses by reading through a metastore table
-# instead of bare paths.
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -64,9 +55,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the testdata dirs around the full oracle-parity sweep). A flow that
     # regenerates sf_dir mid-session must call invalidate_table_cache
     # (or use a fresh session/sf_dir).
-    cache: dict[tuple[str, str], DataFrame] = spark.__dict__.setdefault(
-        "_n5ds_df_cache", {}
-    )
+    cache = _plan_cache(spark)
     key = (sf_dir, name)
     hit = cache.get(key)
     if hit is not None:
@@ -105,23 +94,32 @@ def invalidate_table_cache(spark: SparkSession, sf_dir: str | None = None) -> No
     Closes the one trap in the load_table plan cache (see its contract
     comment): a base-table directory whose FILE SET changes mid-session
     would otherwise serve the frozen listing captured at first load."""
-    cache = spark.__dict__.get("_n5ds_df_cache")
-    keys = (
-        [k for k in (cache or {}) if sf_dir is None or k[0] == sf_dir],
-        [k for k in _SCHEMA_CACHE if sf_dir is None or k[0] == sf_dir],
-    )
-    for k in keys[0]:
-        del cache[k]
-    for k in keys[1]:
-        del _SCHEMA_CACHE[k]
+    for cache in (_plan_cache(spark), _schema_cache(spark)):
+        for k in [k for k in cache if sf_dir is None or k[0] == sf_dir]:
+            del cache[k]
+
+
+def _plan_cache(spark: SparkSession) -> dict[tuple[str, str], DataFrame]:
+    return spark.__dict__.setdefault("_n5ds_df_cache", {})
+
+
+def _schema_cache(spark: SparkSession) -> dict[tuple[str, str], object]:
+    """Inferred parquet schemas per (sf_dir, table), kept on the session
+    like the plan cache. Schema inference re-reads file footers on EVERY
+    spark.read call (~0.1-0.2 s per table on local testdata; a
+    listing+footer round-trip per query on a real cluster), so the first
+    inference is handed to later readers — the trick a production job
+    gets by reading through a metastore table instead of bare paths."""
+    return spark.__dict__.setdefault("_n5ds_schema_cache", {})
 
 
 def _read_cached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    cache = _schema_cache(spark)
     key = (sf_dir, name)
-    schema = _SCHEMA_CACHE.get(key)
+    schema = cache.get(key)
     if schema is None:
         df = spark.read.parquet(table_path(sf_dir, name))
-        _SCHEMA_CACHE[key] = df.schema
+        cache[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(table_path(sf_dir, name))
 

@@ -427,8 +427,9 @@ def n5_multiscale_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "T10 hash-checked through the lz4-java LZ4Block framing "
-        "(sources/n5/lz4.py, the pure-Python twin of the reference's "
-        "numcodecs lz4 entry, tif_to_n5.py:82): same write->scan->profile "
+        "(sources/n5/lz4.py: our framing and per-chunk xxhash32 around "
+        "liblz4, the library behind the reference's numcodecs lz4 entry, "
+        "tif_to_n5.py:82): same write->scan->profile "
         "pipeline as n5_roundtrip_zprofile but every block encodes and "
         "decodes through the lz4 codec; the codec name is surfaced from "
         "the container's stored attributes.json. Any framing/checksum "
@@ -491,12 +492,12 @@ def n5_roundtrip_uri(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM vox GROUP BY z ORDER BY z
     """,
     doc=(
-        "T10 hash-checked through the pure-Python Blosc1 container "
+        "T10 hash-checked through the Blosc1 container "
         "(sources/n5/blosc.py; the reference's numcodecs blosc entry, "
         "tif_to_n5.py:82): same write->scan->profile pipeline as "
         "n5_roundtrip_zprofile but every block encodes and decodes "
-        "through blosc (cname=lz4; lz4 internal blocks reuse the "
-        "spec-vector-tested raw codec in lz4.py) with typesize=2 so the "
+        "through blosc (cname=lz4; lz4 internal blocks run on liblz4 "
+        "via lz4.py) with typesize=2 so the "
         "byte-shuffle filter is EXERCISED on the uint8 payload — "
         "typesize is a filter width, not a dtype claim, and the chunk "
         "header self-describes it. Any header/offset-table/shuffle "
@@ -530,9 +531,8 @@ def n5_roundtrip_blosc(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "T10 hash-checked through the two round-6 blosc legs together "
         "(sources/n5/blosc.py): same write->scan->profile pipeline as "
-        "n5_roundtrip_blosc but cname=zstd (real libzstd via pyarrow's "
-        "bundled codec — the gated leg that closes the last internal-"
-        "codec gap; the reference accepts any numcodecs cname, "
+        "n5_roundtrip_blosc but cname=zstd (libzstd via pyarrow's "
+        "bundled codec; the reference accepts any numcodecs cname, "
         "tif_to_n5.py:89-92) with shuffle=2 so the bit-shuffle bit-plane "
         "transpose is exercised end to end. Any zstd framing or bit-"
         "shuffle defect flips the hash."

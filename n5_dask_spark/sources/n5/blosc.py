@@ -1,9 +1,9 @@
-"""Pure-Python Blosc1 chunk codec (subset) for N5 blosc compression.
+"""Blosc1 chunk codec for N5 blosc compression.
 
 The reference lists blosc among its supported N5 codecs
 (``/root/reference/src/tif_to_n5.py:82``) via numcodecs' C library, which
 is absent from this container. This module implements the Blosc1 chunk
-container in pure Python from the PUBLIC format description (c-blosc's
+container from the PUBLIC format description (c-blosc's
 ``README_CHUNK_FORMAT.rst``; the same layout numcodecs/zarr documents):
 
     header (16 bytes, little-endian):
@@ -35,31 +35,20 @@ container in pure Python from the PUBLIC format description (c-blosc's
     typesize contiguous pieces (stream j = the j-th bytes of every
     element), so decode = concatenate streams, then unshuffle.
 
-Supported here: DECODE of internal codecs lz4 (reusing the
-spec-vector-tested raw-block codec in ``lz4.py``), zlib (stdlib),
-blosclz (pure-Python FastLZ-descendant decoder below), snappy
-(pure-Python raw-format decoder below) and zstd (via pyarrow's bundled
-libzstd when available — zstd's FSE/Huffman entropy stages are out of
-pure-Python reach, but pyarrow is already a dependency of the
-Arrow/pandas-UDF path, so the leg is real wherever the engine runs);
-both split and unsplit block layouts, byte-shuffle, bit-shuffle or no
-shuffle, multi-block chunks, stored-stream and whole-chunk-memcpy
-fallbacks. ENCODE covers every Blosc1 internal codec: blosclz and snappy
-(pure-Python greedy LZ over the same grammars the decoders accept —
-compatibility legs for containers whose attributes pin those cnames; the
-default write path stays lz4), lz4, zlib and (pyarrow-gated) zstd —
+Supported: all five Blosc1 internal codecs in both directions — lz4
+(liblz4 via ``lz4.py``), snappy and zstd (libsnappy/libzstd, bundled
+with pyarrow), zlib (stdlib) and blosclz (the pure-Python FastLZ
+descendant below; no installed library provides it); split and unsplit
+block layouts, byte-shuffle, bit-shuffle or no shuffle, multi-block
+chunks, stored-stream and whole-chunk-memcpy fallbacks. Encoding is
 always unsplit, with flag bit 4 set so real c-blosc decoders read the
-single-stream layout. The one refusal left is zstd without pyarrow
-(entropy coding is out of pure-Python reach), pinned by a recorded chunk
-vector in ``tests/test_blosc.py``.
+single-stream layout.
 
-Validation: the lz4 and snappy stream decoders (and the lz4 encoder) are
-cross-checked against pyarrow's real liblz4/libsnappy in
-``tests/test_blosc.py``/``test_lz4.py`` — non-circular evidence for the
-token loops. No *blosc* implementation exists in this container, so the
-chunk-container layout itself rests on the published format description,
-exhaustive self-roundtrips, and hand-computed shuffle/header/blosclz
-vectors. The compress side emits conservative, always-legal streams.
+Validation: no *blosc* implementation exists in this container, so the
+chunk-container layout rests on the published format description,
+exhaustive self-roundtrips, and hand-computed shuffle/header/blosclz/
+snappy vectors. The compress side emits conservative, always-legal
+streams.
 """
 
 from __future__ import annotations
@@ -68,6 +57,7 @@ import struct
 import zlib as _zlib
 
 import numpy as np
+import pyarrow as pa
 
 from n5_dask_spark.sources.n5.lz4 import lz4_block_compress, lz4_block_decompress
 
@@ -92,26 +82,8 @@ _CODEC_ZSTD = 4
 
 _CODEC_NAMES = {0: "blosclz", 1: "lz4", 2: "snappy", 3: "zlib", 4: "zstd"}
 
-# zstd leg: probed lazily so the pure-Python codecs pay no pyarrow import
-# cost on executors that never touch a zstd chunk.
-_zstd_probe: bool | None = None
-
-
-def _zstd(level: int | None = None):
-    """Return a pyarrow zstd ``Codec`` (real libzstd), or None if absent."""
-    global _zstd_probe
-    if _zstd_probe is None:
-        try:
-            import pyarrow as pa
-
-            _zstd_probe = bool(pa.Codec.is_available("zstd"))
-        except Exception:
-            _zstd_probe = False
-    if not _zstd_probe:
-        return None
-    import pyarrow as pa
-
-    return pa.Codec("zstd") if level is None else pa.Codec("zstd", compression_level=level)
+_SNAPPY = pa.Codec("snappy")
+_ZSTD = pa.Codec("zstd")
 
 _HEADER = struct.Struct("<BBBBiii")
 HEADER_SIZE = 16
@@ -320,17 +292,14 @@ def blosclz_compress(data: bytes) -> bytes:
 
 
 def snappy_decompress(data: bytes, expected: int) -> bytes:
-    """Decode one raw-format snappy stream (c-blosc internal codec id 2).
+    """Decode one raw-format snappy stream (c-blosc internal codec id 2;
+    c-blosc's wrapper calls the raw ``snappy_uncompress``, not the framing
+    format) with libsnappy.
 
-    Pure-Python implementation of the PUBLIC snappy byte-stream format
-    (google/snappy ``format_description.txt``; c-blosc's wrapper calls the
-    raw ``snappy_uncompress``, not the framing format): a little-endian
-    base-128 varint uncompressed length, then tagged elements. Tag low 2
-    bits select: 0 = literal with 6-bit length-1 (values 60..63 escape to
-    a 1-4 byte little-endian length-1); 1 = copy with 3-bit length-4 and
-    an 11-bit offset (tag bits 5-7 high | next byte low); 2/3 = copy with
-    6-bit length-1 and a 2/4-byte little-endian offset. Copies may
-    overlap their output (RLE-style period copy); offset 0 is illegal.
+    The stream opens with a little-endian base-128 varint uncompressed
+    length, checked here against the block's size: libsnappy refuses a
+    stream that decodes to other than its preamble, but returns a buffer
+    longer than the preamble with an uninitialised tail.
     """
     n = len(data)
     ip = 0
@@ -351,124 +320,15 @@ def snappy_decompress(data: bytes, expected: int) -> bytes:
         raise ValueError(
             f"snappy stream declares {length} bytes, blosc block expects {expected}"
         )
-    out = bytearray()
-    while ip < n:
-        tag = data[ip]
-        ip += 1
-        kind = tag & 3
-        if kind == 0:  # literal run
-            ln = tag >> 2
-            if ln >= 60:  # escaped length in the next 1-4 bytes
-                nb = ln - 59
-                if ip + nb > n:
-                    raise ValueError("snappy stream truncated in a literal length")
-                ln = int.from_bytes(data[ip : ip + nb], "little")
-                ip += nb
-            ln += 1
-            if ip + ln > n:
-                raise ValueError("snappy stream truncated in a literal run")
-            if len(out) + ln > expected:
-                raise ValueError("snappy stream decodes past its declared size")
-            out += data[ip : ip + ln]
-            ip += ln
-            continue
-        if kind == 1:  # copy, 11-bit offset
-            if ip >= n:
-                raise ValueError("snappy stream truncated in a copy offset")
-            ln = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | data[ip]
-            ip += 1
-        else:  # copy, 2- or 4-byte little-endian offset
-            nb = 2 if kind == 2 else 4
-            if ip + nb > n:
-                raise ValueError("snappy stream truncated in a copy offset")
-            ln = (tag >> 2) + 1
-            off = int.from_bytes(data[ip : ip + nb], "little")
-            ip += nb
-        if off == 0 or off > len(out):
-            raise ValueError("snappy copy reaches before the stream start")
-        if len(out) + ln > expected:
-            raise ValueError("snappy stream decodes past its declared size")
-        src = len(out) - off
-        # overlap-safe period copy (same doubling loop as blosclz above)
-        while ln > 0:
-            take = min(ln, len(out) - src)
-            out += out[src : src + take]
-            src += take
-            ln -= take
-    if len(out) != expected:
-        raise ValueError(f"snappy stream decoded to {len(out)} bytes, expected {expected}")
-    return bytes(out)
+    try:
+        return _SNAPPY.decompress(data, expected, asbytes=True)
+    except (OSError, ValueError) as exc:
+        raise ValueError(f"corrupt snappy stream: {exc}") from None
 
 
 def snappy_compress(data: bytes) -> bytes:
-    """Encode one raw-format snappy stream (the layout the decoder above
-    and real libsnappy's ``snappy_uncompress`` accept).
-
-    Varint uncompressed-length preamble, then greedy hash-table LZ over
-    the documented tag grammar: literal runs (inline 6-bit length, or the
-    60/61 escapes for 1-/2-byte lengths; chunked at 65536 so the 3-/4-byte
-    escapes are never needed) and copy-2 elements only — length 4..64,
-    2-byte little-endian offset within a 65535-byte window; longer matches
-    emit consecutive copy-2s at the same distance. Copy-1/copy-4 are legal
-    output a conformant encoder may simply never produce (real snappy
-    decoders must accept any mix). Cross-validated in tests against
-    pyarrow's bundled REAL libsnappy decoder — non-circular evidence for
-    the emitted byte stream, not just a self-roundtrip.
-    """
-    n = len(data)
-    out = bytearray()
-    # varint preamble
-    v = n
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    lit_start = 0
-
-    def flush(end: int) -> None:
-        i = lit_start
-        while i < end:
-            run = min(65536, end - i)
-            if run <= 60:
-                out.append((run - 1) << 2)
-            elif run <= 256:
-                out.append(60 << 2)
-                out.append(run - 1)
-            else:
-                out.append(61 << 2)
-                out.extend((run - 1).to_bytes(2, "little"))
-            out.extend(data[i : i + run])
-            i += run
-
-    table: dict[bytes, int] = {}
-    i = 0
-    while i + 4 <= n:
-        key = data[i : i + 4]
-        cand = table.get(key)
-        table[key] = i
-        if cand is None or i - cand > 65535:
-            i += 1
-            continue
-        length = 4
-        while i + length < n and data[cand + length] == data[i + length]:
-            length += 1
-        flush(i)
-        off = (i - cand).to_bytes(2, "little")
-        rem = length
-        while rem > 0:
-            take = min(64, rem)
-            if rem - take in (1, 2, 3) and take == 64:
-                take = 61  # keep every emitted copy >= 4 long
-            out.append(((take - 1) << 2) | 2)
-            out.extend(off)
-            rem -= take
-        for j in range(i + 1, min(i + length, n - 3)):
-            table[data[j : j + 4]] = j
-        i += length
-        lit_start = i
-    flush(n)
-    return bytes(out)
+    """Encode one raw-format snappy stream with libsnappy."""
+    return _SNAPPY.compress(data, asbytes=True)
 
 
 def _nstreams(flags: int, typesize: int, neblock: int, blocksize: int) -> int:
@@ -513,17 +373,10 @@ def decompress(chunk: bytes) -> bytes:
             raise ValueError("memcpyed blosc chunk with inconsistent cbytes")
         return bytes(chunk[HEADER_SIZE : HEADER_SIZE + nbytes])
     codec = (flags >> 5) & 0x7
-    if codec not in (_CODEC_LZ4, _CODEC_ZLIB, _CODEC_BLOSCLZ, _CODEC_SNAPPY, _CODEC_ZSTD):
+    if codec not in _CODEC_NAMES:
         raise NotImplementedError(
-            f"blosc internal codec {_CODEC_NAMES.get(codec, codec)!r} is not "
-            "supported by the pure-Python codec (blosclz, lz4, snappy, zlib and zstd are)"
-        )
-    zstd_codec = _zstd() if codec == _CODEC_ZSTD else None
-    if codec == _CODEC_ZSTD and zstd_codec is None:
-        raise NotImplementedError(
-            "blosc internal codec 'zstd' needs pyarrow's bundled libzstd, "
-            "which is unavailable in this environment (its FSE/Huffman "
-            "entropy stages are out of pure-Python reach)"
+            f"blosc internal codec id {codec} is not a Blosc1 internal codec "
+            "(blosclz, lz4, snappy, zlib and zstd are)"
         )
     if blocksize <= 0:
         raise ValueError(f"corrupt blosc header: blocksize={blocksize}")
@@ -565,7 +418,7 @@ def decompress(chunk: bytes) -> bytes:
                 block += snappy_decompress(bytes(payload), stream_size)
             elif codec == _CODEC_ZSTD:
                 try:
-                    part = zstd_codec.decompress(bytes(payload), stream_size, asbytes=True)
+                    part = _ZSTD.decompress(bytes(payload), stream_size, asbytes=True)
                 except Exception as exc:  # ArrowInvalid etc -> decoder-total
                     raise ValueError(f"corrupt blosc zstd stream: {exc}") from None
                 if len(part) != stream_size:
@@ -606,11 +459,6 @@ def compress(
     """
     if cname == "lz4hc":
         cname = "lz4"  # same stream format, same flag id
-    if cname == "zstd" and _zstd() is None:
-        raise NotImplementedError(
-            "blosc cname 'zstd' needs pyarrow's bundled libzstd, which is "
-            "unavailable in this environment; use lz4 or zlib"
-        )
     if cname not in ("blosclz", "lz4", "snappy", "zlib", "zstd"):
         raise NotImplementedError(
             f"blosc cname {cname!r} is not a Blosc1 internal codec "
@@ -649,7 +497,9 @@ def compress(
     }[cname]
     # blosc clevel 1-9 maps onto zstd's low levels; clamp to the same range
     # zlib uses so one knob means one thing across cnames
-    zstd_codec = _zstd(min(max(clevel, 1), 9)) if cname == "zstd" else None
+    zstd_codec = (
+        pa.Codec("zstd", compression_level=min(max(clevel, 1), 9)) if cname == "zstd" else None
+    )
     nblocks = -(-nbytes // blocksize)
     body = bytearray()
     blocks: list[bytes] = []

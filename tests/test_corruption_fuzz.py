@@ -37,11 +37,13 @@ Pinned truth (each assertion is a guarantee or a documented format limit):
   WITHOUT the optional content checksum, so flips that keep the entropy
   streams decodable land silently. FORMAT/LIBRARY LIMIT.
 
-Everything here is deterministic (pure-Python codecs, fixed fixture), so
-the assertions are exact, not statistical.
+Everything here is deterministic (fixed fixture, deterministic encoders),
+so the assertions are exact, not statistical.
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 import pytest
@@ -59,7 +61,7 @@ def fixture_block() -> np.ndarray:
     return arr
 
 
-# leg -> (compression dict, needs_pyarrow)
+# leg -> compression dict
 LEGS: dict[str, dict] = {
     "raw": {"type": "raw"},
     "gzip": {"type": "gzip"},
@@ -76,14 +78,10 @@ LEGS: dict[str, dict] = {
 CHECKSUMMED = ("gzip", "zlib", "bzip2", "xz", "lz4")
 
 
-def encode_or_skip(leg: str) -> tuple[np.ndarray, bytes, dict]:
+def encode_fixture(leg: str) -> tuple[np.ndarray, bytes, dict]:
     arr = fixture_block()
     comp = LEGS[leg]
-    try:
-        enc = encode_block(arr, DATA_TYPE, comp)
-    except ImportError as exc:  # zstd without pyarrow's libzstd
-        pytest.skip(str(exc))
-    return arr, enc, comp
+    return arr, encode_block(arr, DATA_TYPE, comp), comp
 
 
 def classify(buf: bytes, comp: dict, original: np.ndarray) -> str:
@@ -109,7 +107,7 @@ def flip_census(enc: bytes, comp: dict, arr: np.ndarray) -> dict[str, list[int]]
 
 @pytest.mark.parametrize("leg", list(LEGS))
 def test_truncation_never_silent(leg):
-    arr, enc, comp = encode_or_skip(leg)
+    arr, enc, comp = encode_fixture(leg)
     outcomes = {classify(enc[:k], comp, arr) for k in range(len(enc))}
     assert outcomes == {"raised"}, (
         f"{leg}: a strict-prefix truncation decoded clean ({outcomes})"
@@ -118,7 +116,7 @@ def test_truncation_never_silent(leg):
 
 @pytest.mark.parametrize("leg", CHECKSUMMED)
 def test_bit_flips_checksummed_legs_have_no_silent_lane(leg):
-    arr, enc, comp = encode_or_skip(leg)
+    arr, enc, comp = encode_fixture(leg)
     census = flip_census(enc, comp, arr)
     assert census["silent_wrong"] == [], (
         f"{leg}: single-bit flips at offsets "
@@ -126,15 +124,18 @@ def test_bit_flips_checksummed_legs_have_no_silent_lane(leg):
     )
 
 
-def _lz4_last_sequence_token_off(payload: bytes) -> int:
-    """Offset (within ``payload``) of an lz4 block's final sequence token.
+def _lz4_sequences(payload: bytes) -> tuple[int, list[tuple[int, int, int, int]]]:
+    """Walk an lz4 block's sequences per the LZ4 block format, tracking
+    positions instead of producing bytes.
 
-    The last sequence is literals-only, so its match-length nibble is
-    never read — liblz4 and lz4-java both stop after the final literal
-    copy. Replica of the sequence walk in lz4.py:lz4_block_decompress,
-    tracking token positions instead of producing bytes.
+    Returns the offset (within ``payload``) of the final sequence token —
+    the last sequence is literals-only, so its match-length nibble is
+    never read; liblz4 and lz4-java both stop after the final literal
+    copy — and, per match, (offset-field position, match offset, output
+    position, match length).
     """
-    s, n, last = 0, len(payload), 0
+    s, n, last, d = 0, len(payload), 0, 0
+    matches = []
     while s < n:
         last = s
         token = payload[s]
@@ -147,14 +148,22 @@ def _lz4_last_sequence_token_off(payload: bytes) -> int:
             lit += payload[s]
             s += 1
         s += lit
+        d += lit
         if s >= n:
             break  # literals-only last sequence
-        s += 2  # match offset
+        (offset,) = struct.unpack_from("<H", payload, s)
+        off_at = s
+        s += 2
+        mlen = (token & 0x0F) + 4
         if (token & 0x0F) == 15:
             while payload[s] == 255:
+                mlen += 255
                 s += 1
+            mlen += payload[s]
             s += 1
-    return last
+        matches.append((off_at, offset, d, mlen))
+        d += mlen
+    return last, matches
 
 
 def test_bit_flips_lz4_equal_lane_is_exactly_the_format_dont_cares():
@@ -174,34 +183,43 @@ def test_bit_flips_lz4_equal_lane_is_exactly_the_format_dont_cares():
     - the match-length nibble of the LAST sequence token inside each
       LZ4-compressed chunk: the last sequence is literals-only and both
       liblz4 and lz4-java stop after the final literal copy without
-      reading it. (The chunk checksum can't catch these: it hashes the
-      DECODED bytes, which don't change.)
-    """
-    import struct
+      reading it;
+    - the bit that turns a power-of-two match offset into 0 where the
+      match copies a zero run: liblz4 (also behind lz4-java's JNI path and
+      numcodecs) accepts offset 0 and zero-fills the run.
 
-    arr, enc, comp = encode_or_skip("lz4")
+    (The chunk checksum can't catch these: it hashes the DECODED bytes,
+    which don't change.)
+    """
+    arr, enc, comp = encode_fixture("lz4")
+    decoded = arr.astype(">u2").tobytes()  # the chunks' decoded payload
     census = flip_census(enc, comp, arr)
-    dont_care_offs, pos = [], N5_HEADER_BYTES
+    expected, pos, out0 = [], N5_HEADER_BYTES, 0
     while pos < len(enc):
-        dont_care_offs.append(pos + 8)  # chunk token's level nibble
+        expected += [pos + 8] * 4  # chunk token's level nibble
         clen, dlen, _check = struct.unpack_from("<iii", enc, pos + 9)
         token = enc[pos + 8]
         if dlen == 0:
             break
         assert dlen <= 1 << 10, "fixture chunk outgrew the level-0 bound"
         if (token & 0xF0) == 0x20:  # METHOD_LZ4: compressed payload
-            payload = enc[pos + 21 : pos + 21 + clen]
-            dont_care_offs.append(pos + 21 + _lz4_last_sequence_token_off(payload))
+            last, matches = _lz4_sequences(enc[pos + 21 : pos + 21 + clen])
+            expected += [pos + 21 + last] * 4
+            for off_at, offset, d, mlen in matches:
+                if offset & (offset - 1) == 0 and not any(
+                    decoded[out0 + d : out0 + d + mlen]
+                ):
+                    expected.append(pos + 21 + off_at + (offset.bit_length() - 1) // 8)
         pos += 21 + clen
-    expected = sorted(off for off in dont_care_offs for _ in range(4))
-    assert sorted(census["equal"]) == expected, (
-        f"lz4 equal lane drifted: {sorted(set(census['equal']))} "
-        f"(expected 4 low-nibble flips at each of {sorted(dont_care_offs)})"
+        out0 += dlen
+    assert sorted(census["equal"]) == sorted(expected), (
+        f"lz4 equal lane drifted: {sorted(census['equal'])} "
+        f"(expected {sorted(expected)}, one entry per bit)"
     )
 
 
 def test_bit_flips_raw_header_guarded_payload_open():
-    arr, enc, comp = encode_or_skip("raw")
+    arr, enc, comp = encode_fixture("raw")
     census = flip_census(enc, comp, arr)
     # every header bit flip refused (mode whitelist + dims/size check)...
     assert min(census["silent_wrong"]) >= N5_HEADER_BYTES
@@ -214,7 +232,7 @@ def test_bit_flips_raw_header_guarded_payload_open():
 
 
 def test_bit_flips_blosc_zlib_silent_lane_is_exactly_the_blosc_header():
-    arr, enc, comp = encode_or_skip("blosc-zlib")
+    arr, enc, comp = encode_fixture("blosc-zlib")
     census = flip_census(enc, comp, arr)
     silent = sorted(set(census["silent_wrong"]))
     assert silent, "expected the documented Blosc1 header lane"
@@ -289,7 +307,7 @@ def test_bit_flips_unchecksummed_legs_documented_silent_lane(leg):
     # (README failure contracts). This pin keeps the documentation honest —
     # if a future change adds verification, it must flip to an assertion
     # of zero, not rot.
-    arr, enc, comp = encode_or_skip(leg)
+    arr, enc, comp = encode_fixture(leg)
     census = flip_census(enc, comp, arr)
     assert census["silent_wrong"], (
         f"{leg}: no silent flips — verification was added; update the "

@@ -1,8 +1,8 @@
-"""Pure-Python LZ4 codec: spec vectors, roundtrips, N5 integration.
+"""LZ4 codec: spec vectors, roundtrips, N5 integration.
 
 The roundtrip tests alone can't catch a self-consistent-but-nonstandard
 codec, so xxhash32 is pinned to published XXH32 vectors and the block
-decompressor to a hand-derived spec-conformant stream.
+decompressor (liblz4 behind our length checks) to hand-derived streams.
 """
 
 from __future__ import annotations
@@ -58,6 +58,12 @@ def test_block_decode_known_stream():
     #   seq2 (final): 5 literals 'AAAAA', no match
     stream = b"\x1fA\x01\x00\x07" + b"\x50AAAAA"
     assert lz4_block_decompress(stream, 32) == b"A" * 32
+    # match offset 0 (2 literals, a 64-byte match at offset 0, 5 final
+    # literals): liblz4 accepts it and zero-fills the run (LZ4_write32(op,
+    # 0) ahead of its short-offset copy). Pinned so a library that starts
+    # raising here, or returns uninitialised bytes, is caught.
+    stream = b"\x2fab\x00\x00\x2d" + b"\x50cdefg"
+    assert lz4_block_decompress(stream, 71) == b"ab" + b"\x00" * 64 + b"cdefg"
 
 
 def test_block_decode_literals_only():
@@ -215,7 +221,7 @@ def test_cli_lz4_e2e(spark, capsys):
 
 
 def test_blosc_now_supported_but_exotic_variants_raise():
-    # blosc gained a pure-Python implementation (sources/n5/blosc.py);
+    # blosc is implemented in sources/n5/blosc.py;
     # the default (lz4 + byte-shuffle) encodes, unsupported cnames still
     # fail loudly instead of silently mis-encoding
     from n5_dask_spark.sources.n5.codec import decode_block, encode_block
@@ -225,16 +231,8 @@ def test_blosc_now_supported_but_exotic_variants_raise():
     np.testing.assert_array_equal(
         decode_block(encode_block(arr, "uint8", spec), "uint8", spec), arr
     )
-    from n5_dask_spark.sources.n5 import blosc as _blosc
-
-    if _blosc._zstd() is not None:
-        # zstd is pyarrow-gated: with libzstd present it encodes for real
-        spec_z = {"type": "blosc", "cname": "zstd", "typesize": 1}
-        np.testing.assert_array_equal(
-            decode_block(encode_block(arr, "uint8", spec_z), "uint8", spec_z), arr
-        )
-    # every Blosc1 internal codec now encodes (blosclz/snappy landed r8)
-    for cname in ("blosclz", "snappy"):
+    # every Blosc1 internal codec encodes
+    for cname in ("zstd", "blosclz", "snappy"):
         spec_c = {"type": "blosc", "cname": cname, "typesize": 1}
         np.testing.assert_array_equal(
             decode_block(encode_block(arr, "uint8", spec_c), "uint8", spec_c), arr
@@ -288,6 +286,28 @@ def test_block_decompress_rejects_truncated_literals():
     packed = lz4_block_compress(data)
     with pytest.raises(ValueError):
         lz4_block_decompress(packed[: len(packed) // 2], len(data))
+    # a complete stream that decodes SHORT (3 literals for a 5-byte block)
+    # must raise through every framing: pyarrow returns the requested size
+    # regardless, so the tail would otherwise be uninitialised memory
+    import struct
+
+    from n5_dask_spark.sources.n5 import blosc
+    from n5_dask_spark.sources.n5.lz4 import numcodecs_decompress
+
+    short = b"\x30abc"
+    with pytest.raises(ValueError):
+        lz4_block_decompress(short, 5)
+    with pytest.raises(ValueError):
+        numcodecs_decompress(struct.pack("<I", 5) + short)
+    chunk = (
+        b"\x02\x01\x30\x01"  # version=2 versionlz=1 flags=lz4<<5|not-split typesize=1
+        + struct.pack("<iii", 5, 5, 16 + 4 + 4 + len(short))
+        + struct.pack("<i", 20)  # offset table: one block at 20
+        + struct.pack("<i", len(short))
+        + short
+    )
+    with pytest.raises(ValueError):
+        blosc.decompress(chunk)
 
 
 def test_block_decompress_rejects_overlong_match():

@@ -148,9 +148,8 @@ def test_foreign_zstd_container_reads(tmp_path, spark):
     through the full Spark path."""
     import struct
 
-    pa = pytest.importorskip("pyarrow")
-    if not pa.Codec.is_available("zstd"):
-        pytest.skip("pyarrow libzstd unavailable")
+    import pyarrow as pa
+
     from n5_dask_spark.sources.n5.reader import read_full
 
     rng = np.random.default_rng(13)
@@ -182,11 +181,8 @@ def test_foreign_zstd_container_reads(tmp_path, spark):
 
 
 def test_zstd_codec_roundtrip_and_corruption():
-    from n5_dask_spark.sources.n5 import blosc as _blosc
     from n5_dask_spark.sources.n5.codec import decode_block, encode_block
 
-    if _blosc._zstd() is None:
-        pytest.skip("pyarrow libzstd unavailable")
     comp = {"type": "zstd", "level": 3}
     rng = np.random.default_rng(17)
     for dt in ("uint8", "uint16", "float32"):

@@ -35,7 +35,7 @@ def _seeds() -> list[int]:
 
 # every codec x shuffle family the write path accepts, cycled by seed so a
 # 6-seed default run crosses gzip/zlib/lz4/blosc variants and a sweep hits
-# all of them; blosc cnames cover all four pure-Python internal codecs
+# all of them; blosc cnames cover four of the five internal codecs
 CODECS = [
     {"type": "raw"},
     {"type": "gzip"},

@@ -50,10 +50,10 @@ def test_table_cache_invalidation(spark, tmp_path):
 
     a = catalog.load_table(spark, sf, "region")
     assert catalog.load_table(spark, sf, "region") is a  # cache hit
-    assert (sf, "region") in catalog._SCHEMA_CACHE
+    assert (sf, "region") in catalog._schema_cache(spark)
 
     catalog.invalidate_table_cache(spark, sf)
-    assert (sf, "region") not in catalog._SCHEMA_CACHE
+    assert (sf, "region") not in catalog._schema_cache(spark)
     b = catalog.load_table(spark, sf, "region")
     assert b is not a  # fresh plan (fresh file listing)
     assert b.collect() == a.collect()
@@ -62,3 +62,29 @@ def test_table_cache_invalidation(spark, tmp_path):
     c = catalog.load_table(spark, "/root/testdata/sf0.001", "region")
     catalog.invalidate_table_cache(spark, sf)
     assert catalog.load_table(spark, "/root/testdata/sf0.001", "region") is c
+
+
+def test_schema_cache_is_per_session(spark, tmp_path):
+    """The inferred-schema cache lives with the session, like the plan
+    cache: a new session over a rewritten sf_dir infers the new schema
+    instead of inheriting the one an earlier session cached."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from n5_dask_spark import catalog
+    from tests.conftest import SF_SMALL
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    table = pq.read_table(catalog.table_path(SF_SMALL, "region"))
+    pq.write_table(table, sf / "region.parquet")
+    assert "extra" not in catalog.load_table(spark, str(sf), "region").columns
+
+    pq.write_table(
+        table.append_column("extra", pa.array([1] * table.num_rows, pa.int64())),
+        sf / "region.parquet",
+    )
+    other = spark.newSession()
+    df = catalog.load_table(other, str(sf), "region")
+    assert "extra" in df.columns
+    assert df.count() == table.num_rows
