@@ -13,9 +13,14 @@ similarity search, text analysis, multimodal columns — expressed with
 built-in Spark SQL so Catalyst/Tungsten pick the physical strategy.
 """
 
-from n5_dask_spark.session import get_spark
-from n5_dask_spark.catalog import TABLES, load_tables
-from n5_dask_spark.registry import REGISTRY, register, Query
+from n5_dask_spark import _pyworker
+
+if _pyworker.in_pyspark_worker():
+    _pyworker.install()
+
+from n5_dask_spark.session import get_spark  # noqa: E402
+from n5_dask_spark.catalog import TABLES, load_tables  # noqa: E402
+from n5_dask_spark.registry import REGISTRY, register, Query  # noqa: E402
 
 __all__ = ["get_spark", "TABLES", "load_tables", "REGISTRY", "register", "Query"]
 

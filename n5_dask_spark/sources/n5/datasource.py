@@ -171,7 +171,7 @@ class N5Reader(DataSourceReader):
         scans, reader.py:261, which this DataSource never routes through).
         Runs driver-side once per plan; fsio serves URI containers (no
         Hadoop FS needed, so it also covers emulated/pyarrow-only schemes)."""
-        from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER, _is_uri
+        from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER, _is_uri, fence_log
 
         if _is_uri(self.container):
             from n5_dask_spark.sources.n5 import fsio
@@ -182,6 +182,11 @@ class N5Reader(DataSourceReader):
             marker = os.path.join(self.container, self.dataset, INCOMPLETE_MARKER)
             present = os.path.exists(marker)
         if present:
+            if fence_log.isEnabledFor(logging.DEBUG):
+                fence_log.debug(
+                    "format('n5') scan of %s/%s refused: marker %s",
+                    self.container, self.dataset, marker,
+                )
             raise ValueError(
                 f"dataset {self.container}/{self.dataset} carries the "
                 f"write-session marker {marker} — a sink job is writing it "
@@ -260,9 +265,10 @@ class N5Reader(DataSourceReader):
         if log.isEnabledFor(logging.DEBUG):
             log.debug(
                 "format('n5') plan %s/%s: %d blocks, %d bytes, maxSplitBytes=%d "
-                "-> %d partitions (parallelism %d from %s)",
+                "-> %d partitions (parallelism %d from %s), codec %s",
                 self.container, self.dataset, len(blocks), total_bytes, max_split,
                 len(parts), self.split.parallelism, self.split.source,
+                self._get_attrs().compression,
             )
         return parts
 

@@ -51,10 +51,13 @@ with no S3 endpoint (r13 verdict item 2).
 
 from __future__ import annotations
 
+import logging
 import os
 import random
 import time
 import uuid
+
+from n5_dask_spark.sources.n5.metadata import fence_log
 
 # pyarrow URI schemes: s3a/s3n are Hadoop spellings of s3; pyarrow's S3
 # filesystem speaks the same API/keys, so map them through.
@@ -261,6 +264,18 @@ def claim_marker_uri(marker_path: str) -> str:
     double read-back narrows but cannot close the PUT-fence race — see
     the module doc for the exact interleave and why only a conditional
     write closes it."""
+    try:
+        _claim_marker_uri(marker_path)
+    except RuntimeError as e:
+        if fence_log.isEnabledFor(logging.DEBUG):
+            fence_log.debug("claim of %s refused: %s", marker_path, e)
+        raise
+    if fence_log.isEnabledFor(logging.DEBUG):
+        fence_log.debug("claimed %s", marker_path)
+    return marker_path
+
+
+def _claim_marker_uri(marker_path: str) -> None:
     token = f"writer pid {os.getpid()} token {uuid.uuid4().hex}\n".encode()
     if exists(marker_path):
         raise _refuse_existing_marker(marker_path)
@@ -279,7 +294,7 @@ def claim_marker_uri(marker_path: str) -> str:
             ) from None
         with os.fdopen(fd, "wb") as f:
             f.write(token)
-        return marker_path
+        return
     publish_file(marker_path, token)
     for _ in range(2):
         # randomized settle: a rival that passed the exists() pre-check at
@@ -311,4 +326,3 @@ def claim_marker_uri(marker_path: str) -> str:
                 "This dataset has a live concurrent writer; retry after it "
                 "finishes."
             )
-    return marker_path

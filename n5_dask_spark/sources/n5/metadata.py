@@ -14,6 +14,7 @@ the fixture /root/reference/data/test.n5/mri/c0/s0/attributes.json.
 from __future__ import annotations
 
 import json
+import logging
 import math
 import os
 from dataclasses import dataclass, field
@@ -21,6 +22,10 @@ from typing import Any
 
 N5_VERSION = "2.5.1"
 DEFAULT_PIXEL_RES_UNIT = "pixel"
+
+log = logging.getLogger(__name__)
+# write-session marker claims, releases and refusals (writer, fsio, tiff)
+fence_log = logging.getLogger("n5_dask_spark.sources.n5.fence")
 
 
 @dataclass
@@ -251,7 +256,14 @@ def _atomic_write_json(path: str, obj: Any) -> None:
             os.unlink(tmp)
 
 
+def log_codec(action: str, container: str, dataset: str, attrs: DatasetAttributes) -> None:
+    """DEBUG record naming the codec a dataset is read or written with."""
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug("%s %s/%s with codec %s", action, container, dataset, attrs.compression)
+
+
 def write_attributes(container: str, dataset: str, attrs: DatasetAttributes) -> None:
+    log_codec("write", container, dataset, attrs)
     root = attributes_path(container)
     if _is_uri(container):
         from n5_dask_spark.sources.n5 import fsio

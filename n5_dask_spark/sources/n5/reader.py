@@ -25,6 +25,7 @@ docstring for the probe that motivated this).
 from __future__ import annotations
 
 import itertools
+import logging
 import os
 import re
 from collections.abc import Iterator
@@ -47,7 +48,12 @@ from pyspark.sql.types import (
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import decode_block_at, np_dtype
-from n5_dask_spark.sources.n5.metadata import DatasetAttributes, read_attributes
+from n5_dask_spark.sources.n5.metadata import (
+    DatasetAttributes,
+    fence_log,
+    log_codec,
+    read_attributes,
+)
 from n5_dask_spark.udfbatch import bounded_frames
 
 BLOCK_SCHEMA = StructType(
@@ -270,6 +276,8 @@ def _reject_empty_block_files(
         else os.path.join(container, dataset, INCOMPLETE_MARKER)
     )
     if _path_exists(marker, spark if is_uri else None):
+        if fence_log.isEnabledFor(logging.DEBUG):
+            fence_log.debug("scan of %s/%s refused: marker %s", container, dataset, marker)
         raise ValueError(
             f"dataset {os.path.join(container, dataset)} carries the "
             f"write-session marker {marker} — a sink job is writing it "
@@ -469,6 +477,7 @@ def decoded_blocks(
     from n5_dask_spark.sources.n5 import fuse
 
     attrs = read_attributes(container, dataset)
+    log_codec("read", container, dataset, attrs)
     raw_df = scan_block_files(
         spark, container, dataset, attrs.ndim, paths=paths,
         grid_shape=None if paths is not None else attrs.grid_shape,
@@ -495,6 +504,7 @@ def decoded_blocks(
 def block_stats(spark: SparkSession, container: str, dataset: str) -> DataFrame:
     """Per-block stats — decode and reduce inside the UDF; only scalars leave."""
     attrs = read_attributes(container, dataset)
+    log_codec("read", container, dataset, attrs)
     raw_df = scan_block_files(
         spark, container, dataset, attrs.ndim, grid_shape=attrs.grid_shape
     )
@@ -564,6 +574,7 @@ def read_region(
     distributed ``transforms.export_region`` slab path, which never
     materializes the region anywhere."""
     attrs = read_attributes(container, dataset)
+    log_codec("read", container, dataset, attrs)
     itemsize = np_dtype(attrs.data_type).itemsize
     req_voxels = 1
     for s, e in zip(start_xyz, end_xyz):

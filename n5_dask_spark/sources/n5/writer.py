@@ -19,6 +19,7 @@ write_region really writes.
 from __future__ import annotations
 
 import itertools
+import logging
 import os
 import tempfile
 import uuid
@@ -37,6 +38,7 @@ from n5_dask_spark.sources.n5.metadata import (
     INCOMPLETE_MARKER,
     DatasetAttributes,
     current_umask,
+    fence_log,
     read_attributes,
     read_raw_attributes,
     write_attributes,
@@ -74,6 +76,8 @@ def claim_dataset_write(container: str, dataset: str) -> str:
     try:
         fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
+        if fence_log.isEnabledFor(logging.DEBUG):
+            fence_log.debug("claim of %s refused: marker exists", path)
         raise RuntimeError(
             f"refusing to write {os.path.join(container, dataset)}: "
             f"write-session marker {path} already exists — either another "
@@ -85,6 +89,8 @@ def claim_dataset_write(container: str, dataset: str) -> str:
         ) from None
     with os.fdopen(fd, "w") as f:
         f.write(f"writer pid {os.getpid()}\n")
+    if fence_log.isEnabledFor(logging.DEBUG):
+        fence_log.debug("claimed %s", path)
     return path
 
 
@@ -92,6 +98,8 @@ def release_dataset_write(marker: str) -> None:
     """Release a claim: the dataset is complete and visible to readers."""
     from n5_dask_spark.sources.n5.metadata import _is_uri
 
+    if fence_log.isEnabledFor(logging.DEBUG):
+        fence_log.debug("released %s", marker)
     if _is_uri(marker):
         from n5_dask_spark.sources.n5 import fsio
 
@@ -111,9 +119,15 @@ def release_dataset_write(marker: str) -> None:
 # AFTER its current batch's files hit disk — a lost-executor-mid-write
 # simulation — and retried attempts (> 0) run clean. The marker files let
 # the test assert the injection really fired. Production cost: one
-# os.environ.get per batch. tests/test_fault_injection.py drives this
-# under a retry-enabled master (local[N,maxFailures]).
+# os.environ.get per written block. tests/test_fault_injection.py drives
+# this under a retry-enabled master (local[N,maxFailures]).
 _FAULT_ENV = "N5DS_INJECT_WRITE_FAULT_DIR"
+# The grouped sinks' batch is their one assembled block; the map sink runs
+# the hook every _FAULT_EVERY_BLOCKS written blocks, so a task owning more
+# blocks than that dies with only part of them on disk.
+_FAULT_EVERY_BLOCKS = 1
+# Written-coords rows (12 bytes each) per output frame of the map sink.
+_COORDS_PER_FRAME = 1024
 
 
 def _maybe_inject_fault() -> None:
@@ -261,14 +275,14 @@ def write_blocks(
 
         def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             buf: list[tuple] = []
-            for blk in blocks_fn(batches):
+            for n, blk in enumerate(blocks_fn(batches), 1):
                 buf.append(write_one(*blk))
-                if len(buf) >= 1024:  # coords rows are 12 bytes — cadence only
-                    _maybe_inject_fault()  # chaos hook: files are on disk
+                if n % _FAULT_EVERY_BLOCKS == 0:
+                    _maybe_inject_fault()  # chaos hook: n files are on disk
+                if len(buf) >= _COORDS_PER_FRAME:
                     yield pd.DataFrame(buf, columns=["gx", "gy", "gz"])
                     buf = []
             if buf:
-                _maybe_inject_fault()
                 yield pd.DataFrame(buf, columns=["gx", "gy", "gz"])
 
         written_coords = upstream.mapInPandas(sink, schema="gx int, gy int, gz int")

@@ -25,6 +25,7 @@ Pipelines are Spark-first:
 from __future__ import annotations
 
 import glob as _glob
+import logging
 import os
 import re
 import struct
@@ -387,10 +388,12 @@ def tif_series_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     # assigned by sorted-file position below, so absent slices compact
     # the volume and shift every later slice. The scan's listing is
     # local-glob-based, so a local existence check covers its reach.
-    from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER
+    from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER, fence_log
 
     _marker = os.path.join(input_dir, INCOMPLETE_MARKER)
     if os.path.exists(_marker):
+        if fence_log.isEnabledFor(logging.DEBUG):
+            fence_log.debug("series scan of %s refused: marker %s", input_dir, _marker)
         raise ValueError(
             f"refusing to scan {input_dir}: write-session marker {_marker} "
             "exists — a series export is mid-job (or died mid-job) on this "

@@ -40,6 +40,18 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Name the slow lanes this run skipped, so a round-end run made
+    without N5DS_FULL_TESTS=1 shows in its output."""
+    skipped = [
+        r for r in terminalreporter.stats.get("skipped", []) if "slow" in r.keywords
+    ]
+    if skipped:
+        terminalreporter.write_sep(
+            "=", f"{len(skipped)} slow lanes skipped: set N5DS_FULL_TESTS=1 to run them"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from n5_dask_spark.session import get_spark

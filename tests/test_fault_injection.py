@@ -267,3 +267,60 @@ def test_write_paths_survive_injected_task_retries():
     )
     assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-4000:]}"
     assert "FAULT_INJECTION_OK" in proc.stdout, proc.stdout
+
+
+_CADENCE_SCRIPT = r"""
+import os
+import pathlib
+import sys
+import tempfile
+
+fault_dir = tempfile.mkdtemp(prefix="n5ds-fault-markers-")
+os.environ["N5DS_INJECT_WRITE_FAULT_DIR"] = fault_dir
+
+import numpy as np
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.master("local[1]")  # one task, no retry
+    .appName("n5ds-fault-cadence")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("OFF")
+
+from n5_dask_spark.sources.n5.writer import temp_container, write_array
+
+container = temp_container("n5ds-fault-cadence")
+arr = np.arange(16 * 16 * 8, dtype=np.uint8).reshape(16, 16, 8)
+try:
+    write_array(spark, arr, container, "img/s0", [8, 8, 2])  # 16 blocks, one task
+except Exception:
+    pass
+else:
+    sys.exit("the injected fault never fired")
+blocks = [
+    p for p in pathlib.Path(container, "img/s0").rglob("*")
+    if p.is_file() and p.name.isdigit()
+]
+print("CADENCE", len(os.listdir(fault_dir)), len(blocks))
+"""
+
+
+def test_map_sink_fault_fires_mid_write():
+    """The fused map sink (write_array) runs the chaos hook after every
+    written block: a first attempt owning 16 blocks dies with exactly one
+    of them on disk, not after all of its files are written."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
+    proc = subprocess.run(
+        [sys.executable, "-c", _CADENCE_SCRIPT],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-4000:]}"
+    (line,) = [ln for ln in proc.stdout.splitlines() if ln.startswith("CADENCE")]
+    assert line.split()[1:] == ["1", "1"], line  # one death, one block on disk
