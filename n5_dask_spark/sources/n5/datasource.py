@@ -163,40 +163,6 @@ class N5Reader(DataSourceReader):
             self._attrs = read_attributes(self.container, self.dataset)
         return self._attrs
 
-    def _refuse_mid_write(self) -> None:
-        """Refuse a dataset carrying the write-session marker (r14 probe
-        find: this path planned 7 of 8 blocks of a mid-write dataset and
-        returned them as a SILENT partial snapshot — the exact lane the
-        r11 marker guard closed for the binaryFile-glob and explicit-path
-        scans, reader.py:261, which this DataSource never routes through).
-        Runs driver-side once per plan; fsio serves URI containers (no
-        Hadoop FS needed, so it also covers emulated/pyarrow-only schemes)."""
-        from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER, _is_uri, fence_log
-
-        if _is_uri(self.container):
-            from n5_dask_spark.sources.n5 import fsio
-
-            marker = f"{self.container.rstrip('/')}/{self.dataset}/{INCOMPLETE_MARKER}"
-            present = fsio.exists(marker)
-        else:
-            marker = os.path.join(self.container, self.dataset, INCOMPLETE_MARKER)
-            present = os.path.exists(marker)
-        if present:
-            if fence_log.isEnabledFor(logging.DEBUG):
-                fence_log.debug(
-                    "format('n5') scan of %s/%s refused: marker %s",
-                    self.container, self.dataset, marker,
-                )
-            raise ValueError(
-                f"dataset {self.container}/{self.dataset} carries the "
-                f"write-session marker {marker} — a sink job is writing it "
-                "right now, or a writer died mid-job leaving it incomplete; "
-                "reading it would return a silent partial snapshot (written "
-                "blocks as data, unwritten cells as fill-value zeros). Wait "
-                "for the writer, or if it is known dead, re-create the "
-                "dataset (or delete the marker to accept partial contents)."
-            )
-
     def _present_blocks(self) -> list[tuple[str, tuple[int, ...], int]]:
         """(path, grid, size) of every planned block file that exists, in
         grid order; sparse datasets skip absent blocks."""
@@ -246,7 +212,9 @@ class N5Reader(DataSourceReader):
         when the next block would push it past ``maxSplitBytes``, and each
         block costs its size plus the open cost. Up to ``parallelism``
         equal-sized blocks, the open cost alone keeps one block per task."""
-        self._refuse_mid_write()
+        from n5_dask_spark.sources.n5.reader import refuse_mid_write
+
+        refuse_mid_write(self.container, self.dataset, "format('n5') scan")
         blocks = self._present_blocks()
         open_cost = self.split.open_cost_bytes
         total_bytes = sum(size for _p, _g, size in blocks)
@@ -274,23 +242,13 @@ class N5Reader(DataSourceReader):
 
     def read(self, partition: N5BlockPartition) -> Iterator[tuple]:
         from n5_dask_spark.sources.n5.codec import decode_block_at
-        from n5_dask_spark.sources.n5.metadata import _is_uri
-        from n5_dask_spark.sources.n5.reader import check_block_shape
+        from n5_dask_spark.sources.n5.reader import check_block_shape, read_block_file
 
         attrs = self._get_attrs()
         for path, grid in partition.blocks:
-            if _is_uri(path):
-                from n5_dask_spark.sources.n5 import fsio
-
-                raw = fsio.read_file(path)
-                if raw is None:
-                    continue  # block sparsified after planning -> fill-value (no row)
-            else:
-                try:
-                    with open(path, "rb") as f:
-                        raw = f.read()
-                except FileNotFoundError:
-                    continue  # block sparsified after planning -> fill-value (no row)
+            raw = read_block_file(path)
+            if raw is None:
+                continue  # block sparsified after planning -> fill-value (no row)
             arr = check_block_shape(
                 decode_block_at(raw, attrs.data_type, attrs.compression, path),
                 grid,

@@ -34,10 +34,11 @@ DataFrame transformation applied in between) or the frame is persisted
 (``persist()`` returns the SAME object, metadata included, and fusing
 would bypass the cache and recompute from the files) they fall back to
 consuming the materialized blocks DF exactly as before — same rows, same
-order, one extra crossing. Fusion only ever removes boundary crossings;
-the materialized DataFrame each helper returns is byte-identical either
-way (pinned by the oracle gate and the Arrow-batch invariance nets, which
-prove batch boundaries don't leak into results).
+order, one extra crossing. Each fallback logs its reason at DEBUG on
+the ``n5_dask_spark.sources.n5`` logger. Fusion only ever removes
+boundary crossings; the materialized DataFrame each helper returns is
+byte-identical either way (pinned by the oracle gate and the Arrow-batch
+invariance nets, which prove batch boundaries don't leak into results).
 
 Every per-block integrity guard (check_block_shape, codec error naming)
 lives INSIDE the composed ``blocks_fn``, so fused plans run the exact
@@ -46,6 +47,7 @@ same per-block checks as unfused ones.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
@@ -57,6 +59,8 @@ from n5_dask_spark.udfbatch import bounded_frames
 
 BLOCK_COLUMNS = ["gx", "gy", "gz", "shape_zyx", "data"]
 BLOCK_SCHEMA_DDL = "gx int, gy int, gz int, shape_zyx array<int>, data binary"
+
+log = logging.getLogger("n5_dask_spark.sources.n5")
 
 _MAP_ATTR = "_n5ds_fuse_map"
 _GROUPED_ATTR = "_n5ds_fuse_grouped"
@@ -107,13 +111,20 @@ def source_of(blocks_df: DataFrame, dt: np.dtype) -> tuple:
     blocks_df, standard-row decoder) — the exact pre-fusion consumption,
     which reads a persisted frame from its cache."""
     if blocks_df.is_cached:
-        return ("map", blocks_df, _fallback_blocks_fn(dt))
+        return _fallback(blocks_df, dt, "the frame is persisted")
     m = getattr(blocks_df, _MAP_ATTR, None)
     if m is not None:
         return ("map", m[0], m[1])
     g = getattr(blocks_df, _GROUPED_ATTR, None)
     if g is not None:
         return ("grouped", g[0], g[1], g[2])
+    return _fallback(blocks_df, dt, "the frame has no fusion metadata")
+
+
+def _fallback(blocks_df: DataFrame, dt: np.dtype, reason: str) -> tuple:
+    """The unfused source: the materialized blocks DF, one extra crossing."""
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug("blocks frame consumed unfused (materialized rows): %s", reason)
     return ("map", blocks_df, _fallback_blocks_fn(dt))
 
 
@@ -156,9 +167,12 @@ def consume_block_rows(
 
     Fuses into a MAP source's upstream mapInPandas, into a GROUPED
     source's post-shuffle applyInPandas, or falls back to a mapInPandas
-    over the materialized blocks DF. Output frames are byte-bounded when
-    ``row_bytes`` is given (payload-carrying rows); row-order per
-    partition/group is the block iteration order either way."""
+    over the materialized blocks DF. On the map branches output frames are
+    byte-bounded when ``row_bytes`` is given (payload-carrying rows). The
+    grouped branch is exempt from that 64 MB bound: it returns each
+    group's rows as one frame, so its output is bounded by what one
+    target block yields. Row-order per partition/group is the block
+    iteration order either way."""
     rb = row_bytes if row_bytes is not None else (lambda r: 64)
     src = source_of(blocks_df, dt)
     if src[0] == "grouped":

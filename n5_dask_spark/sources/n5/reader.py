@@ -1,11 +1,17 @@
-"""N5 dataset scan as a Spark DataFrame of blocks (SURVEY.md §2.A S2/S4/T2).
+"""N5 dataset scan as a Spark DataFrame of blocks, and driver-side region
+reads (SURVEY.md §2.A S2/S4/T2).
 
 Design (§1.5): one row per block, grid coordinates as ordinary columns —
-Catalyst filters on (gx, gy, gz) replace dask's task culling. For region
-reads the overlapping block PATHS are enumerated driver-side from the grid
-math (T11), so the scan never lists or reads non-overlapping block files —
-the file-level analog of partition pruning, which holds at any container
-size because it's O(region), not O(dataset).
+Catalyst filters on (gx, gy, gz) replace dask's task culling.
+
+Region reads (``read_region``) run no Spark job. Like the reference's
+read_n5_block, they are random access in the calling process: the
+overlapping block paths come from the grid math (T11), the driver fetches
+just those files (``read_block_file``: open() for local paths, fsio's
+pyarrow filesystem for URI paths), decodes them and stitches the region.
+The work is O(region), not O(dataset), and no file outside the region is
+listed or read. A region read is byte-guarded to what a driver can hold;
+larger regions go through the distributed ``transforms.export_region``.
 
 Reference parity: da.from_zarr(zarr.N5Store(...)) at
 /root/reference/src/n5_to_tif.py:24-25 and /root/reference/src/n5_multiscale.py:90;
@@ -29,12 +35,12 @@ import logging
 import os
 import re
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -256,7 +262,9 @@ def _reject_empty_block_files(
     N5DS_SKIP_SCAN_AUDIT=1 to trade this integrity audit for listing
     time — corruption then surfaces only via decode errors (loud) and
     the zero-byte lane reverts to silent fill-value reads (the documented
-    risk this guard exists to close)."""
+    risk this guard exists to close). Region reads (``read_region``) list
+    nothing and never come here: their marker and zero-byte refusals
+    always run."""
     if os.environ.get("N5DS_SKIP_SCAN_AUDIT"):
         return
     is_uri = _has_uri_scheme(container)
@@ -366,6 +374,73 @@ def check_block_shape(
     return arr_zyx
 
 
+def read_block_file(path: str) -> bytes | None:
+    """One block file's bytes, or None when it is absent (legal N5
+    sparseness: the cell reads as fill value).
+
+    Local paths use open(); URI paths use fsio's pyarrow filesystem, which
+    works in a Python worker (no py4j bridge there) and, on the driver,
+    reads at local-disk speed where the Hadoop FileSystem over py4j moves
+    ~15 MiB/s. The format("n5") scan tasks and the driver-side region
+    reads share this fetch.
+
+    A zero-byte file is refused: it is never valid N5 (the block header
+    alone is at least 4 bytes) but the signature of a torn external writer,
+    and reading it as absent would turn a populated cell into fill-value
+    zeros."""
+    if _has_uri_scheme(path):
+        from n5_dask_spark.sources.n5 import fsio
+
+        raw = fsio.read_file(path)
+    else:
+        try:
+            with open(path, "rb") as f:
+                raw = f.read()
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+    if raw is not None and not raw:
+        raise ValueError(
+            f"zero-byte block file {path} — not valid N5 (a block header is "
+            "at least 4 bytes), so it is not a sparse cell: reading it as "
+            "absent would return fill-value zeros for a populated cell. "
+            "Likely a torn external writer; re-write the block."
+        )
+    return raw
+
+
+def refuse_mid_write(container: str, dataset: str, reader: str) -> None:
+    """Refuse a dataset carrying the write-session marker: a sink job is
+    writing it, or a writer died mid-job, and reading it would return a
+    silent partial snapshot (written blocks as data, unwritten cells as
+    fill value). The r14 probe found format("n5") planning 7 of 8 blocks
+    of such a dataset. Local paths are checked through the OS, URI
+    containers through fsio (no Hadoop FS needed, so it also covers
+    emulated and pyarrow-only schemes). ``reader`` names the refused read
+    in the fence log."""
+    from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER
+
+    if _has_uri_scheme(container):
+        from n5_dask_spark.sources.n5 import fsio
+
+        marker = f"{container.rstrip('/')}/{dataset}/{INCOMPLETE_MARKER}"
+        present = fsio.exists(marker)
+    else:
+        marker = os.path.join(container, dataset, INCOMPLETE_MARKER)
+        present = os.path.exists(marker)
+    if present:
+        if fence_log.isEnabledFor(logging.DEBUG):
+            fence_log.debug("%s of %s/%s refused: marker %s", reader, container, dataset, marker)
+        raise ValueError(
+            f"dataset {container}/{dataset} carries the "
+            f"write-session marker {marker} — a sink job is writing it "
+            "right now, or a writer died mid-job leaving it incomplete; "
+            "reading it would return a silent partial snapshot (written "
+            "blocks as data, unwritten cells as fill-value zeros). Wait "
+            "for the writer, or if it is known dead, re-create the "
+            "dataset (or delete the marker to accept partial contents)."
+        )
+
+
 def scan_block_files(
     spark: SparkSession,
     container: str,
@@ -441,19 +516,21 @@ def scan_block_files(
             if not _is_missing_path(exc):
                 raise
             return _empty()
-    # grid coords are the last `ndim` path segments: .../gx/gy/gz
-    pat = r"/(\d+)" * ndim + r"$"
-    cols = [
-        F.regexp_extract("path", pat, i + 1).try_cast("int").alias(c)
+    # grid coords are the last `ndim` path segments: .../gx/gy/gz. One
+    # selectExpr + where: the same projection built from Column objects
+    # cost ~250 py4j round trips per scan. [0-9] rather than \d keeps the
+    # SQL literal free of backslashes, whatever escapedStringLiterals says.
+    pat = "/([0-9]+)" * ndim + "$"
+    coords = [
+        f"try_cast(regexp_extract(path, '{pat}', {i + 1}) as int) as {c}"
         for i, c in enumerate(("gx", "gy", "gz")[:ndim])
-    ] + [F.lit(0).alias(c) for c in ("gx", "gy", "gz")[ndim:]]
-    out = df.select(*cols, F.col("length"), F.col("content").alias("raw"), F.col("path"))
+    ] + [f"0 as {c}" for c in ("gx", "gy", "gz")[ndim:]]
     # a non-numeric tail (attributes.json swept up by a short glob, stray
     # files) extracts "" -> null via try_cast (a plain cast ANSI-throws on
     # '' — the ndim=1 glob crash the r9 geometry net found): drop, don't
     # decode
-    return out.filter(
-        F.col("gx").isNotNull() & F.col("gy").isNotNull() & F.col("gz").isNotNull()
+    return df.selectExpr(*coords, "length", "content as raw", "path").where(
+        "gx is not null and gy is not null and gz is not null"
     )
 
 
@@ -567,10 +644,13 @@ def read_region(
     """Random-access region read -> xyz-ordered ndarray (reference
     read_n5_block semantics, src/n5_utils.py:6-18).
 
-    Pruning is driver-side: only overlapping block files are ever listed or
-    read. The stitch collects just the overlapping fragments (a region read
-    is by contract small enough for the driver; bulk processing stays in
-    DataFrames). Regions past the byte guard raise with a pointer to the
+    Runs on the driver with no Spark job: the overlapping block files,
+    found from the grid math, are fetched with :func:`read_block_file`
+    (absent files are fill value), decoded and stitched here. The fetch
+    runs on ``defaultParallelism`` threads so a remote container keeps
+    concurrent GETs; decode stays on the calling thread. A dataset
+    carrying the write-session marker and zero-byte block files are
+    refused. Regions past the byte guard raise with a pointer to the
     distributed ``transforms.export_region`` slab path, which never
     materializes the region anywhere."""
     attrs = read_attributes(container, dataset)
@@ -580,9 +660,9 @@ def read_region(
     for s, e in zip(start_xyz, end_xyz):
         req_voxels *= max(0, e - s)
     hits = overlapping_blocks(attrs, start_xyz, end_xyz)
-    # The driver materializes BOTH the output region and every overlapping
-    # block's decoded payload (collect + decode below), so the guard bounds
-    # the larger of the two: a thin 100 KB slice crossing two hundred 512^3
+    # The driver holds BOTH the output region and every overlapping block
+    # (fetched bytes, then its decoded payload), so the guard bounds the
+    # larger of the two: a thin 100 KB slice crossing two hundred 512^3
     # blocks is a driver OOM even though the region itself is tiny.
     block_voxels = 1
     for b in attrs.block_size:
@@ -604,49 +684,33 @@ def read_region(
         # REQUESTED shape of zeros, same as regions over absent blocks
         out_shape = tuple(e - s for s, e in zip(start_xyz, end_xyz))
         return np.zeros(out_shape, dtype=np_dtype(attrs.data_type))
-    # N5 datasets are legally SPARSE: an absent block file means fill-value
-    # (zero) voxels. The driver pre-filters to existing paths (the
-    # zero-initialized output covers the gaps): local containers via cheap
-    # os stats, URI-scheme containers via the Hadoop FileSystem — one
-    # getFileStatus RPC per overlapping block, the same order of
-    # round-trips binaryFile's own listing pays (r11; pre-r11 sparse URI
-    # regions refused loudly because the driver could not stat them).
-    candidates = [os.path.join(container, dataset, *map(str, g)) for g in hits]
-    if _has_uri_scheme(container):
-        paths = [p for p, _size in _stat_paths_hadoop(spark, candidates)]
-    else:
-        paths = [p for p in candidates if os.path.exists(p)]
-    if not paths:
-        out_shape = tuple(e - s for s, e in zip(start_xyz, end_xyz))
-        return np.zeros(out_shape, dtype=np_dtype(attrs.data_type))
-    raw_df = scan_block_files(spark, container, dataset, attrs.ndim, paths=paths)
-    coords = ("gx", "gy", "gz")[: attrs.ndim]
-    rows = raw_df.select(*coords, F.col("raw").alias("content"), "path").collect()
-
+    refuse_mid_write(container, dataset, "region read")
     out_shape_zyx = tuple(e - s for s, e in zip(start_xyz, end_xyz))[::-1]
     out = np.zeros(out_shape_zyx, dtype=np_dtype(attrs.data_type))
+    paths = [os.path.join(container, dataset, *map(str, g)) for g in hits]
     bs = attrs.block_size
-    for r in rows:
-        grid = tuple(r[i] for i in range(attrs.ndim))  # x,y,z
-        arr = check_block_shape(
-            decode_block_at(
-                bytes(r["content"]), attrs.data_type, attrs.compression, r["path"]
-            ),
-            grid,
-            attrs,
-            r["path"],
-        )
-        # block extent in global xyz coords
-        b_start = [g * b for g, b in zip(grid, bs)]
-        b_end = [s + dim for s, dim in zip(b_start, reversed(arr.shape))]
-        # intersection, then slice both block and output (zyx axis order)
-        sel_block, sel_out = [], []
-        for ax in range(attrs.ndim - 1, -1, -1):  # z, y, x
-            lo = max(start_xyz[ax], b_start[ax])
-            hi = min(end_xyz[ax], b_end[ax])
-            sel_block.append(slice(lo - b_start[ax], hi - b_start[ax]))
-            sel_out.append(slice(lo - start_xyz[ax], hi - start_xyz[ax]))
-        out[tuple(sel_out)] = arr[tuple(sel_block)]
+    workers = min(len(paths), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        for grid, path, raw in zip(hits, paths, pool.map(read_block_file, paths)):
+            if raw is None:  # N5 sparseness: the zeroed output is the fill value
+                continue
+            arr = check_block_shape(
+                decode_block_at(raw, attrs.data_type, attrs.compression, path),
+                grid,
+                attrs,
+                path,
+            )
+            # block extent in global xyz coords
+            b_start = [g * b for g, b in zip(grid, bs)]
+            b_end = [s + dim for s, dim in zip(b_start, reversed(arr.shape))]
+            # intersection, then slice both block and output (zyx axis order)
+            sel_block, sel_out = [], []
+            for ax in range(attrs.ndim - 1, -1, -1):  # z, y, x
+                lo = max(start_xyz[ax], b_start[ax])
+                hi = min(end_xyz[ax], b_end[ax])
+                sel_block.append(slice(lo - b_start[ax], hi - b_start[ax]))
+                sel_out.append(slice(lo - start_xyz[ax], hi - start_xyz[ax]))
+            out[tuple(sel_out)] = arr[tuple(sel_block)]
     # xyz-ordered user-facing result (reference transposes at the boundary)
     return out.transpose(tuple(range(attrs.ndim - 1, -1, -1)))
 

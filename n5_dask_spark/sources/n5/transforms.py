@@ -208,9 +208,9 @@ def export_region(
 
     from n5_dask_spark.sources.n5.reader import _has_uri_scheme
 
-    # same sparse contract as read_region: local containers pre-filter to
-    # existing block files (absent = fill-value, stays sparse in the
-    # output); URI containers pass every candidate and scan_block_files
+    # same sparse contract as read_region (absent = fill value, stays
+    # sparse in the output): local containers pre-filter to existing block
+    # files; URI containers pass every candidate and scan_block_files
     # resolves absent ones through the Hadoop FileSystem (r11), so sparse
     # URI datasets export correctly instead of refusing
     candidates = [_os.path.join(container, dataset, *map(str, g)) for g in hits]

@@ -392,13 +392,11 @@ def write_region(
     Correct replacement for the reference's no-op write_n5_block
     (src/n5_utils.py:21-33). Blocks fully covered by the region are sliced
     straight from it; partially covered edge blocks are read-modify-written
-    in BATCHES: one pruned scan job per guard-bounded group of edge blocks
-    (SPARK_GRAFT_MAX_REGION_BYTES of decoded payload per group), so a large
-    unaligned region pays O(perimeter_bytes / guard) Spark jobs — normally
-    one — instead of one job per edge block, while peak driver memory stays
-    bounded by the caller's region plus one group."""
-    from n5_dask_spark.sources.n5.reader import MAX_REGION_BYTES, scan_block_files
+    one at a time on the driver through ``reader.read_block_file`` (absent
+    means zeros), with no Spark job, so the edge reads hold one block
+    beside the caller's region. Only the block write runs distributed."""
     from n5_dask_spark.sources.n5.codec import decode_block_at
+    from n5_dask_spark.sources.n5.reader import check_block_shape, read_block_file
 
     attrs = read_attributes(container, dataset)
     end_xyz = [s + d for s, d in zip(start_xyz, region_xyz.shape)]
@@ -443,57 +441,23 @@ def write_region(
             block_sel = tuple(slice(l - a, h - a) for l, h, a in zip(lo, hi, b0))
             edges.append((grid, b0, b1, region_sel, block_sel))
 
-    limit = int(os.environ.get("SPARK_GRAFT_MAX_REGION_BYTES", MAX_REGION_BYTES))
-    groups: list[list[tuple]] = []
-    cur: list[tuple] = []
-    cur_bytes = 0
-    for e in edges:
-        _, b0, b1, _, _ = e
-        nbytes = dt.itemsize
-        for l, h in zip(b0, b1):
-            nbytes *= h - l
-        if cur and cur_bytes + nbytes > limit:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(e)
-        cur_bytes += nbytes
-    if cur:
-        groups.append(cur)
-
-    coords = ("gx", "gy", "gz")[:ndim]
-    for group in groups:
-        # Pass EVERY candidate edge path to the scan — no driver-local
-        # os.path.exists pre-filter. Sparse (absent) blocks are resolved by
-        # scan_block_files' missing-path handling: survivor retry via os
-        # stats for local paths and via the Hadoop FileSystem for
-        # URI-scheme paths (r11; a bare exists() filter would test URIs
-        # all False and silently zero stored data outside the region).
-        paths = [os.path.join(container, dataset, *map(str, grid)) for (grid, *_rest) in group]
-        got: dict[tuple, np.ndarray] = {}
-        if paths:
-            raw_df = scan_block_files(spark, container, dataset, ndim, paths=paths)
-            from n5_dask_spark.sources.n5.reader import check_block_shape
-
-            for r in raw_df.select(*coords, "raw", "path").collect():
-                g = tuple(int(r[c]) for c in coords)
-                got[g] = check_block_shape(
-                    decode_block_at(
-                        bytes(r["raw"]), attrs.data_type, attrs.compression, r["path"]
-                    ),
-                    g,
-                    attrs,
-                    r["path"],
-                )
-        for grid, b0, b1, region_sel, block_sel in group:
-            arr_zyx = got.get(tuple(grid))
-            if arr_zyx is None:  # sparse: absent block file means zeros
-                block_xyz = np.zeros([h - l for l, h in zip(b0, b1)], dtype=dt)
-            else:
-                block_xyz = np.array(
-                    arr_zyx.transpose(tuple(range(arr_zyx.ndim - 1, -1, -1))), dtype=dt
-                )
-            block_xyz[block_sel] = region_xyz[region_sel]
-            emit(tuple(grid), block_xyz)
+    for grid, b0, b1, region_sel, block_sel in edges:
+        path = os.path.join(container, dataset, *map(str, grid))
+        raw = read_block_file(path)
+        if raw is None:  # sparse: absent block file means zeros
+            block_xyz = np.zeros([h - l for l, h in zip(b0, b1)], dtype=dt)
+        else:
+            arr_zyx = check_block_shape(
+                decode_block_at(raw, attrs.data_type, attrs.compression, path),
+                grid,
+                attrs,
+                path,
+            )
+            block_xyz = np.array(
+                arr_zyx.transpose(tuple(range(arr_zyx.ndim - 1, -1, -1))), dtype=dt
+            )
+        block_xyz[block_sel] = region_xyz[region_sel]
+        emit(tuple(grid), block_xyz)
 
     pdf = pd.DataFrame(rows, columns=["gx", "gy", "gz", "shape_zyx", "data"])
     blocks = spark.createDataFrame(pdf, schema="gx int, gy int, gz int, shape_zyx array<int>, data binary")

@@ -491,8 +491,8 @@ def test_export_region_out_of_bounds_zero_fill(spark):
 
 def test_write_region_batches_edge_reads_into_one_scan(spark, monkeypatch):
     """A large unaligned region has O(perimeter) edge blocks; their RMW
-    reads must batch into ONE pruned scan job under the default guard, not
-    one Spark job per edge block (ADVICE r5)."""
+    reads must not cost one Spark job per edge block (ADVICE r5). They run
+    on the driver through read_block_file, so no scan runs at all."""
     from n5_dask_spark.sources.n5 import reader as rd
     from n5_dask_spark.sources.n5 import writer as wr
     from n5_dask_spark.sources.n5.reader import read_full
@@ -512,7 +512,7 @@ def test_write_region_batches_edge_reads_into_one_scan(spark, monkeypatch):
     monkeypatch.setattr(rd, "scan_block_files", counting)
     patch = np.full((20, 20, 20), 9, dtype="u1")  # unaligned: 26 edge blocks
     write_region(spark, c, "a/s0", patch, [1, 1, 1])
-    assert calls["n"] == 1, f"expected one batched edge scan, got {calls['n']}"
+    assert calls["n"] == 0, f"expected no edge scan, got {calls['n']}"
     expect = arr.copy()
     expect[1:21, 1:21, 1:21] = 9
     np.testing.assert_array_equal(read_full(spark, c, "a/s0"), expect)

@@ -130,3 +130,44 @@ def test_scan_refusals_are_logged(spark, tmp_path, caplog):
         f"format('n5') scan of {c}/d refused: marker {n5_marker}",
         f"series scan of {series} refused: marker {tif_marker}",
     ]
+
+
+def test_fusion_fallbacks_are_logged_with_their_reason(spark, tmp_path, caplog):
+    """A consumer that falls back to the materialized blocks frame logs
+    one record naming why; a fused consumer logs none."""
+    from n5_dask_spark.sources.n5 import fuse
+    from n5_dask_spark.sources.n5.reader import decoded_blocks
+
+    c = str(tmp_path / "c.n5")
+    _gzip_dataset(c)
+
+    def sums(gx, gy, gz, a):
+        yield (int(gx), int(a.sum()))
+
+    def consume(blocks):
+        df = fuse.consume_block_rows(
+            blocks, np.dtype("uint16"), sums, ["gx", "vsum"], "gx int, vsum long"
+        )
+        return sorted(tuple(r) for r in df.collect())
+
+    def logged(blocks):
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger=N5_LOG):
+            rows = consume(blocks)
+        return rows, _records(caplog, N5_LOG)
+
+    quiet = consume(decoded_blocks(spark, c, "d"))
+    assert quiet == [(0, 32), (1, 64)]
+    assert logged(decoded_blocks(spark, c, "d")) == (quiet, [])
+    plain = decoded_blocks(spark, c, "d").filter("gx >= 0")
+    assert logged(plain) == (
+        quiet, ["blocks frame consumed unfused (materialized rows): the frame has no fusion metadata"]
+    )
+    persisted = decoded_blocks(spark, c, "d").persist()
+    try:
+        assert consume(persisted) == quiet
+        assert logged(persisted) == (
+            quiet, ["blocks frame consumed unfused (materialized rows): the frame is persisted"]
+        )
+    finally:
+        persisted.unpersist()

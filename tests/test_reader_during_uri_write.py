@@ -8,9 +8,10 @@ routed through the r11 marker guard (reader.py:261 only covers the
 binaryFile-glob and explicit-path scans), so it planned 7 of 8 blocks of a
 mid-write dataset and returned them as a SILENT partial snapshot — written
 blocks as data, the unwritten cell as legal sparse fill. Fixed by
-``N5Reader._refuse_mid_write`` (datasource.py): the plan refuses while the
-write-session marker exists, for local paths via the OS and URI containers
-via fsio (which also covers stores the JVM has no connector for).
+``refuse_mid_write`` (reader.py, called by the DataSource's planner): the
+plan refuses while the write-session marker exists, for local paths via
+the OS and URI containers via fsio (which also covers stores the JVM has
+no connector for).
 
 The emulated-store lanes race the reader at the exact instants that exist
 mid-job on an object store: after the marker PUT but before any block,
