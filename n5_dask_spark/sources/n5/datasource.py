@@ -16,7 +16,10 @@ into scan tasks with Spark's own file-split rule (the one the binaryFile
 glob scan gets from the JVM, see :class:`ScanSplit`), so both scan paths
 run the same number of tasks over the same files. When a region is given
 only OVERLAPPING blocks are planned — source-level partition pruning, so
-a 1-block region of a petabyte container plans exactly one task.
+a 1-block region of a petabyte container plans exactly one task. The
+block files come from ``reader.list_blocks``, the listing and fence the
+glob scan uses: mid-write, stale and zero-byte datasets are refused at
+planning with the glob scan's messages.
 
 The planner process has no active session, so ``register_n5_source``
 resolves the parallelism and the file-source confs on the driver and
@@ -163,59 +166,30 @@ class N5Reader(DataSourceReader):
             self._attrs = read_attributes(self.container, self.dataset)
         return self._attrs
 
-    def _present_blocks(self) -> list[tuple[str, tuple[int, ...], int]]:
-        """(path, grid, size) of every planned block file that exists, in
-        grid order; sparse datasets skip absent blocks."""
-        from n5_dask_spark.sources.n5.metadata import _is_uri
-        from n5_dask_spark.sources.n5.reader import overlapping_blocks
+    def partitions(self) -> Sequence[N5BlockPartition]:
+        """Spark's file-split rule over the block files, filled next-fit in
+        grid order (contiguous runs keep directory locality): a task closes
+        when the next block would push it past ``maxSplitBytes``, and each
+        block costs its size plus the open cost. Up to ``parallelism``
+        equal-sized blocks, the open cost alone keeps one block per task.
+
+        The block files come from ``reader.list_blocks``, the listing and
+        fence the glob scan uses too: a mid-write, stale or zero-byte
+        dataset is refused here, before any task runs."""
+        from n5_dask_spark.sources.n5.reader import list_blocks, overlapping_blocks
 
         attrs = self._get_attrs()
+        grids = None
         if self.start and self.end:
             grids = overlapping_blocks(
                 attrs,
                 [int(x) for x in self.start.split(",")],
                 [int(x) for x in self.end.split(",")],
             )
-        else:
-            import itertools
-
-            grids = list(itertools.product(*[range(n) for n in attrs.grid_shape]))
-        blocks = []
-        if not _is_uri(self.container):
-            for g in grids:
-                path = os.path.join(self.container, self.dataset, *map(str, g))
-                try:
-                    blocks.append((path, tuple(g), os.stat(path).st_size))
-                except (FileNotFoundError, NotADirectoryError):
-                    pass
-            return blocks
-        from n5_dask_spark.sources.n5 import fsio
-
-        # one LIST of the dataset prefix instead of a sequential stat
-        # round-trip per grid cell — on an object store a large grid
-        # otherwise turns planning into O(n_blocks) network calls. Falls
-        # back to per-key probes only if the filesystem cannot list.
-        sizes = fsio.list_file_sizes(f"{self.container}/{self.dataset}")
-        for g in grids:
-            path = "/".join([self.container, self.dataset, *map(str, g)])
-            if sizes is not None:
-                size = sizes.get("/".join(map(str, g)))
-            else:
-                size = fsio.file_size(path)
-            if size is not None:
-                blocks.append((path, tuple(g), size))
-        return blocks
-
-    def partitions(self) -> Sequence[N5BlockPartition]:
-        """Spark's file-split rule over the block files, filled next-fit in
-        grid order (contiguous runs keep directory locality): a task closes
-        when the next block would push it past ``maxSplitBytes``, and each
-        block costs its size plus the open cost. Up to ``parallelism``
-        equal-sized blocks, the open cost alone keeps one block per task."""
-        from n5_dask_spark.sources.n5.reader import refuse_mid_write
-
-        refuse_mid_write(self.container, self.dataset, "format('n5') scan")
-        blocks = self._present_blocks()
+        blocks = list_blocks(
+            self.container, self.dataset, attrs.ndim, attrs.grid_shape, grids,
+            "format('n5') scan",
+        )
         open_cost = self.split.open_cost_bytes
         total_bytes = sum(size for _p, _g, size in blocks)
         max_split = self.split.max_split_bytes(total_bytes + open_cost * len(blocks))
@@ -236,7 +210,7 @@ class N5Reader(DataSourceReader):
                 "-> %d partitions (parallelism %d from %s), codec %s",
                 self.container, self.dataset, len(blocks), total_bytes, max_split,
                 len(parts), self.split.parallelism, self.split.source,
-                self._get_attrs().compression,
+                attrs.compression,
             )
         return parts
 
@@ -299,14 +273,14 @@ class N5Writer(DataSourceWriter):
         import numpy as np
 
         from n5_dask_spark.sources.n5.codec import encode_block, np_dtype
-        from n5_dask_spark.sources.n5.metadata import _is_uri, read_attributes
+        from n5_dask_spark.sources.n5.metadata import is_uri, read_attributes
         from n5_dask_spark.sources.n5.writer import _atomic_write
 
         # URI containers (r13 write lift): attributes read falls back to
         # fsio (no active session in a write task) and blocks publish
         # through the per-scheme commit protocol — same dispatch as
         # writer.write_blocks' sink
-        container_is_uri = _is_uri(self.container)
+        container_is_uri = is_uri(self.container)
         if container_is_uri:
             from n5_dask_spark.sources.n5 import fsio
         attrs = read_attributes(self.container, self.dataset)

@@ -1,8 +1,14 @@
-"""Scheme-dispatched filesystem primitives for the N5 WRITE path (r13).
+"""Scheme-dispatched filesystem primitives: the one storage client of the
+N5 layer for URI containers (file:, hdfs:, s3/s3a:, gs:, ...).
 
-The READ surface has been URI-capable since r11 (driver-side metadata via
-the Hadoop FileSystem, block scans via Spark's binaryFile source). Writes
-stayed local-only because the sinks' temp-file + ``os.replace`` commit
+The read path lists, fences and reads through it: metadata
+(``metadata._read_text``), the block listing both scan paths plan from
+(``reader.list_blocks``), the write-session marker check and the block
+fetches of ``format("n5")`` tasks and driver-side region reads. The
+binaryFile glob scan reads block bytes in the JVM, but lists and fences
+here first.
+
+Writes came later (r13): the sinks' temp-file + ``os.replace`` commit
 discipline doesn't transfer to object stores. This module lifts that with
 a per-scheme commit protocol, chosen by what the target filesystem can
 actually promise (reference parity: zarr's N5Store writes wherever fsspec
@@ -19,12 +25,13 @@ points it, /root/reference/src/tif_to_n5.py:29):
   ``.n5ds-incomplete`` write-session marker already fences: readers
   refuse while it exists, and a dead writer leaves it behind loudly.
 
-Executor-side constraint: block writes run in Python workers, which have
-no py4j bridge to the driver JVM, so the Hadoop FileSystem used by the
-read path is unavailable there. ``pyarrow.fs`` is the executor-reachable
-twin (Local/Hadoop/S3/GCS/Azure), and ``FileSystem.from_uri`` dispatches
-per path, so one code path serves every scheme. FileSystem instances are
-cached per (scheme, authority) per worker — S3 client setup is not free.
+Why pyarrow and not the Hadoop FileSystem: block writes and
+``format("n5")`` planning and reads run in Python workers, which have no
+py4j bridge to the driver JVM, and on the driver py4j moved block bytes at
+~15 MiB/s. ``pyarrow.fs`` works in every process (Local/Hadoop/S3/GCS/
+Azure), and ``FileSystem.from_uri`` dispatches per path, so one code path
+serves every scheme. FileSystem instances are cached per (scheme,
+authority) per worker — S3 client setup is not free.
 
 Marker exclusivity: on LOCAL filesystems the claim is a true conditional
 create (``O_CREAT|O_EXCL`` on the os path — at most one writer ever
@@ -68,23 +75,6 @@ _SCHEME_MAP = {"s3a": "s3", "s3n": "s3"}
 _PUT_ATOMIC_TYPES = {"s3", "gcs", "abfs", "az"}
 
 _FS_CACHE: dict[tuple[str, str], object] = {}
-
-
-def is_uri(path: str) -> bool:
-    """True for scheme-prefixed paths (file:, hdfs://, s3a://, ...)."""
-    head = path.split("/", 1)[0]
-    return head.endswith(":") and len(head) > 1
-
-
-def is_emulated(path: str) -> bool:
-    """True when this path's scheme is served by the emulated object store
-    (emustore.py). Driver-side metadata reads must then come HERE instead
-    of the Hadoop FileSystem — the JVM knows nothing about the emulation
-    and would try (and fail) to reach a real endpoint."""
-    if not is_uri(path) or not os.environ.get("N5DS_EMU_OBJECT_STORE"):
-        return False
-    scheme = path.split(":", 1)[0]
-    return _SCHEME_MAP.get(scheme, scheme) == "s3"
 
 
 def _resolve(path: str):
@@ -177,8 +167,8 @@ def exists(path: str) -> bool:
 
 
 def read_file(path: str) -> bytes | None:
-    """File contents, or None if absent (no-session twin of metadata's
-    Hadoop-FS ``_read_text`` — usable executor-side and in claim fences)."""
+    """File contents, or None if absent. Needs no session: usable on the
+    driver, in executors and in claim fences."""
     from pyarrow import fs as pafs
 
     f, p = _resolve(path)
@@ -202,22 +192,13 @@ def make_dirs(path: str) -> None:
     fs.create_dir(p, recursive=True)
 
 
-def file_size(path: str) -> int | None:
-    """Size of the file at ``path`` in bytes, or None if it is absent."""
-    from pyarrow import fs as pafs
-
-    f, p = _resolve(path)
-    info = f.get_file_info(p)
-    return None if info.type == pafs.FileType.NotFound else info.size
-
-
 def list_file_sizes(dir_path: str) -> dict[str, int] | None:
     """Recursive file listing under a URI directory: sizes keyed by
     slash-joined paths RELATIVE to it — or None if the filesystem cannot
-    list (caller falls back to per-key probes). One LIST round-trip
-    replaces O(n_blocks) sequential probes in DataSource planning, where
-    on a real object store a large grid would otherwise cost a network
-    call per grid cell."""
+    list (``reader.list_blocks`` then refuses the scan). One LIST
+    round-trip replaces O(n_blocks) sequential probes in scan planning,
+    where on a real object store a large grid would otherwise cost a
+    network call per grid cell."""
     from pyarrow import fs as pafs
 
     f, p = _resolve(dir_path)

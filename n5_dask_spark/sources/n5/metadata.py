@@ -115,63 +115,23 @@ def attributes_path(container: str, dataset: str = "") -> str:
     )
 
 
-def _is_uri(path: str) -> bool:
+def is_uri(path: str) -> bool:
+    """True for scheme-prefixed paths (file:, hdfs://, s3a://, ...)."""
     head = path.split("/", 1)[0]
     return head.endswith(":") and len(head) > 1
 
 
 def _read_text(path: str) -> str | None:
     """File contents, or None if absent. Local paths read through the OS;
-    URI-scheme paths (file:, hdfs:, s3a:, ...) read through the Hadoop
-    FileSystem of the ACTIVE SparkSession (r11: before this, every
-    metadata-reading operator — decoded_blocks, block_stats, read_region —
-    failed on URI containers at open(), leaving only the raw scan
-    URI-capable; now the whole READ surface works against object stores.
-    The WRITE surface followed in r13 via fsio's per-scheme commit
-    protocol — see sources/n5/fsio.py)."""
-    if _is_uri(path):
-        from pyspark.sql import SparkSession
+    URI-scheme paths (file:, hdfs:, s3a:, ...) through fsio's pyarrow
+    filesystem, the one storage client of the N5 read path: it works on the
+    driver, in the format("n5") planner and in executors alike, none of
+    which needs a session."""
+    if is_uri(path):
+        from n5_dask_spark.sources.n5 import fsio
 
-        from n5_dask_spark.sources.n5 import fsio as _fsio
-
-        if _fsio.is_emulated(path):
-            # emulated object store (emustore.py): the JVM knows nothing
-            # about the emulation — route around the Hadoop FS entirely
-            data = _fsio.read_file(path)
-            return None if data is None else data.decode("utf-8")
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            # executor-side (no py4j bridge) or sessionless driver code:
-            # read through fsio's pyarrow FileSystem instead of the
-            # Hadoop FS (r13 — the DataSource sink reads attributes in
-            # write tasks, where no active session exists)
-            from n5_dask_spark.sources.n5 import fsio
-
-            data = fsio.read_file(path)
-            return None if data is None else data.decode("utf-8")
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        try:
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        except Exception as e:
-            # the JVM has no connector for this scheme (e.g. s3 without
-            # hadoop-aws jars, or a pyarrow-only/emulated store) — fall
-            # back to fsio's pyarrow FileSystem, which the write path
-            # already rides. Anything else (network, permissions) stays
-            # loud: a broad fallback would mask real Hadoop failures.
-            msg = f"{e} {getattr(e, 'java_exception', '')}"
-            if "UnsupportedFileSystemException" not in msg and "No FileSystem for scheme" not in msg:
-                raise
-            data = _fsio.read_file(path)
-            return None if data is None else data.decode("utf-8")
-        if not fs.exists(p):
-            return None
-        stream = fs.open(p)
-        try:
-            data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        return data.decode("utf-8")
+        data = fsio.read_file(path)
+        return None if data is None else data.decode("utf-8")
     if not os.path.exists(path):
         return None
     with open(path) as f:
@@ -240,7 +200,7 @@ def _atomic_write_json(path: str, obj: Any) -> None:
     old-complete-or-new-complete visibility this function promises."""
     import tempfile
 
-    if _is_uri(path):
+    if is_uri(path):
         from n5_dask_spark.sources.n5 import fsio
 
         fsio.publish_file(path, json.dumps(obj).encode())
@@ -265,7 +225,7 @@ def log_codec(action: str, container: str, dataset: str, attrs: DatasetAttribute
 def write_attributes(container: str, dataset: str, attrs: DatasetAttributes) -> None:
     log_codec("write", container, dataset, attrs)
     root = attributes_path(container)
-    if _is_uri(container):
+    if is_uri(container):
         from n5_dask_spark.sources.n5 import fsio
 
         # no makedirs: publish_file creates parents where the scheme needs
@@ -285,7 +245,7 @@ def update_raw_attributes(container: str, dataset: str, updates: dict[str, Any])
     path = attributes_path(container, dataset)
     obj = read_raw_attributes(container, dataset)
     obj.update(updates)
-    if not _is_uri(path):  # URI publish creates parents itself (fsio)
+    if not is_uri(path):  # URI publish creates parents itself (fsio)
         os.makedirs(os.path.dirname(path), exist_ok=True)
     _atomic_write_json(path, obj)
 

@@ -203,35 +203,24 @@ def export_region(
     old_bs, out_bs = list(attrs.block_size), list(out_attrs.block_size)
     block_frags = _fragment_rows_fn(ndim, old_bs, start, end, out_bs)
 
-    hits = overlapping_blocks(attrs, start, end)
-    import os as _os
-
-    from n5_dask_spark.sources.n5.reader import _has_uri_scheme
-
-    # same sparse contract as read_region (absent = fill value, stays
-    # sparse in the output): local containers pre-filter to existing block
-    # files; URI containers pass every candidate and scan_block_files
-    # resolves absent ones through the Hadoop FileSystem (r11), so sparse
-    # URI datasets export correctly instead of refusing
-    candidates = [_os.path.join(container, dataset, *map(str, g)) for g in hits]
-    if _has_uri_scheme(container):
-        paths = candidates
-    else:
-        paths = [p for p in candidates if _os.path.exists(p)]
-    if paths:
-        # decode+fragment fused into one Python node (r15, guide §4)
-        frags = fuse.consume_block_rows(
-            decoded_blocks(spark, container, dataset, paths=paths),
-            dt, block_frags, FRAGMENT_COLUMNS, FRAGMENT_SCHEMA,
-            row_bytes=lambda r: len(r[5]),
-        )
-        assemble = _assemble_block_fn(out_attrs, dt)
-        out = frags.groupBy("tgx", "tgy", "tgz").applyInPandas(
-            fuse.emit_block_per_group(assemble), schema=BLOCK_SCHEMA_DDL
-        )
-        fuse.attach_grouped(out, frags, ("tgx", "tgy", "tgz"), assemble)
-    else:  # fully sparse/out-of-bounds region: metadata-only dataset
-        out = spark.createDataFrame([], BLOCK_SCHEMA_DDL)
+    # only the overlapping block files are listed and read (the scan's
+    # list_blocks drops absent ones); absent blocks and out-of-bounds parts
+    # stay sparse in the output, read_region's fill-value contract
+    paths = [
+        "/".join([container.rstrip("/"), dataset, *map(str, g)])
+        for g in overlapping_blocks(attrs, start, end)
+    ]
+    # decode+fragment fused into one Python node (r15, guide §4)
+    frags = fuse.consume_block_rows(
+        decoded_blocks(spark, container, dataset, paths=paths),
+        dt, block_frags, FRAGMENT_COLUMNS, FRAGMENT_SCHEMA,
+        row_bytes=lambda r: len(r[5]),
+    )
+    assemble = _assemble_block_fn(out_attrs, dt)
+    out = frags.groupBy("tgx", "tgy", "tgz").applyInPandas(
+        fuse.emit_block_per_group(assemble), schema=BLOCK_SCHEMA_DDL
+    )
+    fuse.attach_grouped(out, frags, ("tgx", "tgy", "tgz"), assemble)
     write_blocks(out, out_container, out_dataset, out_attrs)
     return out_attrs
 

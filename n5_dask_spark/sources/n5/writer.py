@@ -60,9 +60,9 @@ def claim_dataset_write(container: str, dataset: str) -> str:
     one dataset is last-writer-wins chaos; within-job duplicates were
     already guarded). Spark's own task retries never re-enter here — the
     claim is driver-side, once per sink job."""
-    from n5_dask_spark.sources.n5.metadata import _is_uri
+    from n5_dask_spark.sources.n5.metadata import is_uri
 
-    if _is_uri(container):
+    if is_uri(container):
         # URI-scheme container (r13, lifting the local-only refusal): the
         # marker claim uses fsio's write-then-read-back fence — object
         # stores have no O_EXCL; see fsio.claim_marker_uri for the
@@ -96,11 +96,11 @@ def claim_dataset_write(container: str, dataset: str) -> str:
 
 def release_dataset_write(marker: str) -> None:
     """Release a claim: the dataset is complete and visible to readers."""
-    from n5_dask_spark.sources.n5.metadata import _is_uri
+    from n5_dask_spark.sources.n5.metadata import is_uri
 
     if fence_log.isEnabledFor(logging.DEBUG):
         fence_log.debug("released %s", marker)
-    if _is_uri(marker):
+    if is_uri(marker):
         from n5_dask_spark.sources.n5 import fsio
 
         fsio.delete_file(marker)  # idempotent: absent is a no-op
@@ -229,14 +229,14 @@ def write_blocks(
     assembler loses nothing; for every other producer the unfused sink
     path below runs exactly as before."""
     from n5_dask_spark.sources.n5 import fuse
-    from n5_dask_spark.sources.n5.metadata import _is_uri
+    from n5_dask_spark.sources.n5.metadata import is_uri
 
     marker = claim_dataset_write(container, dataset)
     write_attributes(container, dataset, attrs)
     data_type, compression = attrs.data_type, dict(attrs.compression)
     dt = np_dtype(data_type)
     ndim = attrs.ndim  # block paths are exactly ndim levels deep
-    container_is_uri = _is_uri(container)
+    container_is_uri = is_uri(container)
 
     def write_one(gx: int, gy: int, gz: int, arr: np.ndarray) -> tuple:
         coords = (int(gx), int(gy), int(gz))[:ndim]

@@ -354,9 +354,9 @@ def read_image_description_file(path: str) -> str | None:
 
 
 def write_tiff(path: str, arr: np.ndarray) -> None:
-    from n5_dask_spark.sources.n5.metadata import _is_uri
+    from n5_dask_spark.sources.n5.metadata import is_uri
 
-    if _is_uri(path):
+    if is_uri(path):
         # r13 write-path URI lift: executor-safe per-scheme commit
         # protocol (pyarrow.fs) — temp+move where rename is atomic,
         # direct PUT where the object is; see sources/n5/fsio.py
@@ -540,9 +540,9 @@ def n5_to_tif_series(
     slice_blocks, slice_attrs = rechunk(
         blocks, attrs, [attrs.dimensions[0], attrs.dimensions[1], 1]
     )
-    from n5_dask_spark.sources.n5.metadata import _is_uri
+    from n5_dask_spark.sources.n5.metadata import is_uri
 
-    if not _is_uri(output_dir):  # URI publish creates parents itself (fsio)
+    if not is_uri(output_dir):  # URI publish creates parents itself (fsio)
         os.makedirs(output_dir, exist_ok=True)
     # Series-level write-session marker (r14 probe — N5-sink parity gap):
     # each slice file is atomic, but the SERIES is not, and a mid-write

@@ -123,12 +123,13 @@ def guard_crash_window_replay(spark: SparkSession, checkpoint_dir: str) -> None:
     import json as _json
 
     from n5_dask_spark.sources.n5 import fsio
+    from n5_dask_spark.sources.n5.metadata import is_uri
 
-    is_uri = fsio.is_uri(checkpoint_dir)
+    uri_dir = is_uri(checkpoint_dir)
 
     def _list_rel(sub: str) -> set[str] | None:
         """Relative file paths under <checkpoint>/<sub>; None = cannot list."""
-        if is_uri:
+        if uri_dir:
             return fsio.list_files(f"{checkpoint_dir}/{sub}")
         d = os.path.join(checkpoint_dir, sub)
         if not os.path.isdir(d):
@@ -141,7 +142,7 @@ def guard_crash_window_replay(spark: SparkSession, checkpoint_dir: str) -> None:
         return out
 
     def _read_log(rel: str) -> str:
-        if is_uri:
+        if uri_dir:
             data = fsio.read_file(f"{checkpoint_dir}/sources/{rel}")
             return "" if data is None else data.decode("utf-8")
         with open(os.path.join(checkpoint_dir, "sources", rel)) as fh:

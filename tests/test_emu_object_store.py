@@ -249,7 +249,7 @@ container = "s3://bkt/emu.n5"
 # executor processes against the emulated store
 write_array(spark, vol, container, "vol/s0", [16, 16, 4], compression={"type": "gzip"})
 
-# driver-side metadata reads route around the Hadoop FS (fsio.is_emulated)
+# driver-side metadata reads go through fsio, which serves the emulated store
 a = read_attributes(container, "vol/s0")
 assert a.dimensions == [37, 25, 11] and a.block_size == [16, 16, 4], a
 

@@ -590,14 +590,43 @@ def test_corrupt_block_files_fail_loudly_zero_byte_is_not_sparse(spark):
     assert (back == arr).mean() > 0.5  # the other seven blocks intact
 
 
-def test_stale_blocks_from_inplace_shrink_refused(spark):
+# The two scan paths and the two ways to address a container that every
+# read-path guard must hold on: the binaryFile glob (block_stats) and
+# spark.read.format("n5"), over a local path and a file: URI.
+SCANS = ("glob", "format")
+ADDRESSES = ("local", "uri")
+
+
+def _address(container: str, address: str) -> str:
+    return "file:" + container if address == "uri" else container
+
+
+def _scan(spark, scan: str, container: str, dataset: str) -> list:
+    """The rows of one full scan of ``dataset`` by the named scan path."""
+    if scan == "glob":
+        from n5_dask_spark.sources.n5.reader import block_stats
+
+        return block_stats(spark, container, dataset).collect()
+    from n5_dask_spark.sources.n5.datasource import register_n5_source
+
+    register_n5_source(spark)
+    return (
+        spark.read.format("n5").option("path", container).option("dataset", dataset)
+        .load().collect()
+    )
+
+
+@pytest.mark.parametrize("address", ADDRESSES)
+@pytest.mark.parametrize("scan", SCANS)
+def test_stale_blocks_from_inplace_shrink_refused(spark, scan, address):
     """r10 stale-block probe: N5 leaves old block files behind when a
     dataset is overwritten in place with SMALLER dimensions, and before
     the guard the glob scan read them as data (a 16x16x8 volume shrunk
-    to 8x8x4 still block_stats'ed all 8 old blocks — 7 stale). Grid-aware
-    scans now refuse loudly; grid-math-pruned region reads stay immune
-    and correct."""
-    from n5_dask_spark.sources.n5.reader import block_stats, decoded_blocks, read_full
+    to 8x8x4 still block_stats'ed all 8 old blocks — 7 stale). Both scan
+    paths plan from the same listing and refuse loudly; format("n5")
+    used to read the in-grid cell silently. Grid-math-pruned region reads
+    stay immune and correct."""
+    from n5_dask_spark.sources.n5.reader import decoded_blocks, read_full
     from n5_dask_spark.sources.n5.writer import temp_container, write_array
 
     big = np.full((16, 16, 8), 9, np.uint8)
@@ -605,17 +634,19 @@ def test_stale_blocks_from_inplace_shrink_refused(spark):
     c = temp_container("stale")
     write_array(spark, big, c, "d/s0", [8, 8, 4])  # 2x2x2 grid
     write_array(spark, small, c, "d/s0", [8, 8, 4])  # in-place shrink: 1-block grid
-    with pytest.raises(ValueError, match="stale block file"):
-        block_stats(spark, c, "d/s0").collect()
-    with pytest.raises(ValueError, match="stale block file"):
-        decoded_blocks(spark, c, "d/s0").collect()
+    c = _address(c, address)
+    with pytest.raises(Exception, match="stale block file"):
+        _scan(spark, scan, c, "d/s0")
+    if scan == "glob":
+        with pytest.raises(ValueError, match="stale block file"):
+            decoded_blocks(spark, c, "d/s0").collect()
     # region read enumerates from grid math: immune by construction
     np.testing.assert_array_equal(read_full(spark, c, "d/s0"), small)
 
     # a FRESH dataset of the same small shape scans clean
     c2 = temp_container("fresh")
     write_array(spark, small, c2, "d/s0", [8, 8, 4])
-    assert block_stats(spark, c2, "d/s0").count() == 1
+    assert len(_scan(spark, scan, _address(c2, address), "d/s0")) == 1
 
 
 def test_corrupt_attributes_json_fails_naming_the_file(tmp_path):
@@ -680,10 +711,11 @@ def test_oversized_block_refused(spark):
     assert (back[:4, :, :] == 7).all() and (back[8:, :, :] == 5).all()
 
 
-def test_scan_audit_escape_hatch(spark, monkeypatch):
-    """N5DS_SKIP_SCAN_AUDIT=1 trades the integrity audit for listing time
-    on datasets whose driver-side listing is itself the bottleneck — the
-    zero-byte lane then reverts to binaryFile's silent drop (documented)."""
+def test_scan_audit_escape_hatch(spark):
+    """The integrity audit has no off switch: an environment knob once
+    skipped it, and its only effect was to reopen the silent lane the
+    audit closes (binaryFile drops an empty file, so its populated cell
+    read as fill value)."""
     import pathlib
 
     from n5_dask_spark.sources.n5.reader import block_stats
@@ -695,64 +727,97 @@ def test_scan_audit_escape_hatch(spark, monkeypatch):
     pathlib.Path(c, "d/s0/0/0/0").write_bytes(b"")
     with pytest.raises(ValueError, match="zero-byte block file"):
         block_stats(spark, c, "d/s0").collect()
-    monkeypatch.setenv("N5DS_SKIP_SCAN_AUDIT", "1")
-    # audit off: the empty file is silently dropped by binaryFile (the
-    # documented trade) and the remaining block still reads
-    assert block_stats(spark, c, "d/s0").count() == 1
 
 
-def test_integrity_audit_uri_scheme_parity(spark):
-    """r11 (r10 verdict item 1): the zero-byte/stale refusals hold for
-    URI-scheme containers with the SAME semantics as local paths. The
-    audit walks the Hadoop FileSystem API — the listing machinery
-    binaryFile itself uses — so any scheme the scan can read, the audit
-    audits; before r11 the guard returned early for URI containers and an
-    object-store partial put (the torn-write scenario the guard exists
-    for) read its populated cell as silent fill-value zeros. ``file:``
-    exercises the branch; s3a/hdfs ride the same API."""
+def _damage(spark, c: str, state: str) -> None:
+    """Put the 2x2x2-grid dataset ``d/s0`` of container ``c`` in ``state``."""
+    import pathlib
+
+    from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER
+    from n5_dask_spark.sources.n5.writer import write_array
+
+    ds = pathlib.Path(c, "d/s0")
+    if state == "stale":
+        write_array(spark, np.full((8, 8, 4), 1, np.uint8), c, "d/s0", [8, 8, 4])
+    elif state == "zero_byte":
+        (ds / "0/0/0").write_bytes(b"")
+    elif state == "marker":
+        (ds / INCOMPLETE_MARKER).write_text("writer pid 0\n")
+    elif state == "non_numeric_dir":
+        (ds / "foo/0").mkdir(parents=True)
+        (ds / "foo/0/1").write_bytes(b"")  # zero-byte, but never a block
+    elif state == "absent":
+        (ds / "1/0/0").unlink()
+
+
+# dataset state -> the refusal it must raise, or the rows a scan returns
+_GUARDS = {
+    "stale": "stale block file",
+    "zero_byte": "zero-byte block file",
+    "marker": "write-session marker",
+    "non_numeric_dir": 8,
+    "absent": 7,
+}
+
+
+@pytest.mark.parametrize("state", list(_GUARDS))
+@pytest.mark.parametrize("address", ADDRESSES)
+@pytest.mark.parametrize("scan", SCANS)
+def test_integrity_audit_uri_scheme_parity(spark, scan, address, state):
+    """Every read-path guard holds on both scan paths and for both
+    container addresses, with the same semantics: stale blocks after an
+    in-place shrink, zero-byte blocks and the write-session marker are
+    refused; a zero-byte numeric file under a non-numeric directory is
+    never a block, and an absent block is legal sparseness (no row). Both
+    paths list and fence through ``reader.list_blocks``; before r11 the
+    glob guard skipped URI containers, and before the shared listing
+    format("n5") read the in-grid cells of a shrunk dataset silently."""
+    from n5_dask_spark.sources.n5.writer import temp_container, write_array
+
+    c = temp_container("guards")
+    write_array(spark, np.full((16, 16, 8), 9, np.uint8), c, "d/s0", [8, 8, 4])
+    _damage(spark, c, state)
+    expect = _GUARDS[state]
+    if isinstance(expect, str):
+        with pytest.raises(Exception, match=expect):
+            _scan(spark, scan, _address(c, address), "d/s0")
+    else:
+        assert len(_scan(spark, scan, _address(c, address), "d/s0")) == expect
+
+
+@pytest.mark.parametrize("address", ADDRESSES)
+def test_explicit_path_scan_guards(spark, address):
+    """The explicit-path scan (the pruned lane export_region uses) lists
+    the same way: a zero-byte block is refused, and an absent path in the
+    list stays legal N5 sparseness."""
     import pathlib
 
     from n5_dask_spark.sources.n5.reader import scan_block_files
     from n5_dask_spark.sources.n5.writer import temp_container, write_array
 
-    arr = np.full((16, 16, 8), 9, np.uint8)
-    c = temp_container("uri")
-    write_array(spark, arr, c, "d/s0", [8, 8, 4])  # 2x2x2 grid
-    uri = "file:" + c
-    # clean URI scan: all 8 blocks, audit quiet
-    assert scan_block_files(spark, uri, "d/s0", 3, grid_shape=[2, 2, 2]).count() == 8
-    # zero-byte refusal, glob branch (was a silent fill-value read pre-r11)
+    c = temp_container("paths")
+    write_array(spark, np.full((16, 16, 8), 9, np.uint8), c, "d/s0", [8, 8, 4])
+    a = _address(c, address)
     pathlib.Path(c, "d/s0/0/0/0").write_bytes(b"")
     with pytest.raises(ValueError, match="zero-byte block file"):
-        scan_block_files(spark, uri, "d/s0", 3, grid_shape=[2, 2, 2]).collect()
-    # zero-byte refusal, explicit-path branch (the pruned region-read lane)
-    with pytest.raises(ValueError, match="zero-byte block file"):
-        scan_block_files(
-            spark, uri, "d/s0", 3, paths=[uri + "/d/s0/0/0/0"]
-        ).collect()
-    # an ABSENT path in an explicit URI list stays legal N5 sparseness
+        scan_block_files(spark, a, "d/s0", 3, paths=[a + "/d/s0/0/0/0"]).collect()
     os.unlink(os.path.join(c, "d/s0/0/0/0"))
-    assert (
-        scan_block_files(
-            spark, uri, "d/s0", 3,
-            paths=[uri + "/d/s0/0/0/0", uri + "/d/s0/1/0/0"],
-        ).count()
-        == 1
-    )
-    # stale-block refusal after an in-place shrink, URI glob branch
-    small = np.full((8, 8, 4), 1, np.uint8)
-    write_array(spark, small, c, "d/s0", [8, 8, 4])  # 1-block grid now
-    with pytest.raises(ValueError, match="stale block file"):
-        scan_block_files(spark, uri, "d/s0", 3, grid_shape=[1, 1, 1]).collect()
-    # escape hatch applies to URI containers too
-    os.environ["N5DS_SKIP_SCAN_AUDIT"] = "1"
-    try:
-        assert (
-            scan_block_files(spark, uri, "d/s0", 3, grid_shape=[1, 1, 1]).count()
-            == 8
-        )
-    finally:
-        del os.environ["N5DS_SKIP_SCAN_AUDIT"]
+    paths = [a + "/d/s0/0/0/0", a + "/d/s0/1/0/0"]
+    assert scan_block_files(spark, a, "d/s0", 3, paths=paths).count() == 1
+
+
+def test_n5_read_path_has_one_storage_client():
+    """The N5 read path reaches URI storage through fsio's pyarrow
+    filesystem only. The Hadoop FileSystem over py4j cannot run in the
+    format("n5") planner or in executors, and a second client is how a
+    guard came to exist on one scan path but not the other."""
+    import pathlib
+
+    import n5_dask_spark.sources.n5 as n5
+
+    root = pathlib.Path(n5.__file__).parent
+    for name in ("reader", "datasource", "metadata", "fsio"):
+        assert "org.apache.hadoop.fs" not in (root / f"{name}.py").read_text(), name
 
 
 def test_atomic_writes_restore_umask_permissions(spark, tmp_path):

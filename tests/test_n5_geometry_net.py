@@ -89,8 +89,8 @@ def _stage(spark, tmp_path, seed: int, tag: str):
 
     ODD seeds address the container as a ``file:`` URI, so across any
     sweep every leg exercises the r13 scheme-dispatched write branch
-    (fsio per-scheme commit + read-back marker fence) AND the r11
-    Hadoop-FS URI read branch on the same random geometry/codec space;
+    (fsio per-scheme commit + read-back marker fence) AND the fsio
+    URI read branch on the same random geometry/codec space;
     even seeds keep the plain local-path branch covered."""
     from n5_dask_spark.sources.n5.metadata import read_attributes
     from n5_dask_spark.sources.n5.writer import write_array

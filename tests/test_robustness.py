@@ -164,27 +164,33 @@ def test_missing_path_classified_by_error_class(spark):
 
 def test_scan_reraises_non_path_failures(spark, monkeypatch):
     """A paths-mode load failing for a NON-missing-path reason must
-    re-raise, not silently degrade to the survivor retry / empty scan."""
+    re-raise, not silently degrade to the survivor retry / empty scan.
+    The block exists: the scan loads only the block files its listing
+    found, so an absent one never reaches load()."""
     import pyspark.sql.readwriter as rw
 
     from n5_dask_spark.sources.n5 import reader as rd
+    from n5_dask_spark.sources.n5.writer import temp_container, write_array
+
+    c = temp_container("reraise")
+    write_array(spark, np.full((8, 8, 8), 1, np.uint8), c, "ds", [8, 8, 8])
 
     def boom(self, *a, **k):
         raise RuntimeError("executor lost")
 
     monkeypatch.setattr(rw.DataFrameReader, "load", boom)
     with pytest.raises(RuntimeError, match="executor lost"):
-        rd.scan_block_files(spark, "/tmp/x.n5", "ds", paths=["/tmp/x.n5/ds/0/0/0"])
+        rd.scan_block_files(spark, c, "ds", paths=[f"{c}/ds/0/0/0"])
 
 
 def test_scan_uri_paths_hadoop_stat_retry(spark, monkeypatch):
-    """r11: the survivor retry stats URI paths through the Hadoop
-    FileSystem and retries with the real survivors. Pre-r11 it refused
-    loudly (the driver could only os.path.exists LOCAL paths, which would
-    test every URI False and read a populated region as silent zeros —
-    the original failure this test pinned). A first-load PATH_NOT_FOUND
-    on a part-absent URI list must now degrade to the surviving blocks,
-    never to silence and never to a spurious hard failure."""
+    """r11: the survivor retry lists the URI dataset again (through fsio)
+    and retries with the real survivors. Pre-r11 it refused loudly (the
+    driver could only os.path.exists LOCAL paths, which would test every
+    URI False and read a populated region as silent zeros — the original
+    failure this test pinned). A first-load PATH_NOT_FOUND on a
+    part-absent URI list must now degrade to the surviving blocks, never
+    to silence and never to a spurious hard failure."""
     import pyspark.sql.readwriter as rw
 
     from pyspark.errors import AnalysisException
@@ -356,8 +362,8 @@ def test_write_region_out_of_bounds_refused(spark):
 
 def test_read_region_uri_container_sparse_reads_fill_value(spark):
     """r11: the whole READ surface works against URI-scheme containers
-    end to end — metadata through the Hadoop FileSystem (_read_text),
-    candidate pre-filtering through getFileStatus — so a SPARSE URI
+    end to end — metadata and block files through fsio's pyarrow
+    filesystem — so a SPARSE URI
     dataset reads absent blocks as fill-value zeros, exactly the local
     contract (pre-r11: read_attributes failed at open() and a sparse URI
     region refused loudly even with metadata monkeypatched)."""
