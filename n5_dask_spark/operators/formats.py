@@ -3,8 +3,9 @@ Spark-native read/write surface beyond parquet — ORC, CSV, JSON — proven
 by writing real files and reading them back before aggregating. The oracle
 computes the same aggregate straight from the parquet table, so any
 serialization defect (type mangling, header drift, encoding) flips the
-hash. N5 and TIFF (the reference's own formats) have their own modules;
-binaryFile is exercised by the N5 scan path.
+hash. N5 and TIFF (the reference's own formats) have their own modules,
+whose scans read their files in their own Python kernels (no Spark file
+source).
 
 Paths are deterministic per sf_dir (atomic per-task files via Spark's
 commit protocol; mode=overwrite), so reruns are idempotent. Only

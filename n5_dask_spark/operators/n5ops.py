@@ -117,7 +117,7 @@ def n5_intensity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     from n5_dask_spark.sources.n5.metadata import read_attributes
-    from n5_dask_spark.sources.n5.reader import scan_block_files
+    from n5_dask_spark.sources.n5.reader import scan_block_files, scan_source
     from n5_dask_spark.sources.n5.codec import decode_block_at
 
     attrs = read_attributes(FIXTURE, FIXTURE_DS)
@@ -125,18 +125,19 @@ def n5_intensity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     if data_type != "uint8":
         raise ValueError(f"histogram binning (>>4, 16 bins) assumes uint8, got {data_type}")
     n_bins = 16  # uint8 -> 16 bins of width 16
+    ids, plan = scan_source(
+        scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
+    )
 
     def partial_hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            acc = np.zeros(n_bins, dtype="int64")
-            for raw, p in zip(pdf["raw"], pdf["path"]):
-                a = decode_block_at(bytes(raw), data_type, compression, p)
-                acc += np.bincount(a.ravel() >> 4, minlength=n_bins)[:n_bins]
-            yield pd.DataFrame({"bin": np.arange(n_bins, dtype="int32"), "n_voxels": acc})
+        acc = np.zeros(n_bins, dtype="int64")
+        for p, _grid, raw in plan.read(batches):
+            a = decode_block_at(raw, data_type, compression, p)
+            acc += np.bincount(a.ravel() >> 4, minlength=n_bins)[:n_bins]
+        yield pd.DataFrame({"bin": np.arange(n_bins, dtype="int32"), "n_voxels": acc})
 
     return (
-        scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
-        .mapInPandas(partial_hist, schema="bin int, n_voxels long")
+        ids.mapInPandas(partial_hist, schema="bin int, n_voxels long")
         .groupBy("bin")
         .agg(F.sum("n_voxels").alias("n_voxels"))
         .filter(F.col("n_voxels") > 0)
@@ -159,27 +160,28 @@ def n5_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     from n5_dask_spark.sources.n5.metadata import read_attributes
-    from n5_dask_spark.sources.n5.reader import scan_block_files
+    from n5_dask_spark.sources.n5.reader import scan_block_files, scan_source
     from n5_dask_spark.sources.n5.codec import decode_block_at
 
     attrs = read_attributes(FIXTURE, FIXTURE_DS)
     data_type, compression = attrs.data_type, dict(attrs.compression)
     bz = attrs.block_size[2]
+    ids, plan = scan_source(
+        scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
+    )
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for gz, raw, p in zip(pdf["gz"], pdf["raw"], pdf["path"]):
-                a = decode_block_at(bytes(raw), data_type, compression, p)
-                sums = a.sum(axis=(1, 2), dtype="f8")  # f8: exact for ints, no truncation for floats
-                counts = a.shape[1] * a.shape[2]
-                for dz in range(a.shape[0]):
-                    rows.append((int(gz) * bz + dz, float(sums[dz]), counts))
-            yield pd.DataFrame(rows, columns=["z", "vsum", "n"])
+        rows = []
+        for p, (_gx, _gy, gz), raw in plan.read(batches):
+            a = decode_block_at(raw, data_type, compression, p)
+            sums = a.sum(axis=(1, 2), dtype="f8")  # f8: exact for ints, no truncation for floats
+            counts = a.shape[1] * a.shape[2]
+            for dz in range(a.shape[0]):
+                rows.append((gz * bz + dz, float(sums[dz]), counts))
+        yield pd.DataFrame(rows, columns=["z", "vsum", "n"])
 
     return (
-        scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
-        .mapInPandas(partial, schema="z int, vsum double, n long")
+        ids.mapInPandas(partial, schema="z int, vsum double, n long")
         .groupBy("z")
         .agg((F.sum("vsum") / F.sum("n")).alias("mean_intensity"), F.sum("n").alias("n_voxels"))
         .orderBy("z")

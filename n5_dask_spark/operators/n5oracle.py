@@ -161,8 +161,9 @@ def _build_container(
     invocations of DIFFERENT queries never race one another's
     rmtree/scan; the pid key isolates concurrent PROCESSES running the
     SAME query (B's rmtree during A's lazy scan would otherwise read as
-    silently-short output under ignoreMissingFiles — the race tiffops'
-    _series_root documents); a same-process retry is idempotent.
+    silently-short output, since a block deleted after planning reads as
+    absent — the race tiffops' _series_root documents); a same-process
+    retry is idempotent.
     ``reuse=True`` skips the rebuild when this process already built the
     container — ONLY for callers whose container is input staging (the
     write path itself is their operator under test otherwise).
@@ -569,8 +570,8 @@ def n5_roundtrip_blosc_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
         "S2 via the Spark 4 Python DataSource API, hash-checked: the same "
         "container as n5_roundtrip_zprofile read through "
         "spark.read.format('n5') (block files packed by Spark's file-split "
-        "rule, codec decode inside the source) instead of the binaryFile "
-        "path, then "
+        "rule, codec decode inside the source) instead of the glob scan "
+        "(scan_block_files), then "
         "the identical per-z profile. Proves the registered DataSource "
         "returns byte-identical blocks."
     ),

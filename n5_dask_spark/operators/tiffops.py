@@ -97,9 +97,11 @@ def _build_series(spark: SparkSession, sf_dir: str) -> str:
     ),
 )
 def tiff_roundtrip_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from n5_dask_spark.sources.n5.reader import scan_source
     from n5_dask_spark.sources.tiff import (
         decode_tiff,
         n5_to_tif_series,
+        read_slice,
         tif_series_scan,
         tif_series_to_n5,
     )
@@ -120,18 +122,17 @@ def tiff_roundtrip_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
         data_type="uint16",
     )
     n5_to_tif_series(spark, container, "vol/s0", out_dir)
+    ids, plan = scan_source(tif_series_scan(spark, out_dir))
 
     def profile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for z, raw in zip(pdf["z"], pdf["raw"]):
-                arr = decode_tiff(bytes(raw))
-                rows.append((int(z), int(arr.sum(dtype="i8")), int(arr.size)))
-            yield pd.DataFrame(rows, columns=["z", "zsum", "n_vox"])
+        rows = []
+        for _path, (z,), raw in plan.read(batches, read_slice):
+            arr = decode_tiff(raw)
+            rows.append((z, int(arr.sum(dtype="i8")), int(arr.size)))
+        yield pd.DataFrame(rows, columns=["z", "zsum", "n_vox"])
 
     return (
-        tif_series_scan(spark, out_dir)
-        .mapInPandas(profile, schema="z int, zsum long, n_vox long")
+        ids.mapInPandas(profile, schema="z int, zsum long, n_vox long")
         .orderBy("z")
     )
 

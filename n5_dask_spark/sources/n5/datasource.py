@@ -1,6 +1,6 @@
 """Spark 4 Python DataSource for N5 (SURVEY.md §2.A S2 — the
 `spark.dataSource.register` path the survey recommends as the idiomatic
-Spark-4 alternative to a binaryFile+UDF scan).
+Spark-4 alternative to a file-source+UDF scan).
 
 Usage:
     register_n5_source(spark)
@@ -12,14 +12,15 @@ Usage:
     # -> gx, gy, gz, shape_zyx (zyx dims), data (native-endian zyx bytes)
 
 Partition planning runs in Spark's planner process and packs block files
-into scan tasks with Spark's own file-split rule (the one the binaryFile
-glob scan gets from the JVM, see :class:`ScanSplit`), so both scan paths
-run the same number of tasks over the same files. When a region is given
-only OVERLAPPING blocks are planned — source-level partition pruning, so
-a 1-block region of a petabyte container plans exactly one task. The
+into scan tasks with Spark's own file-split rule (:class:`ScanSplit`,
+:func:`plan_splits`), the split plan the glob block scan and the TIFF
+series scan run too, so both N5 scan paths run the same tasks over the
+same files. When a region is given only OVERLAPPING blocks are planned —
+source-level partition pruning, so a 1-block region of a petabyte
+container plans exactly one task. The
 block files come from ``reader.list_blocks``, the listing and fence the
-glob scan uses: mid-write, stale and zero-byte datasets are refused at
-planning with the glob scan's messages.
+glob scan uses: mid-write, non-canonical, stale and zero-byte datasets are
+refused at planning with the glob scan's messages.
 
 The planner process has no active session, so ``register_n5_source``
 resolves the parallelism and the file-source confs on the driver and
@@ -104,6 +105,34 @@ class ScanSplit:
         )
 
 
+def plan_splits(files: Sequence[tuple], split: ScanSplit) -> list[list[tuple]]:
+    """Spark's file-split rule over ``(path, key, size)`` files, filled
+    next-fit in listing order (contiguous runs keep directory locality): a
+    split closes when the next file would push it past ``maxSplitBytes``,
+    and each file costs its size plus the open cost. Up to ``parallelism``
+    equal-sized files, the open cost alone keeps one file per split.
+
+    The one split plan of every scan: format("n5") partitions, the glob
+    block scan and the TIFF series scan all run these splits, one task
+    each. Returns the input tuples grouped by split."""
+    open_cost = split.open_cost_bytes
+    total = sum(size for _p, _k, size in files) + open_cost * len(files)
+    max_split = split.max_split_bytes(total)
+    runs: list[list[tuple]] = []
+    run: list[tuple] = []
+    run_cost = 0
+    for file in files:
+        size = file[2]
+        if run and run_cost + size > max_split:
+            runs.append(run)
+            run, run_cost = [], 0
+        run.append(file)
+        run_cost += size + open_cost
+    if run:
+        runs.append(run)
+    return runs
+
+
 class N5BlockPartition(InputPartition):
     """One scan task's worth of block files: a contiguous run in grid
     order, sized by :class:`ScanSplit` (a task per block file would be
@@ -167,11 +196,8 @@ class N5Reader(DataSourceReader):
         return self._attrs
 
     def partitions(self) -> Sequence[N5BlockPartition]:
-        """Spark's file-split rule over the block files, filled next-fit in
-        grid order (contiguous runs keep directory locality): a task closes
-        when the next block would push it past ``maxSplitBytes``, and each
-        block costs its size plus the open cost. Up to ``parallelism``
-        equal-sized blocks, the open cost alone keeps one block per task.
+        """The block files packed by :func:`plan_splits`, the split plan the
+        glob scan runs too.
 
         The block files come from ``reader.list_blocks``, the listing and
         fence the glob scan uses too: a mid-write, stale or zero-byte
@@ -190,25 +216,17 @@ class N5Reader(DataSourceReader):
             self.container, self.dataset, attrs.ndim, attrs.grid_shape, grids,
             "format('n5') scan",
         )
-        open_cost = self.split.open_cost_bytes
-        total_bytes = sum(size for _p, _g, size in blocks)
-        max_split = self.split.max_split_bytes(total_bytes + open_cost * len(blocks))
-        parts: list[N5BlockPartition] = []
-        run: list[tuple[str, tuple[int, ...]]] = []
-        run_cost = 0
-        for path, grid, size in blocks:
-            if run and run_cost + size > max_split:
-                parts.append(N5BlockPartition(run))
-                run, run_cost = [], 0
-            run.append((path, grid))
-            run_cost += size + open_cost
-        if run:
-            parts.append(N5BlockPartition(run))
+        parts = [
+            N5BlockPartition([(path, grid) for path, grid, _size in run])
+            for run in plan_splits(blocks, self.split)
+        ]
         if log.isEnabledFor(logging.DEBUG):
+            total_bytes = sum(size for _p, _g, size in blocks)
             log.debug(
                 "format('n5') plan %s/%s: %d blocks, %d bytes, maxSplitBytes=%d "
                 "-> %d partitions (parallelism %d from %s), codec %s",
-                self.container, self.dataset, len(blocks), total_bytes, max_split,
+                self.container, self.dataset, len(blocks), total_bytes,
+                self.split.max_split_bytes(total_bytes + self.split.open_cost_bytes * len(blocks)),
                 len(parts), self.split.parallelism, self.split.source,
                 attrs.compression,
             )

@@ -3,10 +3,9 @@ N5 layer for URI containers (file:, hdfs:, s3/s3a:, gs:, ...).
 
 The read path lists, fences and reads through it: metadata
 (``metadata._read_text``), the block listing both scan paths plan from
-(``reader.list_blocks``), the write-session marker check and the block
-fetches of ``format("n5")`` tasks and driver-side region reads. The
-binaryFile glob scan reads block bytes in the JVM, but lists and fences
-here first.
+(``reader.list_blocks``), the write-session marker check and every block
+fetch (``reader.read_block_file``): the glob scan's kernels,
+``format("n5")`` tasks and driver-side region reads.
 
 Writes came later (r13): the sinks' temp-file + ``os.replace`` commit
 discipline doesn't transfer to object stores. This module lifts that with

@@ -5,11 +5,18 @@ Design (§1.5): one row per block, grid coordinates as ordinary columns —
 Catalyst filters on (gx, gy, gz) replace dask's task culling.
 
 Listing and fencing (``list_blocks``) is shared by both scan paths: the
-binaryFile glob scan here and ``spark.read.format("n5")`` planning
-(datasource.py). It checks the write-session marker, lists the dataset
-once (os.walk or os.stat locally, one fsio listing for URI containers)
-and refuses stale and zero-byte block files, so every guard holds on
-both paths.
+glob scan here (``scan_block_files``) and ``spark.read.format("n5")``
+planning (datasource.py). It checks the write-session marker, lists the
+dataset once (os.walk or os.stat locally, one fsio listing for URI
+containers) and refuses non-canonical, stale and zero-byte block files, so
+every guard holds on both paths. That listing is the only one: both paths
+pack it into the same splits (``datasource.plan_splits``) and read each
+block in the Python task that uses it, with ``read_block_file``. The glob
+scan's source is ``spark.range(k, numPartitions=k)``, one split id per
+task, looked up in a compact ``ScanPlan`` that travels with the kernel
+(grid coordinates and split offsets; paths are rebuilt from the grid), so
+building a scan starts no Spark job and no file byte passes through the
+JVM.
 
 Region reads (``read_region``) run no Spark job. Like the reference's
 read_n5_block, they are random access in the calling process: the
@@ -25,12 +32,11 @@ Reference parity: da.from_zarr(zarr.N5Store(...)) at
 region read semantics of read_n5_block at /root/reference/src/n5_utils.py:6-18
 (xyz-ordered result; ours without the transpose bugs noted in SURVEY §1.4).
 
-Scale: binaryFile is a splittable listing of many small files; decoded
-payloads stay binary columns (no per-element rows). Both directions of the
-mapInPandas exchange are BYTE-bounded: JVM->Python by
-spark.sql.execution.arrow.maxBytesPerBatch (64 MB, pinned in
-session.DEFAULT_CONFS), Python->JVM by udfbatch.bounded_frames (64 MB of
-decoded payload per yielded frame) — so worker memory is independent of
+Scale: a split is a run of block files sized by Spark's file-split rule,
+and decoded payloads stay binary columns (no per-element rows). The
+scan kernel takes in one split id and fetches its files itself; what it
+sends back to the JVM is byte-bounded by udfbatch.bounded_frames (64 MB of
+decoded payload per yielded frame), so worker memory is independent of
 both the codec ratio and maxRecordsPerBatch (see udfbatch's module
 docstring for the probe that motivated this).
 """
@@ -43,6 +49,7 @@ import os
 import re
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -54,13 +61,13 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import decode_block_at, np_dtype
+from n5_dask_spark.sources.n5.datasource import ScanSplit, plan_splits
 from n5_dask_spark.sources.n5.metadata import (
     INCOMPLETE_MARKER,
     DatasetAttributes,
@@ -69,7 +76,8 @@ from n5_dask_spark.sources.n5.metadata import (
     log_codec,
     read_attributes,
 )
-from n5_dask_spark.udfbatch import bounded_frames
+
+log = logging.getLogger("n5_dask_spark.sources.n5")
 
 BLOCK_SCHEMA = StructType(
     [
@@ -80,21 +88,6 @@ BLOCK_SCHEMA = StructType(
         StructField("data", BinaryType()),  # native-endian C-order (z,y,x) bytes
     ]
 )
-
-def _is_missing_path(exc: Exception) -> bool:
-    """True when ``exc`` is Spark's missing-input-path failure.
-
-    Prefers the structured error class on AnalysisException
-    (``getCondition``), which is stable across releases and locales, and
-    falls back to the message for exceptions that carry none."""
-    from pyspark.errors import AnalysisException
-
-    if isinstance(exc, AnalysisException):
-        cond = exc.getCondition()
-        if cond is not None:
-            return cond == "PATH_NOT_FOUND"
-    return "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc)
-
 
 STATS_SCHEMA = StructType(
     [
@@ -108,20 +101,6 @@ STATS_SCHEMA = StructType(
         StructField("vmean", DoubleType()),
     ]
 )
-
-
-def escape_hadoop_glob(path: str) -> str:
-    """Backslash-escape Hadoop glob metacharacters in a LITERAL path.
-
-    Spark's file sources run every load() path through Hadoop glob
-    expansion, so a directory name containing [ ] { } * ? is treated as
-    a PATTERN: dataset ``d[12]`` silently reads sibling ``d1``'s block
-    files (the wrong dataset's data, no error) and an unmatchable
-    pattern raises PATH_NOT_FOUND (r9 hostile-name probe, pinned in
-    tests/test_robustness.py). User-supplied container/dataset/input-dir
-    prefixes are escaped literal; the scan's own ``*`` tails are
-    appended AFTER escaping."""
-    return "".join("\\" + c if c in "*?[]{}\\" else c for c in path)
 
 
 def check_block_shape(
@@ -164,23 +143,26 @@ def read_block_file(path: str) -> bytes | None:
     Local paths use open(); URI paths use fsio's pyarrow filesystem, which
     works in a Python worker (no py4j bridge there) and, on the driver,
     reads at local-disk speed where the Hadoop FileSystem over py4j moves
-    ~15 MiB/s. The format("n5") scan tasks and the driver-side region
-    reads share this fetch.
+    ~15 MiB/s. Every N5 read shares this fetch: the glob scan's kernels,
+    the format("n5") scan tasks and the driver-side region reads.
 
     A zero-byte file is refused: it is never valid N5 (the block header
     alone is at least 4 bytes) but the signature of a torn external writer,
     and reading it as absent would turn a populated cell into fill-value
-    zeros."""
-    if is_uri(path):
-        from n5_dask_spark.sources.n5 import fsio
+    zeros. Any other read failure (a directory in the block's place, an
+    unreadable file) raises naming ``path``."""
+    try:
+        if is_uri(path):
+            from n5_dask_spark.sources.n5 import fsio
 
-        raw = fsio.read_file(path)
-    else:
-        try:
+            raw = fsio.read_file(path)
+        else:
             with open(path, "rb") as f:
                 raw = f.read()
-        except (FileNotFoundError, NotADirectoryError):
-            return None
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+    except OSError as e:
+        raise OSError(f"cannot read block file {path}: {e}") from e
     if raw is not None and not raw:
         raise ValueError(
             f"zero-byte block file {path} — not valid N5 (a block header is "
@@ -224,15 +206,42 @@ def refuse_mid_write(container: str, dataset: str, reader: str) -> None:
 _COORD = re.compile(r"[0-9]+")
 
 
-def _grid_of(segments: list[str], ndim: int) -> tuple[int, ...] | None:
+def _grid_of(segments: list[str], ndim: int, where: str) -> tuple[int, ...] | None:
     """The grid cell a dataset-relative path names, or None when it is no
     block file: block files sit exactly ``ndim`` levels deep and every
-    segment is numeric, the same rule as the glob scan's path filter. So a
-    numeric file under a non-numeric directory (dataset/foo/0/1) is never
-    read, and neither its size nor its coordinates are checked."""
+    segment is numeric. So a numeric file under a non-numeric directory
+    (dataset/foo/0/1) is never read, and neither its size nor its
+    coordinates are checked.
+
+    A numeric segment that is not plain decimal (``00``, ``01``) is refused
+    with its path under ``where``: it is no N5 block name, and read as a
+    number it aliases a second file onto a cell (``0/0/0`` and ``0/0/00``
+    are both (0, 0, 0)), so a scan would emit two rows for one cell.
+    Refusing it also makes every block path exactly :func:`block_path` of
+    its grid, which is how scan kernels rebuild the paths they read."""
     if len(segments) != ndim or not all(_COORD.fullmatch(s) for s in segments):
         return None
-    return tuple(int(s) for s in segments)
+    grid = tuple(int(s) for s in segments)
+    if any(s != str(c) for s, c in zip(segments, grid)):
+        raise ValueError(
+            f"non-canonical block file name {where}/{'/'.join(segments)} — N5 "
+            f"names grid cell {grid} {'/'.join(map(str, grid))}, so this file is "
+            "no block of the dataset and would alias a second file onto that "
+            "cell. Rename or remove it."
+        )
+    return grid
+
+
+def dataset_root(container: str, dataset: str) -> str:
+    """The directory (or URI prefix) holding a dataset's block files."""
+    if is_uri(container):
+        return f"{container.rstrip('/')}/{dataset}"
+    return os.path.join(container, dataset)
+
+
+def block_path(root: str, grid: tuple[int, ...]) -> str:
+    """The block file of grid cell ``grid`` under dataset directory ``root``."""
+    return os.path.join(root, *map(str, grid))
 
 
 def list_blocks(
@@ -244,8 +253,8 @@ def list_blocks(
     reader: str = "scan",
 ) -> list[tuple[str, tuple[int, ...], int]]:
     """(path, grid, size) of every present block file of a dataset, in grid
-    order: the one listing and fence of both scan paths (the binaryFile
-    glob scan and format("n5") planning).
+    order: the one listing and fence of both scan paths (the glob scan,
+    :func:`scan_block_files`, and format("n5") planning).
 
     ``grids`` restricts the listing to those cells (a region); absent cells
     are legal N5 sparseness and are left out. The dataset is listed once:
@@ -253,26 +262,27 @@ def list_blocks(
     requested cell, and a URI container is listed with one
     ``fsio.list_file_sizes`` whose result is filtered to the requested
     cells. A URI dataset that cannot be listed is refused: probing each
-    cell instead would cost a round-trip per cell.
+    cell instead would cost a round-trip per cell. Every path is
+    :func:`block_path` of its grid.
 
     Refused, before anything is read:
 
     - the write-session marker (:func:`refuse_mid_write`; ``reader`` names
       the scan in the fence log);
+    - non-canonical block names such as ``0/0/00`` (:func:`_grid_of`);
     - block files outside ``grid_shape``: N5 leaves old block files behind
       when a dataset is overwritten in place with smaller dimensions, so
       out-of-grid files mean the in-grid cells may be stale too (a
       16x16x8 volume shrunk to 8x8x4 block_stats'ed all 8 old blocks);
     - zero-byte block files: never valid N5 (the block header alone is at
       least 4 bytes) but the signature of a torn external writer, and
-      Spark's binaryFile listing silently drops empty files, which would
-      read the populated cell as fill value."""
+      reading one as absent would turn a populated cell into fill value."""
     refuse_mid_write(container, dataset, reader)
+    root = dataset_root(container, dataset)
     found: list[tuple[str, tuple[int, ...], int]] = []
     if is_uri(container):
         from n5_dask_spark.sources.n5 import fsio
 
-        root = f"{container.rstrip('/')}/{dataset}"
         sizes = fsio.list_file_sizes(root)
         if sizes is None:
             raise ValueError(
@@ -282,11 +292,10 @@ def list_blocks(
             )
         wanted = None if grids is None else set(map(tuple, grids))
         for rel, size in sizes.items():
-            grid = _grid_of(rel.split("/"), ndim)
+            grid = _grid_of(rel.split("/"), ndim, root)
             if grid is not None and (wanted is None or grid in wanted):
-                found.append((f"{root}/{rel}", grid, size))
+                found.append((block_path(root, grid), grid, size))
     elif grids is None:
-        root = os.path.join(container, dataset)
         for dirpath, dirnames, filenames in os.walk(root):
             rel = os.path.relpath(dirpath, root)
             head = [] if rel == "." else rel.split(os.sep)
@@ -295,19 +304,18 @@ def list_blocks(
                 [d for d in dirnames if _COORD.fullmatch(d)] if len(head) < ndim - 1 else []
             )
             for fn in filenames:
-                grid = _grid_of([*head, fn], ndim)
+                grid = _grid_of([*head, fn], ndim, root)
                 if grid is not None:
                     full = os.path.join(dirpath, fn)
                     found.append((full, grid, os.path.getsize(full)))
     else:
         for g in grids:
-            path = os.path.join(container, dataset, *map(str, g))
+            path = block_path(root, g)
             try:
                 found.append((path, tuple(g), os.stat(path).st_size))
             except (FileNotFoundError, NotADirectoryError):
                 pass
     found.sort(key=lambda b: b[1])
-    where = os.path.join(container, dataset)
     stale = [
         p for p, g, _s in found
         if grid_shape is not None and any(c >= n for c, n in zip(g, grid_shape))
@@ -315,7 +323,7 @@ def list_blocks(
     if stale:
         raise ValueError(
             f"stale block file(s) outside the {grid_shape} grid of "
-            f"{where}: {stale[:5]}{' ...' if len(stale) > 5 else ''} — N5 "
+            f"{root}: {stale[:5]}{' ...' if len(stale) > 5 else ''} — N5 "
             "leaves old blocks behind when a dataset is overwritten in place "
             "with smaller dimensions, and the in-grid cells may be stale too. "
             "Re-create the dataset directory fresh instead of overwriting."
@@ -323,14 +331,128 @@ def list_blocks(
     empties = [p for p, _g, size in found if size == 0]
     if empties:
         raise ValueError(
-            f"zero-byte block file(s) in {where}: "
+            f"zero-byte block file(s) in {root}: "
             f"{empties[:5]}{' ...' if len(empties) > 5 else ''} — "
-            "not valid N5 (a block header is at least 4 bytes) and Spark's "
-            "binaryFile listing silently drops empty files, so these "
-            "populated grid cells would otherwise read as fill-value zeros. "
-            "Likely a torn external writer; re-write the affected blocks."
+            "not valid N5 (a block header is at least 4 bytes), and reading "
+            "them as absent would return these populated grid cells as "
+            "fill-value zeros. Likely a torn external writer; re-write the "
+            "affected blocks."
         )
     return found
+
+
+@dataclass(frozen=True)
+class ScanPlan:
+    """One scan's files and splits in the compact form its kernels carry.
+
+    Split ``i`` covers files ``offsets[i]:offsets[i + 1]`` in listing
+    order; file ``j`` has the coordinate columns ``coords[j]`` and the size
+    ``sizes[j]`` it was listed with. Block paths are rebuilt from the first
+    ``ndim`` coordinates (:func:`block_path`, exact because the listing
+    refuses non-canonical names); files whose names carry no coordinates
+    (TIFF slices) keep their ``names`` under ``root`` instead."""
+
+    root: str
+    columns: tuple[str, ...]
+    coords: np.ndarray  # (files, len(columns)) int64
+    sizes: np.ndarray  # (files,) int64
+    offsets: np.ndarray  # (splits + 1,) int64
+    ndim: int = 0
+    names: tuple[str, ...] | None = None
+
+    def path(self, j: int) -> str:
+        """The path of file ``j``."""
+        if self.names is not None:
+            return os.path.join(self.root, self.names[j])
+        return block_path(self.root, tuple(int(c) for c in self.coords[j, : self.ndim]))
+
+    def files(self, split: int) -> Iterator[tuple[str, tuple[int, ...], int]]:
+        """(path, coordinates, listed size) of every file of one split."""
+        for j in range(self.offsets[split], self.offsets[split + 1]):
+            yield self.path(j), tuple(int(c) for c in self.coords[j]), int(self.sizes[j])
+
+    def read(
+        self, batches: Iterator[pd.DataFrame], fetch=read_block_file
+    ) -> Iterator[tuple[str, tuple[int, ...], bytes]]:
+        """(path, coordinates, bytes) of every file of the splits whose ids
+        arrive in ``batches``, fetched in the calling kernel. A file that
+        ``fetch`` finds absent (None) is skipped: an N5 block deleted after
+        planning reads as fill value. Any other read failure raises."""
+        for pdf in batches:
+            for split in pdf["id"]:
+                for path, key, _size in self.files(int(split)):
+                    raw = fetch(path)
+                    if raw is not None:
+                        yield path, key, raw
+
+    def listing(self, batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """The materialized scan rows: coordinates, length and path."""
+        for pdf in batches:
+            rows = [
+                (*key, size, path)
+                for split in pdf["id"]
+                for path, key, size in self.files(int(split))
+            ]
+            yield pd.DataFrame(rows, columns=[*self.columns, "length", "path"])
+
+
+_PLAN_ATTR = "_n5ds_scan_plan"
+
+
+def scan_frame(
+    spark: SparkSession,
+    root: str,
+    files: list[tuple[str, tuple[int, ...], int]],
+    columns: tuple[str, ...],
+    ndim: int = 0,
+    names: list[str] | None = None,
+) -> DataFrame:
+    """The scan frame over ``files`` ((path, coordinates, size), listed on
+    the driver), packed by :func:`plan_splits`: one task per split, built
+    with no Spark job and no second listing.
+
+    The source is ``spark.range(k, numPartitions=k)``, one split id per
+    task, and the kernel looks its split up in the :class:`ScanPlan` it
+    carries. The returned frame materializes one (columns..., length,
+    path) row per file; a consumer takes the ids and the plan from
+    :func:`scan_source` and reads the bytes in its own kernel, so the scan
+    adds no Python node and no file byte passes through the JVM."""
+    split = ScanSplit.from_session(spark)
+    splits = plan_splits(files, split)
+    plan = ScanPlan(
+        root,
+        tuple(columns),
+        np.array([key for _p, key, _s in files], dtype=np.int64).reshape(len(files), len(columns)),
+        np.array([size for _p, _k, size in files], dtype=np.int64),
+        np.cumsum([0, *map(len, splits)], dtype=np.int64),
+        ndim,
+        None if names is None else tuple(names),
+    )
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug(
+            "scan plan %s: %d files, %d bytes -> %d splits (parallelism %d from %s)",
+            root, len(files), int(plan.sizes.sum()), len(splits),
+            split.parallelism, split.source,
+        )
+    ids = spark.range(len(splits), numPartitions=max(1, len(splits)))
+    schema = ", ".join(f"{c} int" for c in columns) + ", length long, path string"
+    df = ids.mapInPandas(plan.listing, schema=schema)
+    setattr(df, _PLAN_ATTR, (ids, plan))
+    return df
+
+
+def scan_source(scan_df: DataFrame) -> tuple[DataFrame, ScanPlan]:
+    """The split ids and plan behind a frame that :func:`scan_frame` built
+    (:func:`scan_block_files`, ``tiff.tif_series_scan``). A consumer maps
+    its kernel over the ids and reads with :meth:`ScanPlan.read`, so the
+    scan and the consumer run as one Python node."""
+    src = getattr(scan_df, _PLAN_ATTR, None)
+    if src is None:
+        raise ValueError(
+            "not a scan frame: pass the frame scan_block_files or "
+            "tif_series_scan returned, before any DataFrame operation"
+        )
+    return src
 
 
 def scan_block_files(
@@ -341,86 +463,34 @@ def scan_block_files(
     paths: list[str] | None = None,
     grid_shape: list[int] | None = None,
 ) -> DataFrame:
-    """Raw block-file scan: (gx, gy, gz, length, raw) via binaryFile.
+    """Block-file scan: one (gx, gy, gz, length, path) row per block file,
+    one task per :func:`plan_splits` split.
 
-    The dataset is listed and fenced by :func:`list_blocks` first (marker,
-    stale and zero-byte refusals). ``paths`` restricts the scan to an
-    explicit block-file list (region pruning: only overlapping files are
-    ever listed or read), and only the ones present are loaded; with
-    ignoreMissingFiles a file sparsified between listing and read degrades
-    to fill-value instead of failing the job.
+    The dataset is listed and fenced by :func:`list_blocks` (marker,
+    non-canonical, stale and zero-byte refusals); that listing is the only
+    one, and building the frame starts no Spark job (:func:`scan_frame`).
+    ``paths`` restricts the scan to an explicit block-file list (region
+    pruning: only overlapping files are ever listed or read), and only the
+    ones present are planned. Consumers read the bytes in their own kernel
+    through :func:`scan_source` with :func:`read_block_file`: a block
+    deleted after planning reads as fill value (no row), and any other
+    read failure raises naming the path.
 
     A fully-sparse dataset (attributes.json, zero block files) is legal N5
     and scans as an EMPTY DataFrame, not an error.
 
     The output ALWAYS carries all three coordinate columns — for
     ndim < 3 the missing ones are constant 0 — so downstream block
-    operators (decoded_blocks, block_stats, rechunk) are ndim-agnostic.
-    Non-block files the glob can sweep up (ndim=1's '*' matches the
-    dataset's own attributes.json) are dropped by the numeric-path
-    filter rather than decoded as blocks."""
+    operators (decoded_blocks, block_stats, rechunk) are ndim-agnostic."""
     tune_session(spark)
+    root = dataset_root(container, dataset)
     grids = None if paths is None else [
-        _grid_of(p.rstrip("/").split("/")[-ndim:], ndim) for p in paths
+        _grid_of(p.rstrip("/").split("/")[-ndim:], ndim, root) for p in paths
     ]
-
-    def listed() -> list[tuple[str, tuple[int, ...], int]]:
-        return list_blocks(container, dataset, ndim, grid_shape, grids)
-
-    def load(blocks) -> DataFrame:
-        # ignoreMissingFiles: a block sparsified between the listing and
-        # the task read degrades to fill-value (the documented sparse
-        # contract) instead of failing the whole job
-        reader = spark.read.format("binaryFile").option("ignoreMissingFiles", "true")
-        if paths is None:
-            root = escape_hadoop_glob(os.path.join(container, dataset))
-            return reader.load(os.path.join(root, "/".join(["*"] * ndim)))
-        return reader.load([escape_hadoop_glob(p) for p, _g, _s in blocks])
-
-    def _empty() -> DataFrame:
-        schema = StructType(
-            [StructField(c, IntegerType()) for c in ("gx", "gy", "gz")]
-            + [
-                StructField("length", LongType()),
-                StructField("raw", BinaryType()),
-                StructField("path", StringType()),
-            ]
-        )
-        return spark.createDataFrame([], schema)
-
-    blocks = listed()
-    if not blocks:
-        return _empty()
-    try:
-        df = load(blocks)
-    except Exception as exc:
-        if not _is_missing_path(exc):
-            raise
-        # A block file vanished between the listing and load()
-        # RESOLUTION (ignoreMissingFiles only covers disappearance after
-        # Spark's own listing). List again and load the survivors —
-        # degrading to an empty scan here would read a populated dataset
-        # as silent zeros.
-        blocks = listed()
-        if not blocks:
-            return _empty()  # fully sparsified: legal fill-value read
-        df = load(blocks)  # a second racing delete fails loudly
-    # grid coords are the last `ndim` path segments: .../gx/gy/gz. One
-    # selectExpr + where: the same projection built from Column objects
-    # cost ~250 py4j round trips per scan. [0-9] rather than \d keeps the
-    # SQL literal free of backslashes, whatever escapedStringLiterals says.
-    pat = "/([0-9]+)" * ndim + "$"
-    coords = [
-        f"try_cast(regexp_extract(path, '{pat}', {i + 1}) as int) as {c}"
-        for i, c in enumerate(("gx", "gy", "gz")[:ndim])
-    ] + [f"0 as {c}" for c in ("gx", "gy", "gz")[ndim:]]
-    # a non-numeric tail (attributes.json swept up by a short glob, stray
-    # files) extracts "" -> null via try_cast (a plain cast ANSI-throws on
-    # '' — the ndim=1 glob crash the r9 geometry net found): drop, don't
-    # decode
-    return df.selectExpr(*coords, "length", "content as raw", "path").where(
-        "gx is not null and gy is not null and gz is not null"
-    )
+    blocks = list_blocks(container, dataset, ndim, grid_shape, grids)
+    pad = (0,) * (3 - ndim)
+    files = [(p, g + pad, size) for p, g, size in blocks]
+    return scan_frame(spark, root, files, ("gx", "gy", "gz"), ndim)
 
 
 def decoded_blocks(
@@ -431,77 +501,64 @@ def decoded_blocks(
 ) -> DataFrame:
     """Blocks DataFrame with decoded payloads (shape_zyx + native bytes).
 
-    The returned DF carries fuse.attach_map metadata (r15, guide §4): an
-    in-package consumer (rechunk/downsample/cast fragment kernels, zprofile
-    partials, the write sink) runs the decode INSIDE its own Python node,
-    so the decoded voxel bytes cross the JVM<->Python boundary once instead
-    of twice. Direct users of this DF (collect, foreign kernels) see the
-    exact same materialized rows as before; output frames stay
-    byte-bounded (udfbatch) — the input batch is bounded in ENCODED bytes
-    (arrow.maxBytesPerBatch), so one frame per input batch would scale
-    with the codec ratio. check_block_shape runs per block on every path."""
+    The scan kernel fetches and decodes each planned block itself
+    (:func:`scan_source`). The returned DF carries fuse.attach_map
+    metadata (r15, guide §4): an in-package consumer (rechunk/downsample/
+    cast fragment kernels, zprofile partials, the write sink) runs the
+    fetch and decode INSIDE its own Python node, so the decoded voxel
+    bytes cross the JVM<->Python boundary once. Direct users of this DF
+    (collect, foreign kernels) see the same materialized rows; output
+    frames stay byte-bounded (udfbatch). check_block_shape runs per block
+    on every path."""
     from n5_dask_spark.sources.n5 import fuse
 
     attrs = read_attributes(container, dataset)
     log_codec("read", container, dataset, attrs)
-    raw_df = scan_block_files(
+    ids, plan = scan_source(scan_block_files(
         spark, container, dataset, attrs.ndim, paths=paths, grid_shape=attrs.grid_shape
-    )
+    ))
     data_type, compression = attrs.data_type, dict(attrs.compression)
 
     def blocks_fn(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
-        for pdf in batches:
-            for r, p, gx, gy, gz in zip(
-                pdf["raw"], pdf["path"], pdf["gx"], pdf["gy"], pdf["gz"]
-            ):
-                a = check_block_shape(
-                    decode_block_at(bytes(r), data_type, compression, p),
-                    (int(gx), int(gy), int(gz)),
-                    attrs,
-                    p,
-                )
-                yield (int(gx), int(gy), int(gz), a)
+        for path, grid, raw in plan.read(batches):
+            a = check_block_shape(
+                decode_block_at(raw, data_type, compression, path), grid, attrs, path
+            )
+            yield (*grid, a)
 
-    out = raw_df.mapInPandas(fuse.emit_blocks_kernel(blocks_fn), schema=BLOCK_SCHEMA)
-    return fuse.attach_map(out, raw_df, blocks_fn)
+    out = ids.mapInPandas(fuse.emit_blocks_kernel(blocks_fn), schema=BLOCK_SCHEMA)
+    return fuse.attach_map(out, ids, blocks_fn)
 
 
 def block_stats(spark: SparkSession, container: str, dataset: str) -> DataFrame:
-    """Per-block stats — decode and reduce inside the UDF; only scalars leave."""
+    """Per-block stats — fetch, decode and reduce inside the scan kernel;
+    only scalars leave."""
     attrs = read_attributes(container, dataset)
     log_codec("read", container, dataset, attrs)
-    raw_df = scan_block_files(
+    ids, plan = scan_source(scan_block_files(
         spark, container, dataset, attrs.ndim, grid_shape=attrs.grid_shape
-    )
+    ))
     data_type, compression = attrs.data_type, dict(attrs.compression)
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for gx, gy, gz, raw, p in zip(
-                pdf["gx"], pdf["gy"], pdf["gz"], pdf["raw"], pdf["path"]
-            ):
-                a = check_block_shape(
-                    decode_block_at(bytes(raw), data_type, compression, p),
-                    (int(gx), int(gy), int(gz)),
-                    attrs,
-                    p,
+        rows = []
+        for path, grid, raw in plan.read(batches):
+            a = check_block_shape(
+                decode_block_at(raw, data_type, compression, path), grid, attrs, path
+            )
+            rows.append(
+                (
+                    *grid,
+                    int(a.size),
+                    float(a.min()),
+                    float(a.max()),
+                    float(a.sum(dtype="f8")),
+                    float(a.mean(dtype="f8")),
                 )
-                rows.append(
-                    (
-                        int(gx),
-                        int(gy),
-                        int(gz),
-                        int(a.size),
-                        float(a.min()),
-                        float(a.max()),
-                        float(a.sum(dtype="f8")),
-                        float(a.mean(dtype="f8")),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in STATS_SCHEMA.fields])
+            )
+        yield pd.DataFrame(rows, columns=[f.name for f in STATS_SCHEMA.fields])
 
-    return raw_df.mapInPandas(stats, schema=STATS_SCHEMA)
+    return ids.mapInPandas(stats, schema=STATS_SCHEMA)
 
 
 def overlapping_blocks(

@@ -10,11 +10,13 @@ workflow (n5 -> tif series -> n5, README.md:17-21) requires. Multi-page/
 compressed/RGB TIFFs raise with a clear message.
 
 Pipelines are Spark-first:
-- tif_series_to_n5: binaryFile scan of the *.tif glob (one row per slice,
-  slice index parsed from the filename — the dask_image.imread analog,
-  /root/reference/src/tif_to_n5.py:21) -> decode in mapInPandas ->
-  per-slice fragments feed the SAME rechunk shuffle used everywhere ->
-  blocks written one-task-per-block. The reference's manual Z-slab loop
+- tif_series_to_n5: the driver globs the *.tif series once (slice index
+  parsed from the filename — the dask_image.imread analog,
+  /root/reference/src/tif_to_n5.py:21) and packs the slices into splits by
+  file size; each split's task open()s and decodes its slices (one task
+  per split, like imread's task per file) -> per-slice fragments feed the
+  SAME rechunk shuffle used everywhere -> blocks written
+  one-task-per-block. The reference's manual Z-slab loop
   (src/tif_to_n5.py:31-58) is unnecessary: partition-at-a-time execution
   bounds memory.
 - n5_to_tif_series: blocks DF -> rechunk to one-slice chunks
@@ -36,14 +38,13 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5 import fuse
 from n5_dask_spark.sources.n5.codec import data_type_of, np_dtype
 from n5_dask_spark.sources.n5.metadata import DatasetAttributes, read_attributes, write_attributes
 from n5_dask_spark.sources.n5.transforms import BLOCK_SCHEMA_DDL, cast_blocks, rechunk
-from n5_dask_spark.sources.n5.reader import decoded_blocks
+from n5_dask_spark.sources.n5.reader import decoded_blocks, scan_frame, scan_source
 from n5_dask_spark.sources.n5.writer import _atomic_write, write_blocks
 
 # TIFF tag ids
@@ -377,10 +378,25 @@ def read_tiff(path: str) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+def read_slice(path: str) -> bytes:
+    """One slice file's bytes, read in the scan kernel that decodes it. A
+    slice that vanished after the scan was planned raises naming the path:
+    unlike an absent N5 block it is no fill value, its z was assigned by
+    the listing."""
+    with open(path, "rb") as f:
+        return f.read()
+
+
 def tif_series_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """S1: lazy scan of a z-slice TIFF series -> (z, raw) rows. Slice order =
-    numeric sort of the trailing integer in the filename (imread glob
-    semantics, one file per z)."""
+    """S1: lazy scan of a z-slice TIFF series -> one (z, length, path) row
+    per slice. Slice order = numeric sort of the trailing integer in the
+    filename (imread glob semantics, one file per z).
+
+    The driver's glob is the only listing: the slices are packed by their
+    file sizes into ``datasource.plan_splits`` splits, one task each
+    (``reader.scan_frame``; building the frame starts no Spark job), and a
+    consumer reads each slice in its own kernel through
+    ``reader.scan_source`` with :func:`read_slice`."""
     tune_session(spark)
     # Mid-write series refusal (r14 probe, N5-scan parity): the series
     # sink claims this marker for its job window. Scanning a partial
@@ -414,35 +430,26 @@ def tif_series_scan(spark: SparkSession, input_dir: str) -> DataFrame:
     if not files:
         raise FileNotFoundError(f"no *.tif in {input_dir}")
     # Zero-byte-slice integrity guard (r10 corrupt-block probe, same lane
-    # as the N5 scan's): Spark's binaryFile listing silently DROPS
-    # zero-length files, so a truncated-to-empty slice (torn external
-    # writer / partial copy) would vanish from the scan while the
-    # driver-side glob still counts it — the import then zero-fills that z
-    # as if it were a sparse-export gap: silent wrong data. The glob above
-    # already listed every file, so the stat is free.
-    empties = [p for p in files if os.path.getsize(p) == 0]
+    # as the N5 scan's): a truncated-to-empty slice (torn external writer
+    # / partial copy) is refused up front, before any task runs, with the
+    # names of every such slice.
+    sizes = [os.path.getsize(p) for p in files]
+    empties = [p for p, size in zip(files, sizes) if size == 0]
     if empties:
         raise ValueError(
             f"zero-byte .tif slice file(s) in {input_dir}: "
             f"{[os.path.basename(p) for p in empties[:5]]}"
-            f"{' ...' if len(empties) > 5 else ''} — Spark's binaryFile "
-            "listing silently drops empty files, so these slices would "
-            "otherwise read as all zeros. Likely a torn writer or partial "
-            "copy; restore or remove the affected files."
+            f"{' ...' if len(empties) > 5 else ''} — an empty file holds no "
+            "slice, and importing around it would shift or zero-fill the "
+            "volume. Likely a torn writer or partial copy; restore or remove "
+            "the affected files."
         )
-    order = {os.path.basename(p): z for z, p in enumerate(files)}
-    from n5_dask_spark.sources.n5.reader import escape_hadoop_glob
-
-    df = spark.read.format("binaryFile").load(
-        os.path.join(escape_hadoop_glob(input_dir), "*.tif")
-    )
-    order_df = spark.createDataFrame(
-        [(k, v) for k, v in order.items()], "fname string, z int"
-    )
-    return (
-        df.withColumn("fname", F.element_at(F.split("path", "/"), -1))
-        .join(F.broadcast(order_df), "fname")
-        .select("z", F.col("content").alias("raw"), "fname")
+    return scan_frame(
+        spark,
+        input_dir,
+        [(p, (z,), size) for z, (p, size) in enumerate(zip(files, sizes))],
+        ("z",),
+        names=[os.path.basename(p) for p in files],
     )
 
 
@@ -457,52 +464,49 @@ def tif_series_to_n5(
 ) -> DatasetAttributes:
     """S1 + T1 + K1: TIFF series -> N5 volume (reference tif_to_n5.py).
 
-    Each slice decodes into a (1, Y, X) block; the standard rechunk shuffle
-    re-tiles to the requested block grid; one task writes each block."""
-    slices = tif_series_scan(spark, input_dir)
-    # dims/dtype probe driver-side from the glob (header/IFD reads only,
-    # no pixel I/O) — running the binaryFile scan for limit(1) and count()
-    # would execute the whole scan+join plan twice more per import
-    files = sorted(_glob.glob(os.path.join(_glob.escape(input_dir), "*.tif")))
-    if not files:  # same contract as tif_series_scan, not a bare IndexError
-        raise FileNotFoundError(f"no *.tif in {input_dir}")
-    (probe_h, probe_w), probe_dt = tiff_probe_file(files[0])
-    n_z = len(files)
+    Each slice is read and decoded into a (1, Y, X) block in the scan
+    kernel; the standard rechunk shuffle re-tiles to the requested block
+    grid; one task writes each block."""
+    ids, plan = scan_source(tif_series_scan(spark, input_dir))
+    # dims/dtype probe driver-side from the scan's listing (header/IFD
+    # reads only, no pixel I/O)
+    (probe_h, probe_w), probe_dt = tiff_probe_file(plan.path(0))
+    n_z = len(plan.sizes)
     src_type = data_type_of(probe_dt)
     dims_xyz = [probe_w, probe_h, n_z]
 
     def blocks_fn(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
         # byte-bounded output framing is fuse/udfbatch's: LZW/deflate series
         # expand on decode, so one frame per input batch scales with the ratio
-        for pdf in batches:
-            for z, raw, fname in zip(pdf["z"], pdf["raw"], pdf["fname"]):
-                try:
-                    arr = decode_tiff(bytes(raw))
-                except Exception as e:
-                    # name the FILE: a long series dying on one corrupt
-                    # slice must point at it (decode_block_at discipline)
-                    raise ValueError(
-                        f"corrupt TIFF slice {fname} (z={int(z)}, "
-                        f"{len(raw)} bytes): {type(e).__name__}: {e}"
-                    ) from e
-                # every slice must match the probe: a mismatched shape
-                # would otherwise be silently clipped/zero-padded by the
-                # rechunk kernel, and a same-width dtype reinterpreted
-                # bit-for-bit
-                if arr.shape != (probe_h, probe_w) or arr.dtype != probe_dt:
-                    raise ValueError(
-                        f"slice {fname} (z={int(z)}) is {arr.shape} {arr.dtype}; "
-                        f"the series probe says ({probe_h}, {probe_w}) {probe_dt} "
-                        "— all slices of a series must share one shape and dtype"
-                    )
-                yield (0, 0, int(z), arr[None, :, :])  # (1, Y, X)
+        for path, (z,), raw in plan.read(batches, read_slice):
+            fname = os.path.basename(path)
+            try:
+                arr = decode_tiff(raw)
+            except Exception as e:
+                # name the FILE: a long series dying on one corrupt
+                # slice must point at it (decode_block_at discipline)
+                raise ValueError(
+                    f"corrupt TIFF slice {fname} (z={z}, "
+                    f"{len(raw)} bytes): {type(e).__name__}: {e}"
+                ) from e
+            # every slice must match the probe: a mismatched shape
+            # would otherwise be silently clipped/zero-padded by the
+            # rechunk kernel, and a same-width dtype reinterpreted
+            # bit-for-bit
+            if arr.shape != (probe_h, probe_w) or arr.dtype != probe_dt:
+                raise ValueError(
+                    f"slice {fname} (z={z}) is {arr.shape} {arr.dtype}; "
+                    f"the series probe says ({probe_h}, {probe_w}) {probe_dt} "
+                    "— all slices of a series must share one shape and dtype"
+                )
+            yield (0, 0, z, arr[None, :, :])  # (1, Y, X)
 
     # fusable slice-blocks source (r15, guide §4): the downstream
-    # cast/rechunk-fragment kernels run the TIFF decode inside their own
-    # Python node, so decoded slice bytes cross the boundary once
+    # cast/rechunk-fragment kernels run the TIFF read and decode inside
+    # their own Python node, so decoded slice bytes cross the boundary once
     slice_blocks = fuse.attach_map(
-        slices.mapInPandas(fuse.emit_blocks_kernel(blocks_fn), schema=BLOCK_SCHEMA_DDL),
-        slices,
+        ids.mapInPandas(fuse.emit_blocks_kernel(blocks_fn), schema=BLOCK_SCHEMA_DDL),
+        ids,
         blocks_fn,
     )
     slice_attrs = DatasetAttributes(

@@ -209,45 +209,66 @@ def test_plan_decision_is_logged(tmp_path, monkeypatch, caplog):
 
 
 def test_format_n5_and_glob_scan_run_the_same_tasks(spark):
-    """format("n5") and the binaryFile glob scan (reader.block_stats) plan
-    the same files with the same split rule, so they run the same number
-    of scan tasks and return equal per-block stats."""
-    from n5_dask_spark.sources.n5.datasource import register_n5_source
-    from n5_dask_spark.sources.n5.reader import block_stats
+    """format("n5") and the glob scan (reader.block_stats) run the splits
+    of one plan (datasource.plan_splits), one task each, and return equal
+    per-block stats. A small spark.sql.files.maxPartitionBytes caps every
+    split at two blocks and pushes the split count past the parallelism;
+    both paths still run exactly the planned splits."""
+    from n5_dask_spark.sources.n5.datasource import ScanSplit, plan_splits, register_n5_source
+    from n5_dask_spark.sources.n5.metadata import read_attributes
+    from n5_dask_spark.sources.n5.reader import block_stats, list_blocks
     from n5_dask_spark.sources.n5.writer import temp_container, write_array
 
     rng = np.random.default_rng(4)
     arr = rng.integers(0, 4096, size=(64, 48, 32), dtype=np.uint16)  # xyz
     c = temp_container()
     write_array(spark, arr, c, "a/s0", [16, 16, 16], compression={"type": "raw"})
-    register_n5_source(spark)
+    attrs = read_attributes(c, "a/s0")
+    blocks = list_blocks(c, "a/s0", 3, attrs.grid_shape)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
     def tasks(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
         n = 0
         for job in tracker.getJobIdsForGroup(group):
             for sid in tracker.getJobInfo(job).stageIds:
                 n += tracker.getStageInfo(sid).numTasks
         return n
 
-    sc.setJobGroup("n5ds-tasks-glob", "block_stats")
-    glob_rows = block_stats(spark, c, "a/s0").collect()
-    sc.setJobGroup("n5ds-tasks-format", "format n5")
-    ds_rows = (
-        spark.read.format("n5").option("path", c).option("dataset", "a/s0").load().collect()
-    )
-    sc.setLocalProperty("spark.jobGroup.id", None)
-
-    assert len(glob_rows) == len(ds_rows) == 4 * 3 * 2
-    assert tasks("n5ds-tasks-format") == tasks("n5ds-tasks-glob") > 1
-    ds_stats = {}
-    for r in ds_rows:
-        a = np.frombuffer(bytes(r.data), dtype=np.uint16).reshape(r.shape_zyx)
-        ds_stats[(r.gx, r.gy, r.gz)] = (
-            a.size, float(a.min()), float(a.max()), float(a.sum(dtype="f8"))
+    def run_both(tag: str) -> int:
+        register_n5_source(spark)
+        sc.setJobGroup(f"n5ds-tasks-glob-{tag}", "block_stats")
+        glob_rows = block_stats(spark, c, "a/s0").collect()
+        sc.setJobGroup(f"n5ds-tasks-format-{tag}", "format n5")
+        ds_rows = (
+            spark.read.format("n5").option("path", c).option("dataset", "a/s0").load().collect()
         )
-    glob_stats = {
-        (r.gx, r.gy, r.gz): (r[3], r[4], r[5], r[6]) for r in glob_rows
-    }
-    assert ds_stats == glob_stats
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(glob_rows) == len(ds_rows) == 4 * 3 * 2
+        ds_stats = {}
+        for r in ds_rows:
+            a = np.frombuffer(bytes(r.data), dtype=np.uint16).reshape(r.shape_zyx)
+            ds_stats[(r.gx, r.gy, r.gz)] = (
+                a.size, float(a.min()), float(a.max()), float(a.sum(dtype="f8"))
+            )
+        glob_stats = {
+            (r.gx, r.gy, r.gz): (r[3], r[4], r[5], r[6]) for r in glob_rows
+        }
+        assert ds_stats == glob_stats
+        planned = len(plan_splits(blocks, ScanSplit.from_session(spark)))
+        assert tasks(f"n5ds-tasks-format-{tag}") == tasks(f"n5ds-tasks-glob-{tag}") == planned
+        return planned
+
+    assert run_both("default") > 1
+    # 5 MiB holds one block plus its 4 MiB open cost and the next block's
+    # bytes: two blocks a split, 12 splits over the session's parallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(5 << 20))
+    try:
+        capped = run_both("capped")
+    finally:
+        spark.conf.set(key, old)
+        register_n5_source(spark)
+    assert capped == 12 > sc.defaultParallelism

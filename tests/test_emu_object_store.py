@@ -288,13 +288,45 @@ pruned = (
 )
 assert len(pruned) == 1 and (pruned[0].gx, pruned[0].gy, pruned[0].gz) == (0, 0, 0)
 
+# GLOB pipelines: the scan kernels GET every block through fsio, which a
+# Spark file source (binaryFile) could never reach
+from n5_dask_spark.sources.n5.reader import block_stats, read_full
+from n5_dask_spark.sources.n5.transforms import build_multiscale
+
+zyx = vol.transpose(2, 1, 0)
+want = {}
+for gz in range(3):
+    for gy in range(2):
+        for gx in range(3):
+            blk = zyx[gz * 4:(gz + 1) * 4, gy * 16:(gy + 1) * 16, gx * 16:(gx + 1) * 16]
+            want[(gx, gy, gz)] = (blk.size, int(blk.min()), int(blk.max()), int(blk.sum()))
+got = {
+    (r.gx, r.gy, r.gz): (r.n_elems, r.vmin, r.vmax, r.vsum)
+    for r in block_stats(spark, container, "vol/s0").collect()
+}
+assert got == want, (got, want)
+
+# pyramid: every level is the 2x2x2 windowed mean of the one below (partial
+# edge windows average what they hold), truncated to uint8 as stored
+assert build_multiscale(spark, container, "vol") == ["s0", "s1", "s2"]
+level = zyx
+for name in ("s1", "s2"):
+    nz, ny, nx = (-(-d // 2) for d in level.shape)
+    level = np.array([
+        [[level[2 * z:2 * z + 2, 2 * y:2 * y + 2, 2 * x:2 * x + 2].mean()
+          for x in range(nx)] for y in range(ny)] for z in range(nz)
+    ]).astype(np.uint8)
+    back = read_full(spark, container, f"vol/{name}")
+    assert np.array_equal(back.transpose(2, 1, 0), level), name
+
 spark.stop()
 print("EMU_ROUNDTRIP_OK")
 """
 
 
 def test_distributed_write_scan_roundtrip_via_emulated_s3(tmp_path):
-    """write_array -> DataSource scan, s3:// end to end: executor PUT/GET
+    """write_array -> DataSource scan, then the glob pipelines
+    (block_stats, build_multiscale), s3:// end to end: executor PUT/GET
     and driver metadata/LIST all through the emulated object store, in a
     subprocess so the env seam propagates to the Python workers the same
     way a real deployment's credentials would."""

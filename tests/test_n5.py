@@ -306,7 +306,7 @@ def test_persisted_blocks_frame_is_consumed_from_cache(spark):
     a consumer must read a persisted blocks frame from its cache instead of
     fusing back to the block files. Deleting the files after the cache is
     built shows which path ran — the file path would lose every block
-    (binaryFile's ignoreMissingFiles reads vanished files as sparse)."""
+    (a block file deleted after planning reads as sparse)."""
     import shutil
 
     from n5_dask_spark.sources.n5 import fuse
@@ -540,10 +540,11 @@ def test_write_region_large_region_under_tight_guard(spark, monkeypatch):
 
 
 def test_corrupt_block_files_fail_loudly_zero_byte_is_not_sparse(spark):
-    """r10 corrupt-block probe: Spark's binaryFile listing silently DROPS
-    zero-length files, so before the guard a zero-byte block file (torn
-    external writer / partial put / disk-full truncation) read its
-    populated grid cell as fill-value zeros — silent wrong data,
+    """r10 corrupt-block probe: the scan then used Spark's binaryFile
+    listing, which silently DROPS zero-length files, so before the guard
+    a zero-byte block file (torn external writer / partial put /
+    disk-full truncation) read its populated grid cell as fill-value
+    zeros — silent wrong data,
     indistinguishable from legal sparseness. Pins all three corruption
     modes loud (zero-byte via the new scan guard; truncated and garbage
     via decode_block), and the contrast: a DELETED block file stays the
@@ -591,7 +592,7 @@ def test_corrupt_block_files_fail_loudly_zero_byte_is_not_sparse(spark):
 
 
 # The two scan paths and the two ways to address a container that every
-# read-path guard must hold on: the binaryFile glob (block_stats) and
+# read-path guard must hold on: the glob scan (block_stats) and
 # spark.read.format("n5"), over a local path and a file: URI.
 SCANS = ("glob", "format")
 ADDRESSES = ("local", "uri")
@@ -714,8 +715,8 @@ def test_oversized_block_refused(spark):
 def test_scan_audit_escape_hatch(spark):
     """The integrity audit has no off switch: an environment knob once
     skipped it, and its only effect was to reopen the silent lane the
-    audit closes (binaryFile drops an empty file, so its populated cell
-    read as fill value)."""
+    audit closes (an empty file read as absent turns its populated cell
+    into fill value)."""
     import pathlib
 
     from n5_dask_spark.sources.n5.reader import block_stats
@@ -748,6 +749,9 @@ def _damage(spark, c: str, state: str) -> None:
         (ds / "foo/0/1").write_bytes(b"")  # zero-byte, but never a block
     elif state == "absent":
         (ds / "1/0/0").unlink()
+    elif state == "non_canonical":
+        # a second name for cell (0, 0, 0): read as a number it aliases
+        (ds / "0/0/00").write_bytes((ds / "0/0/0").read_bytes())
 
 
 # dataset state -> the refusal it must raise, or the rows a scan returns
@@ -757,6 +761,7 @@ _GUARDS = {
     "marker": "write-session marker",
     "non_numeric_dir": 8,
     "absent": 7,
+    "non_canonical": "non-canonical block file name .*d/s0/0/0/00",
 }
 
 
@@ -768,7 +773,9 @@ def test_integrity_audit_uri_scheme_parity(spark, scan, address, state):
     container addresses, with the same semantics: stale blocks after an
     in-place shrink, zero-byte blocks and the write-session marker are
     refused; a zero-byte numeric file under a non-numeric directory is
-    never a block, and an absent block is legal sparseness (no row). Both
+    never a block, and an absent block is legal sparseness (no row). A
+    zero-padded name (``0/0/00`` next to ``0/0/0``) is refused: read as a
+    number it would give one cell two rows. Both
     paths list and fence through ``reader.list_blocks``; before r11 the
     glob guard skipped URI containers, and before the shared listing
     format("n5") read the in-grid cells of a shrunk dataset silently."""

@@ -4,8 +4,8 @@ The r11 reader-during-write probe pinned the local glob and explicit-path
 scans; r13 moved writes onto fsio's per-scheme commit protocol. This probe
 re-runs the race through the URI path — and found a REAL hole on its first
 lane: the Spark 4 Python DataSource (``spark.read.format("n5")``) never
-routed through the r11 marker guard (reader.py:261 only covers the
-binaryFile-glob and explicit-path scans), so it planned 7 of 8 blocks of a
+routed through the r11 marker guard (it then covered only the glob and
+explicit-path scans), so it planned 7 of 8 blocks of a
 mid-write dataset and returned them as a SILENT partial snapshot — written
 blocks as data, the unwritten cell as legal sparse fill. Fixed by
 ``refuse_mid_write`` (reader.py, called by the DataSource's planner): the

@@ -139,88 +139,6 @@ def test_fully_sparse_dataset_scans_empty(spark):
     assert reg.shape == (10, 10, 4) and (reg == 0).all()
 
 
-def test_missing_path_classified_by_error_class(spark):
-    """_is_missing_path prefers AnalysisException's structured error class
-    (getCondition) over message sniffing; unrelated analysis errors and
-    generic failures must NOT classify as a missing path."""
-    from pyspark.errors import AnalysisException
-
-    from n5_dask_spark.sources.n5 import reader as rd
-
-    with pytest.raises(AnalysisException) as ei:
-        spark.read.format("binaryFile").load("/nonexistent_n5ds_xyz/*").collect()
-    exc = ei.value
-    # the running Spark exposes the structured class for this failure
-    get = getattr(exc, "getCondition", None) or getattr(exc, "getErrorClass", None)
-    assert get is not None and get() == "PATH_NOT_FOUND"
-    assert rd._is_missing_path(exc)
-    # an unrelated AnalysisException (unresolved column) must not match,
-    # even though its message could drift across versions
-    with pytest.raises(AnalysisException) as ei2:
-        spark.sql("SELECT definitely_not_a_column FROM range(1)").collect()
-    assert not rd._is_missing_path(ei2.value)
-    assert not rd._is_missing_path(RuntimeError("executor lost"))
-
-
-def test_scan_reraises_non_path_failures(spark, monkeypatch):
-    """A paths-mode load failing for a NON-missing-path reason must
-    re-raise, not silently degrade to the survivor retry / empty scan.
-    The block exists: the scan loads only the block files its listing
-    found, so an absent one never reaches load()."""
-    import pyspark.sql.readwriter as rw
-
-    from n5_dask_spark.sources.n5 import reader as rd
-    from n5_dask_spark.sources.n5.writer import temp_container, write_array
-
-    c = temp_container("reraise")
-    write_array(spark, np.full((8, 8, 8), 1, np.uint8), c, "ds", [8, 8, 8])
-
-    def boom(self, *a, **k):
-        raise RuntimeError("executor lost")
-
-    monkeypatch.setattr(rw.DataFrameReader, "load", boom)
-    with pytest.raises(RuntimeError, match="executor lost"):
-        rd.scan_block_files(spark, c, "ds", paths=[f"{c}/ds/0/0/0"])
-
-
-def test_scan_uri_paths_hadoop_stat_retry(spark, monkeypatch):
-    """r11: the survivor retry lists the URI dataset again (through fsio)
-    and retries with the real survivors. Pre-r11 it refused loudly (the
-    driver could only os.path.exists LOCAL paths, which would test every
-    URI False and read a populated region as silent zeros — the original
-    failure this test pinned). A first-load PATH_NOT_FOUND on a
-    part-absent URI list must now degrade to the surviving blocks, never
-    to silence and never to a spurious hard failure."""
-    import pyspark.sql.readwriter as rw
-
-    from pyspark.errors import AnalysisException
-
-    from n5_dask_spark.sources.n5 import reader as rd
-    from n5_dask_spark.sources.n5.writer import temp_container, write_array
-
-    arr = np.full((16, 8, 8), 7, np.uint8)  # 2 blocks in x
-    c = temp_container("uriretry")
-    write_array(spark, arr, c, "ds", [8, 8, 8])
-    os.unlink(os.path.join(c, "ds/1/0/0"))
-    uri = "file:" + c
-    real_load = rw.DataFrameReader.load
-    calls = {"n": 0}
-
-    def flaky(self, *a, **k):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise AnalysisException(
-                f"[PATH_NOT_FOUND] Path does not exist: {uri}/ds/1/0/0"
-            )
-        return real_load(self, *a, **k)
-
-    monkeypatch.setattr(rw.DataFrameReader, "load", flaky)
-    df = rd.scan_block_files(
-        spark, uri, "ds", paths=[f"{uri}/ds/0/0/0", f"{uri}/ds/1/0/0"]
-    )
-    assert df.count() == 1 and calls["n"] >= 2
-
-
 def test_tiff_with_metadata_tags_decodes():
     """Real-world writers add ASCII/RATIONAL tags; the decoder must skip
     them, not crash."""
@@ -425,16 +343,16 @@ def test_hostile_dataset_names_scan_literal(spark, tmp_path):
     path through Hadoop GLOB expansion, so a container/dataset directory
     name containing [ ] { } * ? was treated as a PATTERN — dataset
     'd[12]' SILENTLY read sibling 'd1''s block files (the wrong
-    dataset's data, no error) and 'img[x]' raised PATH_NOT_FOUND.
-    scan_block_files and the TIFF series scan now escape user-supplied
-    prefixes (escape_hadoop_glob / glob.escape); the scan's own * tails
-    stay patterns. Spaces, dots, parens and digits-only names were
-    always safe (verified here too)."""
+    dataset's data, no error) and 'img[x]' raised PATH_NOT_FOUND. The
+    scans no longer hand paths to a Spark file source: block files come
+    from the driver's own listing and are opened literally, and the TIFF
+    series glob escapes its directory (glob.escape). Spaces, dots, parens
+    and digits-only names were always safe (verified here too)."""
     import os
 
     import numpy as np
 
-    from n5_dask_spark.sources.n5.reader import read_region
+    from n5_dask_spark.sources.n5.reader import block_stats, read_region
     from n5_dask_spark.sources.n5.writer import write_array
 
     rng = np.random.default_rng(0)
@@ -460,3 +378,6 @@ def test_hostile_dataset_names_scan_literal(spark, tmp_path):
     write_array(spark, other, cont, "d[12]", [5, 5, 5], compression={"type": "gzip"})
     back = read_region(spark, cont, "d[12]", (0, 0, 0), (8, 10, 12))
     assert np.array_equal(back, other)  # own data, not the glob-matched sibling
+    # the glob scan path too: d[12]'s block sums, not d1's
+    vsum = sum(r.vsum for r in block_stats(spark, cont, "d[12]").collect())
+    assert vsum == float(other.sum(dtype="f8"))

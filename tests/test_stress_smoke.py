@@ -91,8 +91,8 @@ def test_reference_default_chunk_big_block_smoke(spark, tmp_path):
     foreign containers at that geometry are realistic and the engine's
     own bench/stress only exercised <=128^3 (~2 MB) blocks. The full
     512^3 probe ran clean in r11 (write 16.3 s / stats 3.7 / read_full
-    6.3 / rechunk 9.7 down + 12.7 up, all bit-equal; binaryFile is
-    unsplittable so one block file = one row = one Arrow batch, and
+    6.3 / rechunk 9.7 down + 12.7 up, all bit-equal; a block file is
+    never split, so one block file = one fetch in the scan kernel, and
     working sets stay bounded by blocks-per-partition). This gated smoke
     pins the lane at 256^3 (~17 MB/block) to stay quick."""
     import numpy as np

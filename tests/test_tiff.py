@@ -192,12 +192,12 @@ def test_series_with_mismatched_slice_refused(spark):
 
 
 def test_tif_series_zero_byte_and_corrupt_slices_fail_loudly(spark):
-    """r10 corrupt-block probe, TIFF lane: Spark's binaryFile listing
-    silently drops zero-length files, so a truncated-to-empty slice used
-    to vanish from the scan while the driver glob counted it — the import
-    zero-filled that z as if it were a sparse-export gap (silent wrong
-    data). Scan now refuses zero-byte slices; a non-empty corrupt slice
-    fails naming the file."""
+    """r10 corrupt-block probe, TIFF lane: the scan then read slices
+    through Spark's binaryFile listing, which silently drops zero-length
+    files, so a truncated-to-empty slice vanished from the scan while the
+    driver glob counted it — the import zero-filled that z as if it were
+    a sparse-export gap (silent wrong data). The scan refuses zero-byte
+    slices; a non-empty corrupt slice fails naming the file."""
     from n5_dask_spark.sources.n5.writer import temp_container
     from n5_dask_spark.sources.tiff import tif_series_scan, tif_series_to_n5, write_tiff
 
@@ -231,18 +231,34 @@ def test_tif_series_to_n5_empty_dir(spark):
 
 
 def test_series_scan_with_hostile_filenames(spark):
-    """binaryFile's path column is NOT URI-encoded in this Spark (pinned
-    empirically: space/%/#/+ come back raw), so the basename join in
-    tif_series_scan matches files with such names. This test is the canary
-    if a Spark upgrade changes that encoding."""
-    from n5_dask_spark.sources.tiff import tif_series_scan, write_tiff
+    """Slice names with space, %, # and + reach the scan kernel exactly as
+    the driver's glob listed them: the plan carries the names and the
+    kernel open()s them, with no URI encoding on the way. The scan once
+    joined on the path column of Spark's binaryFile source, whose
+    encoding Spark decides."""
+    from n5_dask_spark.sources.n5.reader import scan_source
+    from n5_dask_spark.sources.tiff import read_slice, tif_series_scan, write_tiff
 
     src = tmpdir()
     names = ["my slice 1.tif", "a%20b 2.tif", "pl+us#3.tif"]
     for i, nm in enumerate(names):
         write_tiff(os.path.join(src, nm), np.full((4, 4), i, np.uint8))
-    rows = tif_series_scan(spark, src).collect()
+    scan = tif_series_scan(spark, src)
+    rows = scan.collect()
     assert sorted(r["z"] for r in rows) == [0, 1, 2]
+    assert sorted(os.path.basename(r["path"]) for r in rows) == sorted(names)
+    ids, plan = scan_source(scan)
+
+    def sizes(batches):
+        import pandas as pd
+
+        yield pd.DataFrame(
+            [(z, len(raw)) for _p, (z,), raw in plan.read(batches, read_slice)],
+            columns=["z", "n"],
+        )
+
+    read = sorted(tuple(r) for r in ids.mapInPandas(sizes, "z int, n long").collect())
+    assert read == [(z, os.path.getsize(os.path.join(src, nm))) for z, nm in enumerate(names)]
 
 
 def test_probe_reads_header_only():

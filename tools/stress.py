@@ -448,14 +448,16 @@ def tiff_series_stress(spark, base: str, n_z: int = 256, wh=(1024, 1024)) -> dic
     grid leg proves the fragment shuffle at 8k blocks; this one proves the
     TIFF codec + slice-spine joins survive a series 10x the fixture."""
     import hashlib
-    import re as _re
 
     import numpy as np
     import pandas as pd
 
+    from n5_dask_spark.sources.n5.reader import scan_source
     from n5_dask_spark.sources.tiff import (
         decode_tiff,
         n5_to_tif_series,
+        read_slice,
+        tif_series_scan,
         tif_series_to_n5,
         write_tiff,
     )
@@ -506,23 +508,18 @@ def tiff_series_stress(spark, base: str, n_z: int = 256, wh=(1024, 1024)) -> dic
     assert n_written == n_z, f"export wrote {n_written} slices, expected {n_z}"
 
     def slice_md5(dirpath, alias):
-        # escape Hadoop glob metachars in the dir (hostile-name class fixed
-        # in reader.py/tiff.py r9; r10 ADVICE item for this tool)
-        from n5_dask_spark.sources.n5.reader import escape_hadoop_glob
-
-        df = spark.read.format("binaryFile").load(
-            os.path.join(escape_hadoop_glob(dirpath), "*.tif")
-        )
+        # the scan's z is the slice's position in its series; both series
+        # number their files 0..n_z-1, so positions pair slice by slice
+        ids, plan = scan_source(tif_series_scan(spark, dirpath))
 
         def digest(batches):
-            for pdf in batches:
-                zs, hs = [], []
-                for p, c in zip(pdf["path"], pdf["content"]):
-                    zs.append(int(_re.findall(r"(\d+)", os.path.basename(p))[-1]))
-                    hs.append(hashlib.md5(decode_tiff(bytes(c)).tobytes()).hexdigest())
-                yield pd.DataFrame({"z": zs, alias: hs})
+            zs, hs = [], []
+            for _path, (z,), raw in plan.read(batches, read_slice):
+                zs.append(z)
+                hs.append(hashlib.md5(decode_tiff(raw).tobytes()).hexdigest())
+            yield pd.DataFrame({"z": zs, alias: hs})
 
-        return df.select("path", "content").mapInPandas(digest, f"z int, {alias} string")
+        return ids.mapInPandas(digest, f"z int, {alias} string")
 
     t0 = time.perf_counter()
     joined = slice_md5(src_dir, "h_src").join(slice_md5(exp_dir, "h_exp"), "z", "full_outer")
