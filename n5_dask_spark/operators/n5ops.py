@@ -30,6 +30,7 @@ def n5_block_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         scan_block_files(spark, FIXTURE, FIXTURE_DS)
+        .to_df()
         .select("gx", "gy", "gz", "length")
         .orderBy("gx", "gy", "gz")
     )
@@ -117,7 +118,7 @@ def n5_intensity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     from n5_dask_spark.sources.n5.metadata import read_attributes
-    from n5_dask_spark.sources.n5.reader import scan_block_files, scan_source
+    from n5_dask_spark.sources.n5.reader import scan_block_files
     from n5_dask_spark.sources.n5.codec import decode_block_at
 
     attrs = read_attributes(FIXTURE, FIXTURE_DS)
@@ -125,9 +126,8 @@ def n5_intensity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     if data_type != "uint8":
         raise ValueError(f"histogram binning (>>4, 16 bins) assumes uint8, got {data_type}")
     n_bins = 16  # uint8 -> 16 bins of width 16
-    ids, plan = scan_source(
-        scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
-    )
+    scan = scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
+    plan = scan.plan
 
     def partial_hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc = np.zeros(n_bins, dtype="int64")
@@ -137,7 +137,7 @@ def n5_intensity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield pd.DataFrame({"bin": np.arange(n_bins, dtype="int32"), "n_voxels": acc})
 
     return (
-        ids.mapInPandas(partial_hist, schema="bin int, n_voxels long")
+        scan.ids().mapInPandas(partial_hist, schema="bin int, n_voxels long")
         .groupBy("bin")
         .agg(F.sum("n_voxels").alias("n_voxels"))
         .filter(F.col("n_voxels") > 0)
@@ -160,15 +160,14 @@ def n5_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     from n5_dask_spark.sources.n5.metadata import read_attributes
-    from n5_dask_spark.sources.n5.reader import scan_block_files, scan_source
+    from n5_dask_spark.sources.n5.reader import scan_block_files
     from n5_dask_spark.sources.n5.codec import decode_block_at
 
     attrs = read_attributes(FIXTURE, FIXTURE_DS)
     data_type, compression = attrs.data_type, dict(attrs.compression)
     bz = attrs.block_size[2]
-    ids, plan = scan_source(
-        scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
-    )
+    scan = scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
+    plan = scan.plan
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = []
@@ -181,7 +180,7 @@ def n5_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield pd.DataFrame(rows, columns=["z", "vsum", "n"])
 
     return (
-        ids.mapInPandas(partial, schema="z int, vsum double, n long")
+        scan.ids().mapInPandas(partial, schema="z int, vsum double, n long")
         .groupBy("z")
         .agg((F.sum("vsum") / F.sum("n")).alias("mean_intensity"), F.sum("n").alias("n_voxels"))
         .orderBy("z")

@@ -29,7 +29,6 @@ import tempfile
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -169,7 +168,7 @@ def _build_container(
     write path itself is their operator under test otherwise).
 
     Distributed end to end: voxels are hash-shuffled to their block cell
-    (applyInPandas assembles each chunk exactly once) and each write task
+    (applyInArrow assembles each chunk exactly once) and each write task
     owns its block files — the same single-writer-per-block discipline as
     the TIFF import path."""
     from n5_dask_spark.sources.n5.metadata import DatasetAttributes
@@ -196,16 +195,16 @@ def _build_container(
         compression=compression or {"type": "gzip"},
     )
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> tuple:
-        gx, gy, gz = (int(k) for k in key)
+    def assemble(key, table) -> tuple:
+        gx, gy, gz = (k.as_py() for k in key)
         arr = np.zeros((BLOCK, BLOCK, BLOCK), dtype=np.uint8)  # zyx
-        zz = pdf["z"].to_numpy() - gz * BLOCK
-        yy = pdf["y"].to_numpy() - gy * BLOCK
-        xx = pdf["x"].to_numpy() - gx * BLOCK
-        arr[zz, yy, xx] = pdf["val"].to_numpy().astype(np.uint8)
+        zz = table.column("z").to_numpy() - gz * BLOCK
+        yy = table.column("y").to_numpy() - gy * BLOCK
+        xx = table.column("x").to_numpy() - gx * BLOCK
+        arr[zz, yy, xx] = table.column("val").to_numpy().astype(np.uint8)
         return (gx, gy, gz, arr)
 
-    from n5_dask_spark.sources.n5 import fuse
+    from n5_dask_spark.sources.n5.fuse import BlockPipeline
 
     vox = _voxels(spark, sf_dir)
     keyed = (
@@ -213,13 +212,9 @@ def _build_container(
         .withColumn("gy", F.expr(f"CAST(y div {BLOCK} AS INT)"))
         .withColumn("gz", F.expr(f"CAST(z div {BLOCK} AS INT)"))
     )
-    blocks = keyed.groupBy("gx", "gy", "gz").applyInPandas(
-        fuse.emit_block_per_group(assemble),
-        schema="gx int, gy int, gz int, shape_zyx array<int>, data binary",
-    )
-    # write_blocks fuses encode+write into this assembler (r15, guide §4):
-    # the assembled block bytes never cross the Python boundary at all
-    fuse.attach_grouped(blocks, keyed, ("gx", "gy", "gz"), assemble)
+    # write_blocks fuses encode+write into this assembler (guide §4): the
+    # assembled block bytes never cross the Python boundary at all
+    blocks = BlockPipeline(lambda: keyed, assemble, key_cols=("gx", "gy", "gz"))
     write_blocks(blocks, container, dataset, attrs)
     _BUILT.add((tag, sf_dir))
     return container, dataset

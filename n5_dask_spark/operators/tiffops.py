@@ -97,7 +97,6 @@ def _build_series(spark: SparkSession, sf_dir: str) -> str:
     ),
 )
 def tiff_roundtrip_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from n5_dask_spark.sources.n5.reader import scan_source
     from n5_dask_spark.sources.tiff import (
         decode_tiff,
         n5_to_tif_series,
@@ -122,7 +121,8 @@ def tiff_roundtrip_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
         data_type="uint16",
     )
     n5_to_tif_series(spark, container, "vol/s0", out_dir)
-    ids, plan = scan_source(tif_series_scan(spark, out_dir))
+    scan = tif_series_scan(spark, out_dir)
+    plan = scan.plan
 
     def profile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows = []
@@ -132,7 +132,7 @@ def tiff_roundtrip_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield pd.DataFrame(rows, columns=["z", "zsum", "n_vox"])
 
     return (
-        ids.mapInPandas(profile, schema="z int, zsum long, n_vox long")
+        scan.ids().mapInPandas(profile, schema="z int, zsum long, n_vox long")
         .orderBy("z")
     )
 

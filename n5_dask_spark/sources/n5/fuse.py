@@ -1,93 +1,141 @@
-"""Python-boundary fusion for block pipelines (optimization guide §4).
+"""Block pipelines as explicit values (optimization guide §4).
 
-Every mapInPandas/applyInPandas stage pays a full Arrow round-trip of its
-input AND output bytes (JVM row format <-> Arrow columnar, both directions,
-per node). The block pipelines chain such stages back to back inside one
-Spark stage — decode -> fragment, decode -> reduce -> fragment,
-assemble -> sink — so before r15 every decoded voxel byte crossed the
-JVM<->Python boundary once per chained node: two to three full columnar
-serialize/deserialize passes where one suffices. At 100 TB that is the
-largest constant factor on every N5/TIFF read and write pipeline
-(r14 verdict, top next-round item).
+Every Python node in a Spark plan pays a full Arrow round trip of its
+input and output bytes, and building one costs the driver a py4j-analysed
+DataFrame. The block pipelines chain such steps back to back — decode ->
+fragment, decode -> reduce -> fragment, assemble -> sink — so this module
+describes a pipeline as a small immutable value and builds Spark nodes
+only in the terminal that runs them:
 
-This module fuses adjacent Python nodes WITHOUT changing any public
-signature or any declared query's rows. A blocks DataFrame
-(gx, gy, gz, shape_zyx, data) built by this package carries fusion
-metadata as a plain Python attribute on the DataFrame object (the same
-immutable-plan contract catalog.widen's width memo relies on):
+- ``reader.Scan`` (``scan_block_files``, ``tiff.tif_series_scan``): the
+  :class:`~n5_dask_spark.sources.n5.reader.ScanPlan` of one listing plus
+  the split ids (``spark.range``) a consumer maps its kernel over.
+- :class:`BlockPipeline`: a source, the composed block-local stages and,
+  for a grouped pipeline, the key columns its assembler groups on.
 
-- MAP source (``attach_map``): ``(upstream_df, blocks_fn)`` where
-  ``blocks_fn(batches)`` turns the upstream's raw Arrow batches into an
-  iterator of decoded blocks ``(gx, gy, gz, np.ndarray)``. Composable:
-  block-local transforms (cast, windowed mean) wrap ``blocks_fn`` and
-  re-attach, so decode -> cast -> reduce -> fragment is ONE Python node.
-- GROUPED source (``attach_grouped``): ``(frags_df, key_cols,
-  assemble_fn)`` where ``assemble_fn(key, pdf)`` reassembles one target
-  cell's shuffled fragments into ``(gx, gy, gz, np.ndarray)``. Consumers
-  fuse into the applyInPandas node that rides the fragment exchange, so
-  assemble -> stats / assemble -> encode+write is ONE Python node after
-  the shuffle.
+  - MAP: ``source()`` builds the frame the first Python node reads
+    (scan split ids, grid cells, block rows) and ``read(batches)`` turns
+    its pandas batches into blocks ``(gx, gy, gz, np.ndarray)``.
+  - GROUPED: ``source()`` builds the fragments frame, ``key_cols`` are
+    the target-cell columns, and ``read(key, table)`` assembles one
+    cell's shuffled fragments into a block.
 
-Consumers normalize through :func:`source_of`: when no metadata is
-present (a caller-constructed blocks DF, a checkpointed frame, any
-DataFrame transformation applied in between) or the frame is persisted
-(``persist()`` returns the SAME object, metadata included, and fusing
-would bypass the cache and recompute from the files) they fall back to
-consuming the materialized blocks DF exactly as before — same rows, same
-order, one extra crossing. Each fallback logs its reason at DEBUG on
-the ``n5_dask_spark.sources.n5`` logger. Fusion only ever removes
-boundary crossings; the materialized DataFrame each helper returns is
-byte-identical either way (pinned by the oracle gate and the Arrow-batch
-invariance nets, which prove batch boundaries don't leak into results).
+  Block-local transforms (cast, windowed mean) append to ``stages``, so
+  decode -> cast -> reduce -> fragment is ONE map node, and assemble ->
+  stats / assemble -> encode+write is ONE node after the shuffle.
 
-Every per-block integrity guard (check_block_shape, codec error naming)
-lives INSIDE the composed ``blocks_fn``, so fused plans run the exact
-same per-block checks as unfused ones.
+Producers (``decoded_blocks``, ``transform_blocks``, ``rechunk``,
+``downsample``, ``cast_blocks``, the ``write_array`` and TIFF slice
+sources, ``export_region``) build no Spark node at all. Terminals
+(:func:`consume_block_rows`, ``writer.write_blocks``, ``reader.block_stats``
+and the kernels of ``n5ops``/``tiffops``) build exactly one DataFrame per
+Python node that runs. ``.to_df()`` is the one explicit materialization
+into standard (gx, gy, gz, shape_zyx, data) rows.
+
+Every terminal also accepts a plain blocks DataFrame (a ``.to_df()``
+frame, a persisted frame, a foreign frame, or one changed by a DataFrame
+op). It is consumed unfused: one extra crossing, same rows, and a
+persisted frame is read from its cache. Each materialization is counted
+once in :data:`MATERIALIZATIONS`, keyed by reason — ``"to_df"`` at
+``.to_df()``, ``"persisted"`` and ``"plain"`` when such a frame is
+consumed — and logged at DEBUG on the ``n5_dask_spark.sources.n5``
+logger with its reason (a persisted frame is logged as persisted, also
+when it came from ``.to_df()``). A ``.to_df()`` frame is counted once, at
+``.to_df()``: a weak set of those frames, keyed by object identity, tells
+the consumer not to count it again. The set is for counting only and
+never steers execution. Tests read and ``clear()`` the counter; a fused
+pipeline adds nothing to it.
+
+Grouped nodes run on ``applyInArrow``: the assembler reads its fragments
+straight from the Arrow columns (``pa.Scalar`` keys read with
+``.as_py()``), and the rows it returns are packed into record batches of
+at most ``udfbatch.out_batch_bytes()`` payload bytes
+(``udfbatch.bounded_batches``). PySpark picks the grouped-Arrow eval type
+from the kernel's type hints, and under ``from __future__ import
+annotations`` those hints are strings it cannot resolve:
+``GroupedData.applyInArrow`` then raises ``UnboundLocalError: eval_type``
+(PySpark 4.1). Grouped kernels therefore carry no annotations, which
+selects the (key, table) -> table form.
+
+Map nodes stay ``mapInPandas``: each reads a few split ids or grid cells
+per task and yields byte-bounded pandas frames
+(``udfbatch.bounded_frames``); moving them to ``mapInArrow`` rewrites
+every map kernel and is its own measured step.
+
+Every per-block integrity guard (check_block_shape, codec error naming,
+slice shape and dtype probes) lives inside the composed ``read`` and
+``stages``, so fused and unfused plans run the same per-block checks.
 """
 
 from __future__ import annotations
 
 import logging
+import weakref
+from collections import Counter
 from collections.abc import Callable, Iterable, Iterator
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from n5_dask_spark.udfbatch import bounded_frames
+from n5_dask_spark.udfbatch import bounded_batches, bounded_frames
 
 BLOCK_COLUMNS = ["gx", "gy", "gz", "shape_zyx", "data"]
 BLOCK_SCHEMA_DDL = "gx int, gy int, gz int, shape_zyx array<int>, data binary"
 
 log = logging.getLogger("n5_dask_spark.sources.n5")
 
-_MAP_ATTR = "_n5ds_fuse_map"
-_GROUPED_ATTR = "_n5ds_fuse_grouped"
+# Block: (gx, gy, gz, np.ndarray in zyx order)
+# map read:      Iterator[pd.DataFrame] -> Iterator[Block]
+# grouped read:  (key tuple of pa.Scalar, pa.Table) -> Block
+# stage:         (gx, gy, gz, arr) -> Block
 
-# BlocksFn: Iterator[pd.DataFrame] -> Iterator[(gx, gy, gz, np.ndarray)]
-# AssembleFn: (key tuple, pd.DataFrame) -> (gx, gy, gz, np.ndarray)
+MATERIALIZATIONS: Counter[str] = Counter()
+"""Materialized block frames by reason: "to_df", "persisted", "plain"."""
 
-
-def attach_map(df: DataFrame, upstream: DataFrame, blocks_fn) -> DataFrame:
-    """Mark ``df`` (a materialized blocks DF) as fusable from ``upstream``."""
-    setattr(df, _MAP_ATTR, (upstream, blocks_fn))
-    return df
-
-
-def attach_grouped(
-    df: DataFrame, frags: DataFrame, key_cols: tuple[str, ...], assemble_fn
-) -> DataFrame:
-    """Mark ``df`` (a materialized assembled-blocks DF) as fusable from the
-    pre-shuffle fragments DF via a per-group assembler."""
-    setattr(df, _GROUPED_ATTR, (frags, tuple(key_cols), assemble_fn))
-    return df
+_TO_DF_FRAMES: weakref.WeakSet = weakref.WeakSet()
+"""Frames returned by ``.to_df()``, keyed by identity so that consuming
+one is not counted a second time. Counting only: nothing reads it to
+choose what runs."""
 
 
-def _fallback_blocks_fn(dt: np.dtype):
-    """Decode standard (gx,gy,gz,shape_zyx,data) batches back into blocks —
-    the unfused path, identical to what every consumer kernel did inline
-    before r15."""
+@dataclass(frozen=True)
+class BlockPipeline:
+    """A block pipeline that has built no Spark node yet (module doc)."""
+
+    source: Callable[[], DataFrame]
+    read: Callable
+    stages: tuple[Callable, ...] = ()
+    key_cols: tuple[str, ...] | None = None
+
+    def to_df(self) -> DataFrame:
+        """Materialize to standard block rows: the one explicit exit from
+        a pipeline, counted and logged."""
+        df = consume_block_rows(
+            self, None, _block_row, BLOCK_COLUMNS, BLOCK_SCHEMA_DDL,
+            row_bytes=lambda r: len(r[4]),
+        )
+        count_materialization("to_df", "blocks pipeline materialized by .to_df()")
+        _TO_DF_FRAMES.add(df)
+        return df
+
+
+def count_materialization(reason: str, message: str) -> None:
+    """Count one materialization under ``reason`` and log ``message``."""
+    MATERIALIZATIONS[reason] += 1
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug("%s", message)
+
+
+def _block_row(gx, gy, gz, arr: np.ndarray) -> Iterator[tuple]:
+    yield (gx, gy, gz, list(arr.shape), arr.tobytes())
+
+
+def decode_block_rows(dt: np.dtype):
+    """Map read over standard (gx, gy, gz, shape_zyx, data) rows."""
 
     def blocks(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
         for pdf in batches:
@@ -104,118 +152,91 @@ def _fallback_blocks_fn(dt: np.dtype):
     return blocks
 
 
-def source_of(blocks_df: DataFrame, dt: np.dtype) -> tuple:
-    """Normalize a blocks DF to its cheapest consumable source:
-    ("map", upstream_df, blocks_fn) or ("grouped", frags_df, key_cols,
-    assemble_fn). Unmarked and persisted frames fall back to ("map",
-    blocks_df, standard-row decoder) — the exact pre-fusion consumption,
-    which reads a persisted frame from its cache."""
-    if blocks_df.is_cached:
-        return _fallback(blocks_df, dt, "the frame is persisted")
-    m = getattr(blocks_df, _MAP_ATTR, None)
-    if m is not None:
-        return ("map", m[0], m[1])
-    g = getattr(blocks_df, _GROUPED_ATTR, None)
-    if g is not None:
-        return ("grouped", g[0], g[1], g[2])
-    return _fallback(blocks_df, dt, "the frame has no fusion metadata")
-
-
-def _fallback(blocks_df: DataFrame, dt: np.dtype, reason: str) -> tuple:
-    """The unfused source: the materialized blocks DF, one extra crossing."""
-    if log.isEnabledFor(logging.DEBUG):
-        log.debug("blocks frame consumed unfused (materialized rows): %s", reason)
-    return ("map", blocks_df, _fallback_blocks_fn(dt))
-
-
-def emit_blocks_kernel(blocks_fn):
-    """mapInPandas kernel materializing a blocks iterator to the standard
-    BLOCK schema, byte-bounded (udfbatch) in the Python->JVM direction."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = (
-            (gx, gy, gz, list(arr.shape), arr.tobytes())
-            for gx, gy, gz, arr in blocks_fn(batches)
+def pipeline_of(blocks: BlockPipeline | DataFrame, dt: np.dtype) -> BlockPipeline:
+    """``blocks`` as a pipeline. A plain DataFrame becomes a map source
+    over its rows — consumed unfused, counted and logged with its reason."""
+    if isinstance(blocks, BlockPipeline):
+        return blocks
+    from_to_df = blocks in _TO_DF_FRAMES
+    if blocks.is_cached:
+        reason, why = "persisted", "the frame is persisted"
+    elif from_to_df:
+        reason, why = "to_df", "the frame came from .to_df()"
+    else:
+        reason, why = "plain", (
+            "the frame is not a block pipeline "
+            "(a foreign frame, or one changed by a DataFrame op)"
         )
-        yield from bounded_frames(rows, BLOCK_COLUMNS, lambda r: len(r[4]))
+    message = "blocks frame consumed unfused (materialized rows): " + why
+    if from_to_df:  # already counted once, at .to_df()
+        if log.isEnabledFor(logging.DEBUG):
+            log.debug("%s", message)
+    else:
+        count_materialization(reason, message)
+    return BlockPipeline(lambda: blocks, decode_block_rows(dt))
 
-    return kernel
+
+def transform_blocks(
+    blocks: BlockPipeline | DataFrame, dt: np.dtype, block_map
+) -> BlockPipeline:
+    """Compose the block-local ``block_map(gx, gy, gz, arr) -> (gx, gy,
+    gz, arr')`` into the pipeline: no node of its own."""
+    p = pipeline_of(blocks, dt)
+    return replace(p, stages=(*p.stages, block_map))
 
 
-def emit_block_per_group(assemble_fn):
-    """applyInPandas kernel materializing one assembled block per group."""
+def grouped_kernel(assemble, stages, block_rows, schema: pa.Schema, row_bytes):
+    """The applyInArrow kernel of a grouped terminal: assemble one cell,
+    run the stages, and return ``block_rows``' rows as byte-bounded
+    record batches. Unannotated on purpose (module doc)."""
 
-    def one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gx, gy, gz, arr = assemble_fn(key, pdf)
-        return pd.DataFrame(
-            [(gx, gy, gz, list(arr.shape), arr.tobytes())], columns=BLOCK_COLUMNS
+    def one_group(key, table):
+        blk = assemble(key, table)
+        for stage in stages:
+            blk = stage(*blk)
+        return pa.Table.from_batches(
+            list(bounded_batches(block_rows(*blk), schema, row_bytes)), schema=schema
         )
 
-    return one
+    return one_group
 
 
 def consume_block_rows(
-    blocks_df: DataFrame,
-    dt: np.dtype,
+    blocks: BlockPipeline | DataFrame,
+    dt: np.dtype | None,
     block_rows: Callable[..., Iterable[tuple]],
     columns: list[str],
     schema: str,
     row_bytes: Callable[[tuple], int] | None = None,
 ) -> DataFrame:
     """Terminal consumer: ONE Python node emitting
-    ``block_rows(gx, gy, gz, arr)`` rows for every block of ``blocks_df``.
+    ``block_rows(gx, gy, gz, arr)`` rows for every block of ``blocks``.
 
-    Fuses into a MAP source's upstream mapInPandas, into a GROUPED
-    source's post-shuffle applyInPandas, or falls back to a mapInPandas
-    over the materialized blocks DF. On the map branches output frames are
-    byte-bounded when ``row_bytes`` is given (payload-carrying rows). The
-    grouped branch is exempt from that 64 MB bound: it returns each
-    group's rows as one frame, so its output is bounded by what one
-    target block yields. Row-order per partition/group is the block
-    iteration order either way."""
+    A map pipeline runs as a mapInPandas over its source, a grouped one as
+    an applyInArrow over its fragments, and a plain DataFrame as a
+    mapInPandas over its rows. Output is byte-bounded on both kinds of
+    node (``row_bytes`` gives a row's payload; 64 bytes per row when
+    omitted): pandas frames on the map side, Arrow record batches of at
+    most the budget on the grouped side. Row order per partition/group is
+    the block iteration order."""
     rb = row_bytes if row_bytes is not None else (lambda r: 64)
-    src = source_of(blocks_df, dt)
-    if src[0] == "grouped":
-        _, frags, key_cols, assemble_fn = src
+    p = pipeline_of(blocks, dt)
+    read, stages = p.read, p.stages
+    if p.key_cols is not None:
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _parse_datatype_string
 
-        def one_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame(
-                list(block_rows(*assemble_fn(key, pdf))), columns=columns
-            )
-
-        return frags.groupBy(*key_cols).applyInPandas(one_group, schema=schema)
-
-    _, upstream, blocks_fn = src
+        struct = _parse_datatype_string(schema)
+        kernel = grouped_kernel(read, stages, block_rows, to_arrow_schema(struct), rb)
+        return p.source().groupBy(*p.key_cols).applyInArrow(kernel, schema=struct)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = (row for blk in blocks_fn(batches) for row in block_rows(*blk))
-        yield from bounded_frames(rows, columns, rb)
+        def rows():
+            for blk in read(batches):
+                for stage in stages:
+                    blk = stage(*blk)
+                yield from block_rows(*blk)
 
-    return upstream.mapInPandas(kernel, schema=schema)
+        yield from bounded_frames(rows(), columns, rb)
 
-
-def transform_blocks(blocks_df: DataFrame, dt: np.dtype, block_map) -> DataFrame:
-    """Block-local transform ``block_map(gx, gy, gz, arr) -> (gx, gy, gz,
-    arr')`` composed INTO the source: the returned DF materializes to
-    standard BLOCK rows (usable exactly like before) and carries composed
-    fusion metadata so a downstream consumer still pays one Python node."""
-    src = source_of(blocks_df, dt)
-    if src[0] == "grouped":
-        _, frags, key_cols, assemble_fn = src
-
-        def new_asm(key: tuple, pdf: pd.DataFrame) -> tuple:
-            return block_map(*assemble_fn(key, pdf))
-
-        out = frags.groupBy(*key_cols).applyInPandas(
-            emit_block_per_group(new_asm), schema=BLOCK_SCHEMA_DDL
-        )
-        return attach_grouped(out, frags, key_cols, new_asm)
-
-    _, upstream, blocks_fn = src
-
-    def new_fn(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
-        for blk in blocks_fn(batches):
-            yield block_map(*blk)
-
-    out = upstream.mapInPandas(emit_blocks_kernel(new_fn), schema=BLOCK_SCHEMA_DDL)
-    return attach_map(out, upstream, new_fn)
+    return p.source().mapInPandas(kernel, schema=schema)

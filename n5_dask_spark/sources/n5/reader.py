@@ -1,5 +1,5 @@
-"""N5 dataset scan as a Spark DataFrame of blocks, and driver-side region
-reads (SURVEY.md §2.A S2/S4/T2).
+"""N5 dataset scan into a block pipeline, and driver-side region reads
+(SURVEY.md §2.A S2/S4/T2).
 
 Design (§1.5): one row per block, grid coordinates as ordinary columns —
 Catalyst filters on (gx, gy, gz) replace dask's task culling.
@@ -14,9 +14,10 @@ pack it into the same splits (``datasource.plan_splits``) and read each
 block in the Python task that uses it, with ``read_block_file``. The glob
 scan's source is ``spark.range(k, numPartitions=k)``, one split id per
 task, looked up in a compact ``ScanPlan`` that travels with the kernel
-(grid coordinates and split offsets; paths are rebuilt from the grid), so
-building a scan starts no Spark job and no file byte passes through the
-JVM.
+(grid coordinates and split offsets; paths are rebuilt from the grid). A
+``Scan`` holds that plan and builds the ids only in the terminal that
+runs them, so planning a scan starts no Spark job, builds no Spark node,
+and no file byte passes through the JVM.
 
 Region reads (``read_region``) run no Spark job. Like the reference's
 read_n5_block, they are random access in the calling process: the
@@ -56,8 +57,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -68,6 +67,7 @@ from pyspark.sql.types import (
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import decode_block_at, np_dtype
 from n5_dask_spark.sources.n5.datasource import ScanSplit, plan_splits
+from n5_dask_spark.sources.n5.fuse import BlockPipeline, count_materialization
 from n5_dask_spark.sources.n5.metadata import (
     INCOMPLETE_MARKER,
     DatasetAttributes,
@@ -78,16 +78,6 @@ from n5_dask_spark.sources.n5.metadata import (
 )
 
 log = logging.getLogger("n5_dask_spark.sources.n5")
-
-BLOCK_SCHEMA = StructType(
-    [
-        StructField("gx", IntegerType()),
-        StructField("gy", IntegerType()),
-        StructField("gz", IntegerType()),
-        StructField("shape_zyx", ArrayType(IntegerType())),  # decoded array shape
-        StructField("data", BinaryType()),  # native-endian C-order (z,y,x) bytes
-    ]
-)
 
 STATS_SCHEMA = StructType(
     [
@@ -396,7 +386,29 @@ class ScanPlan:
             yield pd.DataFrame(rows, columns=[*self.columns, "length", "path"])
 
 
-_PLAN_ATTR = "_n5ds_scan_plan"
+@dataclass(frozen=True)
+class Scan:
+    """A planned scan: the :class:`ScanPlan` of the driver's one listing
+    and the split ids a consumer maps its kernel over, one task per split.
+    Built with no Spark call; :meth:`ids` builds the ``spark.range`` source
+    when a terminal needs it, so a scan and its consumer run as one Python
+    node and no file byte passes through the JVM."""
+
+    spark: SparkSession
+    plan: ScanPlan
+
+    def ids(self) -> DataFrame:
+        """The split ids, ``spark.range(k, numPartitions=k)``."""
+        k = len(self.plan.offsets) - 1
+        return self.spark.range(k, numPartitions=max(1, k))
+
+    def to_df(self) -> DataFrame:
+        """The materialized scan rows: one (columns..., length, path) row
+        per file. Counted and logged like every ``.to_df()``."""
+        schema = ", ".join(f"{c} int" for c in self.plan.columns) + ", length long, path string"
+        df = self.ids().mapInPandas(self.plan.listing, schema=schema)
+        count_materialization("to_df", f"scan of {self.plan.root} materialized by .to_df()")
+        return df
 
 
 def scan_frame(
@@ -406,17 +418,11 @@ def scan_frame(
     columns: tuple[str, ...],
     ndim: int = 0,
     names: list[str] | None = None,
-) -> DataFrame:
-    """The scan frame over ``files`` ((path, coordinates, size), listed on
-    the driver), packed by :func:`plan_splits`: one task per split, built
-    with no Spark job and no second listing.
-
-    The source is ``spark.range(k, numPartitions=k)``, one split id per
-    task, and the kernel looks its split up in the :class:`ScanPlan` it
-    carries. The returned frame materializes one (columns..., length,
-    path) row per file; a consumer takes the ids and the plan from
-    :func:`scan_source` and reads the bytes in its own kernel, so the scan
-    adds no Python node and no file byte passes through the JVM."""
+) -> Scan:
+    """The scan over ``files`` ((path, coordinates, size), listed on the
+    driver), packed by :func:`plan_splits`: one task per split, planned
+    with no Spark job and no second listing. A consumer maps its kernel
+    over :meth:`Scan.ids` and reads the bytes with :meth:`ScanPlan.read`."""
     split = ScanSplit.from_session(spark)
     splits = plan_splits(files, split)
     plan = ScanPlan(
@@ -434,25 +440,7 @@ def scan_frame(
             root, len(files), int(plan.sizes.sum()), len(splits),
             split.parallelism, split.source,
         )
-    ids = spark.range(len(splits), numPartitions=max(1, len(splits)))
-    schema = ", ".join(f"{c} int" for c in columns) + ", length long, path string"
-    df = ids.mapInPandas(plan.listing, schema=schema)
-    setattr(df, _PLAN_ATTR, (ids, plan))
-    return df
-
-
-def scan_source(scan_df: DataFrame) -> tuple[DataFrame, ScanPlan]:
-    """The split ids and plan behind a frame that :func:`scan_frame` built
-    (:func:`scan_block_files`, ``tiff.tif_series_scan``). A consumer maps
-    its kernel over the ids and reads with :meth:`ScanPlan.read`, so the
-    scan and the consumer run as one Python node."""
-    src = getattr(scan_df, _PLAN_ATTR, None)
-    if src is None:
-        raise ValueError(
-            "not a scan frame: pass the frame scan_block_files or "
-            "tif_series_scan returned, before any DataFrame operation"
-        )
-    return src
+    return Scan(spark, plan)
 
 
 def scan_block_files(
@@ -462,24 +450,25 @@ def scan_block_files(
     ndim: int = 3,
     paths: list[str] | None = None,
     grid_shape: list[int] | None = None,
-) -> DataFrame:
-    """Block-file scan: one (gx, gy, gz, length, path) row per block file,
-    one task per :func:`plan_splits` split.
+) -> Scan:
+    """Block-file scan: one (gx, gy, gz) file per block, one task per
+    :func:`plan_splits` split; ``.to_df()`` gives one (gx, gy, gz, length,
+    path) row per block file.
 
     The dataset is listed and fenced by :func:`list_blocks` (marker,
     non-canonical, stale and zero-byte refusals); that listing is the only
-    one, and building the frame starts no Spark job (:func:`scan_frame`).
-    ``paths`` restricts the scan to an explicit block-file list (region
-    pruning: only overlapping files are ever listed or read), and only the
-    ones present are planned. Consumers read the bytes in their own kernel
-    through :func:`scan_source` with :func:`read_block_file`: a block
-    deleted after planning reads as fill value (no row), and any other
-    read failure raises naming the path.
+    one, and planning starts no Spark job (:func:`scan_frame`). ``paths``
+    restricts the scan to an explicit block-file list (region pruning:
+    only overlapping files are ever listed or read), and only the ones
+    present are planned. Consumers read the bytes in their own kernel over
+    :meth:`Scan.ids` with ``plan.read`` and :func:`read_block_file`: a
+    block deleted after planning reads as fill value (no row), and any
+    other read failure raises naming the path.
 
     A fully-sparse dataset (attributes.json, zero block files) is legal N5
-    and scans as an EMPTY DataFrame, not an error.
+    and scans as an EMPTY scan, not an error.
 
-    The output ALWAYS carries all three coordinate columns — for
+    The scan ALWAYS carries all three coordinate columns — for
     ndim < 3 the missing ones are constant 0 — so downstream block
     operators (decoded_blocks, block_stats, rechunk) are ndim-agnostic."""
     tune_session(spark)
@@ -498,25 +487,21 @@ def decoded_blocks(
     container: str,
     dataset: str,
     paths: list[str] | None = None,
-) -> DataFrame:
-    """Blocks DataFrame with decoded payloads (shape_zyx + native bytes).
+) -> BlockPipeline:
+    """Decoded blocks of a dataset, as a map pipeline over its scan.
 
-    The scan kernel fetches and decodes each planned block itself
-    (:func:`scan_source`). The returned DF carries fuse.attach_map
-    metadata (r15, guide §4): an in-package consumer (rechunk/downsample/
-    cast fragment kernels, zprofile partials, the write sink) runs the
-    fetch and decode INSIDE its own Python node, so the decoded voxel
-    bytes cross the JVM<->Python boundary once. Direct users of this DF
-    (collect, foreign kernels) see the same materialized rows; output
-    frames stay byte-bounded (udfbatch). check_block_shape runs per block
-    on every path."""
-    from n5_dask_spark.sources.n5 import fuse
-
+    The listing and fence run here; no Spark node is built. The consumer
+    (rechunk/downsample/cast fragment kernels, zprofile partials, the
+    write sink, or ``.to_df()`` for (gx, gy, gz, shape_zyx, data) rows)
+    fetches and decodes each planned block INSIDE its own Python node, so
+    the decoded voxel bytes cross the JVM<->Python boundary once.
+    check_block_shape runs per block on every path."""
     attrs = read_attributes(container, dataset)
     log_codec("read", container, dataset, attrs)
-    ids, plan = scan_source(scan_block_files(
+    scan = scan_block_files(
         spark, container, dataset, attrs.ndim, paths=paths, grid_shape=attrs.grid_shape
-    ))
+    )
+    plan = scan.plan
     data_type, compression = attrs.data_type, dict(attrs.compression)
 
     def blocks_fn(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
@@ -526,8 +511,7 @@ def decoded_blocks(
             )
             yield (*grid, a)
 
-    out = ids.mapInPandas(fuse.emit_blocks_kernel(blocks_fn), schema=BLOCK_SCHEMA)
-    return fuse.attach_map(out, ids, blocks_fn)
+    return BlockPipeline(scan.ids, blocks_fn)
 
 
 def block_stats(spark: SparkSession, container: str, dataset: str) -> DataFrame:
@@ -535,9 +519,10 @@ def block_stats(spark: SparkSession, container: str, dataset: str) -> DataFrame:
     only scalars leave."""
     attrs = read_attributes(container, dataset)
     log_codec("read", container, dataset, attrs)
-    ids, plan = scan_source(scan_block_files(
+    scan = scan_block_files(
         spark, container, dataset, attrs.ndim, grid_shape=attrs.grid_shape
-    ))
+    )
+    plan = scan.plan
     data_type, compression = attrs.data_type, dict(attrs.compression)
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -558,7 +543,7 @@ def block_stats(spark: SparkSession, container: str, dataset: str) -> DataFrame:
             )
         yield pd.DataFrame(rows, columns=[f.name for f in STATS_SCHEMA.fields])
 
-    return ids.mapInPandas(stats, schema=STATS_SCHEMA)
+    return scan.ids().mapInPandas(stats, schema=STATS_SCHEMA)
 
 
 def overlapping_blocks(

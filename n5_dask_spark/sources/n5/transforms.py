@@ -3,7 +3,7 @@ T1 rechunk, T3 cast, T7 downsample, T8 pyramid cutoff, T9 metadata).
 
 Rechunk is the one genuinely custom shuffle in the engine (§4): each input
 block explodes into fragments keyed by target grid cell, a hash shuffle
-groups fragments per target cell, and applyInPandas reassembles. The
+groups fragments per target cell, and applyInArrow reassembles. The
 shuffle machinery (exchange, AQE coalescing) is Spark's; only the fragment
 math is ours. Shuffle volume == data volume (each byte moves once), which
 is the optimum for a general regrid; at 100 TB this is exactly dask's
@@ -21,13 +21,11 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from n5_dask_spark.sources.n5.codec import np_dtype
 from n5_dask_spark.sources.n5.metadata import (
@@ -38,13 +36,13 @@ from n5_dask_spark.sources.n5.metadata import (
     update_raw_attributes,
 )
 from n5_dask_spark.sources.n5 import fuse
+from n5_dask_spark.sources.n5.fuse import BlockPipeline
 from n5_dask_spark.sources.n5.reader import decoded_blocks
 from n5_dask_spark.sources.n5.writer import write_blocks
 
 FRAGMENT_SCHEMA = (
     "tgx int, tgy int, tgz int, off_zyx array<int>, shape_zyx array<int>, data binary"
 )
-BLOCK_SCHEMA_DDL = "gx int, gy int, gz int, shape_zyx array<int>, data binary"
 
 
 FRAGMENT_COLUMNS = ["tgx", "tgy", "tgz", "off_zyx", "shape_zyx", "data"]
@@ -104,18 +102,15 @@ def _fragment_rows_fn(
 
 
 def rechunk(
-    blocks: DataFrame, attrs: DatasetAttributes, new_block_size: list[int]
-) -> tuple[DataFrame, DatasetAttributes]:
-    """Re-tile a decoded blocks DF to a new block grid (T1).
+    blocks: BlockPipeline | DataFrame, attrs: DatasetAttributes, new_block_size: list[int]
+) -> tuple[BlockPipeline, DatasetAttributes]:
+    """Re-tile decoded blocks to a new block grid (T1).
 
-    Returns (new blocks DF, new attrs). Fragment explode -> shuffle on target
-    cell -> reassemble."""
+    Returns (grouped pipeline, new attrs): fragment explode -> shuffle on
+    target cell -> reassemble, built by the terminal that consumes it."""
     dims_xyz = list(attrs.dimensions)
     old_bs, new_bs = list(attrs.block_size), list(new_block_size)
-    dt = np_dtype(attrs.data_type)
     ndim = attrs.ndim
-    block_frags = _fragment_rows_fn(ndim, old_bs, [0] * ndim, dims_xyz, new_bs)
-
     new_attrs = DatasetAttributes(
         data_type=attrs.data_type,
         dimensions=dims_xyz,
@@ -123,35 +118,44 @@ def rechunk(
         compression=dict(attrs.compression),
         extra=dict(attrs.extra),
     )
+    block_frags = _fragment_rows_fn(ndim, old_bs, [0] * ndim, dims_xyz, new_bs)
+    return _regrid(blocks, np_dtype(attrs.data_type), block_frags, new_attrs), new_attrs
 
-    # decode(+any upstream block-local transforms)+fragment fuse into ONE
-    # Python node before the one exchange (r15, guide §4)
-    frags = fuse.consume_block_rows(
-        blocks, dt, block_frags, FRAGMENT_COLUMNS, FRAGMENT_SCHEMA,
-        row_bytes=lambda r: len(r[5]),
+
+def _regrid(
+    blocks: BlockPipeline | DataFrame, dt: np.dtype, block_frags, out_attrs: DatasetAttributes
+) -> BlockPipeline:
+    """The grouped pipeline shared by rechunk and export_region:
+    decode(+any upstream block-local stages)+fragment as ONE map node
+    before the one exchange, then the assembler, into which downstream
+    consumers (stats kernels, the write sink) fuse instead of adding a
+    second post-shuffle Python node."""
+    src = fuse.pipeline_of(blocks, dt)
+    return BlockPipeline(
+        lambda: fuse.consume_block_rows(
+            src, dt, block_frags, FRAGMENT_COLUMNS, FRAGMENT_SCHEMA,
+            row_bytes=lambda r: len(r[5]),
+        ),
+        _assemble_block_fn(out_attrs, dt),
+        key_cols=("tgx", "tgy", "tgz"),
     )
-    assemble = _assemble_block_fn(new_attrs, dt)
-    out = frags.groupBy("tgx", "tgy", "tgz").applyInPandas(
-        fuse.emit_block_per_group(assemble), schema=BLOCK_SCHEMA_DDL
-    )
-    # downstream per-block consumers (stats kernels, the write sink) fuse
-    # into the assembler's applyInPandas instead of adding a second
-    # post-shuffle Python node
-    return fuse.attach_grouped(out, frags, ("tgx", "tgy", "tgz"), assemble), new_attrs
 
 
 def _assemble_block_fn(new_attrs: DatasetAttributes, dt: np.dtype):
-    """One target grid cell's fragments -> (gx, gy, gz, block array)."""
+    """One target grid cell's fragments -> (gx, gy, gz, block array). The
+    fragments are read straight from the group's Arrow columns: each
+    payload is viewed in place, not copied to bytes."""
     ndim = new_attrs.ndim
 
-    def assemble(key: tuple, pdf: pd.DataFrame) -> tuple:
-        grid = tuple(int(k) for k in key)[:ndim]
-        tdims_xyz = new_attrs.block_dims(grid)
-        out = np.zeros(tuple(reversed(tdims_xyz)), dtype=dt)
-        for off, shape, data in zip(pdf["off_zyx"], pdf["shape_zyx"], pdf["data"]):
-            frag = np.frombuffer(bytes(data), dtype=dt).reshape(list(shape))
+    def assemble(key, table: pa.Table) -> tuple:
+        grid = tuple(k.as_py() for k in key)[:ndim]
+        out = np.zeros(tuple(reversed(new_attrs.block_dims(grid))), dtype=dt)
+        payloads = (v.as_buffer() for chunk in table.column("data").chunks for v in chunk)
+        for off, shape, data in zip(
+            table.column("off_zyx").to_pylist(), table.column("shape_zyx").to_pylist(), payloads
+        ):
             sel = tuple(slice(o, o + s) for o, s in zip(off, shape))
-            out[sel] = frag
+            out[sel] = np.frombuffer(data, dtype=dt).reshape(shape)
         g3 = list(grid) + [0] * (3 - ndim)
         return (g3[0], g3[1], g3[2], out)
 
@@ -199,7 +203,6 @@ def export_region(
         compression=dict(attrs.compression),
         extra=dict(attrs.extra),
     )
-    dt = np_dtype(attrs.data_type)
     old_bs, out_bs = list(attrs.block_size), list(out_attrs.block_size)
     block_frags = _fragment_rows_fn(ndim, old_bs, start, end, out_bs)
 
@@ -210,17 +213,10 @@ def export_region(
         "/".join([container.rstrip("/"), dataset, *map(str, g)])
         for g in overlapping_blocks(attrs, start, end)
     ]
-    # decode+fragment fused into one Python node (r15, guide §4)
-    frags = fuse.consume_block_rows(
+    out = _regrid(
         decoded_blocks(spark, container, dataset, paths=paths),
-        dt, block_frags, FRAGMENT_COLUMNS, FRAGMENT_SCHEMA,
-        row_bytes=lambda r: len(r[5]),
+        np_dtype(attrs.data_type), block_frags, out_attrs,
     )
-    assemble = _assemble_block_fn(out_attrs, dt)
-    out = frags.groupBy("tgx", "tgy", "tgz").applyInPandas(
-        fuse.emit_block_per_group(assemble), schema=BLOCK_SCHEMA_DDL
-    )
-    fuse.attach_grouped(out, frags, ("tgx", "tgy", "tgz"), assemble)
     write_blocks(out, out_container, out_dataset, out_attrs)
     return out_attrs
 
@@ -243,8 +239,8 @@ def windowed_mean_zyx(arr: np.ndarray, factors_zyx: list[int]) -> np.ndarray:
 
 
 def downsample(
-    blocks: DataFrame, attrs: DatasetAttributes, factors_xyz: list[int]
-) -> tuple[DataFrame, DatasetAttributes]:
+    blocks: BlockPipeline | DataFrame, attrs: DatasetAttributes, factors_xyz: list[int]
+) -> tuple[BlockPipeline, DatasetAttributes]:
     """One downsample level (T7): block-local windowed mean (no shuffle),
     then rechunk the reduced blocks back to the original block size.
 
@@ -286,8 +282,11 @@ def downsample(
 
 
 def cast_blocks(
-    blocks: DataFrame, attrs: DatasetAttributes, target_type: str, safe: bool = True
-) -> tuple[DataFrame, DatasetAttributes]:
+    blocks: BlockPipeline | DataFrame,
+    attrs: DatasetAttributes,
+    target_type: str,
+    safe: bool = True,
+) -> tuple[BlockPipeline, DatasetAttributes]:
     """dtype cast (T3) with the reference's casting='safe' guard
     (/root/reference/src/n5_to_tif.py:27-28)."""
     src, dst = np_dtype(attrs.data_type), np_dtype(target_type)

@@ -34,6 +34,13 @@ from pyspark.sql import functions as F
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import data_type_of, encode_block, np_dtype
+from n5_dask_spark.sources.n5.fuse import (
+    BLOCK_COLUMNS,
+    BLOCK_SCHEMA_DDL,
+    BlockPipeline,
+    consume_block_rows,
+    decode_block_rows,
+)
 from n5_dask_spark.sources.n5.metadata import (
     INCOMPLETE_MARKER,
     DatasetAttributes,
@@ -121,13 +128,9 @@ def release_dataset_write(marker: str) -> None:
 # the test assert the injection really fired. Production cost: one
 # os.environ.get per written block. tests/test_fault_injection.py drives
 # this under a retry-enabled master (local[N,maxFailures]).
+# The sinks run the hook after every written block, so a task owning more
+# than one block dies with only part of them on disk.
 _FAULT_ENV = "N5DS_INJECT_WRITE_FAULT_DIR"
-# The grouped sinks' batch is their one assembled block; the map sink runs
-# the hook every _FAULT_EVERY_BLOCKS written blocks, so a task owning more
-# blocks than that dies with only part of them on disk.
-_FAULT_EVERY_BLOCKS = 1
-# Written-coords rows (12 bytes each) per output frame of the map sink.
-_COORDS_PER_FRAME = 1024
 
 
 def _maybe_inject_fault() -> None:
@@ -181,32 +184,39 @@ def grid_df(spark: SparkSession, attrs: DatasetAttributes) -> DataFrame:
 
 
 def write_blocks(
-    blocks: DataFrame,
+    blocks: BlockPipeline | DataFrame,
     container: str,
     dataset: str,
     attrs: DatasetAttributes,
 ) -> None:
-    """Sink a blocks DataFrame (gx,gy,gz, shape_zyx, data native bytes).
+    """Sink blocks (a pipeline, or a DataFrame of gx, gy, gz, shape_zyx,
+    data native bytes) into the dataset.
 
-    One output file per row. Single-writer-per-block holds by ROW
-    uniqueness: every producer (rechunk/export_region's groupBy output,
-    grid enumeration, write_region's edge merge) emits exactly one row per
-    grid cell, and _atomic_write makes even a retried duplicate a full
+    One output file per block. Single-writer-per-block holds by BLOCK
+    uniqueness: every producer (rechunk/export_region's grouped assembler,
+    grid enumeration, write_region's edge merge) emits exactly one block
+    per grid cell, and _atomic_write makes even a retried duplicate a full
     overwrite, never an interleave. The sink therefore does NOT re-shuffle
     on the grid key — the old unconditional repartition moved every block
     byte through a second exchange in every rechunk->write pipeline purely
-    to rebalance. Instead the sink fuses into the producer's stage; write
+    to rebalance. Instead encode+write fuses INTO the producer's own
+    Python node (guide §4): into a grouped pipeline's post-shuffle
+    assembler (applyInArrow; block bytes never re-cross the JVM<->Python
+    boundary after the fragment shuffle) or into a map pipeline's
+    decode/slice kernel (decode+encode+write is one node). Write
     parallelism is the producer's partitioning (groupBy shuffle output,
     spark.range splits, createDataFrame slices — all wide). A caller that
     hands a single-partition blocks DF serializes its writes; all current
     producers are wide by construction.
 
-    The row-uniqueness contract is GUARDED, not assumed: the sink emits the
+    The uniqueness contract is GUARDED, not assumed: the sink emits the
     grid coords it wrote (3 ints per block — negligible next to the block
     bytes), and the same job's aggregate compares the write count against
     countDistinct(gx,gy,gz). A producer emitting the same cell from two
     partitions (nondeterministic last-writer-wins contents) fails loudly
-    instead of shipping whichever write landed second.
+    instead of shipping whichever write landed second. For grouped
+    producers the guard is trivially green (groupBy keys are unique by
+    construction); for every other producer it is the real check.
 
     The whole job (metadata + blocks + guards) runs under the dataset's
     write-session marker (claim_dataset_write): concurrent readers refuse
@@ -214,31 +224,16 @@ def write_blocks(
     and a failed job leaves the marker so the incomplete dataset stays
     loud. The marker is released only after the duplicate-producer guard
     passes — a guard failure means nondeterministic contents, which is
-    exactly an incomplete dataset.
-
-    r15 (guide §4): the encode+write sink fuses INTO the producer's own
-    Python node when the blocks DF carries fuse metadata — into the
-    rechunk/export assembler's applyInPandas (block bytes never re-cross
-    the JVM<->Python boundary after the fragment shuffle) or into a
-    map-source's decode/slice kernel (decode+encode+write is one node).
-    The duplicate-producer guard is UNCHANGED in strength either way: the
-    sink still emits exactly one (gx,gy,gz) row per written block and the
-    same job-level aggregate compares writes against distinct path keys —
-    for grouped producers that guard was already trivially green (groupBy
-    keys are unique by construction), so fusing the write into the
-    assembler loses nothing; for every other producer the unfused sink
-    path below runs exactly as before."""
-    from n5_dask_spark.sources.n5 import fuse
+    exactly an incomplete dataset."""
     from n5_dask_spark.sources.n5.metadata import is_uri
 
     marker = claim_dataset_write(container, dataset)
     write_attributes(container, dataset, attrs)
     data_type, compression = attrs.data_type, dict(attrs.compression)
-    dt = np_dtype(data_type)
     ndim = attrs.ndim  # block paths are exactly ndim levels deep
     container_is_uri = is_uri(container)
 
-    def write_one(gx: int, gy: int, gz: int, arr: np.ndarray) -> tuple:
+    def write_one(gx: int, gy: int, gz: int, arr: np.ndarray) -> Iterator[tuple]:
         coords = (int(gx), int(gy), int(gz))[:ndim]
         payload = encode_block(arr, data_type, compression)
         if container_is_uri:
@@ -256,37 +251,12 @@ def write_blocks(
             _atomic_write(
                 os.path.join(container, dataset, *map(str, coords)), payload
             )
-        return (int(gx), int(gy), int(gz))
+        _maybe_inject_fault()  # chaos hook: this block's file is on disk
+        yield (int(gx), int(gy), int(gz))
 
-    src = fuse.source_of(blocks, dt)
-    if src[0] == "grouped":
-        _, frags, key_cols, assemble_fn = src
-
-        def sink_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            coords3 = write_one(*assemble_fn(key, pdf))
-            _maybe_inject_fault()  # chaos hook: this block's file is on disk
-            return pd.DataFrame([coords3], columns=["gx", "gy", "gz"])
-
-        written_coords = frags.groupBy(*key_cols).applyInPandas(
-            sink_one, schema="gx int, gy int, gz int"
-        )
-    else:
-        _, upstream, blocks_fn = src
-
-        def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            buf: list[tuple] = []
-            for n, blk in enumerate(blocks_fn(batches), 1):
-                buf.append(write_one(*blk))
-                if n % _FAULT_EVERY_BLOCKS == 0:
-                    _maybe_inject_fault()  # chaos hook: n files are on disk
-                if len(buf) >= _COORDS_PER_FRAME:
-                    yield pd.DataFrame(buf, columns=["gx", "gy", "gz"])
-                    buf = []
-            if buf:
-                yield pd.DataFrame(buf, columns=["gx", "gy", "gz"])
-
-        written_coords = upstream.mapInPandas(sink, schema="gx int, gy int, gz int")
-
+    written_coords = consume_block_rows(
+        blocks, np_dtype(data_type), write_one, ["gx", "gy", "gz"], "gx int, gy int, gz int"
+    )
     counts = (
         written_coords
         .agg(
@@ -363,20 +333,12 @@ def write_array(
                 g3 = list(grid) + [0] * (3 - ndim)
                 yield (g3[0], g3[1], g3[2], block)
 
-    from n5_dask_spark.sources.n5 import fuse
-
-    grid = grid_df(spark, attrs)
-    # fusable source (r15, guide §4): write_blocks runs slice+encode+write
-    # as ONE Python node — the block bytes never cross the boundary at all
-    # (they are born executor-side from the broadcast volume)
-    blocks = fuse.attach_map(
-        grid.mapInPandas(fuse.emit_blocks_kernel(blocks_fn), schema=(
-            "gx int, gy int, gz int, shape_zyx array<int>, data binary"
-        )),
-        grid,
-        blocks_fn,
+    # write_blocks runs slice+encode+write as ONE Python node (guide §4):
+    # the block bytes never cross the boundary at all (they are born
+    # executor-side from the broadcast volume)
+    write_blocks(
+        BlockPipeline(lambda: grid_df(spark, attrs), blocks_fn), container, dataset, attrs
     )
-    write_blocks(blocks, container, dataset, attrs)
     return attrs
 
 
@@ -459,8 +421,10 @@ def write_region(
         block_xyz[block_sel] = region_xyz[region_sel]
         emit(tuple(grid), block_xyz)
 
-    pdf = pd.DataFrame(rows, columns=["gx", "gy", "gz", "shape_zyx", "data"])
-    blocks = spark.createDataFrame(pdf, schema="gx int, gy int, gz int, shape_zyx array<int>, data binary")
+    pdf = pd.DataFrame(rows, columns=BLOCK_COLUMNS)
+    blocks = BlockPipeline(
+        lambda: spark.createDataFrame(pdf, schema=BLOCK_SCHEMA_DDL), decode_block_rows(dt)
+    )
     write_blocks(blocks, container, dataset, attrs)
 
 

@@ -45,8 +45,9 @@ from pyspark.sql import functions as F
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import data_type_of
+from n5_dask_spark.sources.n5.fuse import BLOCK_SCHEMA_DDL
 from n5_dask_spark.sources.n5.metadata import DatasetAttributes
-from n5_dask_spark.sources.n5.transforms import BLOCK_SCHEMA_DDL, rechunk
+from n5_dask_spark.sources.n5.transforms import rechunk
 from n5_dask_spark.sources.n5.writer import write_blocks
 from n5_dask_spark.sources.tiff import (
     decode_tiff_page_file,

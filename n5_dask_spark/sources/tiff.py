@@ -19,7 +19,7 @@ Pipelines are Spark-first:
   one-task-per-block. The reference's manual Z-slab loop
   (src/tif_to_n5.py:31-58) is unnecessary: partition-at-a-time execution
   bounds memory.
-- n5_to_tif_series: blocks DF -> rechunk to one-slice chunks
+- n5_to_tif_series: decoded blocks -> rechunk to one-slice chunks
   ((1, Y, X) like src/n5_to_tif.py:48-50) -> one TIFF per z written per
   task, slice index straight from the gz column (no block_info machinery).
 """
@@ -37,14 +37,15 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5 import fuse
 from n5_dask_spark.sources.n5.codec import data_type_of, np_dtype
+from n5_dask_spark.sources.n5.fuse import BlockPipeline
 from n5_dask_spark.sources.n5.metadata import DatasetAttributes, read_attributes, write_attributes
-from n5_dask_spark.sources.n5.transforms import BLOCK_SCHEMA_DDL, cast_blocks, rechunk
-from n5_dask_spark.sources.n5.reader import decoded_blocks, scan_frame, scan_source
+from n5_dask_spark.sources.n5.transforms import cast_blocks, rechunk
+from n5_dask_spark.sources.n5.reader import Scan, decoded_blocks, scan_frame
 from n5_dask_spark.sources.n5.writer import _atomic_write, write_blocks
 
 # TIFF tag ids
@@ -387,16 +388,17 @@ def read_slice(path: str) -> bytes:
         return f.read()
 
 
-def tif_series_scan(spark: SparkSession, input_dir: str) -> DataFrame:
-    """S1: lazy scan of a z-slice TIFF series -> one (z, length, path) row
-    per slice. Slice order = numeric sort of the trailing integer in the
-    filename (imread glob semantics, one file per z).
+def tif_series_scan(spark: SparkSession, input_dir: str) -> Scan:
+    """S1: lazy scan of a z-slice TIFF series; ``.to_df()`` gives one (z,
+    length, path) row per slice. Slice order = numeric sort of the
+    trailing integer in the filename (imread glob semantics, one file per
+    z).
 
     The driver's glob is the only listing: the slices are packed by their
     file sizes into ``datasource.plan_splits`` splits, one task each
-    (``reader.scan_frame``; building the frame starts no Spark job), and a
-    consumer reads each slice in its own kernel through
-    ``reader.scan_source`` with :func:`read_slice`."""
+    (``reader.scan_frame``; planning starts no Spark job), and a consumer
+    maps its kernel over ``Scan.ids`` and reads each slice there through
+    ``plan.read`` with :func:`read_slice`."""
     tune_session(spark)
     # Mid-write series refusal (r14 probe, N5-scan parity): the series
     # sink claims this marker for its job window. Scanning a partial
@@ -467,7 +469,8 @@ def tif_series_to_n5(
     Each slice is read and decoded into a (1, Y, X) block in the scan
     kernel; the standard rechunk shuffle re-tiles to the requested block
     grid; one task writes each block."""
-    ids, plan = scan_source(tif_series_scan(spark, input_dir))
+    scan = tif_series_scan(spark, input_dir)
+    plan = scan.plan
     # dims/dtype probe driver-side from the scan's listing (header/IFD
     # reads only, no pixel I/O)
     (probe_h, probe_w), probe_dt = tiff_probe_file(plan.path(0))
@@ -501,14 +504,10 @@ def tif_series_to_n5(
                 )
             yield (0, 0, z, arr[None, :, :])  # (1, Y, X)
 
-    # fusable slice-blocks source (r15, guide §4): the downstream
-    # cast/rechunk-fragment kernels run the TIFF read and decode inside
-    # their own Python node, so decoded slice bytes cross the boundary once
-    slice_blocks = fuse.attach_map(
-        ids.mapInPandas(fuse.emit_blocks_kernel(blocks_fn), schema=BLOCK_SCHEMA_DDL),
-        ids,
-        blocks_fn,
-    )
+    # slice-blocks source (guide §4): the downstream cast/rechunk-fragment
+    # kernels run the TIFF read and decode inside their own Python node,
+    # so decoded slice bytes cross the boundary once
+    slice_blocks = BlockPipeline(scan.ids, blocks_fn)
     slice_attrs = DatasetAttributes(
         data_type=src_type,
         dimensions=dims_xyz,

@@ -21,13 +21,17 @@ frame per INPUT batch therefore emits output batches of
 - dtype cast: up to 8x widening (uint8 -> float64).
 
 Fix: stream rows through :func:`bounded_frames`, which starts a new output
-frame whenever the accumulated payload bytes reach a budget (default: the
-same 64 MB as the input bound, env-tunable). Peak kernel memory becomes
+frame before the row that would take it past a budget (default: the same
+64 MB as the input bound, env-tunable). Peak kernel memory becomes
 ``input_batch + budget + one_row`` instead of ``input_batch x ratio``.
 Correctness is batch-boundary independent by construction (the full-registry
 3-row / 7-row Arrow-batch invariance nets prove the consumers don't care),
 so the budget only moves memory, never values; tests/test_udfbatch.py pins
 both properties.
+
+Grouped Arrow kernels (``applyInArrow``) return a table whose record
+batches Spark ships one by one; :func:`bounded_batches` packs their rows
+under the same budget and the same cut rule (:func:`_packed`).
 """
 
 from __future__ import annotations
@@ -36,6 +40,7 @@ import os
 from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 # Mirrors spark.sql.execution.arrow.maxBytesPerBatch's 64 MB default so both
 # directions of every wide-row exchange carry the same bound.
@@ -56,29 +61,53 @@ def out_batch_bytes() -> int:
     return v if v > 0 else DEFAULT_OUT_BATCH_BYTES
 
 
+def _packed(
+    rows: Iterable[tuple], row_bytes: Callable[[tuple], int], budget: int | None = None
+) -> Iterator[list[tuple]]:
+    """Cut ``rows`` into runs of at most ``budget`` payload bytes (default
+    :func:`out_batch_bytes`), ``row_bytes`` giving one row's payload. A run
+    is cut before the row that would pass the budget, so a single row
+    larger than the budget ships as its own 1-row run (maxBytesPerBatch's
+    one-oversized-record semantics). ``rows`` is consumed lazily; row order
+    is preserved; an empty input yields nothing."""
+    if budget is None:
+        budget = out_batch_bytes()
+    buf: list[tuple] = []
+    acc = 0
+    for row in rows:
+        n = row_bytes(row)
+        if buf and acc + n > budget:
+            yield buf
+            buf, acc = [], 0
+        buf.append(row)
+        acc += n
+    if buf:
+        yield buf
+
+
 def bounded_frames(
     rows: Iterable[tuple],
     columns: list[str],
     row_bytes: Callable[[tuple], int],
     budget: int | None = None,
 ) -> Iterator[pd.DataFrame]:
-    """Pack row tuples into pandas frames of at most ~``budget`` payload bytes.
-
-    ``rows`` is consumed lazily (one decoded row materialized at a time);
-    ``row_bytes`` returns the dominant payload size of one row. A single row
-    larger than the budget still ships — as its own 1-row frame (matching
-    maxBytesPerBatch's one-oversized-record semantics). Emits nothing for an
-    empty input; row order is preserved.
-    """
-    if budget is None:
-        budget = out_batch_bytes()
-    buf: list[tuple] = []
-    acc = 0
-    for row in rows:
-        buf.append(row)
-        acc += row_bytes(row)
-        if acc >= budget:
-            yield pd.DataFrame(buf, columns=columns)
-            buf, acc = [], 0
-    if buf:
+    """Pack row tuples into pandas frames of at most ``budget`` payload
+    bytes (:func:`_packed`)."""
+    for buf in _packed(rows, row_bytes, budget):
         yield pd.DataFrame(buf, columns=columns)
+
+
+def bounded_batches(
+    rows: Iterable[tuple], schema: pa.Schema, row_bytes: Callable[[tuple], int]
+) -> Iterator[pa.RecordBatch]:
+    """Pack row tuples into Arrow record batches of ``schema`` holding at
+    most :func:`out_batch_bytes` payload bytes each (:func:`_packed`)."""
+    for buf in _packed(rows, row_bytes):
+        yield _record_batch(buf, schema)
+
+
+def _record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(zip(*rows), schema)],
+        schema=schema,
+    )

@@ -242,7 +242,7 @@ def test_windowed_mean_partial_edges():
 def test_scan_and_stats(spark):
     from n5_dask_spark.sources.n5.reader import block_stats, scan_block_files
 
-    files = scan_block_files(spark, FIXTURE, FIXTURE_DS).collect()
+    files = scan_block_files(spark, FIXTURE, FIXTURE_DS).to_df().collect()
     assert len(files) == 4
     assert {(r.gx, r.gy, r.gz) for r in files} == {(0, 0, 0), (0, 1, 0), (1, 0, 0), (1, 1, 0)}
     stats = {(r.gx, r.gy, r.gz): r for r in block_stats(spark, FIXTURE, FIXTURE_DS).collect()}
@@ -302,11 +302,11 @@ def test_rechunk_roundtrip(spark):
 
 
 def test_persisted_blocks_frame_is_consumed_from_cache(spark):
-    """persist() returns the same DataFrame object, fusion metadata and all:
-    a consumer must read a persisted blocks frame from its cache instead of
-    fusing back to the block files. Deleting the files after the cache is
-    built shows which path ran — the file path would lose every block
-    (a block file deleted after planning reads as sparse)."""
+    """A pipeline materialized with .to_df() and persisted is consumed
+    from its cache, not re-read from the block files. Deleting the files
+    after the cache is built shows which path ran — the file path would
+    lose every block (a block file deleted after planning reads as
+    sparse). The one materialization is counted once."""
     import shutil
 
     from n5_dask_spark.sources.n5 import fuse
@@ -316,7 +316,8 @@ def test_persisted_blocks_frame_is_consumed_from_cache(spark):
     arr = np.arange(16 * 8 * 8, dtype="u1").reshape(16, 8, 8)  # xyz
     c = temp_container()
     write_array(spark, arr, c, "a/s0", [8, 8, 8])
-    blocks = decoded_blocks(spark, c, "a/s0").persist()
+    fuse.MATERIALIZATIONS.clear()
+    blocks = decoded_blocks(spark, c, "a/s0").to_df().persist()
     try:
         assert blocks.count() == 2
         for gx in ("0", "1"):
@@ -331,6 +332,7 @@ def test_persisted_blocks_frame_is_consumed_from_cache(spark):
         assert sorted(tuple(r) for r in rows) == [
             (0, int(arr[:8].sum())), (1, int(arr[8:].sum()))
         ]
+        assert sum(fuse.MATERIALIZATIONS.values()) == 1
     finally:
         blocks.unpersist()
 
@@ -640,7 +642,7 @@ def test_stale_blocks_from_inplace_shrink_refused(spark, scan, address):
         _scan(spark, scan, c, "d/s0")
     if scan == "glob":
         with pytest.raises(ValueError, match="stale block file"):
-            decoded_blocks(spark, c, "d/s0").collect()
+            decoded_blocks(spark, c, "d/s0").to_df().collect()
     # region read enumerates from grid math: immune by construction
     np.testing.assert_array_equal(read_full(spark, c, "d/s0"), small)
 
@@ -807,10 +809,10 @@ def test_explicit_path_scan_guards(spark, address):
     a = _address(c, address)
     pathlib.Path(c, "d/s0/0/0/0").write_bytes(b"")
     with pytest.raises(ValueError, match="zero-byte block file"):
-        scan_block_files(spark, a, "d/s0", 3, paths=[a + "/d/s0/0/0/0"]).collect()
+        scan_block_files(spark, a, "d/s0", 3, paths=[a + "/d/s0/0/0/0"]).to_df().collect()
     os.unlink(os.path.join(c, "d/s0/0/0/0"))
     paths = [a + "/d/s0/0/0/0", a + "/d/s0/1/0/0"]
-    assert scan_block_files(spark, a, "d/s0", 3, paths=paths).count() == 1
+    assert scan_block_files(spark, a, "d/s0", 3, paths=paths).to_df().count() == 1
 
 
 def test_n5_read_path_has_one_storage_client():
@@ -927,7 +929,7 @@ def test_reader_during_write_refused(spark):
     from n5_dask_spark.sources.n5.reader import scan_block_files
 
     with pytest.raises(ValueError, match="write-session marker"):
-        scan_block_files(spark, "file:" + c, "d/s0", 3).collect()
+        scan_block_files(spark, "file:" + c, "d/s0", 3).to_df().collect()
 
     # operator cleared the marker -> readable again (sparse fill for the
     # deleted 1/0/0 cell only: x 8:, y :8, z :4 of the 2x2x2 grid)

@@ -133,8 +133,8 @@ def test_scan_refusals_are_logged(spark, tmp_path, caplog):
 
 
 def test_fusion_fallbacks_are_logged_with_their_reason(spark, tmp_path, caplog):
-    """A consumer that falls back to the materialized blocks frame logs
-    one record naming why; a fused consumer logs none."""
+    """Each materialization logs one record naming why; a fused consumer
+    logs none."""
     from n5_dask_spark.sources.n5 import fuse
     from n5_dask_spark.sources.n5.reader import decoded_blocks
 
@@ -150,24 +150,36 @@ def test_fusion_fallbacks_are_logged_with_their_reason(spark, tmp_path, caplog):
         )
         return sorted(tuple(r) for r in df.collect())
 
-    def logged(blocks):
+    def logged(build):
         caplog.clear()
         with caplog.at_level(logging.DEBUG, logger=N5_LOG):
-            rows = consume(blocks)
+            rows = consume(build())
         return rows, _records(caplog, N5_LOG)
 
+    unfused = "blocks frame consumed unfused (materialized rows): "
     quiet = consume(decoded_blocks(spark, c, "d"))
     assert quiet == [(0, 32), (1, 64)]
-    assert logged(decoded_blocks(spark, c, "d")) == (quiet, [])
-    plain = decoded_blocks(spark, c, "d").filter("gx >= 0")
-    assert logged(plain) == (
-        quiet, ["blocks frame consumed unfused (materialized rows): the frame has no fusion metadata"]
+    # build the scans first: planning logs its own record on this logger
+    fused, direct, changed = (decoded_blocks(spark, c, "d") for _ in range(3))
+    assert logged(lambda: fused) == (quiet, [])
+    assert logged(direct.to_df) == (
+        quiet, [
+            "blocks pipeline materialized by .to_df()",
+            unfused + "the frame came from .to_df()",
+        ]
     )
-    persisted = decoded_blocks(spark, c, "d").persist()
+    assert logged(lambda: changed.to_df().filter("gx >= 0")) == (
+        quiet, [
+            "blocks pipeline materialized by .to_df()",
+            unfused + "the frame is not a block pipeline "
+            "(a foreign frame, or one changed by a DataFrame op)",
+        ]
+    )
+    persisted = decoded_blocks(spark, c, "d").to_df().persist()
     try:
         assert consume(persisted) == quiet
-        assert logged(persisted) == (
-            quiet, ["blocks frame consumed unfused (materialized rows): the frame is persisted"]
-        )
+        fuse.MATERIALIZATIONS.clear()
+        assert logged(lambda: persisted) == (quiet, [unfused + "the frame is persisted"])
+        assert sum(fuse.MATERIALIZATIONS.values()) == 0  # counted at .to_df()
     finally:
         persisted.unpersist()

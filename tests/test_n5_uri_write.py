@@ -149,7 +149,7 @@ def test_uri_duplicate_producer_refuses_and_leaves_marker(spark, tmp_path):
         write_blocks(blocks, uri, "d/s0", attrs)
     assert (tmp_path / "dup.n5/d/s0/.n5ds-incomplete").exists()
     with pytest.raises(Exception, match="n5ds-incomplete|mid-write|incomplete"):
-        scan_block_files(spark, uri, "d/s0", 3).collect()
+        scan_block_files(spark, uri, "d/s0", 3).to_df().collect()
 
 
 def test_uri_create_from_template(spark, tmp_path):

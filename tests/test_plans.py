@@ -214,7 +214,7 @@ def test_cc_star_round_has_no_join(spark):
 def test_fragment_shuffle_is_single_exchange(spark):
     """Rechunk and export_region share one shape: decode+fragment
     (mapInPandas, shuffle-free) -> ONE exchange on the target grid cell ->
-    reassemble (applyInPandas). Exactly one Exchange means every byte of
+    reassemble (applyInArrow). Exactly one Exchange means every byte of
     the volume moves once — a second exchange would double the shuffle
     volume of every regrid/export at scale."""
     import numpy as np
@@ -228,13 +228,13 @@ def test_fragment_shuffle_is_single_exchange(spark):
     src = temp_container()
     write_array(spark, arr, src, "a/s0", [8, 8, 8])
     blocks = decoded_blocks(spark, src, "a/s0")
-    plan = plan_of(blocks)
+    plan = plan_of(blocks.to_df())
     assert "Exchange" not in plan  # the block scan itself never shuffles
     re_blocks, _ = rechunk(blocks, read_attributes(src, "a/s0"), [5, 5, 5])
-    re_plan = plan_of(re_blocks)
+    re_plan = plan_of(re_blocks.to_df())
     # formatted plans list each node twice (tree + detail): count tree rows
     assert re_plan.count("+- Exchange") == 1
-    assert "FlatMapGroupsInPandas" in re_plan  # reassembly rides THAT exchange
+    assert "FlatMapGroupsInArrow" in re_plan  # reassembly rides THAT exchange
 
 
 def test_widen_is_conditional(spark):
@@ -363,7 +363,7 @@ def test_write_job_moves_block_data_through_one_exchange(spark):
         yield pd.DataFrame({"written": [n]})
 
     plan = (
-        re_blocks.mapInPandas(sink, schema="written long")
+        re_blocks.to_df().mapInPandas(sink, schema="written long")
         .agg(F.sum("written"))
         ._jdf.queryExecution()
         .executedPlan()

@@ -49,7 +49,7 @@ def test_write_blocks_idempotent_rerun(spark):
 
     first = digest()
     blocks = decoded_blocks(spark, c, "a/s0")
-    write_blocks(blocks.localCheckpoint(), c, "a/s0", read_attributes(c, "a/s0"))
+    write_blocks(blocks.to_df().localCheckpoint(), c, "a/s0", read_attributes(c, "a/s0"))
     assert digest() == first  # same paths, same bytes — overwrite, no temp junk
     assert not glob.glob(f"{c}/a/s0/**/.inprogress-*", recursive=True)
 
@@ -68,7 +68,7 @@ def test_write_blocks_refuses_duplicate_grid_cells(spark):
     arr = (rng.random((16, 8, 4)) * 255).astype("u1")
     c = temp_container()
     write_array(spark, arr, c, "a/s0", [8, 8, 4])
-    blocks = decoded_blocks(spark, c, "a/s0")
+    blocks = decoded_blocks(spark, c, "a/s0").to_df()
     doubled = blocks.unionByName(blocks).repartition(4).localCheckpoint()
     with pytest.raises(RuntimeError, match="duplicate block producers"):
         write_blocks(doubled, c, "a/s0", read_attributes(c, "a/s0"))
@@ -90,7 +90,7 @@ def test_write_blocks_guard_uses_path_key_not_all_coords(spark):
     arr = (rng.random((16, 8)) * 255).astype("u1")  # 2-D: paths are gx/gy
     c = temp_container()
     write_array(spark, arr, c, "a/s0", [8, 8])
-    blocks = decoded_blocks(spark, c, "a/s0")
+    blocks = decoded_blocks(spark, c, "a/s0").to_df()
     # same (gx, gy) emitted twice with distinct gz: same path, "distinct"
     # over (gx,gy,gz) — the exact hole the truncated count must close
     ghost = blocks.withColumn("gz", F.col("gz") + F.lit(1))
@@ -133,7 +133,7 @@ def test_fully_sparse_dataset_scans_empty(spark):
         c, "empty/s0",
         DatasetAttributes("uint8", [10, 10, 4], [4, 4, 4], {"type": "raw"}),
     )
-    assert scan_block_files(spark, c, "empty/s0").count() == 0
+    assert scan_block_files(spark, c, "empty/s0").to_df().count() == 0
     assert block_stats(spark, c, "empty/s0").count() == 0
     reg = read_region(spark, c, "empty/s0", [0, 0, 0], [10, 10, 4])
     assert reg.shape == (10, 10, 4) and (reg == 0).all()
@@ -212,7 +212,7 @@ def test_2d_dataset_block_operators(spark):
     arr = np.arange(48, dtype="u1").reshape(8, 6).T  # xyz = (6, 8)
     c = temp_container()
     write_array(spark, np.ascontiguousarray(arr), c, "img/s0", [4, 4])
-    rows = decoded_blocks(spark, c, "img/s0").collect()
+    rows = decoded_blocks(spark, c, "img/s0").to_df().collect()
     assert len(rows) == 4  # 2x2 grid
     assert all(r["gz"] == 0 for r in rows)
     st = block_stats(spark, c, "img/s0").collect()

@@ -59,7 +59,7 @@ def test_building_a_block_scan_starts_no_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert _jobs(spark, "n5ds-build-scan") == []
-    rows = scan.collect()
+    rows = scan.to_df().collect()
     assert [(r.gx, r.length) for r in rows] == [(gx, 32) for gx in range(40)]
     assert rows[7].path == os.path.join(c, "d/s0", "7", "0", "0")
     assert sorted((r.gx, r.vmax) for r in stats.collect()) == [(gx, gx) for gx in range(40)]
@@ -76,7 +76,7 @@ def test_building_a_series_scan_starts_no_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert _jobs(spark, "n5ds-build-series") == []
-    rows = sorted(scan.collect())
+    rows = sorted(scan.to_df().collect())
     assert [r.z for r in rows] == list(range(40))
     assert rows[3].path == os.path.join(src, "s003.tif")
 

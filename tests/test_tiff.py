@@ -206,7 +206,7 @@ def test_tif_series_zero_byte_and_corrupt_slices_fail_loudly(spark):
         write_tiff(os.path.join(src, f"s{z:03d}.tif"), np.full((4, 6), z + 1, np.uint8))
     open(os.path.join(src, "s002.tif"), "wb").close()  # truncate to empty
     with pytest.raises(ValueError, match="zero-byte .tif slice"):
-        tif_series_scan(spark, src).collect()
+        tif_series_scan(spark, src).to_df().collect()
     with pytest.raises(ValueError, match="zero-byte .tif slice"):
         tif_series_to_n5(spark, src, temp_container(), "a/s0", [6, 4, 4])
 
@@ -236,7 +236,6 @@ def test_series_scan_with_hostile_filenames(spark):
     kernel open()s them, with no URI encoding on the way. The scan once
     joined on the path column of Spark's binaryFile source, whose
     encoding Spark decides."""
-    from n5_dask_spark.sources.n5.reader import scan_source
     from n5_dask_spark.sources.tiff import read_slice, tif_series_scan, write_tiff
 
     src = tmpdir()
@@ -244,10 +243,10 @@ def test_series_scan_with_hostile_filenames(spark):
     for i, nm in enumerate(names):
         write_tiff(os.path.join(src, nm), np.full((4, 4), i, np.uint8))
     scan = tif_series_scan(spark, src)
-    rows = scan.collect()
+    rows = scan.to_df().collect()
     assert sorted(r["z"] for r in rows) == [0, 1, 2]
     assert sorted(os.path.basename(r["path"]) for r in rows) == sorted(names)
-    ids, plan = scan_source(scan)
+    plan = scan.plan
 
     def sizes(batches):
         import pandas as pd
@@ -257,7 +256,7 @@ def test_series_scan_with_hostile_filenames(spark):
             columns=["z", "n"],
         )
 
-    read = sorted(tuple(r) for r in ids.mapInPandas(sizes, "z int, n long").collect())
+    read = sorted(tuple(r) for r in scan.ids().mapInPandas(sizes, "z int, n long").collect())
     assert read == [(z, os.path.getsize(os.path.join(src, nm))) for z, nm in enumerate(names)]
 
 
@@ -291,7 +290,7 @@ def test_series_scan_refuses_mid_write(spark):
     with pytest.raises(ValueError, match="write-session marker"):
         tif_series_scan(spark, out_dir)
     os.unlink(marker)  # the documented escape hatch: partial IS compacted
-    assert tif_series_scan(spark, out_dir).count() == 2
+    assert tif_series_scan(spark, out_dir).to_df().count() == 2
 
 
 def test_series_sink_claims_marker_and_refuses_second_writer(spark):
@@ -311,4 +310,4 @@ def test_series_sink_claims_marker_and_refuses_second_writer(spark):
     os.unlink(marker)
     assert n5_to_tif_series(spark, FIXTURE, FIXTURE_DS, out_dir) == 27
     assert not os.path.exists(marker)  # released: series visible
-    assert tif_series_scan(spark, out_dir).count() == 27
+    assert tif_series_scan(spark, out_dir).to_df().count() == 27

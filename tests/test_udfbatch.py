@@ -40,7 +40,8 @@ def _payload_rows(sizes):
 def test_bounded_frames_packs_to_budget():
     rows = _payload_rows([10] * 10)  # 100 payload bytes
     frames = list(bounded_frames(iter(rows), ["i", "data"], lambda r: len(r[1]), budget=30))
-    # cut when acc >= budget: 3 rows/frame (30 bytes), last frame the remainder
+    # cut before a row would pass the budget: 3 rows/frame (30 bytes), last
+    # frame the remainder
     assert [len(f) for f in frames] == [3, 3, 3, 1]
     # order preserved, nothing dropped
     cat = pd.concat(frames, ignore_index=True)
@@ -51,9 +52,10 @@ def test_bounded_frames_packs_to_budget():
 def test_bounded_frames_oversized_row_ships_alone():
     rows = _payload_rows([5, 1000, 5])
     frames = list(bounded_frames(iter(rows), ["i", "data"], lambda r: len(r[1]), budget=100))
-    # row 0 alone doesn't reach the budget; row 1 tips the frame over; row 2
-    # remains for the tail frame — no frame ever waits on an oversized row
-    assert [len(f) for f in frames] == [2, 1]
+    # row 1 would take row 0's frame past the budget, so it ships alone and
+    # row 2 starts the tail frame: no frame ever holds an oversized row
+    # beside another row
+    assert [len(f) for f in frames] == [1, 1, 1]
     assert list(pd.concat(frames)["i"]) == [0, 1, 2]
 
 
@@ -76,8 +78,8 @@ def test_out_batch_bytes_env(monkeypatch):
 def test_fragment_kernel_framing_is_value_invariant(monkeypatch):
     """The (fused, r15) decode+fragment kernel under a tiny budget: more
     frames, same rows. Driver-side direct call, so the env monkeypatch
-    reaches it. Composed exactly as fuse.consume_block_rows composes the
-    fallback path: standard-row decode -> per-block fragment rows ->
+    reaches it. Composed exactly as fuse.consume_block_rows composes a
+    plain blocks frame: standard-row decode -> per-block fragment rows ->
     bounded output framing."""
     from n5_dask_spark.sources.n5 import fuse
     from n5_dask_spark.sources.n5.transforms import FRAGMENT_COLUMNS, _fragment_rows_fn
@@ -89,7 +91,7 @@ def test_fragment_kernel_framing_is_value_invariant(monkeypatch):
         columns=["gx", "gy", "gz", "shape_zyx", "data"],
     )
     block_frags = _fragment_rows_fn(3, [4, 4, 4], [0, 0, 0], [4, 4, 4], [2, 2, 2])
-    blocks_fn = fuse._fallback_blocks_fn(np.dtype("uint8"))
+    blocks_fn = fuse.decode_block_rows(np.dtype("uint8"))
 
     def kernel(batches):
         rows = (row for blk in blocks_fn(batches) for row in block_frags(*blk))
@@ -101,10 +103,61 @@ def test_fragment_kernel_framing_is_value_invariant(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_UDF_OUT_BATCH_BYTES", "16")
     many = list(kernel(iter([pdf.copy()])))
-    assert len(many) == 4  # 8 bytes/row, cut at >=16 -> 2 rows/frame
+    assert len(many) == 4  # 8 bytes/row, at most 16 bytes -> 2 rows/frame
     pd.testing.assert_frame_equal(
         pd.concat(many, ignore_index=True), one[0].reset_index(drop=True)
     )
+
+
+def test_grouped_kernel_output_is_byte_bounded(monkeypatch):
+    """The post-shuffle applyInArrow kernel returns its rows as record
+    batches of at most out_batch_bytes() payload bytes each: a tiny budget
+    gives several batches, none past it, and the same rows. Driver-side
+    direct call on one target cell whose two fragments arrive as two
+    Arrow chunks; the consumer re-fragments the assembled block."""
+    import pyarrow as pa
+
+    from n5_dask_spark.sources.n5 import fuse
+    from n5_dask_spark.sources.n5.metadata import DatasetAttributes
+    from n5_dask_spark.sources.n5.transforms import _assemble_block_fn, _fragment_rows_fn
+
+    arr = np.arange(64, dtype=np.uint8).reshape(4, 4, 4)  # zyx
+    schema = pa.schema([
+        ("tgx", pa.int32()), ("tgy", pa.int32()), ("tgz", pa.int32()),
+        ("off_zyx", pa.list_(pa.int32())), ("shape_zyx", pa.list_(pa.int32())),
+        ("data", pa.binary()),
+    ])
+    halves = [
+        pa.RecordBatch.from_pylist(
+            [dict(tgx=0, tgy=0, tgz=0, off_zyx=[z, 0, 0], shape_zyx=[2, 4, 4],
+                  data=arr[z:z + 2].tobytes())],
+            schema=schema,
+        )
+        for z in (0, 2)
+    ]
+    table = pa.Table.from_batches(halves)
+    assemble = _assemble_block_fn(
+        DatasetAttributes("uint8", [4, 4, 4], [4, 4, 4], {"type": "raw"}), np.dtype("uint8")
+    )
+    refrag = _fragment_rows_fn(3, [4, 4, 4], [0, 0, 0], [4, 4, 4], [2, 2, 2])
+    kernel = fuse.grouped_kernel(assemble, (), refrag, schema, lambda r: len(r[5]))
+    key = tuple(pa.scalar(0, pa.int32()) for _ in range(3))
+
+    monkeypatch.setenv("SPARK_GRAFT_UDF_OUT_BATCH_BYTES", "20")
+    small = kernel(key, table).to_batches()
+    assert len(small) > 1
+    assert all(sum(len(d) for d in b.column("data").to_pylist()) <= 20 for b in small)
+
+    monkeypatch.delenv("SPARK_GRAFT_UDF_OUT_BATCH_BYTES")
+    whole = kernel(key, table).to_batches()
+    assert len(whole) == 1 and whole[0].num_rows == 8  # 8 fragments of 8 bytes
+    assert [r for b in small for r in b.to_pylist()] == whole[0].to_pylist()
+    out = np.zeros_like(arr)
+    for r in whole[0].to_pylist():
+        sel = tuple(slice(2 * t + o, 2 * t + o + s) for t, o, s in zip(
+            (r["tgz"], r["tgy"], r["tgx"]), r["off_zyx"], r["shape_zyx"]))
+        out[sel] = np.frombuffer(r["data"], np.uint8).reshape(r["shape_zyx"])
+    np.testing.assert_array_equal(out, arr)
 
 
 def test_input_side_byte_bound_active(spark):

@@ -74,7 +74,7 @@ def plan_summary(txt: str) -> dict:
         "sorts": len(re.findall(r"^\s*[:+\-*( ]*Sort\b", txt, re.M)),
         "joins": sorted(set(re.findall(r"(\w*Join\w*)", txt.split("===")[0]))),
         "python": sorted(
-            set(re.findall(r"(BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas)", txt))
+            set(re.findall(r"(BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|FlatMapGroupsInArrow)", txt))
         ),
         "pushed_filters": len(re.findall(r"PushedFilters: \[[^\]]", txt)),
     }

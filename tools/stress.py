@@ -414,11 +414,12 @@ def n5_grid_stress(
 
     # shuffle-balance evidence: blocks per shuffle partition of the
     # reassembled output — a hot partition here is what would stall a
-    # 1000-executor rechunk. (Second pass over the same plan, unmaterialized.)
+    # 1000-executor rechunk. (Second pass over the same pipeline, run
+    # again through its .to_df() rows.)
     t0 = time.perf_counter()
     pc = [
         r["n"]
-        for r in re_blocks.groupBy(F.spark_partition_id().alias("pid"))
+        for r in re_blocks.to_df().groupBy(F.spark_partition_id().alias("pid"))
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     ]
@@ -452,7 +453,6 @@ def tiff_series_stress(spark, base: str, n_z: int = 256, wh=(1024, 1024)) -> dic
     import numpy as np
     import pandas as pd
 
-    from n5_dask_spark.sources.n5.reader import scan_source
     from n5_dask_spark.sources.tiff import (
         decode_tiff,
         n5_to_tif_series,
@@ -510,7 +510,8 @@ def tiff_series_stress(spark, base: str, n_z: int = 256, wh=(1024, 1024)) -> dic
     def slice_md5(dirpath, alias):
         # the scan's z is the slice's position in its series; both series
         # number their files 0..n_z-1, so positions pair slice by slice
-        ids, plan = scan_source(tif_series_scan(spark, dirpath))
+        scan = tif_series_scan(spark, dirpath)
+        plan = scan.plan
 
         def digest(batches):
             zs, hs = [], []
@@ -519,7 +520,7 @@ def tiff_series_stress(spark, base: str, n_z: int = 256, wh=(1024, 1024)) -> dic
                 hs.append(hashlib.md5(decode_tiff(raw).tobytes()).hexdigest())
             yield pd.DataFrame({"z": zs, alias: hs})
 
-        return ids.mapInPandas(digest, f"z int, {alias} string")
+        return scan.ids().mapInPandas(digest, f"z int, {alias} string")
 
     t0 = time.perf_counter()
     joined = slice_md5(src_dir, "h_src").join(slice_md5(exp_dir, "h_exp"), "z", "full_outer")
