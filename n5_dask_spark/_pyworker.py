@@ -10,10 +10,18 @@ over the Spark core jar and two over the py4j zip, so each task spent
 arrived. :func:`install` makes the re-read conditional on the archive having
 changed on disk, so a zip rewritten in place (the package zip shipped by
 ``session.ensure_package_on_executors``) is still re-read.
+
+After every task a reused worker forked by ``pyspark.daemon`` also runs
+``gc.collect()``, a full collection over every object the worker holds,
+the modules of numpy, pandas, pyarrow and pyspark included: tens of
+milliseconds per task. :func:`install` imports those libraries and then
+freezes the heap (``gc.freeze()``), so the per-task collection scans only
+what the tasks themselves allocate.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -43,3 +51,8 @@ def in_pyspark_worker() -> bool:
 
 def install() -> None:
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+    gc.freeze()

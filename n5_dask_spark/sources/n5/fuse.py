@@ -69,6 +69,7 @@ slice shape and dtype probes) lives inside the composed ``read`` and
 
 from __future__ import annotations
 
+import functools
 import logging
 import weakref
 from collections import Counter
@@ -80,6 +81,7 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from n5_dask_spark.udfbatch import bounded_batches, bounded_frames
 
@@ -185,6 +187,16 @@ def transform_blocks(
     return replace(p, stages=(*p.stages, block_map))
 
 
+@functools.lru_cache(maxsize=64)
+def schema_struct(ddl: str) -> StructType:
+    """``ddl`` parsed once per process. Parsing goes through the JVM
+    (py4j), and the terminals pass the same few constant strings on every
+    call; the parsed ``StructType`` depends on the string alone."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    return _parse_datatype_string(ddl)
+
+
 def grouped_kernel(assemble, stages, block_rows, schema: pa.Schema, row_bytes):
     """The applyInArrow kernel of a grouped terminal: assemble one cell,
     run the stages, and return ``block_rows``' rows as byte-bounded
@@ -218,15 +230,15 @@ def consume_block_rows(
     node (``row_bytes`` gives a row's payload; 64 bytes per row when
     omitted): pandas frames on the map side, Arrow record batches of at
     most the budget on the grouped side. Row order per partition/group is
-    the block iteration order."""
+    the block iteration order. ``schema`` is a DDL string, parsed once per
+    process (:func:`schema_struct`)."""
     rb = row_bytes if row_bytes is not None else (lambda r: 64)
     p = pipeline_of(blocks, dt)
     read, stages = p.read, p.stages
+    struct = schema_struct(schema)
     if p.key_cols is not None:
         from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string
 
-        struct = _parse_datatype_string(schema)
         kernel = grouped_kernel(read, stages, block_rows, to_arrow_schema(struct), rb)
         return p.source().groupBy(*p.key_cols).applyInArrow(kernel, schema=struct)
 
@@ -239,4 +251,4 @@ def consume_block_rows(
 
         yield from bounded_frames(rows(), columns, rb)
 
-    return p.source().mapInPandas(kernel, schema=schema)
+    return p.source().mapInPandas(kernel, schema=struct)

@@ -211,10 +211,13 @@ def write_blocks(
 
     The uniqueness contract is GUARDED, not assumed: the sink emits the
     grid coords it wrote (3 ints per block — negligible next to the block
-    bytes), and the same job's aggregate compares the write count against
-    countDistinct(gx,gy,gz). A producer emitting the same cell from two
-    partitions (nondeterministic last-writer-wins contents) fails loudly
-    instead of shipping whichever write landed second. For grouped
+    bytes), its own action collects them to the driver as Arrow
+    (``toArrow``), and the driver compares the write count against the
+    number of distinct path keys (coords[:ndim]) with numpy. The check
+    adds no Spark stage or job to the write and holds 12 bytes per
+    written block on the driver. A producer emitting the same cell from
+    two partitions (nondeterministic last-writer-wins contents) fails
+    loudly instead of shipping whichever write landed second. For grouped
     producers the guard is trivially green (groupBy keys are unique by
     construction); for every other producer it is the real check.
 
@@ -256,20 +259,15 @@ def write_blocks(
 
     written_coords = consume_block_rows(
         blocks, np_dtype(data_type), write_one, ["gx", "gy", "gz"], "gx int, gy int, gz int"
+    ).toArrow()
+    # distinct over only the first ndim coords — the file path is built
+    # from coords[:ndim], so for a 2-D dataset two rows that differ only in
+    # gz collide on the SAME path and must count as ONE cell (a real
+    # last-writer-wins collision), not two.
+    path_keys = np.column_stack(
+        [written_coords.column(c).to_numpy() for c in ("gx", "gy", "gz")[:ndim]]
     )
-    counts = (
-        written_coords
-        .agg(
-            F.count(F.lit(1)).alias("written"),
-            # distinct over only the first ndim coords — the file path is
-            # built from coords[:ndim], so for a 2-D dataset two rows that
-            # differ only in gz collide on the SAME path and must count as
-            # ONE cell (a real last-writer-wins collision), not two.
-            F.count_distinct(*("gx", "gy", "gz")[:ndim]).alias("cells"),
-        )
-        .collect()
-    )
-    written, cells = counts[0][0] or 0, counts[0][1] or 0
+    written, cells = len(path_keys), len(np.unique(path_keys, axis=0))
     if written != cells:
         raise RuntimeError(
             f"duplicate block producers: {written} writes covered only "

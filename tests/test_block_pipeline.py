@@ -4,7 +4,8 @@ Producers (scans, decoded_blocks, rechunk, downsample, the TIFF slice
 source) return immutable values and build no Python node; the terminal
 that consumes them builds exactly one DataFrame per Python node it runs.
 The counts below are the Python-node DataFrames each op builds, found by
-counting calls of the four PySpark entry points that create one.
+counting calls of the four PySpark entry points that create one, and the
+stages a write runs, read from Spark's status tracker.
 """
 
 from __future__ import annotations
@@ -137,3 +138,45 @@ def test_block_stats_builds_one_node(spark, tmp_path, builds):
     assert sorted((r.gx, r.vsum) for r in df.collect()) == [
         (0, float(arr[:8].sum())), (1, float(arr[8:].sum()))
     ]
+
+
+def _stages_that_ran(spark, group: str) -> int:
+    """Stages with completed tasks over every job of ``group`` (a stage a
+    later job reuses shows there as a skipped stage with none)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    return sum(
+        tracker.getStageInfo(sid).numCompletedTasks > 0
+        for job in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(job).stageIds
+    )
+
+
+def test_writes_run_only_their_own_stages(spark, tmp_path):
+    """The duplicate-producer guard runs on the driver over the rows the
+    sink returns, so a write adds no stage of its own: a grouped write
+    runs the fragment map and the assembler+sink, a map write runs one
+    stage."""
+    from n5_dask_spark.sources.n5.reader import decoded_blocks, read_full
+    from n5_dask_spark.sources.n5.transforms import rechunk
+    from n5_dask_spark.sources.n5.writer import write_array, write_blocks
+
+    arr = (np.arange(24 * 20 * 16) % 251).astype(np.uint8).reshape(24, 20, 16)
+    c = str(tmp_path / "w.n5")
+    sc = spark.sparkContext
+    sc.setJobGroup("n5ds-write-array", "write_array")
+    try:
+        attrs = write_array(spark, arr, c, "a/s0", [8, 8, 8])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _stages_that_ran(spark, "n5ds-write-array") == 1
+
+    out, out_attrs = rechunk(decoded_blocks(spark, c, "a/s0"), attrs, [5, 6, 7])
+    sc.setJobGroup("n5ds-write-rechunk", "rechunk -> write_blocks")
+    try:
+        write_blocks(out, c, "a/s1", out_attrs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _stages_that_ran(spark, "n5ds-write-rechunk") == 2
+    np.testing.assert_array_equal(read_full(spark, c, "a/s1"), arr)

@@ -1,8 +1,10 @@
 """The Python-worker set-up (n5_dask_spark/_pyworker.py): reused workers
-re-read a zip archive's directory only when the archive changed."""
+re-read a zip archive's directory only when the archive changed, and
+freeze their heap once the libraries every kernel uses are imported."""
 
 from __future__ import annotations
 
+import gc
 import importlib
 import sys
 import zipfile
@@ -37,6 +39,29 @@ def test_gate_is_installed_in_workers_not_on_the_driver(spark):
     assert zipimport.zipimporter.invalidate_caches is _pyworker._read_directory
 
 
+def test_worker_heap_is_frozen_not_the_drivers(spark):
+    from n5_dask_spark.session import ensure_package_on_executors
+
+    ensure_package_on_executors(spark)
+    driver_frozen = gc.get_freeze_count()
+
+    def kernel(batches):
+        import gc
+
+        import n5_dask_spark  # noqa: F401  (a kernel's unpickling imports it)
+
+        for pdf in batches:
+            yield pdf.assign(frozen=gc.get_freeze_count())
+
+    rows = (
+        spark.range(0, 8, 1, 4)
+        .mapInPandas(kernel, "id long, frozen long")
+        .collect()
+    )
+    assert len(rows) == 8 and all(r.frozen > 0 for r in rows)
+    assert gc.get_freeze_count() == driver_frozen
+
+
 @pytest.fixture
 def gated(monkeypatch):
     """Install the gate for one test (monkeypatch restores Python's method)
@@ -52,6 +77,7 @@ def gated(monkeypatch):
         zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
     )
     monkeypatch.setattr(_pyworker, "_read_directory", counting)
+    monkeypatch.setattr(gc, "freeze", lambda: None)  # the test process stays unfrozen
     _pyworker.install()
     return reads
 

@@ -99,6 +99,26 @@ def test_write_blocks_guard_uses_path_key_not_all_coords(spark):
         write_blocks(collided, c, "a/s0", read_attributes(c, "a/s0"))
 
 
+def test_write_blocks_of_no_blocks_writes_attributes_and_releases(spark, tmp_path):
+    """An empty blocks frame is a legal (all fill value) write: the
+    attributes land, the guard sees zero writes over zero cells, and the
+    marker is released."""
+    from n5_dask_spark.sources.n5.fuse import BLOCK_SCHEMA_DDL
+    from n5_dask_spark.sources.n5.metadata import INCOMPLETE_MARKER, DatasetAttributes
+    from n5_dask_spark.sources.n5.metadata import read_attributes
+    from n5_dask_spark.sources.n5.reader import read_full
+    from n5_dask_spark.sources.n5.writer import write_blocks
+
+    c = str(tmp_path / "empty.n5")
+    attrs = DatasetAttributes(data_type="uint16", dimensions=[8, 6, 4], block_size=[4, 4, 4])
+    write_blocks(spark.createDataFrame([], BLOCK_SCHEMA_DDL), c, "a/s0", attrs)
+    assert read_attributes(c, "a/s0").dimensions == [8, 6, 4]
+    assert not (tmp_path / "empty.n5/a/s0" / INCOMPLETE_MARKER).exists()
+    np.testing.assert_array_equal(
+        read_full(spark, c, "a/s0"), np.zeros((8, 6, 4), dtype=np.uint16)
+    )
+
+
 def test_empty_tif_dir_errors(spark):
     import tempfile
 
