@@ -114,33 +114,28 @@ def n5_rechunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def n5_intensity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
 
+    from n5_dask_spark.sources.n5 import fuse
     from n5_dask_spark.sources.n5.metadata import read_attributes
-    from n5_dask_spark.sources.n5.reader import scan_block_files
-    from n5_dask_spark.sources.n5.codec import decode_block_at
+    from n5_dask_spark.sources.n5.reader import decoded_blocks
 
-    attrs = read_attributes(FIXTURE, FIXTURE_DS)
-    data_type, compression = attrs.data_type, dict(attrs.compression)
+    data_type = read_attributes(FIXTURE, FIXTURE_DS).data_type
     if data_type != "uint8":
         raise ValueError(f"histogram binning (>>4, 16 bins) assumes uint8, got {data_type}")
     n_bins = 16  # uint8 -> 16 bins of width 16
-    scan = scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
-    plan = scan.plan
 
-    def partial_hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = np.zeros(n_bins, dtype="int64")
-        for p, _grid, raw in plan.read(batches):
-            a = decode_block_at(raw, data_type, compression, p)
-            acc += np.bincount(a.ravel() >> 4, minlength=n_bins)[:n_bins]
-        yield pd.DataFrame({"bin": np.arange(n_bins, dtype="int32"), "n_voxels": acc})
+    def hist_rows(gx: int, gy: int, gz: int, a: np.ndarray):
+        counts = np.bincount(a.ravel() >> 4, minlength=n_bins)
+        for b in np.flatnonzero(counts):
+            yield (int(b), int(counts[b]))
 
     return (
-        scan.ids().mapInPandas(partial_hist, schema="bin int, n_voxels long")
+        fuse.consume_block_rows(
+            decoded_blocks(spark, FIXTURE, FIXTURE_DS), None, hist_rows,
+            ["bin", "n_voxels"], "bin int, n_voxels long",
+        )
         .groupBy("bin")
         .agg(F.sum("n_voxels").alias("n_voxels"))
-        .filter(F.col("n_voxels") > 0)
         .orderBy("bin")
     )
 
@@ -156,31 +151,24 @@ def n5_intensity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def n5_zprofile(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
 
+    from n5_dask_spark.sources.n5 import fuse
     from n5_dask_spark.sources.n5.metadata import read_attributes
-    from n5_dask_spark.sources.n5.reader import scan_block_files
-    from n5_dask_spark.sources.n5.codec import decode_block_at
+    from n5_dask_spark.sources.n5.reader import decoded_blocks
 
-    attrs = read_attributes(FIXTURE, FIXTURE_DS)
-    data_type, compression = attrs.data_type, dict(attrs.compression)
-    bz = attrs.block_size[2]
-    scan = scan_block_files(spark, FIXTURE, FIXTURE_DS, grid_shape=attrs.grid_shape)
-    plan = scan.plan
+    bz = read_attributes(FIXTURE, FIXTURE_DS).block_size[2]
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for p, (_gx, _gy, gz), raw in plan.read(batches):
-            a = decode_block_at(raw, data_type, compression, p)
-            sums = a.sum(axis=(1, 2), dtype="f8")  # f8: exact for ints, no truncation for floats
-            counts = a.shape[1] * a.shape[2]
-            for dz in range(a.shape[0]):
-                rows.append((gz * bz + dz, float(sums[dz]), counts))
-        yield pd.DataFrame(rows, columns=["z", "vsum", "n"])
+    def z_rows(gx: int, gy: int, gz: int, a: np.ndarray):
+        sums = a.sum(axis=(1, 2), dtype="f8")  # f8: exact for ints, no truncation for floats
+        n = a.shape[1] * a.shape[2]
+        for dz in range(a.shape[0]):
+            yield (gz * bz + dz, float(sums[dz]), n)
 
     return (
-        scan.ids().mapInPandas(partial, schema="z int, vsum double, n long")
+        fuse.consume_block_rows(
+            decoded_blocks(spark, FIXTURE, FIXTURE_DS), None, z_rows,
+            ["z", "vsum", "n"], "z int, vsum double, n long",
+        )
         .groupBy("z")
         .agg((F.sum("vsum") / F.sum("n")).alias("mean_intensity"), F.sum("n").alias("n_voxels"))
         .orderBy("z")

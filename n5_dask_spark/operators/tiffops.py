@@ -153,6 +153,7 @@ def _build_ome_tiff(spark: SparkSession, sf_dir: str) -> str:
     The page assembly is a driver-side fixture build (the volume is a
     fixed 64 KiB regardless of sf); the IMPORT path being verified is the
     fully distributed ome_tif_to_n5."""
+    from n5_dask_spark.sources.n5.metadata import atomic_publish
     from n5_dask_spark.sources.tiff import encode_tiff_pages
 
     path = _series_root(sf_dir) + "-ome.tif"
@@ -169,11 +170,8 @@ def _build_ome_tiff(spark: SparkSession, sf_dir: str) -> str:
         pages.append(255 - vol[z])  # c1
     buf = encode_tiff_pages(pages, description=_OME_XML.format(z=VOL))
     # atomic publish: the _STAGED exists() guard must never see a
-    # partially written file from a concurrent stager
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(buf)
-    os.replace(tmp, path)
+    # partially written file, and two concurrent stagers never share a temp
+    atomic_publish(path, buf)
     _STAGED.add(path)
     return path
 

@@ -233,35 +233,44 @@ class N5Reader(DataSourceReader):
         return parts
 
     def read(self, partition: N5BlockPartition) -> Iterator[tuple]:
-        from n5_dask_spark.sources.n5.codec import decode_block_at
-        from n5_dask_spark.sources.n5.reader import check_block_shape, read_block_file
+        from n5_dask_spark.sources.n5.reader import decode_cell, read_block_file
 
         attrs = self._get_attrs()
         for path, grid in partition.blocks:
             raw = read_block_file(path)
             if raw is None:
                 continue  # block sparsified after planning -> fill-value (no row)
-            arr = check_block_shape(
-                decode_block_at(raw, attrs.data_type, attrs.compression, path),
-                grid,
-                attrs,
-                path,
-            )
+            arr = decode_cell(raw, grid, attrs, path)
             g = list(grid) + [0] * (3 - len(grid))
             yield (g[0], g[1], g[2], list(arr.shape), arr.tobytes())
+
+
+@dataclass
+class N5CommitMessage(WriterCommitMessage):
+    """The ``(gx, gy, gz)`` of every block one write task published."""
+
+    coords: list[tuple[int, int, int]]
 
 
 class N5Writer(DataSourceWriter):
     """Sink for a blocks DataFrame (gx, gy, gz, shape_zyx, data) via
     ``df.write.format("n5")``. The dataset's attributes.json must exist
-    (created via metadata.write_attributes / writer.create_from_template) —
-    the writer is data-plane only; each task writes its rows' block files
-    atomically (temp + rename, same retry-idempotence as writer.write_blocks).
-    """
+    (created via metadata.write_attributes / writer.create_from_template).
+
+    It is ``writer.write_blocks`` over rows: the driver reads the
+    attributes and claims the write-session marker once, here; each task
+    runs ``writer.block_sink`` per row (encode, atomic publish, chaos hook)
+    and returns the coordinates it wrote; :meth:`commit` runs the same
+    duplicate-producer and grid-size guard (``writer.commit_dataset_write``)
+    and releases the marker only if it passes. A failed or refused job
+    leaves the marker, so the incomplete dataset stays loud."""
 
     REQUIRED = ("gx", "gy", "gz", "shape_zyx", "data")
 
     def __init__(self, options: dict, columns: list[str]):
+        from n5_dask_spark.sources.n5.metadata import read_attributes
+        from n5_dask_spark.sources.n5.writer import claim_dataset_write
+
         self.container = options.get("path")
         self.dataset = options.get("dataset")
         if not self.container or not self.dataset:
@@ -269,57 +278,34 @@ class N5Writer(DataSourceWriter):
         missing = [c for c in self.REQUIRED if c not in columns]
         if missing:
             raise ValueError(f"n5 sink input is missing columns {missing}; need {self.REQUIRED}")
-        self.columns = list(columns)
-        # write-session marker (r11): __init__ runs driver-side exactly
-        # once per write job (executors get this instance by pickle, which
-        # does not re-run __init__), so the claim/commit pair brackets the
-        # whole job like writer.write_blocks' marker does
-        from n5_dask_spark.sources.n5.writer import claim_dataset_write
-
+        # __init__ runs on the driver once per write job; tasks get this
+        # instance by pickle, attributes and marker included
+        self.attrs = read_attributes(self.container, self.dataset)
         self._marker = claim_dataset_write(self.container, self.dataset)
 
-    def commit(self, messages) -> None:
-        from n5_dask_spark.sources.n5.writer import release_dataset_write
+    def write(self, rows) -> N5CommitMessage:
+        import numpy as np
 
-        release_dataset_write(self._marker)
+        from n5_dask_spark.sources.n5.codec import np_dtype
+        from n5_dask_spark.sources.n5.writer import block_sink
+
+        sink = block_sink(self.container, self.dataset, self.attrs)
+        dt = np_dtype(self.attrs.data_type)
+        coords = []
+        for row in rows:
+            arr = np.frombuffer(bytes(row["data"]), dtype=dt).reshape(list(row["shape_zyx"]))
+            coords.extend(sink(row["gx"], row["gy"], row["gz"], arr))
+        return N5CommitMessage(coords)
+
+    def commit(self, messages) -> None:
+        from n5_dask_spark.sources.n5.writer import commit_dataset_write
+
+        coords = [c for m in messages for c in m.coords]
+        commit_dataset_write(self._marker, coords, self.attrs)
 
     def abort(self, messages) -> None:
         # leave the marker: the dataset is incomplete and must stay loud
         pass
-
-    def write(self, rows) -> WriterCommitMessage:
-        import numpy as np
-
-        from n5_dask_spark.sources.n5.codec import encode_block, np_dtype
-        from n5_dask_spark.sources.n5.metadata import is_uri, read_attributes
-        from n5_dask_spark.sources.n5.writer import _atomic_write
-
-        # URI containers (r13 write lift): attributes read falls back to
-        # fsio (no active session in a write task) and blocks publish
-        # through the per-scheme commit protocol — same dispatch as
-        # writer.write_blocks' sink
-        container_is_uri = is_uri(self.container)
-        if container_is_uri:
-            from n5_dask_spark.sources.n5 import fsio
-        attrs = read_attributes(self.container, self.dataset)
-        dt = np_dtype(attrs.data_type)
-        idx = {c: i for i, c in enumerate(self.columns)}
-        n = 0
-        for row in rows:
-            shape = list(row[idx["shape_zyx"]])
-            arr = np.frombuffer(bytes(row[idx["data"]]), dtype=dt).reshape(shape)
-            coords = tuple(int(row[idx[c]]) for c in ("gx", "gy", "gz")[: attrs.ndim])
-            payload = encode_block(arr, attrs.data_type, dict(attrs.compression))
-            if container_is_uri:
-                fsio.publish_file(
-                    "/".join([self.container, self.dataset, *map(str, coords)]), payload
-                )
-            else:
-                _atomic_write(
-                    os.path.join(self.container, self.dataset, *map(str, coords)), payload
-                )
-            n += 1
-        return WriterCommitMessage()
 
 
 def register_n5_source(spark) -> type[N5DataSource]:

@@ -26,10 +26,10 @@ only in the terminal that runs them:
 
 Producers (``decoded_blocks``, ``transform_blocks``, ``rechunk``,
 ``downsample``, ``cast_blocks``, the ``write_array`` and TIFF slice
-sources, ``export_region``) build no Spark node at all. Terminals
-(:func:`consume_block_rows`, ``writer.write_blocks``, ``reader.block_stats``
-and the kernels of ``n5ops``/``tiffops``) build exactly one DataFrame per
-Python node that runs. ``.to_df()`` is the one explicit materialization
+sources, ``export_region``) build no Spark node at all. Terminals build
+exactly one DataFrame per Python node that runs: :func:`consume_block_rows`
+and its callers (``writer.write_blocks``, ``reader.block_stats``, the
+``n5ops`` kernels), and the ``tiffops`` kernels over a ``reader.Scan``. ``.to_df()`` is the one explicit materialization
 into standard (gx, gy, gz, shape_zyx, data) rows.
 
 Every terminal also accepts a plain blocks DataFrame (a ``.to_df()``
@@ -62,9 +62,12 @@ per task and yields byte-bounded pandas frames
 (``udfbatch.bounded_frames``); moving them to ``mapInArrow`` rewrites
 every map kernel and is its own measured step.
 
-Every per-block integrity guard (check_block_shape, codec error naming,
-slice shape and dtype probes) lives inside the composed ``read`` and
-``stages``, so fused and unfused plans run the same per-block checks.
+Every per-block integrity guard lives inside the composed ``read`` and
+``stages``, so fused and unfused plans run the same per-block checks: an
+N5 block is decoded by ``reader.decode_cell`` (codec errors name the
+file, a block larger than its grid cell is refused) and a TIFF slice by
+the series source's kernel (shape and dtype probes). The write sink is
+``writer.block_sink``, a ``block_rows`` function like any other.
 """
 
 from __future__ import annotations

@@ -179,37 +179,34 @@ def current_umask() -> int:
     return u
 
 
-def _atomic_write_json(path: str, obj: Any) -> None:
-    """Atomic metadata write (r10 concurrency hardening): same temp-file +
-    os.replace discipline as the block sink. A plain truncating open("w")
-    lets a concurrent reader — a downstream pyramid stage, a monitor, a
-    racing retry of the same driver — observe an EMPTY or torn
-    attributes.json; at fleet scale "two jobs touch one container" is
-    routine (multiscale levels s0..sN land as separate jobs). With rename,
-    readers see the old complete file or the new complete file, never a
-    partial one; concurrent writers of identical content are idempotent.
+def atomic_publish(path: str, payload: bytes) -> None:
+    """Publish one file whole: the one atomic write of every N5 and TIFF
+    sink (block files, attributes.json, TIFF slices, staged fixtures).
 
-    mkstemp creates 0600 files; the pre-r10 open("w") path produced
-    umask-governed (typically 0644) metadata, and on shared containers a
-    0600 attributes.json locks out group/other readers. fchmod restores
-    the umask-governed mode before the rename (r10 advice).
-
-    URI-scheme paths (r13, write-path URI lift) publish through fsio's
-    per-scheme commit protocol — temp+move where rename is atomic, a
-    single PUT where the object is — which preserves exactly the
-    old-complete-or-new-complete visibility this function promises."""
+    A local path is written to a ``.inprogress-`` temp file in the same
+    directory (created if absent), given the umask-governed mode (mkstemp
+    creates 0600, which locks group/other readers out of a shared
+    container), and renamed over ``path`` with ``os.replace``; the temp is
+    removed if anything fails. Readers see the old complete file or the
+    new complete file, never a prefix, and a retried task or a racing
+    writer of the same path makes a full overwrite, never an interleave.
+    A URI path goes to ``fsio.publish_file``, the per-scheme form of the
+    same promise (temp + move where rename is atomic, one PUT where the
+    object is)."""
     import tempfile
 
     if is_uri(path):
         from n5_dask_spark.sources.n5 import fsio
 
-        fsio.publish_file(path, json.dumps(obj).encode())
+        fsio.publish_file(path, payload)
         return
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".inprogress-")
+    parent = os.path.dirname(path)
+    os.makedirs(parent, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=parent, prefix=".inprogress-")
     try:
-        with os.fdopen(fd, "w") as f:
+        with os.fdopen(fd, "wb") as f:
             os.fchmod(f.fileno(), 0o666 & ~current_umask())
-            json.dump(obj, f)
+            f.write(payload)
         os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
@@ -223,31 +220,22 @@ def log_codec(action: str, container: str, dataset: str, attrs: DatasetAttribute
 
 
 def write_attributes(container: str, dataset: str, attrs: DatasetAttributes) -> None:
+    """Write the dataset's attributes.json, and the container's root one if
+    it has none. :func:`atomic_publish` creates the directories, and its
+    rename keeps a concurrent reader (a pyramid stage, a monitor, a racing
+    retry) from parsing an empty or torn file, as a truncating open("w")
+    let it."""
     log_codec("write", container, dataset, attrs)
     root = attributes_path(container)
-    if is_uri(container):
-        from n5_dask_spark.sources.n5 import fsio
-
-        # no makedirs: publish_file creates parents where the scheme needs
-        # them (local/hdfs) and object stores need no directories at all
-        if not fsio.exists(root):
-            _atomic_write_json(root, {"n5": N5_VERSION})
-        _atomic_write_json(attributes_path(container, dataset), attrs.to_json())
-        return
-    os.makedirs(os.path.join(container, dataset), exist_ok=True)
-    if not os.path.exists(root):
-        os.makedirs(container, exist_ok=True)
-        _atomic_write_json(root, {"n5": N5_VERSION})
-    _atomic_write_json(attributes_path(container, dataset), attrs.to_json())
+    if _read_text(root) is None:
+        atomic_publish(root, json.dumps({"n5": N5_VERSION}).encode())
+    atomic_publish(attributes_path(container, dataset), json.dumps(attrs.to_json()).encode())
 
 
 def update_raw_attributes(container: str, dataset: str, updates: dict[str, Any]) -> None:
-    path = attributes_path(container, dataset)
     obj = read_raw_attributes(container, dataset)
     obj.update(updates)
-    if not is_uri(path):  # URI publish creates parents itself (fsio)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-    _atomic_write_json(path, obj)
+    atomic_publish(attributes_path(container, dataset), json.dumps(obj).encode())
 
 
 def get_pixel_resolution(

@@ -19,6 +19,13 @@ task, looked up in a compact ``ScanPlan`` that travels with the kernel
 runs them, so planning a scan starts no Spark job, builds no Spark node,
 and no file byte passes through the JVM.
 
+Decoding is shared the same way: every path that turns block bytes into
+an array — ``decoded_blocks`` (and through it ``block_stats``, the
+rechunk/downsample/write pipelines and the n5ops kernels), format("n5")
+tasks, ``read_region`` and ``writer.write_region``'s edge merge — calls
+``decode_cell``, which names the file on a decode failure and refuses a
+block that overflows its grid cell.
+
 Region reads (``read_region``) run no Spark job. Like the reference's
 read_n5_block, they are random access in the calling process: the
 overlapping block paths come from the grid math (T11), the driver fetches
@@ -56,18 +63,11 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import decode_block_at, np_dtype
 from n5_dask_spark.sources.n5.datasource import ScanSplit, plan_splits
-from n5_dask_spark.sources.n5.fuse import BlockPipeline, count_materialization
+from n5_dask_spark.sources.n5.fuse import BlockPipeline, consume_block_rows, count_materialization
 from n5_dask_spark.sources.n5.metadata import (
     INCOMPLETE_MARKER,
     DatasetAttributes,
@@ -79,46 +79,36 @@ from n5_dask_spark.sources.n5.metadata import (
 
 log = logging.getLogger("n5_dask_spark.sources.n5")
 
-STATS_SCHEMA = StructType(
-    [
-        StructField("gx", IntegerType()),
-        StructField("gy", IntegerType()),
-        StructField("gz", IntegerType()),
-        StructField("n_elems", LongType()),
-        StructField("vmin", DoubleType()),
-        StructField("vmax", DoubleType()),
-        StructField("vsum", DoubleType()),
-        StructField("vmean", DoubleType()),
-    ]
-)
-
-
-def check_block_shape(
-    arr_zyx: np.ndarray, grid: tuple[int, ...], attrs: DatasetAttributes, source: str
+def decode_cell(
+    raw: bytes, grid: tuple[int, ...], attrs: DatasetAttributes, path: str
 ) -> np.ndarray:
-    """Refuse a block whose decoded shape OVERFLOWS its grid cell (r10
-    oversized-block probe): a foreign block declaring header dims larger
-    than blockSize spills voxels into neighboring cells' coordinates —
-    probe-measured, read_full let whichever block decoded later win the
-    overlap (order-dependent silent wrong data) and block_stats counted
-    1024 elems for an 8^3 cell. Undersized blocks pass: a shape SMALLER
-    than the cell is the edge-truncation rule applied conservatively and
-    degrades like sparseness (fill value), never touching other cells."""
+    """The one decode of a block file for its grid cell: every read path
+    (both scans, their consumers, region reads and write_region's edge
+    merge) decodes here. Returns the zyx array.
+
+    A decode failure raises naming ``path`` (codec ``decode_block_at``).
+    The decoded shape is then checked against the cell (r10 oversized-block
+    probe): a foreign block declaring header dims larger than blockSize
+    spills voxels into neighboring cells' coordinates — read_full let
+    whichever block decoded later win the overlap and block_stats counted
+    1024 elems for an 8^3 cell — so it is refused, as is a header with more
+    dims than the dataset (its extra dims would otherwise go unchecked and
+    surface later as a reshape error). Undersized blocks pass: a shape
+    SMALLER than the cell is the edge-truncation rule applied
+    conservatively and degrades like sparseness (fill value), never
+    touching other cells."""
+    arr_zyx = decode_block_at(raw, attrs.data_type, attrs.compression, path)
     expected = attrs.block_dims(tuple(grid)[: attrs.ndim])
     shape_xyz = list(reversed(arr_zyx.shape))
     if len(arr_zyx.shape) > attrs.ndim:
-        # zip() below truncates at the SHORTER side, so a block whose
-        # header declares MORE dims than the dataset would have its extra
-        # trailing dims unchecked and surface later as a confusing reshape
-        # error instead of this named refusal (r10 advice)
         raise ValueError(
-            f"block {source} decodes to {len(arr_zyx.shape)}-D {shape_xyz} "
+            f"block {path} decodes to {len(arr_zyx.shape)}-D {shape_xyz} "
             f"(x,y,z order) but dataset {attrs.dimensions} is "
             f"{attrs.ndim}-D — a foreign or corrupt block header"
         )
     if any(s > e for s, e in zip(shape_xyz, expected)):
         raise ValueError(
-            f"block {source} decodes to {shape_xyz} (x,y,z) but grid cell "
+            f"block {path} decodes to {shape_xyz} (x,y,z) but grid cell "
             f"{tuple(grid)[: attrs.ndim]} of a {attrs.dimensions} volume with "
             f"blockSize {attrs.block_size} holds at most {expected} — an "
             "oversized block would silently overwrite neighboring cells"
@@ -494,56 +484,43 @@ def decoded_blocks(
     (rechunk/downsample/cast fragment kernels, zprofile partials, the
     write sink, or ``.to_df()`` for (gx, gy, gz, shape_zyx, data) rows)
     fetches and decodes each planned block INSIDE its own Python node, so
-    the decoded voxel bytes cross the JVM<->Python boundary once.
-    check_block_shape runs per block on every path."""
+    the decoded voxel bytes cross the JVM<->Python boundary once. Each
+    block is decoded and shape-checked by :func:`decode_cell`."""
     attrs = read_attributes(container, dataset)
     log_codec("read", container, dataset, attrs)
     scan = scan_block_files(
         spark, container, dataset, attrs.ndim, paths=paths, grid_shape=attrs.grid_shape
     )
     plan = scan.plan
-    data_type, compression = attrs.data_type, dict(attrs.compression)
 
     def blocks_fn(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
         for path, grid, raw in plan.read(batches):
-            a = check_block_shape(
-                decode_block_at(raw, data_type, compression, path), grid, attrs, path
-            )
-            yield (*grid, a)
+            yield (*grid, decode_cell(raw, grid, attrs, path))
 
     return BlockPipeline(scan.ids, blocks_fn)
 
 
-def block_stats(spark: SparkSession, container: str, dataset: str) -> DataFrame:
-    """Per-block stats — fetch, decode and reduce inside the scan kernel;
-    only scalars leave."""
-    attrs = read_attributes(container, dataset)
-    log_codec("read", container, dataset, attrs)
-    scan = scan_block_files(
-        spark, container, dataset, attrs.ndim, grid_shape=attrs.grid_shape
+STATS_DDL = (
+    "gx int, gy int, gz int, n_elems long, vmin double, vmax double, "
+    "vsum double, vmean double"
+)
+
+
+def _stats_row(gx: int, gy: int, gz: int, a: np.ndarray) -> Iterator[tuple]:
+    yield (
+        gx, gy, gz, int(a.size), float(a.min()), float(a.max()),
+        float(a.sum(dtype="f8")), float(a.mean(dtype="f8")),
     )
-    plan = scan.plan
-    data_type, compression = attrs.data_type, dict(attrs.compression)
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = []
-        for path, grid, raw in plan.read(batches):
-            a = check_block_shape(
-                decode_block_at(raw, data_type, compression, path), grid, attrs, path
-            )
-            rows.append(
-                (
-                    *grid,
-                    int(a.size),
-                    float(a.min()),
-                    float(a.max()),
-                    float(a.sum(dtype="f8")),
-                    float(a.mean(dtype="f8")),
-                )
-            )
-        yield pd.DataFrame(rows, columns=[f.name for f in STATS_SCHEMA.fields])
 
-    return scan.ids().mapInPandas(stats, schema=STATS_SCHEMA)
+def block_stats(spark: SparkSession, container: str, dataset: str) -> DataFrame:
+    """Per-block stats: the reduction runs in the node that fetches and
+    decodes the block (one mapInPandas over the scan's split ids); only
+    scalars leave."""
+    return consume_block_rows(
+        decoded_blocks(spark, container, dataset), None, _stats_row,
+        ["gx", "gy", "gz", "n_elems", "vmin", "vmax", "vsum", "vmean"], STATS_DDL,
+    )
 
 
 def overlapping_blocks(
@@ -624,12 +601,7 @@ def read_region(
         for grid, path, raw in zip(hits, paths, pool.map(read_block_file, paths)):
             if raw is None:  # N5 sparseness: the zeroed output is the fill value
                 continue
-            arr = check_block_shape(
-                decode_block_at(raw, attrs.data_type, attrs.compression, path),
-                grid,
-                attrs,
-                path,
-            )
+            arr = decode_cell(raw, grid, attrs, path)
             # block extent in global xyz coords
             b_start = [g * b for g, b in zip(grid, bs)]
             b_end = [s + dim for s, dim in zip(b_start, reversed(arr.shape))]

@@ -3,9 +3,12 @@
 Spark-first shape: a grid-enumeration DataFrame (T11) is the spine; each
 task owns exactly one output block (the contention-free `lock=False`
 discipline of /root/reference/src/tif_to_n5.py:58 holds BY CONSTRUCTION —
-every producer emits one row per grid cell). Writes are idempotent
-(temp file + os.replace) so task retries can't corrupt blocks — the
-write-atomicity concern flagged in SURVEY.md §7.
+every producer emits one row per grid cell). Every block goes through
+one sink (``block_sink``: encode, ``metadata.atomic_publish``, chaos hook)
+and every block write job ends in one guard (``commit_dataset_write``),
+for ``write_blocks`` and the format("n5") sink alike. Publishing is
+atomic, so task retries can't corrupt blocks — the write-atomicity
+concern flagged in SURVEY.md §7.
 
 The reference's manual Z-slab serialization loop
 (/root/reference/src/tif_to_n5.py:31-58) disappears: Spark executes
@@ -44,8 +47,9 @@ from n5_dask_spark.sources.n5.fuse import (
 from n5_dask_spark.sources.n5.metadata import (
     INCOMPLETE_MARKER,
     DatasetAttributes,
-    current_umask,
+    atomic_publish,
     fence_log,
+    is_uri,
     read_attributes,
     read_raw_attributes,
     write_attributes,
@@ -67,8 +71,6 @@ def claim_dataset_write(container: str, dataset: str) -> str:
     one dataset is last-writer-wins chaos; within-job duplicates were
     already guarded). Spark's own task retries never re-enter here — the
     claim is driver-side, once per sink job."""
-    from n5_dask_spark.sources.n5.metadata import is_uri
-
     if is_uri(container):
         # URI-scheme container (r13, lifting the local-only refusal): the
         # marker claim uses fsio's write-then-read-back fence — object
@@ -103,8 +105,6 @@ def claim_dataset_write(container: str, dataset: str) -> str:
 
 def release_dataset_write(marker: str) -> None:
     """Release a claim: the dataset is complete and visible to readers."""
-    from n5_dask_spark.sources.n5.metadata import is_uri
-
     if fence_log.isEnabledFor(logging.DEBUG):
         fence_log.debug("released %s", marker)
     if is_uri(marker):
@@ -152,20 +152,54 @@ def _maybe_inject_fault() -> None:
         )
 
 
-def _atomic_write(path: str, payload: bytes) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".inprogress-")
-    try:
-        with os.fdopen(fd, "wb") as f:
-            # mkstemp creates 0600; restore umask-governed permissions so
-            # block files written by one user stay readable by the shared
-            # container's other readers (r10 advice, same fix as metadata)
-            os.fchmod(f.fileno(), 0o666 & ~current_umask())
-            f.write(payload)
-        os.replace(tmp, path)  # atomic: retried tasks overwrite, never interleave
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
+def block_sink(container: str, dataset: str, attrs: DatasetAttributes):
+    """The one block writer: ``sink(gx, gy, gz, arr)`` encodes the zyx
+    block, publishes it at its grid cell's path (:func:`atomic_publish`),
+    runs the chaos hook and yields the written ``(gx, gy, gz)``.
+
+    It is a ``block_rows`` function, so ``write_blocks`` fuses it into the
+    producer's Python node, and the format("n5") sink calls it per row.
+    Both hand what it yields to :func:`commit_dataset_write`. Block paths
+    are ``ndim`` levels deep: for ndim < 3 the padding coordinates are
+    yielded but name no directory."""
+    data_type, compression = attrs.data_type, dict(attrs.compression)
+    ndim = attrs.ndim
+
+    def sink(gx: int, gy: int, gz: int, arr: np.ndarray) -> Iterator[tuple]:
+        coords = (int(gx), int(gy), int(gz))
+        atomic_publish(
+            os.path.join(container, dataset, *map(str, coords[:ndim])),
+            encode_block(arr, data_type, compression),
+        )
+        _maybe_inject_fault()  # chaos hook: this block's file is on disk
+        yield coords
+
+    return sink
+
+
+def commit_dataset_write(
+    marker: str, coords: np.ndarray | list[tuple[int, int, int]], attrs: DatasetAttributes
+) -> None:
+    """Guard a finished block write, then release its marker.
+
+    ``coords`` holds the ``(gx, gy, gz)`` rows every :func:`block_sink`
+    of the job yielded. Two writes of one path key (``coords[:, :ndim]``:
+    for a 2-D dataset rows differing only in gz name one file) mean two
+    producers raced for a cell with last-writer-wins contents, and more
+    writes than grid cells mean the producer wrote outside the grid. Either
+    raises and leaves the marker, so the dataset stays loud as
+    incomplete."""
+    keys = np.asarray(coords, dtype=np.int64).reshape(-1, 3)[:, : attrs.ndim]
+    written, cells = len(keys), len(np.unique(keys, axis=0))
+    if written != cells:
+        raise RuntimeError(
+            f"duplicate block producers: {written} writes covered only "
+            f"{cells} distinct grid cells — last-writer-wins contents would "
+            "be nondeterministic"
+        )
+    if written > attrs.n_blocks:
+        raise RuntimeError(f"wrote {written} blocks for a {attrs.n_blocks}-block grid")
+    release_dataset_write(marker)
 
 
 def grid_df(spark: SparkSession, attrs: DatasetAttributes) -> DataFrame:
@@ -195,7 +229,7 @@ def write_blocks(
     One output file per block. Single-writer-per-block holds by BLOCK
     uniqueness: every producer (rechunk/export_region's grouped assembler,
     grid enumeration, write_region's edge merge) emits exactly one block
-    per grid cell, and _atomic_write makes even a retried duplicate a full
+    per grid cell, and atomic_publish makes even a retried duplicate a full
     overwrite, never an interleave. The sink therefore does NOT re-shuffle
     on the grid key — the old unconditional repartition moved every block
     byte through a second exchange in every rechunk->write pipeline purely
@@ -212,9 +246,9 @@ def write_blocks(
     The uniqueness contract is GUARDED, not assumed: the sink emits the
     grid coords it wrote (3 ints per block — negligible next to the block
     bytes), its own action collects them to the driver as Arrow
-    (``toArrow``), and the driver compares the write count against the
-    number of distinct path keys (coords[:ndim]) with numpy. The check
-    adds no Spark stage or job to the write and holds 12 bytes per
+    (``toArrow``), and :func:`commit_dataset_write` compares the write
+    count against the number of distinct path keys (coords[:ndim]). The
+    check adds no Spark stage or job to the write and holds 12 bytes per
     written block on the driver. A producer emitting the same cell from
     two partitions (nondeterministic last-writer-wins contents) fails
     loudly instead of shipping whichever write landed second. For grouped
@@ -228,55 +262,14 @@ def write_blocks(
     loud. The marker is released only after the duplicate-producer guard
     passes — a guard failure means nondeterministic contents, which is
     exactly an incomplete dataset."""
-    from n5_dask_spark.sources.n5.metadata import is_uri
-
     marker = claim_dataset_write(container, dataset)
     write_attributes(container, dataset, attrs)
-    data_type, compression = attrs.data_type, dict(attrs.compression)
-    ndim = attrs.ndim  # block paths are exactly ndim levels deep
-    container_is_uri = is_uri(container)
-
-    def write_one(gx: int, gy: int, gz: int, arr: np.ndarray) -> Iterator[tuple]:
-        coords = (int(gx), int(gy), int(gz))[:ndim]
-        payload = encode_block(arr, data_type, compression)
-        if container_is_uri:
-            # executor-side scheme dispatch (r13): Python workers have no
-            # py4j bridge, so URI writes go through pyarrow.fs with the
-            # per-scheme commit protocol (temp+move where rename is
-            # atomic, direct PUT where the object is) — see fsio module
-            # doc for why each is the never-torn choice on its store
-            from n5_dask_spark.sources.n5 import fsio
-
-            fsio.publish_file(
-                "/".join([container, dataset, *map(str, coords)]), payload
-            )
-        else:
-            _atomic_write(
-                os.path.join(container, dataset, *map(str, coords)), payload
-            )
-        _maybe_inject_fault()  # chaos hook: this block's file is on disk
-        yield (int(gx), int(gy), int(gz))
-
-    written_coords = consume_block_rows(
-        blocks, np_dtype(data_type), write_one, ["gx", "gy", "gz"], "gx int, gy int, gz int"
+    written = consume_block_rows(
+        blocks, np_dtype(attrs.data_type), block_sink(container, dataset, attrs),
+        ["gx", "gy", "gz"], "gx int, gy int, gz int",
     ).toArrow()
-    # distinct over only the first ndim coords — the file path is built
-    # from coords[:ndim], so for a 2-D dataset two rows that differ only in
-    # gz collide on the SAME path and must count as ONE cell (a real
-    # last-writer-wins collision), not two.
-    path_keys = np.column_stack(
-        [written_coords.column(c).to_numpy() for c in ("gx", "gy", "gz")[:ndim]]
-    )
-    written, cells = len(path_keys), len(np.unique(path_keys, axis=0))
-    if written != cells:
-        raise RuntimeError(
-            f"duplicate block producers: {written} writes covered only "
-            f"{cells} distinct grid cells — last-writer-wins contents would "
-            "be nondeterministic"
-        )
-    if written > attrs.n_blocks:
-        raise RuntimeError(f"wrote {written} blocks for a {attrs.n_blocks}-block grid")
-    release_dataset_write(marker)
+    coords = np.column_stack([written.column(c).to_numpy() for c in ("gx", "gy", "gz")])
+    commit_dataset_write(marker, coords, attrs)
 
 
 def write_array(
@@ -355,8 +348,7 @@ def write_region(
     one at a time on the driver through ``reader.read_block_file`` (absent
     means zeros), with no Spark job, so the edge reads hold one block
     beside the caller's region. Only the block write runs distributed."""
-    from n5_dask_spark.sources.n5.codec import decode_block_at
-    from n5_dask_spark.sources.n5.reader import check_block_shape, read_block_file
+    from n5_dask_spark.sources.n5.reader import decode_cell, read_block_file
 
     attrs = read_attributes(container, dataset)
     end_xyz = [s + d for s, d in zip(start_xyz, region_xyz.shape)]
@@ -407,12 +399,7 @@ def write_region(
         if raw is None:  # sparse: absent block file means zeros
             block_xyz = np.zeros([h - l for l, h in zip(b0, b1)], dtype=dt)
         else:
-            arr_zyx = check_block_shape(
-                decode_block_at(raw, attrs.data_type, attrs.compression, path),
-                grid,
-                attrs,
-                path,
-            )
+            arr_zyx = decode_cell(raw, grid, attrs, path)
             block_xyz = np.array(
                 arr_zyx.transpose(tuple(range(arr_zyx.ndim - 1, -1, -1))), dtype=dt
             )

@@ -43,10 +43,15 @@ from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5 import fuse
 from n5_dask_spark.sources.n5.codec import data_type_of, np_dtype
 from n5_dask_spark.sources.n5.fuse import BlockPipeline
-from n5_dask_spark.sources.n5.metadata import DatasetAttributes, read_attributes, write_attributes
+from n5_dask_spark.sources.n5.metadata import (
+    DatasetAttributes,
+    atomic_publish,
+    read_attributes,
+    write_attributes,
+)
 from n5_dask_spark.sources.n5.transforms import cast_blocks, rechunk
 from n5_dask_spark.sources.n5.reader import Scan, decoded_blocks, scan_frame
-from n5_dask_spark.sources.n5.writer import _atomic_write, write_blocks
+from n5_dask_spark.sources.n5.writer import write_blocks
 
 # TIFF tag ids
 _W, _H, _BITS, _COMP, _PHOTO, _STRIP_OFF, _SPP, _ROWS_PER_STRIP, _STRIP_CNT, _SFMT = (
@@ -356,17 +361,8 @@ def read_image_description_file(path: str) -> str | None:
 
 
 def write_tiff(path: str, arr: np.ndarray) -> None:
-    from n5_dask_spark.sources.n5.metadata import is_uri
-
-    if is_uri(path):
-        # r13 write-path URI lift: executor-safe per-scheme commit
-        # protocol (pyarrow.fs) — temp+move where rename is atomic,
-        # direct PUT where the object is; see sources/n5/fsio.py
-        from n5_dask_spark.sources.n5 import fsio
-
-        fsio.publish_file(path, encode_tiff(arr))
-        return
-    _atomic_write(path, encode_tiff(arr))
+    """One TIFF file, published atomically (local or URI path)."""
+    atomic_publish(path, encode_tiff(arr))
 
 
 def read_tiff(path: str) -> np.ndarray:
@@ -543,10 +539,6 @@ def n5_to_tif_series(
     slice_blocks, slice_attrs = rechunk(
         blocks, attrs, [attrs.dimensions[0], attrs.dimensions[1], 1]
     )
-    from n5_dask_spark.sources.n5.metadata import is_uri
-
-    if not is_uri(output_dir):  # URI publish creates parents itself (fsio)
-        os.makedirs(output_dir, exist_ok=True)
     # Series-level write-session marker (r14 probe — N5-sink parity gap):
     # each slice file is atomic, but the SERIES is not, and a mid-write
     # reader is worse off here than on N5 — re-import assigns z by

@@ -2,7 +2,7 @@
 
 At 100 TB an executor WILL die mid-write; the sinks' at-scale claim is
 that Spark task retries over atomic temp-file+rename writes leave the
-output byte-identical to a clean run (writer.py `_atomic_write`,
+output byte-identical to a clean run (metadata.py `atomic_publish`,
 tiff.py `write_tiff`). This proves it instead of assuming it: the
 `N5DS_INJECT_WRITE_FAULT_DIR` chaos hook makes the FIRST attempt of
 every sink task die AFTER its current batch's files hit disk (a
@@ -109,6 +109,36 @@ assert n == 9, n
 for z, f in enumerate(sorted(glob.glob(os.path.join(uri_tif_local, "*.tif")))):
     assert np.array_equal(read_tiff(f), arr[:, :, z].T), f"URI slice {z} differs"
 
+# --- leg 5: the format("n5") DataSource sink, copying the leg-1 dataset
+# under the same injection. Its tasks run the same block sink as
+# write_blocks, so the hook fires there too, and the retried copy must be
+# byte-identical to its source with the marker released.
+from n5_dask_spark.sources.n5.datasource import register_n5_source
+from n5_dask_spark.sources.n5.metadata import read_attributes, write_attributes
+
+register_n5_source(spark)
+markers_before_ds = len(os.listdir(fault_dir))
+c3 = temp_container("n5ds-fault-ds")
+write_attributes(c3, "img/s0", read_attributes(container, "img/s0"))
+(
+    spark.read.format("n5").option("path", container).option("dataset", "img/s0").load()
+    .write.format("n5").option("path", c3).option("dataset", "img/s0")
+    .mode("append").save()
+)
+assert len(os.listdir(fault_dir)) > markers_before_ds, "DataSource-leg injection never fired"
+src_root, out_root = pathlib.Path(container, "img/s0"), pathlib.Path(c3, "img/s0")
+src_blocks = sorted(
+    p.relative_to(src_root) for p in src_root.rglob("*")
+    if p.is_file() and p.name != "attributes.json"
+)
+out_blocks = sorted(
+    p.relative_to(out_root) for p in out_root.rglob("*")
+    if p.is_file() and p.name != "attributes.json"
+)
+assert out_blocks == src_blocks, (out_blocks, src_blocks)
+for rel in src_blocks:
+    assert (out_root / rel).read_bytes() == (src_root / rel).read_bytes(), f"block {rel} differs"
+
 print(
     "FAULT_INJECTION_OK",
     markers_after_write,
@@ -181,7 +211,7 @@ def test_atomic_block_write_race_never_tears(tmp_path):
     interleave — and concurrent readers only ever see a complete payload."""
     import threading
 
-    from n5_dask_spark.sources.n5.writer import _atomic_write
+    from n5_dask_spark.sources.n5.metadata import atomic_publish as _atomic_write
 
     path = str(tmp_path / "b" / "0")
     payloads = [bytes([i]) * (10_000 + i) for i in range(4)]

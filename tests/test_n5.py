@@ -681,17 +681,23 @@ def test_corrupt_attributes_json_fails_naming_the_file(tmp_path):
         read_attributes(str(c), "ds")
 
 
-def test_oversized_block_refused(spark):
+def test_oversized_block_refused(spark, monkeypatch):
     """r10 oversized-block probe: a foreign block whose header declares
     dims LARGER than its grid cell spills voxels into neighboring cells'
     coordinates — read_full let whichever block decoded later win the
     overlap (order-dependent silent wrong data) and block_stats counted
-    1024 elems for an 8^3 cell. Every decode path now refuses, naming the
-    file; a legally SMALLER (edge-truncation-style) block still reads."""
+    1024 elems for an 8^3 cell. Every decode path refuses it, naming the
+    file: region reads, the glob scan and its consumers (block_stats,
+    decoded_blocks, the n5ops histogram and z-profile kernels, which
+    once counted the spilled voxels), format("n5") and write_region's
+    edge merge. A legally SMALLER (edge-truncation-style) block still
+    reads."""
     import struct
 
-    from n5_dask_spark.sources.n5.reader import block_stats, read_full
-    from n5_dask_spark.sources.n5.writer import temp_container, write_array
+    from n5_dask_spark.operators import n5ops
+    from n5_dask_spark.sources.n5.datasource import register_n5_source
+    from n5_dask_spark.sources.n5.reader import block_stats, decoded_blocks, read_full
+    from n5_dask_spark.sources.n5.writer import temp_container, write_array, write_region
 
     arr = np.full((16, 8, 8), 5, np.uint8)  # 2 blocks in x at bs 8
     c = temp_container("ovf")
@@ -700,10 +706,28 @@ def test_oversized_block_refused(spark):
     raw = struct.pack(">HH3i", 0, 3, 16, 8, 8) + big.tobytes()
     with open(os.path.join(c, "d/s0/0/0/0"), "wb") as f:
         f.write(raw)
-    with pytest.raises(Exception, match="holds at most"):
-        read_full(spark, c, "d/s0")
-    with pytest.raises(Exception, match="holds at most"):
-        block_stats(spark, c, "d/s0").collect()
+    register_n5_source(spark)
+    monkeypatch.setattr(n5ops, "FIXTURE", c)
+    monkeypatch.setattr(n5ops, "FIXTURE_DS", "d/s0")
+    reads = {
+        "read_full": lambda: read_full(spark, c, "d/s0"),
+        "block_stats": lambda: block_stats(spark, c, "d/s0").collect(),
+        "decoded_blocks": lambda: decoded_blocks(spark, c, "d/s0").to_df().collect(),
+        "format": lambda: (
+            spark.read.format("n5").option("path", c).option("dataset", "d/s0")
+            .load().collect()
+        ),
+        "write_region": lambda: write_region(
+            spark, c, "d/s0", np.zeros((4, 8, 8), np.uint8), [0, 0, 0]
+        ),
+        "histogram": lambda: n5ops.n5_intensity_histogram(spark, "").collect(),
+        "zprofile": lambda: n5ops.n5_zprofile(spark, "").collect(),
+    }
+    for name, read in reads.items():
+        with pytest.raises(Exception, match="holds at most"):
+            read()
+            pytest.fail(f"{name} read the oversized block")
+    monkeypatch.undo()
 
     # undersized (conservative edge truncation): legal, fills the rest
     small = np.full((8, 8, 4), 7, np.uint8)
@@ -833,20 +857,69 @@ def test_atomic_writes_restore_umask_permissions(spark, tmp_path):
     """r10 advice: mkstemp creates 0600 temp files, so without the fchmod
     the atomic rename left attributes.json and block files unreadable by
     group/other on shared containers (pre-r10 open('w') wrote
-    umask-governed 0644). Pins the restored mode on both sinks."""
+    umask-governed 0644). Pins the restored mode on every sink, which all
+    publish through metadata.atomic_publish: attributes.json, write_blocks,
+    the format("n5") sink and the TIFF series export."""
     import stat
 
+    from n5_dask_spark.sources.n5.datasource import register_n5_source
+    from n5_dask_spark.sources.n5.metadata import read_attributes, write_attributes
     from n5_dask_spark.sources.n5.writer import write_array
+    from n5_dask_spark.sources.tiff import n5_to_tif_series
 
     arr = np.full((8, 8, 4), 3, np.uint8)
     c = str(tmp_path / "perm.n5")
     write_array(spark, arr, c, "d/s0", [8, 8, 4])
+    register_n5_source(spark)
+    write_attributes(c, "copy/s0", read_attributes(c, "d/s0"))
+    (
+        spark.read.format("n5").option("path", c).option("dataset", "d/s0").load()
+        .write.format("n5").option("path", c).option("dataset", "copy/s0")
+        .mode("append").save()
+    )
+    n5_to_tif_series(spark, c, "d/s0", str(tmp_path / "tif"))
     umask = os.umask(0)
     os.umask(umask)
     want = 0o666 & ~umask
-    for rel in ("attributes.json", "d/s0/attributes.json", "d/s0/0/0/0"):
-        mode = stat.S_IMODE(os.stat(os.path.join(c, rel)).st_mode)
+    for rel in (
+        "perm.n5/attributes.json", "perm.n5/d/s0/attributes.json", "perm.n5/d/s0/0/0/0",
+        "perm.n5/copy/s0/0/0/0", "tif/slice00000.tif",
+    ):
+        mode = stat.S_IMODE(os.stat(tmp_path / rel).st_mode)
         assert mode == want, (rel, oct(mode), oct(want))
+
+
+def test_format_write_refuses_duplicate_producers(spark, tmp_path):
+    """df.write.format("n5") runs write_blocks' guard at commit: a frame
+    with two different blocks for one cell (a union of two versions of a
+    dataset) is last-writer-wins chaos, so the write fails naming the
+    duplicates and the write-session marker stays, keeping the dataset
+    loud as incomplete. The sink once released the marker and shipped
+    whichever block landed last."""
+    from n5_dask_spark.sources.n5.datasource import register_n5_source
+    from n5_dask_spark.sources.n5.metadata import (
+        INCOMPLETE_MARKER,
+        read_attributes,
+        write_attributes,
+    )
+    from n5_dask_spark.sources.n5.writer import write_array
+
+    c = str(tmp_path / "dup.n5")
+    write_array(spark, np.full((16, 8, 8), 1, np.uint8), c, "a/s0", [8, 8, 8])
+    write_array(spark, np.full((16, 8, 8), 2, np.uint8), c, "b/s0", [8, 8, 8])
+    register_n5_source(spark)
+
+    def blocks(ds):
+        return spark.read.format("n5").option("path", c).option("dataset", ds).load()
+
+    write_attributes(c, "out/s0", read_attributes(c, "a/s0"))
+    with pytest.raises(Exception, match="duplicate block producers"):
+        (
+            blocks("a/s0").unionAll(blocks("b/s0"))
+            .write.format("n5").option("path", c).option("dataset", "out/s0")
+            .mode("append").save()
+        )
+    assert os.path.exists(os.path.join(c, "out/s0", INCOMPLETE_MARKER))
 
 
 def test_block_header_more_dims_than_dataset_refused(spark):

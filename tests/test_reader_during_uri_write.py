@@ -160,7 +160,7 @@ def test_local_atomic_write_enospc_leaves_no_partial_block(tmp_path, monkeypatch
     clean-job invariant forbids."""
     import errno
 
-    from n5_dask_spark.sources.n5.writer import _atomic_write
+    from n5_dask_spark.sources.n5.metadata import atomic_publish as _atomic_write
 
     def full_disk(src, dst):
         raise OSError(errno.ENOSPC, "No space left on device")
