@@ -2,7 +2,7 @@
 
 Mirrors the reference's full round trip (tif_to_n5.py -> n5_to_tif.py):
 a z-slice TIFF series is imported into an N5 container (slice decode ->
-rechunk shuffle -> block write), exported back out as a TIFF series, and
+rechunk -> block write), exported back out as a TIFF series, and
 the exported series is scanned and profiled. Voxel values are the same
 deterministic function of the parquet ``documents`` table as
 ``n5oracle.py``, so DuckDB computes the expected per-z profile without

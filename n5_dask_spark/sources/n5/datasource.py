@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import logging
 import os
+import re
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
@@ -91,18 +92,42 @@ class ScanSplit:
         """Resolved on the driver the way Spark's file scans resolve it:
         ``spark.sql.files.minPartitionNum``, else the leaf-node default
         parallelism (``spark.sql.leafNodeDefaultParallelism``, else
-        ``sc.defaultParallelism``)."""
+        ``sc.defaultParallelism``).
+
+        Read afresh on every call, so a conf set between two scans plans
+        the second one, at one py4j round trip per conf read: the byte
+        strings are parsed here (:func:`byte_string_as_bytes`), not by
+        ``JavaUtils`` through the JVM view, whose package walk alone cost
+        seven reflection calls per scan."""
         conf = spark.conf
         par = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
             "spark.sql.leafNodeDefaultParallelism", None
         )
-        to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
         return cls(
             int(par) if par else int(spark.sparkContext.defaultParallelism),
-            int(to_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128MB"))),
-            int(to_bytes(conf.get("spark.sql.files.openCostInBytes", "4MB"))),
+            byte_string_as_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128MB")),
+            byte_string_as_bytes(conf.get("spark.sql.files.openCostInBytes", "4MB")),
             source="registration",
         )
+
+
+_BYTE_SUFFIXES = {
+    "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30, "gb": 30,
+    "t": 40, "tb": 40, "p": 50, "pb": 50,
+}
+_BYTE_STRING = re.compile(r"([0-9]+)([a-z]+)?")
+
+
+def byte_string_as_bytes(text: str) -> int:
+    """A Spark byte-size string (``134217728``, ``128m``, ``4MB``) in
+    bytes, by the rule of Spark's ``JavaUtils.byteStringAsBytes``: an
+    integer with an optional binary-unit suffix, case-insensitive; a bare
+    number is bytes. Fractions and unknown suffixes raise."""
+    m = _BYTE_STRING.fullmatch(text.strip().lower())
+    if m is None or (m.group(2) is not None and m.group(2) not in _BYTE_SUFFIXES):
+        raise ValueError(f"cannot parse byte string {text!r}: want an integer with an "
+                         f"optional suffix in {sorted(_BYTE_SUFFIXES)}")
+    return int(m.group(1)) << _BYTE_SUFFIXES[m.group(2) or "b"]
 
 
 def plan_splits(files: Sequence[tuple], split: ScanSplit) -> list[list[tuple]]:

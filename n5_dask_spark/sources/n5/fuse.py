@@ -11,7 +11,10 @@ only in the terminal that runs them:
   :class:`~n5_dask_spark.sources.n5.reader.ScanPlan` of one listing plus
   the split ids (``spark.range``) a consumer maps its kernel over.
 - :class:`BlockPipeline`: a source, the composed block-local stages and,
-  for a grouped pipeline, the key columns its assembler groups on.
+  for a grouped pipeline, the key columns its assembler groups on. A map
+  pipeline built by :func:`scan_pipeline` (one block per file of a scan)
+  also keeps the :class:`ScanBlocks` that made it, so that a rechunk over
+  it can plan its own reads of the same files.
 
   - MAP: ``source()`` builds the frame the first Python node reads
     (scan split ids, grid cells, block rows) and ``read(batches)`` turns
@@ -22,7 +25,11 @@ only in the terminal that runs them:
 
   Block-local transforms (cast, windowed mean) append to ``stages``, so
   decode -> cast -> reduce -> fragment is ONE map node, and assemble ->
-  stats / assemble -> encode+write is ONE node after the shuffle.
+  stats / assemble -> encode+write is ONE node after the shuffle. When
+  ``transforms.rechunk`` gathers instead (a scan-backed input whose
+  super-cell fits one split), decode -> stages -> assemble -> consumer is
+  ONE map node with no shuffle at all: the rechunk returns a MAP pipeline
+  over its own split ids.
 
 Producers (``decoded_blocks``, ``transform_blocks``, ``rechunk``,
 ``downsample``, ``cast_blocks``, the ``write_array`` and TIFF slice
@@ -78,6 +85,7 @@ import weakref
 from collections import Counter
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, replace
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -108,13 +116,32 @@ choose what runs."""
 
 
 @dataclass(frozen=True)
+class ScanBlocks:
+    """How a scan-backed map pipeline makes its blocks, kept so that a
+    consumer can plan its own reads of the same files (rechunk's gather):
+    the planned ``scan`` (a ``reader.Scan``), ``fetch(path)`` (the file's
+    bytes, or None when it is absent and skipped), ``decode(path, key,
+    raw)`` (one file's block ``(gx, gy, gz, arr)``, integrity checks
+    included) and ``cell(key)``, the ``(gx, gy, gz)`` of the block a
+    file's coordinates name."""
+
+    scan: Any
+    fetch: Callable[[str], bytes | None]
+    decode: Callable[[str, tuple[int, ...], bytes], tuple]
+    cell: Callable[[tuple[int, ...]], tuple[int, ...]]
+
+
+@dataclass(frozen=True)
 class BlockPipeline:
-    """A block pipeline that has built no Spark node yet (module doc)."""
+    """A block pipeline that has built no Spark node yet (module doc).
+    ``scan`` is set on a map pipeline whose blocks are its scan's files,
+    one block per file."""
 
     source: Callable[[], DataFrame]
     read: Callable
     stages: tuple[Callable, ...] = ()
     key_cols: tuple[str, ...] | None = None
+    scan: ScanBlocks | None = None
 
     def to_df(self) -> DataFrame:
         """Materialize to standard block rows: the one explicit exit from
@@ -126,6 +153,21 @@ class BlockPipeline:
         count_materialization("to_df", "blocks pipeline materialized by .to_df()")
         _TO_DF_FRAMES.add(df)
         return df
+
+
+def scan_pipeline(scan, fetch, decode, cell=tuple) -> BlockPipeline:
+    """The map pipeline of one block per file of ``scan`` (a
+    ``reader.Scan``): its kernel reads the split ids, fetches each file
+    with ``fetch`` (None: absent, skipped) and yields ``decode(path, key,
+    raw)``. ``cell`` maps a file's coordinates to its block's grid cell
+    (:class:`ScanBlocks`)."""
+    plan = scan.plan
+
+    def read(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+        for path, key, raw in plan.read(batches, fetch):
+            yield decode(path, key, raw)
+
+    return BlockPipeline(scan.ids, read, scan=ScanBlocks(scan, fetch, decode, cell))
 
 
 def count_materialization(reason: str, message: str) -> None:

@@ -67,7 +67,12 @@ from pyspark.sql import DataFrame, SparkSession
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5.codec import decode_block_at, np_dtype
 from n5_dask_spark.sources.n5.datasource import ScanSplit, plan_splits
-from n5_dask_spark.sources.n5.fuse import BlockPipeline, consume_block_rows, count_materialization
+from n5_dask_spark.sources.n5.fuse import (
+    BlockPipeline,
+    consume_block_rows,
+    count_materialization,
+    scan_pipeline,
+)
 from n5_dask_spark.sources.n5.metadata import (
     INCOMPLETE_MARKER,
     DatasetAttributes,
@@ -382,10 +387,12 @@ class Scan:
     and the split ids a consumer maps its kernel over, one task per split.
     Built with no Spark call; :meth:`ids` builds the ``spark.range`` source
     when a terminal needs it, so a scan and its consumer run as one Python
-    node and no file byte passes through the JVM."""
+    node and no file byte passes through the JVM. ``split`` is the split
+    rule the plan was packed with."""
 
     spark: SparkSession
     plan: ScanPlan
+    split: ScanSplit
 
     def ids(self) -> DataFrame:
         """The split ids, ``spark.range(k, numPartitions=k)``."""
@@ -430,7 +437,7 @@ def scan_frame(
             root, len(files), int(plan.sizes.sum()), len(splits),
             split.parallelism, split.source,
         )
-    return Scan(spark, plan)
+    return Scan(spark, plan, split)
 
 
 def scan_block_files(
@@ -491,13 +498,11 @@ def decoded_blocks(
     scan = scan_block_files(
         spark, container, dataset, attrs.ndim, paths=paths, grid_shape=attrs.grid_shape
     )
-    plan = scan.plan
 
-    def blocks_fn(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
-        for path, grid, raw in plan.read(batches):
-            yield (*grid, decode_cell(raw, grid, attrs, path))
+    def decode(path: str, grid: tuple[int, ...], raw: bytes) -> tuple:
+        return (*grid, decode_cell(raw, grid, attrs, path))
 
-    return BlockPipeline(scan.ids, blocks_fn)
+    return scan_pipeline(scan, read_block_file, decode)
 
 
 STATS_DDL = (

@@ -1,33 +1,51 @@
 """Chunked-array transforms over the blocks DataFrame (SURVEY.md §2.A
 T1 rechunk, T3 cast, T7 downsample, T8 pyramid cutoff, T9 metadata).
 
-Rechunk is the one genuinely custom shuffle in the engine (§4): each input
-block explodes into fragments keyed by target grid cell, a hash shuffle
-groups fragments per target cell, and applyInArrow reassembles. The
-shuffle machinery (exchange, AQE coalescing) is Spark's; only the fragment
-math is ours. Shuffle volume == data volume (each byte moves once), which
-is the optimum for a general regrid; at 100 TB this is exactly dask's
-rechunk strategy with Spark's exchange under it.
+Rechunk has two plans, chosen on the driver and logged at DEBUG on the
+``n5_dask_spark.sources.n5`` logger:
+
+- **Gather** (no shuffle). The reference's regrids are between
+  commensurate grids (slices -> cubes, cubes -> slices, 2x-reduced cubes
+  -> cubes), where a super-cell (per axis the lcm of the source and
+  target block) is small. When the input is a scan-backed map pipeline
+  (a ``reader.Scan`` plus block-local stages) and one super-cell holds no
+  more decoded bytes than one split of its scan, each task reads the
+  source files of its own super-cells, runs the stages and assembles the
+  target cells in memory (:func:`_gather`): one stage, no exchange, and
+  no byte crosses the JVM<->Python boundary between decode and the
+  consumer.
+- **Shuffle**, for every other input (blocks frames, grouped upstreams,
+  over-bound super-cells) and for ``export_region``, whose output grid is
+  offset from the source grid: each input block explodes into fragments
+  keyed by target grid cell, a hash shuffle groups fragments per target
+  cell, and applyInArrow reassembles. The shuffle machinery (exchange,
+  AQE coalescing) is Spark's; only the fragment math is ours, and the
+  gather shares it (:func:`_fragments_fn`). Shuffle volume == data
+  volume (each byte moves once), the optimum for a general regrid; at
+  100 TB this is dask's rechunk strategy with Spark's exchange under it.
 
 Downsample (reference: multiscale(volume, windowed_mean, (2,2,2)),
 /root/reference/src/n5_multiscale.py:63-136) is block-LOCAL when the
 factors divide the block size — zero shuffle for the reduction itself —
-followed by a rechunk of the (8x smaller) output to the target chunking.
-Edge semantics: a partial final window is the mean of the available
-elements (SURVEY.md §7).
+followed by a rechunk of the (8x smaller) output to the target chunking,
+which gathers when the input is a scan. Edge semantics: a partial final
+window is the mean of the available elements (SURVEY.md §7).
 """
 
 from __future__ import annotations
 
+import logging
 import math
 from collections.abc import Iterator
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
 from n5_dask_spark.sources.n5.codec import np_dtype
+from n5_dask_spark.sources.n5.datasource import plan_splits
 from n5_dask_spark.sources.n5.metadata import (
     DatasetAttributes,
     get_pixel_resolution,
@@ -40,6 +58,8 @@ from n5_dask_spark.sources.n5.fuse import BlockPipeline
 from n5_dask_spark.sources.n5.reader import decoded_blocks
 from n5_dask_spark.sources.n5.writer import write_blocks
 
+log = logging.getLogger("n5_dask_spark.sources.n5")
+
 FRAGMENT_SCHEMA = (
     "tgx int, tgy int, tgz int, off_zyx array<int>, shape_zyx array<int>, data binary"
 )
@@ -48,20 +68,19 @@ FRAGMENT_SCHEMA = (
 FRAGMENT_COLUMNS = ["tgx", "tgy", "tgz", "off_zyx", "shape_zyx", "data"]
 
 
-def _fragment_rows_fn(
+def _fragments_fn(
     ndim: int,
     old_bs: list[int],
     start: list[int],
     end: list[int],
     out_bs: list[int],
 ):
-    """Per-block fragment generator shared by rechunk and export_region:
-    slice one decoded source block into fragments keyed by the target grid
-    cell of the output dataset, whose origin is ``start`` and whose extent
-    is ``[start, end)`` in source coordinates. Rechunk is the origin-0
-    full-extent special case; blocks only grazing the region emit nothing.
-    Consumed through fuse.consume_block_rows, so decode+fragment is ONE
-    Python node (r15, guide §4) and output frames stay byte-bounded."""
+    """The fragment math shared by the shuffle and the gather: slice one
+    block of the source grid (block size ``old_bs``, origin 0) into
+    ``(target cell, off_zyx, fragment view)`` for each cell of the output
+    grid it overlaps. The output grid's origin is ``start`` and its extent
+    ``[start, end)`` in source coordinates: rechunk is the origin-0
+    full-extent case; blocks only grazing the region yield nothing."""
 
     def block_frags(gx, gy, gz, arr: np.ndarray) -> Iterator[tuple]:
         import itertools
@@ -92,8 +111,29 @@ def _fragment_rows_fn(
                 slice(flo[ax] - b0[ax], fhi[ax] - b0[ax])
                 for ax in range(ndim - 1, -1, -1)
             )
-            frag = np.ascontiguousarray(arr[sel])
             off_zyx = [flo[ax] - t0[ax] for ax in range(ndim - 1, -1, -1)]
+            yield tcell, off_zyx, arr[sel]
+
+    return block_frags
+
+
+def _fragment_rows_fn(
+    ndim: int,
+    old_bs: list[int],
+    start: list[int],
+    end: list[int],
+    out_bs: list[int],
+):
+    """Per-block fragment rows of the shuffle, shared by rechunk and
+    export_region: :func:`_fragments_fn`'s fragments as (tgx, tgy, tgz,
+    off_zyx, shape_zyx, data) rows keyed by target cell. Consumed through
+    fuse.consume_block_rows, so decode+fragment is ONE Python node (r15,
+    guide §4) and output frames stay byte-bounded."""
+    frags = _fragments_fn(ndim, old_bs, start, end, out_bs)
+
+    def block_frags(gx, gy, gz, arr: np.ndarray) -> Iterator[tuple]:
+        for tcell, off_zyx, frag in frags(gx, gy, gz, arr):
+            frag = np.ascontiguousarray(frag)
             yield (
                 *(list(tcell) + [0] * (3 - ndim)), off_zyx, list(frag.shape), frag.tobytes()
             )
@@ -106,8 +146,12 @@ def rechunk(
 ) -> tuple[BlockPipeline, DatasetAttributes]:
     """Re-tile decoded blocks to a new block grid (T1).
 
-    Returns (grouped pipeline, new attrs): fragment explode -> shuffle on
-    target cell -> reassemble, built by the terminal that consumes it."""
+    Returns (pipeline, new attrs), built by the terminal that consumes it:
+    a map pipeline that gathers each super-cell's source files
+    (:func:`_gather`) when the input is a scan-backed map pipeline whose
+    super-cell fits one split, else the grouped shuffle (fragment explode
+    -> shuffle on target cell -> reassemble). The choice and its reason
+    are logged at DEBUG."""
     dims_xyz = list(attrs.dimensions)
     old_bs, new_bs = list(attrs.block_size), list(new_block_size)
     ndim = attrs.ndim
@@ -118,8 +162,115 @@ def rechunk(
         compression=dict(attrs.compression),
         extra=dict(attrs.extra),
     )
+    dt = np_dtype(attrs.data_type)
+    src = fuse.pipeline_of(blocks, dt)
+    gathered, why = _gather(src, attrs, new_attrs)
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug(
+            "rechunk %s -> %s of %s: %s, %s", old_bs, new_bs, dims_xyz,
+            "shuffle" if gathered is None else "gather", why,
+        )
+    if gathered is not None:
+        return gathered, new_attrs
     block_frags = _fragment_rows_fn(ndim, old_bs, [0] * ndim, dims_xyz, new_bs)
-    return _regrid(blocks, np_dtype(attrs.data_type), block_frags, new_attrs), new_attrs
+    return _regrid(src, dt, block_frags, new_attrs), new_attrs
+
+
+def _gather(
+    p: BlockPipeline, attrs: DatasetAttributes, new_attrs: DatasetAttributes
+) -> tuple[BlockPipeline | None, str]:
+    """Rechunk without a shuffle: ``(map pipeline, reason)``, or ``(None,
+    reason)`` when the input must shuffle.
+
+    A super-cell is, per axis, the lcm of the (post-stage) source block and
+    the target block: every source block and every target cell lies in
+    exactly one, so the target cells of a super-cell are assembled from
+    its own source files alone. When the input is a scan-backed map
+    pipeline and a super-cell (clipped to the extent) holds no more
+    decoded bytes than one split of its scan (``ScanSplit.max_split_bytes``
+    over the listing, the bound ``plan_splits`` packs by), the driver
+    groups the listing's files by super-cell and packs whole super-cells
+    into splits with ``plan_splits``, each costing its files' sizes plus
+    their open costs. The kernel of one split reads, decodes and stages
+    each super-cell's files and assembles its target cells in memory, so
+    the rechunk runs one stage with no exchange and no fragment rows.
+
+    "No fragment, no row" holds as on the shuffle: a target cell is
+    emitted only when a source block overlapping it was read, and a block
+    deleted after planning (``fetch`` returns None) is fill value."""
+    if p.key_cols is not None:
+        return None, "the input is grouped (its blocks come out of a shuffle)"
+    if p.scan is None:
+        return None, "the input is no scan-backed map pipeline (a blocks frame or a computed source)"
+    ndim = attrs.ndim
+    old_bs, new_bs = list(attrs.block_size), list(new_attrs.block_size)
+    lcm = [math.lcm(o, n) for o, n in zip(old_bs, new_bs)]
+    super_bs = [min(m, d) for m, d in zip(lcm, attrs.dimensions)]
+    dt = np_dtype(attrs.data_type)
+    cell_bytes = math.prod(super_bs) * dt.itemsize
+    scan, plan = p.scan.scan, p.scan.scan.plan
+    split = scan.split
+    n = len(plan.sizes)
+    bound = split.max_split_bytes(int(plan.sizes.sum()) + split.open_cost_bytes * n)
+    if cell_bytes > bound:
+        return None, (
+            f"a super-cell {super_bs} holds {cell_bytes} decoded bytes, over the "
+            f"{bound}-byte split bound"
+        )
+    # each file's super-cell; files sorted by it (stable: listing order
+    # within one), and the offsets where each super-cell's run starts
+    cell = p.scan.cell
+    grids = np.array(
+        [cell(tuple(int(c) for c in key)) for key in plan.coords], dtype=np.int64
+    ).reshape(n, 3)[:, :ndim]
+    supers = grids * np.array(old_bs, dtype=np.int64) // np.array(lcm, dtype=np.int64)
+    order = np.lexsort(supers.T[::-1])
+    supers = supers[order]
+    firsts = np.flatnonzero(np.any(supers[1:] != supers[:-1], axis=1)) + 1
+    cell_offsets = np.concatenate([[0], firsts, [n]]) if n else np.zeros(1, dtype=np.int64)
+    sizes = plan.sizes[order]
+    units = [
+        (None, c, int(sizes[a:b].sum()) + split.open_cost_bytes * (b - a - 1))
+        for c, (a, b) in enumerate(zip(cell_offsets[:-1], cell_offsets[1:]))
+    ]
+    split_offsets = np.cumsum([0, *map(len, plan_splits(units, split))], dtype=np.int64)
+    k = len(split_offsets) - 1
+
+    fetch, decode, stages = p.scan.fetch, p.scan.decode, p.stages
+    frags = _fragments_fn(ndim, old_bs, [0] * ndim, list(attrs.dimensions), new_bs)
+
+    def gather_cell(files: np.ndarray) -> Iterator[tuple]:
+        targets: dict[tuple[int, ...], np.ndarray] = {}
+        for j in files:
+            path = plan.path(int(j))
+            raw = fetch(path)
+            if raw is None:  # deleted after planning: fill value
+                continue
+            blk = decode(path, tuple(int(c) for c in plan.coords[j]), raw)
+            for stage in stages:
+                blk = stage(*blk)
+            for tcell, off, frag in frags(*blk):
+                out = targets.get(tcell)
+                if out is None:
+                    out = targets[tcell] = np.zeros(
+                        tuple(reversed(new_attrs.block_dims(tcell))), dtype=dt
+                    )
+                out[tuple(slice(o, o + s) for o, s in zip(off, frag.shape))] = frag
+        for tcell in sorted(targets):
+            g3 = list(tcell) + [0] * (3 - ndim)
+            yield (g3[0], g3[1], g3[2], targets.pop(tcell))
+
+    def read(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
+        for pdf in batches:
+            for sid in pdf["id"]:
+                for c in range(split_offsets[sid], split_offsets[sid + 1]):
+                    yield from gather_cell(order[cell_offsets[c]:cell_offsets[c + 1]])
+
+    spark = scan.spark
+    return BlockPipeline(lambda: spark.range(k, numPartitions=max(1, k)), read), (
+        f"{len(units)} super-cell(s) of {super_bs} ({cell_bytes} decoded bytes each at "
+        f"most, split bound {bound}) in {k} splits"
+    )
 
 
 def _regrid(
@@ -213,6 +364,11 @@ def export_region(
         "/".join([container.rstrip("/"), dataset, *map(str, g)])
         for g in overlapping_blocks(attrs, start, end)
     ]
+    if log.isEnabledFor(logging.DEBUG):
+        log.debug(
+            "export_region %s..%s -> %s: shuffle, the output grid's origin is offset "
+            "from the source grid's", start, end, out_attrs.block_size,
+        )
     out = _regrid(
         decoded_blocks(spark, container, dataset, paths=paths),
         np_dtype(attrs.data_type), block_frags, out_attrs,
@@ -248,8 +404,9 @@ def downsample(
     factors dividing the block size (true for the canonical 2-divides-128
     case, where this costs zero extra shuffles). A non-divisible chunking
     — any block_size the r9 geometry net draws — first rechunks to the
-    nearest factor-aligned grid (one extra full-data shuffle, only when
-    needed); the final rechunk restores the CALLER's block size either
+    nearest factor-aligned grid (one extra rechunk, only when needed;
+    that rechunk's output is no scan, so the final rechunk then
+    shuffles); the final rechunk restores the CALLER's block size either
     way, so the output chunking contract is unchanged."""
     target_bs = list(attrs.block_size)
     if any(b % f != 0 for b, f in zip(attrs.block_size, factors_xyz)):

@@ -13,15 +13,17 @@ Pipelines are Spark-first:
 - tif_series_to_n5: the driver globs the *.tif series once (slice index
   parsed from the filename — the dask_image.imread analog,
   /root/reference/src/tif_to_n5.py:21) and packs the slices into splits by
-  file size; each split's task open()s and decodes its slices (one task
-  per split, like imread's task per file) -> per-slice fragments feed the
-  SAME rechunk shuffle used everywhere -> blocks written
-  one-task-per-block. The reference's manual Z-slab loop
-  (src/tif_to_n5.py:31-58) is unnecessary: partition-at-a-time execution
-  bounds memory.
+  file size; the SAME rechunk used everywhere re-tiles the slices: when a
+  super-cell (a run of whole slices as deep as the lcm of 1 and the block
+  depth) fits one split, each task reads and decodes its own runs and
+  assembles and writes their blocks (the gather, no shuffle), else
+  per-slice fragments go through the rechunk shuffle. The reference's
+  manual Z-slab loop (src/tif_to_n5.py:31-58) is unnecessary:
+  partition-at-a-time execution bounds memory.
 - n5_to_tif_series: decoded blocks -> rechunk to one-slice chunks
-  ((1, Y, X) like src/n5_to_tif.py:48-50) -> one TIFF per z written per
-  task, slice index straight from the gz column (no block_info machinery).
+  ((1, Y, X) like src/n5_to_tif.py:48-50) -> one TIFF per z written by
+  the task that assembles it, slice index straight from the gz column (no
+  block_info machinery).
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from n5_dask_spark.session import tune_session
 from n5_dask_spark.sources.n5 import fuse
@@ -451,6 +453,62 @@ def tif_series_scan(spark: SparkSession, input_dir: str) -> Scan:
     )
 
 
+def tif_series_blocks(
+    spark: SparkSession, input_dir: str, compression: dict[str, Any] | None = None
+) -> tuple[BlockPipeline, DatasetAttributes]:
+    """The slice blocks of a z-slice TIFF series: a scan-backed map
+    pipeline of one (1, Y, X) block per slice at grid cell (0, 0, z), and
+    the attributes of that one-slice grid (``compression`` is stamped on
+    them for the sink).
+
+    Each slice is read and decoded in the kernel of the node that consumes
+    it, so decoded slice bytes cross the JVM<->Python boundary once, and a
+    rechunk over it can gather (``transforms.rechunk``)."""
+    scan = tif_series_scan(spark, input_dir)
+    plan = scan.plan
+    # dims/dtype probe driver-side from the scan's listing (header/IFD
+    # reads only, no pixel I/O)
+    (probe_h, probe_w), probe_dt = tiff_probe_file(plan.path(0))
+    dims_xyz = [probe_w, probe_h, len(plan.sizes)]
+
+    def decode(path: str, key: tuple[int, ...], raw: bytes) -> tuple:
+        (z,) = key
+        fname = os.path.basename(path)
+        try:
+            arr = decode_tiff(raw)
+        except Exception as e:
+            # name the FILE: a long series dying on one corrupt
+            # slice must point at it (decode_block_at discipline)
+            raise ValueError(
+                f"corrupt TIFF slice {fname} (z={z}, "
+                f"{len(raw)} bytes): {type(e).__name__}: {e}"
+            ) from e
+        # every slice must match the probe: a mismatched shape
+        # would otherwise be silently clipped/zero-padded by the
+        # rechunk kernel, and a same-width dtype reinterpreted
+        # bit-for-bit
+        if arr.shape != (probe_h, probe_w) or arr.dtype != probe_dt:
+            raise ValueError(
+                f"slice {fname} (z={z}) is {arr.shape} {arr.dtype}; "
+                f"the series probe says ({probe_h}, {probe_w}) {probe_dt} "
+                "— all slices of a series must share one shape and dtype"
+            )
+        return (0, 0, z, arr[None, :, :])  # (1, Y, X)
+
+    slice_attrs = DatasetAttributes(
+        data_type=data_type_of(probe_dt),
+        dimensions=dims_xyz,
+        block_size=[dims_xyz[0], dims_xyz[1], 1],
+        compression=compression or {"type": "raw"},
+    )
+    return fuse.scan_pipeline(scan, read_slice, decode, _slice_cell), slice_attrs
+
+
+def _slice_cell(key: tuple[int, ...]) -> tuple[int, int, int]:
+    """The grid cell of the slice block at z = ``key[0]``."""
+    return (0, 0, key[0])
+
+
 def tif_series_to_n5(
     spark: SparkSession,
     input_dir: str,
@@ -463,54 +521,11 @@ def tif_series_to_n5(
     """S1 + T1 + K1: TIFF series -> N5 volume (reference tif_to_n5.py).
 
     Each slice is read and decoded into a (1, Y, X) block in the scan
-    kernel; the standard rechunk shuffle re-tiles to the requested block
-    grid; one task writes each block."""
-    scan = tif_series_scan(spark, input_dir)
-    plan = scan.plan
-    # dims/dtype probe driver-side from the scan's listing (header/IFD
-    # reads only, no pixel I/O)
-    (probe_h, probe_w), probe_dt = tiff_probe_file(plan.path(0))
-    n_z = len(plan.sizes)
-    src_type = data_type_of(probe_dt)
-    dims_xyz = [probe_w, probe_h, n_z]
-
-    def blocks_fn(batches: Iterator[pd.DataFrame]) -> Iterator[tuple]:
-        # byte-bounded output framing is fuse/udfbatch's: LZW/deflate series
-        # expand on decode, so one frame per input batch scales with the ratio
-        for path, (z,), raw in plan.read(batches, read_slice):
-            fname = os.path.basename(path)
-            try:
-                arr = decode_tiff(raw)
-            except Exception as e:
-                # name the FILE: a long series dying on one corrupt
-                # slice must point at it (decode_block_at discipline)
-                raise ValueError(
-                    f"corrupt TIFF slice {fname} (z={z}, "
-                    f"{len(raw)} bytes): {type(e).__name__}: {e}"
-                ) from e
-            # every slice must match the probe: a mismatched shape
-            # would otherwise be silently clipped/zero-padded by the
-            # rechunk kernel, and a same-width dtype reinterpreted
-            # bit-for-bit
-            if arr.shape != (probe_h, probe_w) or arr.dtype != probe_dt:
-                raise ValueError(
-                    f"slice {fname} (z={z}) is {arr.shape} {arr.dtype}; "
-                    f"the series probe says ({probe_h}, {probe_w}) {probe_dt} "
-                    "— all slices of a series must share one shape and dtype"
-                )
-            yield (0, 0, z, arr[None, :, :])  # (1, Y, X)
-
-    # slice-blocks source (guide §4): the downstream cast/rechunk-fragment
-    # kernels run the TIFF read and decode inside their own Python node,
-    # so decoded slice bytes cross the boundary once
-    slice_blocks = BlockPipeline(scan.ids, blocks_fn)
-    slice_attrs = DatasetAttributes(
-        data_type=src_type,
-        dimensions=dims_xyz,
-        block_size=[dims_xyz[0], dims_xyz[1], 1],
-        compression=compression or {"type": "raw"},
-    )
-    if data_type and data_type not in ("same", src_type):
+    kernel (:func:`tif_series_blocks`); the rechunk re-tiles to the
+    requested block grid (a gather of whole slice runs when a super-cell
+    fits one split, else the shuffle); one task writes each block."""
+    slice_blocks, slice_attrs = tif_series_blocks(spark, input_dir, compression)
+    if data_type and data_type not in ("same", slice_attrs.data_type):
         slice_blocks, slice_attrs = cast_blocks(slice_blocks, slice_attrs, data_type)
     out_blocks, out_attrs = rechunk(slice_blocks, slice_attrs, list(block_size))
     write_blocks(out_blocks, container, dataset, out_attrs)
@@ -536,6 +551,19 @@ def n5_to_tif_series(
         if not np.can_cast(np_dtype(attrs.data_type), np_dtype(dtype_override), casting="safe"):
             raise TypeError(f"unsafe cast {attrs.data_type} -> {dtype_override}")
         blocks, attrs = cast_blocks(blocks, attrs, dtype_override)
+    return blocks_to_tif_series(spark, blocks, attrs, output_dir, prefix)
+
+
+def blocks_to_tif_series(
+    spark: SparkSession,
+    blocks: BlockPipeline | DataFrame,
+    attrs: DatasetAttributes,
+    output_dir: str,
+    prefix: str = "slice",
+) -> int:
+    """K4 over blocks (a pipeline or a blocks frame) of a volume described
+    by ``attrs``: rechunk to (X, Y, 1) chunks and write one TIFF per z
+    slice; returns the number of slices written."""
     slice_blocks, slice_attrs = rechunk(
         blocks, attrs, [attrs.dimensions[0], attrs.dimensions[1], 1]
     )
@@ -558,11 +586,11 @@ def n5_to_tif_series(
         _maybe_inject_fault()  # chaos hook: this slice is on disk
         yield (int(gz),)
 
-    # the sink fuses INTO the rechunk assembler's post-shuffle Python node
-    # (r15, guide §4): the assembled slice bytes never re-cross the
-    # JVM<->Python boundary, and (writer.write_blocks discipline) no second
-    # repartition moves slice bytes through an extra exchange purely to
-    # rebalance — write parallelism is the fragment shuffle's
+    # the sink fuses INTO the rechunk's last Python node (the gather
+    # kernel, or the assembler after the shuffle; r15, guide §4): the
+    # assembled slice bytes never re-cross the JVM<->Python boundary, and
+    # (writer.write_blocks discipline) no second repartition moves slice
+    # bytes through an extra exchange purely to rebalance
     written = {
         int(r["gz"])
         for r in fuse.consume_block_rows(
@@ -570,7 +598,7 @@ def n5_to_tif_series(
         ).collect()
     }
     # Sparse N5 is legal (absent blocks = fill value) and the rechunk
-    # shuffle emits no row for an all-absent z slab, so those slices get no
+    # emits no row for an all-absent z slab, so those slices get no
     # file above. Leaving gaps would make a re-import COMPACT the series
     # (z is assigned by sorted-file position, reference imread semantics)
     # and silently shift the volume — fill the gaps with zero slices.

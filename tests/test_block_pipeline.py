@@ -6,6 +6,12 @@ that consumes them builds exactly one DataFrame per Python node it runs.
 The counts below are the Python-node DataFrames each op builds, found by
 counting calls of the four PySpark entry points that create one, and the
 stages a write runs, read from Spark's status tracker.
+
+The fixtures here regrid between commensurate grids on tiny volumes, so
+one super-cell (per axis the lcm of source and target block, clipped to
+the extent) covers the whole volume and each rechunk gathers: one map
+node and no exchange. A blocks frame from ``.to_df()`` forces the
+shuffle where a test pins the two-node shape.
 """
 
 from __future__ import annotations
@@ -50,7 +56,7 @@ def _plan_tree(df) -> str:
     return txt.split("\n\n")[0]  # the tree; the details list every node again
 
 
-def test_rechunk_stats_builds_two_nodes(spark, tmp_path, builds):
+def test_rechunk_stats_builds_one_node(spark, tmp_path, builds):
     from n5_dask_spark.sources.n5 import fuse
     from n5_dask_spark.sources.n5.metadata import read_attributes
     from n5_dask_spark.sources.n5.reader import decoded_blocks
@@ -69,12 +75,11 @@ def test_rechunk_stats_builds_two_nodes(spark, tmp_path, builds):
     out, out_attrs = rechunk(decoded_blocks(spark, c, "a/s0"), read_attributes(c, "a/s0"), [5, 6, 7])
     assert sum(builds.values()) == 0  # producers build nothing
     df = fuse.consume_block_rows(out, np.dtype("uint8"), stats_rows, STATS_COLS, STATS_DDL)
-    assert builds == {"mapInPandas": 1, "applyInArrow": 1}
+    assert builds == {"mapInPandas": 1}  # the gather: no fragment node
 
     tree = _plan_tree(df)
     assert len(re.findall(r"\bMapInPandas\b", tree)) == 1, tree
-    assert len(re.findall(r"\bFlatMapGroupsInArrow\b", tree)) == 1, tree
-    assert "FlatMapGroupsInPandas" not in tree
+    assert "FlatMapGroups" not in tree and "Exchange" not in tree, tree
 
     rows = {(r.gx, r.gy, r.gz): (r.n, r.vsum) for r in df.collect()}
     assert len(rows) == out_attrs.n_blocks
@@ -84,7 +89,7 @@ def test_rechunk_stats_builds_two_nodes(spark, tmp_path, builds):
     assert sum(fuse.MATERIALIZATIONS.values()) == 0  # fused end to end
 
 
-def test_build_multiscale_builds_two_nodes_per_level(spark, tmp_path, builds):
+def test_build_multiscale_builds_one_node_per_level(spark, tmp_path, builds):
     from n5_dask_spark.sources.n5.reader import read_full
     from n5_dask_spark.sources.n5.transforms import build_multiscale
     from n5_dask_spark.sources.n5.writer import write_array
@@ -95,13 +100,13 @@ def test_build_multiscale_builds_two_nodes_per_level(spark, tmp_path, builds):
     builds.clear()
     levels = build_multiscale(spark, c, "vol", (2, 2, 2), thumbnail_size_xyz=[8, 8, 8])
     assert levels == ["s0", "s1", "s2"]
-    assert builds == {"mapInPandas": 2, "applyInArrow": 2}
+    assert builds == {"mapInPandas": 2}
     s1 = read_full(spark, c, "vol/s1")
     want = arr.reshape(16, 2, 16, 2, 16, 2).astype("f8").mean(axis=(1, 3, 5)).astype(np.uint8)
     np.testing.assert_array_equal(s1, want)
 
 
-def test_tiff_series_round_trip_builds_two_nodes_each_way(spark, tmp_path, builds):
+def test_tiff_series_round_trip_builds_one_node_each_way(spark, tmp_path, builds):
     from n5_dask_spark.sources.n5.reader import read_full
     from n5_dask_spark.sources.tiff import decode_tiff, n5_to_tif_series, tif_series_to_n5, write_tiff
 
@@ -113,13 +118,13 @@ def test_tiff_series_round_trip_builds_two_nodes_each_way(spark, tmp_path, build
     c = str(tmp_path / "t.n5")
     builds.clear()
     tif_series_to_n5(spark, str(src), c, "a/s0", [4, 4, 4], {"type": "gzip"})
-    assert builds == {"mapInPandas": 1, "applyInArrow": 1}
+    assert builds == {"mapInPandas": 1}
     np.testing.assert_array_equal(read_full(spark, c, "a/s0"), vol.transpose(2, 1, 0))
 
     builds.clear()
     out = tmp_path / "out"
     assert n5_to_tif_series(spark, c, "a/s0", str(out)) == vol.shape[0]
-    assert builds == {"mapInPandas": 1, "applyInArrow": 1}
+    assert builds == {"mapInPandas": 1}
     for z in range(vol.shape[0]):
         with open(os.path.join(out, f"slice{z:05d}.tif"), "rb") as f:
             np.testing.assert_array_equal(decode_tiff(f.read()), vol[z])
@@ -155,9 +160,10 @@ def _stages_that_ran(spark, group: str) -> int:
 
 def test_writes_run_only_their_own_stages(spark, tmp_path):
     """The duplicate-producer guard runs on the driver over the rows the
-    sink returns, so a write adds no stage of its own: a grouped write
-    runs the fragment map and the assembler+sink, a map write runs one
-    stage."""
+    sink returns, so a write adds no stage of its own: a map write runs
+    one stage, an aligned rechunk write (the gather) one, and a shuffled
+    rechunk write (a blocks-frame input) two, the fragment map and the
+    assembler+sink."""
     from n5_dask_spark.sources.n5.reader import decoded_blocks, read_full
     from n5_dask_spark.sources.n5.transforms import rechunk
     from n5_dask_spark.sources.n5.writer import write_array, write_blocks
@@ -172,11 +178,15 @@ def test_writes_run_only_their_own_stages(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert _stages_that_ran(spark, "n5ds-write-array") == 1
 
-    out, out_attrs = rechunk(decoded_blocks(spark, c, "a/s0"), attrs, [5, 6, 7])
-    sc.setJobGroup("n5ds-write-rechunk", "rechunk -> write_blocks")
-    try:
-        write_blocks(out, c, "a/s1", out_attrs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert _stages_that_ran(spark, "n5ds-write-rechunk") == 2
-    np.testing.assert_array_equal(read_full(spark, c, "a/s1"), arr)
+    for group, dataset, blocks, stages in (
+        ("n5ds-write-gather", "a/s1", decoded_blocks(spark, c, "a/s0"), 1),
+        ("n5ds-write-shuffle", "a/s2", decoded_blocks(spark, c, "a/s0").to_df(), 2),
+    ):
+        out, out_attrs = rechunk(blocks, attrs, [5, 6, 7])
+        sc.setJobGroup(group, "rechunk -> write_blocks")
+        try:
+            write_blocks(out, c, dataset, out_attrs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert _stages_that_ran(spark, group) == stages, group
+        np.testing.assert_array_equal(read_full(spark, c, dataset), arr)

@@ -212,11 +212,13 @@ def test_cc_star_round_has_no_join(spark):
 
 
 def test_fragment_shuffle_is_single_exchange(spark):
-    """Rechunk and export_region share one shape: decode+fragment
+    """Rechunk and export_region share one shuffle shape: decode+fragment
     (mapInPandas, shuffle-free) -> ONE exchange on the target grid cell ->
     reassemble (applyInArrow). Exactly one Exchange means every byte of
     the volume moves once — a second exchange would double the shuffle
-    volume of every regrid/export at scale."""
+    volume of every regrid/export at scale. The input is a blocks frame
+    (``.to_df()``), which always takes the shuffle; a scan input on these
+    grids gathers (test_aligned_rechunk_has_no_exchange)."""
     import numpy as np
 
     from n5_dask_spark.sources.n5.metadata import read_attributes
@@ -227,14 +229,34 @@ def test_fragment_shuffle_is_single_exchange(spark):
     arr = (np.arange(24 * 24 * 24, dtype=np.uint8) % 200).reshape(24, 24, 24)
     src = temp_container()
     write_array(spark, arr, src, "a/s0", [8, 8, 8])
-    blocks = decoded_blocks(spark, src, "a/s0")
-    plan = plan_of(blocks.to_df())
+    blocks = decoded_blocks(spark, src, "a/s0").to_df()
+    plan = plan_of(blocks)
     assert "Exchange" not in plan  # the block scan itself never shuffles
     re_blocks, _ = rechunk(blocks, read_attributes(src, "a/s0"), [5, 5, 5])
     re_plan = plan_of(re_blocks.to_df())
     # formatted plans list each node twice (tree + detail): count tree rows
     assert re_plan.count("+- Exchange") == 1
     assert "FlatMapGroupsInArrow" in re_plan  # reassembly rides THAT exchange
+
+
+def test_aligned_rechunk_has_no_exchange(spark):
+    """A rechunk of a scan whose super-cell (per axis the lcm of source
+    and target block, clipped to the extent) fits one split gathers: one
+    map node over split ids, no Exchange and no grouped node."""
+    import numpy as np
+
+    from n5_dask_spark.sources.n5.metadata import read_attributes
+    from n5_dask_spark.sources.n5.reader import decoded_blocks
+    from n5_dask_spark.sources.n5.transforms import rechunk
+    from n5_dask_spark.sources.n5.writer import temp_container, write_array
+
+    arr = (np.arange(24 * 24 * 24, dtype=np.uint8) % 200).reshape(24, 24, 24)
+    src = temp_container()
+    write_array(spark, arr, src, "a/s0", [8, 8, 8])
+    re_blocks, _ = rechunk(decoded_blocks(spark, src, "a/s0"), read_attributes(src, "a/s0"), [5, 5, 5])
+    re_plan = plan_of(re_blocks.to_df())
+    assert "Exchange" not in re_plan, re_plan
+    assert "FlatMapGroups" not in re_plan and "MapInPandas" in re_plan, re_plan
 
 
 def test_widen_is_conditional(spark):
@@ -334,12 +356,13 @@ def test_no_forced_broadcast_of_scaling_tables_in_source():
 
 
 def test_write_job_moves_block_data_through_one_exchange(spark):
-    """The fused sink contract end-to-end: a rechunk->write job's ONLY
-    data-bearing exchange is the fragment shuffle. The sink mapInPandas
-    rides that exchange's stage, and the one other exchange in the job is
-    the SinglePartition reduction of per-task written-counts (rows of one
-    long each — not block bytes). A second data exchange here would mean
-    the old rebalancing repartition crept back in."""
+    """The fused sink contract end-to-end: a shuffled rechunk->write
+    job's ONLY data-bearing exchange is the fragment shuffle (a blocks
+    frame input, which always shuffles), and a gathered one has none. The
+    sink mapInPandas rides the last stage, and the one other exchange in
+    the job is the SinglePartition reduction of per-task written-counts
+    (rows of one long each — not block bytes). A second data exchange
+    here would mean the old rebalancing repartition crept back in."""
     import numpy as np
     import pandas as pd
 
@@ -353,8 +376,6 @@ def test_write_job_moves_block_data_through_one_exchange(spark):
     arr = (np.arange(24 * 24 * 24, dtype=np.uint8) % 200).reshape(24, 24, 24)
     src = temp_container()
     write_array(spark, arr, src, "a/s0", [8, 8, 8])
-    blocks = decoded_blocks(spark, src, "a/s0")
-    re_blocks, _ = rechunk(blocks, read_attributes(src, "a/s0"), [5, 5, 5])
 
     def sink(batches):
         n = 0
@@ -362,12 +383,23 @@ def test_write_job_moves_block_data_through_one_exchange(spark):
             n += len(pdf)
         yield pd.DataFrame({"written": [n]})
 
-    plan = (
-        re_blocks.to_df().mapInPandas(sink, schema="written long")
-        .agg(F.sum("written"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plans = {}
+    for path, blocks in (
+        ("shuffle", decoded_blocks(spark, src, "a/s0").to_df()),
+        ("gather", decoded_blocks(spark, src, "a/s0")),
+    ):
+        re_blocks, _ = rechunk(blocks, read_attributes(src, "a/s0"), [5, 5, 5])
+        plans[path] = (
+            re_blocks.to_df().mapInPandas(sink, schema="written long")
+            .agg(F.sum("written"))
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+    plan = plans["shuffle"]
     assert plan.count("+- Exchange") == 2, plan
     assert "SinglePartition" in plan  # the count reduction, not block data
+    # the gather moves no block data through an exchange: at most the
+    # count reduction (none when the job has one split)
+    assert "Exchange hashpartitioning" not in plans["gather"], plans["gather"]
+    assert plans["gather"].count("+- Exchange") <= 1, plans["gather"]

@@ -83,7 +83,10 @@ def test_building_a_series_scan_starts_no_job(spark, tmp_path):
 
 def test_series_import_runs_one_scan_task_per_split(spark, tmp_path):
     """The import's first stage is the scan: one task per planned split,
-    with no listing job before it."""
+    with no listing job before it. The import gathers (no shuffle), so its
+    splits are whole super-cells, here runs of 8 slices (the lcm of the
+    slice depth 1 and the block depth 8), packed by the scan's split rule
+    at the cost of their files' sizes plus their open costs."""
     import glob
 
     from n5_dask_spark.sources.n5.datasource import ScanSplit, plan_splits
@@ -92,9 +95,11 @@ def test_series_import_runs_one_scan_task_per_split(spark, tmp_path):
 
     src = _series(tmp_path, 40)
     files = sorted(glob.glob(os.path.join(src, "*.tif")))
+    split = ScanSplit.from_session(spark)
+    sizes = [os.path.getsize(p) for p in files]
     planned = len(plan_splits(
-        [(p, (z,), os.path.getsize(p)) for z, p in enumerate(files)],
-        ScanSplit.from_session(spark),
+        [(None, z, sum(sizes[z:z + 8]) + split.open_cost_bytes * 7) for z in range(0, 40, 8)],
+        split,
     ))
     assert 1 < planned < 40
     c = str(tmp_path / "c.n5")
@@ -155,3 +160,30 @@ def test_block_read_failure_after_planning_names_the_path(spark, tmp_path, addre
     os.mkdir(path)
     with pytest.raises(Exception, match="cannot read block file .*d/s0/1/0/0"):
         stats.collect()
+
+
+def test_split_confs_are_read_at_each_scan(spark, tmp_path):
+    """ScanSplit.from_session reads the split confs afresh: a
+    maxPartitionBytes set between two scans changes the second plan, and
+    its byte strings parse as the JVM's JavaUtils parses them."""
+    from n5_dask_spark.sources.n5.datasource import ScanSplit, byte_string_as_bytes
+    from n5_dask_spark.sources.n5.reader import scan_block_files
+
+    c = _n5_gx_row(tmp_path, 40)
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    first = scan_block_files(spark, c, "d/s0")
+    spark.conf.set(key, "1k")
+    try:
+        second = scan_block_files(spark, c, "d/s0")
+        assert ScanSplit.from_session(spark).max_partition_bytes == 1024
+    finally:
+        spark.conf.set(key, before)
+    assert second.split.max_partition_bytes == 1024
+    assert len(first.plan.offsets) - 1 < 40 == len(second.plan.offsets) - 1
+    java = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    for text in ("134217728", "128MB", "4m", "1k", "1KB", " 2g ", "3t", "0b"):
+        assert byte_string_as_bytes(text) == java(text), text
+    for text in ("1.5g", "12xb", ""):
+        with pytest.raises(ValueError):
+            byte_string_as_bytes(text)
